@@ -103,7 +103,7 @@ object Macros {
 
   /** `run-operation compact_ledger` — the operational wrapper over the
     * ledger compactors ([[graft.streaming.EventStreams.compactBatchLedger]]
-    * / [[graft.streaming.EventStreams.compactSuppressionLedger]] /
+    * / [[graft.streaming.EventStreams.compactSetLedger]] /
     * [[graft.operators.Dedup.compactLedger]]), so a long-lived pipeline
     * can bound its ledger scans without writing code (the dbt
     * `run-operation` maintenance-macro idiom). Kwargs:
@@ -141,8 +141,8 @@ object Macros {
               "kwargs (comma-lists)")
         }
       case Some("suppression") =>
-        EventStreams.compactSuppressionLedger(ledger,
-          kwargs.getOrElse("id", "doc_id"))
+        EventStreams.compactSetLedger(ledger,
+          Seq(kwargs.getOrElse("id", "doc_id")))
       case Some("postings") =>
         graft.operators.Dedup.compactLedger(ledger)
       case Some("set") =>

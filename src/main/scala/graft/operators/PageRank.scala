@@ -45,10 +45,13 @@ object PageRank {
     // roundings + an exact decimal sum — all replicable on the driver
     // bit-for-bit — and at audit scale the rounds' wall cost is pure
     // per-round job latency. Two longs per edge under the cap; the
-    // broadcast/shuffle rounds below remain the scale path.
+    // broadcast/shuffle rounds below remain the scale path. `limit`
+    // takes an Int: clamp the cap first, or a cap >= Int.MaxValue wraps to a
+    // negative (analysis error) or tiny (everything local) limit.
     if (e.schema.fields.forall(_.dataType ==
         org.apache.spark.sql.types.LongType) &&
-        e.limit(localMaxEdges.toInt + 1).count() <= localMaxEdges) {
+        e.limit(math.min(localMaxEdges, Int.MaxValue - 1L).toInt + 1)
+          .count() <= localMaxEdges) {
       val out = localRanks(e, iters, damping)
       e.unpersist(blocking = false)
       return out

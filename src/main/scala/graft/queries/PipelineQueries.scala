@@ -1317,28 +1317,20 @@ object PipelineQueries extends QueryPack {
     //      plain signed aggregation over the full table ----------------
     Q("x182_streaming_retraction_ledger",
       (s, dir) => {
-        import graft.engine._
         val cdc = t(s, dir, "events").select(
           col("event_id"),
           (col("user_id") % 100).as("bucket"),
           when(col("event_type") === "error", -1L).otherwise(1L).as("op"),
           round(col("value") * 100).cast("long").as("cents"))
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("rtlg_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/rtlg")
-        s.sql("CREATE DATABASE IF NOT EXISTS rtlg")
-        s.sql("DROP TABLE IF EXISTS rtlg.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("rtlg.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "rtlg", "ledger")
         def run(): Unit = EventStreams.streamingRetractionLedger(s,
-          landing.toString, cdc.schema, "rtlg.ledger", ckpt.toString,
+          landing, cdc.schema, "rtlg.ledger", ckpt,
           "bucket", "op", "cents")
         cdc.filter(col("event_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing.toString)
+          .write.mode("overwrite").parquet(landing)
         run()
         cdc.filter(col("event_id") % 2 === 1)
-          .write.mode("append").parquet(landing.toString)
+          .write.mode("append").parquet(landing)
         run()
         EventStreams.mergeRetractionLedger(s.table("rtlg.ledger"), "bucket")
           .orderBy(col("bucket"))
@@ -1357,25 +1349,17 @@ object PipelineQueries extends QueryPack {
     //      classifies batch-1 rows older than wm − delay as late -------
     Q("x183_late_arrival_audit",
       (s, dir) => {
-        import graft.engine._
         val ev = t(s, dir, "events")
           .select(col("event_id"), col("ts"))
         val firstHalf = col("ts") < lit("2024-01-16").cast("timestamp") &&
           col("event_id") % 37 =!= 0
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("latelg_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/latelg")
-        s.sql("CREATE DATABASE IF NOT EXISTS latelg")
-        s.sql("DROP TABLE IF EXISTS latelg.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("latelg.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "latelg", "ledger")
         def run(): Unit = EventStreams.streamingLatenessLedger(s,
-          landing.toString, ev.schema, "latelg.ledger", ckpt.toString,
+          landing, ev.schema, "latelg.ledger", ckpt,
           "ts", delaySeconds = 3600L)
-        ev.filter(firstHalf).write.mode("overwrite").parquet(landing.toString)
+        ev.filter(firstHalf).write.mode("overwrite").parquet(landing)
         run()
-        ev.filter(!firstHalf).write.mode("append").parquet(landing.toString)
+        ev.filter(!firstHalf).write.mode("append").parquet(landing)
         run()
         EventStreams.latenessReport(s.table("latelg.ledger"))
           .orderBy(col("batch_id"))
@@ -1865,25 +1849,17 @@ object PipelineQueries extends QueryPack {
     //      x10's full sessionize rolled up per user -------------------
     Q("x196_streaming_session_ledger",
       (s, dir) => {
-        import graft.engine._
         val ev = t(s, dir, "events")
           .select(col("event_id"), col("user_id"), col("ts"))
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("sslg_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/sslg")
-        s.sql("CREATE DATABASE IF NOT EXISTS sslg")
-        s.sql("DROP TABLE IF EXISTS sslg.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("sslg.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "sslg", "ledger")
         def run(): Unit = EventStreams.streamingSessionLedger(s,
-          landing.toString, ev.schema, "sslg.ledger", ckpt.toString,
+          landing, ev.schema, "sslg.ledger", ckpt,
           "user_id", "ts", "event_id", gapMinutes = 30)
         ev.filter(col("event_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing.toString)
+          .write.mode("overwrite").parquet(landing)
         run()
         ev.filter(col("event_id") % 2 === 1)
-          .write.mode("append").parquet(landing.toString)
+          .write.mode("append").parquet(landing)
         run()
         EventStreams.mergeSessionLedger(s.table("sslg.ledger"), 30)
           .groupBy(col("u"))
@@ -1918,26 +1894,18 @@ object PipelineQueries extends QueryPack {
     //      x185 verbatim — oracle IS x185's SQL ----------------------
     Q("x197_streaming_burstiness_ledger",
       (s, dir) => {
-        import graft.engine._
         val ev = t(s, dir, "events")
           .select(col("event_id"), col("user_id"), col("ts"))
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("bulg_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/bulg")
-        s.sql("CREATE DATABASE IF NOT EXISTS bulg")
-        s.sql("DROP TABLE IF EXISTS bulg.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("bulg.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "bulg", "ledger")
         def run(): Unit = EventStreams.streamingBurstinessLedger(s,
-          landing.toString, ev.schema, "bulg.ledger", ckpt.toString,
+          landing, ev.schema, "bulg.ledger", ckpt,
           "user_id", "ts", "event_id")
         val firstHalf = col("ts") < lit("2024-01-16").cast("timestamp")
         ev.filter(firstHalf)
-          .write.mode("overwrite").parquet(landing.toString)
+          .write.mode("overwrite").parquet(landing)
         run()
         ev.filter(!firstHalf)
-          .write.mode("append").parquet(landing.toString)
+          .write.mode("append").parquet(landing)
         run()
         EventStreams.mergeBurstinessLedger(
             s.table("bulg.ledger"), "user_id", minGaps = 2L)
@@ -2164,28 +2132,20 @@ object PipelineQueries extends QueryPack {
     //      as the x70-style self-adjudicating verdict ------------------
     Q("x201_streaming_kmv_ledger",
       (s, dir) => {
-        import graft.engine._
         import graft.functions.TextFunctions
         val shStream = t(s, dir, "documents")
           .select(col("doc_id"),
             explode(TextFunctions.shingles(tokens(col("text")), 4))
               .as("sh"))
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("kmvlg_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/kmvlg")
-        s.sql("CREATE DATABASE IF NOT EXISTS kmvlg")
-        s.sql("DROP TABLE IF EXISTS kmvlg.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("kmvlg.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "kmvlg", "ledger")
         def run(): Unit = EventStreams.streamingKmvLedger(s,
-          landing.toString, shStream.schema, "kmvlg.ledger",
-          ckpt.toString, col("sh"), k = 256)
+          landing, shStream.schema, "kmvlg.ledger",
+          ckpt, col("sh"), k = 256)
         shStream.filter(col("doc_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing.toString)
+          .write.mode("overwrite").parquet(landing)
         run()
         shStream.filter(col("doc_id") % 2 === 1)
-          .write.mode("append").parquet(landing.toString)
+          .write.mode("append").parquet(landing)
         run()
         val kmv = EventStreams.mergeKmvLedger(s.table("kmvlg.ledger"), 256)
         // exact-distinct adjudicator over the LANDING parquet (the two
@@ -2193,7 +2153,7 @@ object PipelineQueries extends QueryPack {
         // reading it back skips a third shingle pass over the corpus —
         // within-query reuse of an intermediate the stream required
         // anyway, not cross-run caching
-        val exact = s.read.parquet(landing.toString)
+        val exact = s.read.parquet(landing)
           .select(col("sh")).distinct()
           .agg(count(lit(1)).cast("long").as("exact_distinct"))
         kmv.crossJoin(broadcast(exact))
@@ -2499,8 +2459,7 @@ object PipelineQueries extends QueryPack {
       (s, dir) => {
         import graft.engine._
         val docs = t(s, dir, "documents")
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
+        val wh = warehousePath(s)
         s.sql("CREATE DATABASE IF NOT EXISTS tkdn")
         s.sql("DROP TABLE IF EXISTS tkdn.shards")
         Materializer.deleteRecursively(wh.resolve("tkdn.db/shards"))
@@ -2567,8 +2526,7 @@ object PipelineQueries extends QueryPack {
         // (partition-scoped rewrite), carry the all-shards verdict.
         // Own namespace — x205's tkdn.shards is rebuilt by ITS entry,
         // and registry sweeps run both in one session.
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
+        val wh = warehousePath(s)
         s.sql("CREATE DATABASE IF NOT EXISTS tkdnp")
         s.sql("DROP TABLE IF EXISTS tkdnp.shards")
         Materializer.deleteRecursively(wh.resolve("tkdnp.db/shards"))
@@ -2621,33 +2579,25 @@ object PipelineQueries extends QueryPack {
     //      CLEAN events — one oracle shape pinning x87/x94/x211 --------
     Q("x211_countmin_retraction",
       (s, dir) => {
-        import graft.engine._
         val ev = t(s, dir, "events")
           .select(col("event_id"), col("user_id"), zipfTerm.as("term"))
         val split = ev.agg(expr("(min(event_id) + max(event_id)) div 2"))
           .first().getLong(0)
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("strcmr_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/strcmr")
-        s.sql("CREATE DATABASE IF NOT EXISTS strcmr")
-        s.sql("DROP TABLE IF EXISTS strcmr.sketch")
-        for (p <- Seq(landing, ckpt, wh.resolve("strcmr.db/sketch")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "strcmr", "sketch")
         ev.filter(col("event_id") <= split)
-          .write.mode("overwrite").parquet(landing.toString)
-        EventStreams.streamingCountMin(s, landing.toString, ev.schema,
-          "strcmr.sketch", ckpt.toString, "term", depth = 4, width = 1024)
+          .write.mode("overwrite").parquet(landing)
+        EventStreams.streamingCountMin(s, landing, ev.schema,
+          "strcmr.sketch", ckpt, "term", depth = 4, width = 1024)
         ev.filter(col("event_id") > split)
-          .write.mode("append").parquet(landing.toString)
-        EventStreams.streamingCountMin(s, landing.toString, ev.schema,
-          "strcmr.sketch", ckpt.toString, "term", depth = 4, width = 1024)
+          .write.mode("append").parquet(landing)
+        EventStreams.streamingCountMin(s, landing, ev.schema,
+          "strcmr.sketch", ckpt, "term", depth = 4, width = 1024)
         // the landing parquet now holds exactly ev (both halves): the
         // delete list, the retraction's raw source, and the clean
         // adjudicator read it back instead of re-running the events
         // normalize+term projection three more times (within-query reuse
         // of a stream-required intermediate, the x201 discipline)
-        val evLanded = s.read.parquet(landing.toString)
+        val evLanded = s.read.parquet(landing)
         val deletes = evLanded.filter(col("user_id") % 13 === 5)
           .select(col("user_id"))
         EventStreams.countMinRetraction(evLanded, deletes, "user_id", "term",
@@ -2711,25 +2661,17 @@ object PipelineQueries extends QueryPack {
     //      counts) ledger — drift count tables, hourly rates ----------
     Q("x213_token_ledger_retraction",
       (s, dir) => {
-        import graft.engine._
         val docs = t(s, dir, "documents")
           .select(col("doc_id"), col("source"), col("text"))
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("toklgr_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/toklgr")
-        s.sql("CREATE DATABASE IF NOT EXISTS toklgr")
-        s.sql("DROP TABLE IF EXISTS toklgr.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("toklgr.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "toklgr", "ledger")
         def run(): Unit = EventStreams.streamingTokenLedger(s,
-          landing.toString, docs.schema, "toklgr.ledger", ckpt.toString,
+          landing, docs.schema, "toklgr.ledger", ckpt,
           "source", nTokens(tokens(col("text"))))
         docs.filter(col("doc_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing.toString)
+          .write.mode("overwrite").parquet(landing)
         run()
         docs.filter(col("doc_id") % 2 === 1)
-          .write.mode("append").parquet(landing.toString)
+          .write.mode("append").parquet(landing)
         run()
         val deletes = docs.filter(col("doc_id") % 97 === 3)
           .select(col("doc_id"))
@@ -2854,26 +2796,18 @@ object PipelineQueries extends QueryPack {
     //      quantile machinery over the clean histogram ------------------
     Q("x215_quantile_ledger_retraction",
       (s, dir) => {
-        import graft.engine._
         val docs = t(s, dir, "documents")
           .select(col("doc_id"), col("source"), col("n_chars"),
             col("text"))
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("qtlgr_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/qtlgr")
-        s.sql("CREATE DATABASE IF NOT EXISTS qtlgr")
-        s.sql("DROP TABLE IF EXISTS qtlgr.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("qtlgr.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "qtlgr", "ledger")
         def run(): Unit = EventStreams.streamingQuantileLedger(s,
-          landing.toString, docs.schema, "qtlgr.ledger", ckpt.toString,
+          landing, docs.schema, "qtlgr.ledger", ckpt,
           "source", "n_chars", nTokens(tokens(col("text"))).cast("long"))
         docs.filter(col("doc_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing.toString)
+          .write.mode("overwrite").parquet(landing)
         run()
         docs.filter(col("doc_id") % 2 === 1)
-          .write.mode("append").parquet(landing.toString)
+          .write.mode("append").parquet(landing)
         run()
         val deletes = docs.filter(col("doc_id") % 97 === 3)
           .select(col("doc_id"))
@@ -3211,8 +3145,7 @@ object PipelineQueries extends QueryPack {
         // The warehouse dir outlives the in-memory catalog across JVMs,
         // so also remove the stale physical location a previous process
         // may have left (DROP TABLE can't see it).
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
+        val wh = warehousePath(s)
         for (sub <- Seq("strmq.db/ev_ingest",
             "_graft_checkpoints/strmq_ev_ingest"))
           Materializer.deleteRecursively(wh.resolve(sub))
@@ -4135,8 +4068,7 @@ object PipelineQueries extends QueryPack {
         val docs = t(s, dir, "documents")
         val split = docs.agg(expr("(min(doc_id) + max(doc_id)) div 2"))
           .first().getLong(0)
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
+        val wh = warehousePath(s)
         val staging = wh.resolve("incrq_staging")
         Materializer.deleteRecursively(staging)
         // the warehouse dir outlives the in-memory catalog across JVMs:
@@ -4196,26 +4128,18 @@ object PipelineQueries extends QueryPack {
     //      oracle: the mechanisms must agree --------------------------
     Q("x58_streaming_dedup_ledger",
       (s, dir) => {
-        import graft.engine._
         val docs = t(s, dir, "documents")
         val split = docs.agg(expr("(min(doc_id) + max(doc_id)) div 2"))
           .first().getLong(0)
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("strldg_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/strldg")
-        s.sql("CREATE DATABASE IF NOT EXISTS strldg")
-        s.sql("DROP TABLE IF EXISTS strldg.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("strldg.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "strldg", "ledger")
         docs.filter(col("doc_id") <= split)
-          .write.mode("overwrite").parquet(landing.toString)
-        EventStreams.streamingDedupLedger(s, landing.toString, docs.schema,
-          "strldg.ledger", ckpt.toString, "doc_id", "text")
+          .write.mode("overwrite").parquet(landing)
+        EventStreams.streamingDedupLedger(s, landing, docs.schema,
+          "strldg.ledger", ckpt, "doc_id", "text")
         docs.filter(col("doc_id") > split)
-          .write.mode("append").parquet(landing.toString)
-        EventStreams.streamingDedupLedger(s, landing.toString, docs.schema,
-          "strldg.ledger", ckpt.toString, "doc_id", "text")
+          .write.mode("append").parquet(landing)
+        EventStreams.streamingDedupLedger(s, landing, docs.schema,
+          "strldg.ledger", ckpt, "doc_id", "text")
         s.table("strldg.ledger")
           .groupBy(col("doc"))
           .agg(max(col("kept")).as("kept"))
@@ -4420,8 +4344,7 @@ object PipelineQueries extends QueryPack {
         val vecs = t(s, dir, "embeddings")
         val split = vecs.agg(expr("(min(vec_id) + max(vec_id)) div 2"))
           .first().getLong(0)
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
+        val wh = warehousePath(s)
         val staging = wh.resolve("incrv_staging")
         Materializer.deleteRecursively(staging)
         s.sql("DROP TABLE IF EXISTS incrv.vec_ledger")
@@ -4814,27 +4737,19 @@ object PipelineQueries extends QueryPack {
     //      oracle as the batch x56 ------------------------------------
     Q("x64_streaming_embedding_ledger",
       (s, dir) => {
-        import graft.engine._
         val vecs = t(s, dir, "embeddings")
         val split = vecs.agg(expr("(min(vec_id) + max(vec_id)) div 2"))
           .first().getLong(0)
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("strvldg_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/strvldg")
-        s.sql("CREATE DATABASE IF NOT EXISTS strvldg")
-        s.sql("DROP TABLE IF EXISTS strvldg.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("strvldg.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "strvldg", "ledger")
         vecs.filter(col("vec_id") <= split)
-          .write.mode("overwrite").parquet(landing.toString)
-        EventStreams.streamingEmbeddingDedupLedger(s, landing.toString,
-          vecs.schema, "strvldg.ledger", ckpt.toString, "vec_id",
+          .write.mode("overwrite").parquet(landing)
+        EventStreams.streamingEmbeddingDedupLedger(s, landing,
+          vecs.schema, "strvldg.ledger", ckpt, "vec_id",
           "embedding", dim = 64)
         vecs.filter(col("vec_id") > split)
-          .write.mode("append").parquet(landing.toString)
-        EventStreams.streamingEmbeddingDedupLedger(s, landing.toString,
-          vecs.schema, "strvldg.ledger", ckpt.toString, "vec_id",
+          .write.mode("append").parquet(landing)
+        EventStreams.streamingEmbeddingDedupLedger(s, landing,
+          vecs.schema, "strvldg.ledger", ckpt, "vec_id",
           "embedding", dim = 64)
         s.table("strvldg.ledger")
           .groupBy(col("doc"))
@@ -5082,27 +4997,19 @@ object PipelineQueries extends QueryPack {
     //      one semantics for both sketch paths (the x50/x58 precedent) --
     Q("x72_streaming_heavy_hitters",
       (s, dir) => {
-        import graft.engine._
         val ev = t(s, dir, "events")
           .select(col("event_id"), zipfTerm.as("term"))
         val split = ev.agg(expr("(min(event_id) + max(event_id)) div 2"))
           .first().getLong(0)
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("strhh_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/strhh")
-        s.sql("CREATE DATABASE IF NOT EXISTS strhh")
-        s.sql("DROP TABLE IF EXISTS strhh.sketch")
-        for (p <- Seq(landing, ckpt, wh.resolve("strhh.db/sketch")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "strhh", "sketch")
         ev.filter(col("event_id") <= split)
-          .write.mode("overwrite").parquet(landing.toString)
-        EventStreams.streamingHeavyHitters(s, landing.toString, ev.schema,
-          "strhh.sketch", ckpt.toString, "term", capacity = 128)
+          .write.mode("overwrite").parquet(landing)
+        EventStreams.streamingHeavyHitters(s, landing, ev.schema,
+          "strhh.sketch", ckpt, "term", capacity = 128)
         ev.filter(col("event_id") > split)
-          .write.mode("append").parquet(landing.toString)
-        EventStreams.streamingHeavyHitters(s, landing.toString, ev.schema,
-          "strhh.sketch", ckpt.toString, "term", capacity = 128)
+          .write.mode("append").parquet(landing)
+        EventStreams.streamingHeavyHitters(s, landing, ev.schema,
+          "strhh.sketch", ckpt, "term", capacity = 128)
         // mergeSketchLedger, not a bare groupBy-sum: collapses
         // at-least-once replays on batch_id before summing
         val (summary, totals) =
@@ -5530,27 +5437,19 @@ object PipelineQueries extends QueryPack {
     //      table, so the oracle is the batch SQL with the pinned vocab --
     Q("x84_streaming_source_drift",
       (s, dir) => {
-        import graft.engine._
         val docs = t(s, dir, "documents")
           .select(col("doc_id"), col("source"), col("text"))
         val vocab = graft.operators.CorpusDrift.referenceVocabulary(
           docs.filter(col("doc_id") % 10 === 0), "text", k = 64)
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("strdrift_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/strdrift")
-        s.sql("CREATE DATABASE IF NOT EXISTS strdrift")
-        s.sql("DROP TABLE IF EXISTS strdrift.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("strdrift.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "strdrift", "ledger")
         docs.filter(col("doc_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing.toString)
-        EventStreams.streamingDriftLedger(s, landing.toString, docs.schema,
-          "strdrift.ledger", ckpt.toString, "source", "text", vocab)
+          .write.mode("overwrite").parquet(landing)
+        EventStreams.streamingDriftLedger(s, landing, docs.schema,
+          "strdrift.ledger", ckpt, "source", "text", vocab)
         docs.filter(col("doc_id") % 2 === 1)
-          .write.mode("append").parquet(landing.toString)
-        EventStreams.streamingDriftLedger(s, landing.toString, docs.schema,
-          "strdrift.ledger", ckpt.toString, "source", "text", vocab)
+          .write.mode("append").parquet(landing)
+        EventStreams.streamingDriftLedger(s, landing, docs.schema,
+          "strdrift.ledger", ckpt, "source", "text", vocab)
         val merged = EventStreams.mergeDriftLedger(s.table("strdrift.ledger"))
         graft.operators.CorpusDrift.jsFromBucketCounts(merged)
           .orderBy(col("source"))
@@ -5963,27 +5862,19 @@ object PipelineQueries extends QueryPack {
     //      oracle pins both paths to one semantics ---------------------
     Q("x94_streaming_countmin",
       (s, dir) => {
-        import graft.engine._
         val ev = t(s, dir, "events")
           .select(col("event_id"), zipfTerm.as("term"))
         val split = ev.agg(expr("(min(event_id) + max(event_id)) div 2"))
           .first().getLong(0)
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("strcm_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/strcm")
-        s.sql("CREATE DATABASE IF NOT EXISTS strcm")
-        s.sql("DROP TABLE IF EXISTS strcm.sketch")
-        for (p <- Seq(landing, ckpt, wh.resolve("strcm.db/sketch")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "strcm", "sketch")
         ev.filter(col("event_id") <= split)
-          .write.mode("overwrite").parquet(landing.toString)
-        EventStreams.streamingCountMin(s, landing.toString, ev.schema,
-          "strcm.sketch", ckpt.toString, "term", depth = 4, width = 1024)
+          .write.mode("overwrite").parquet(landing)
+        EventStreams.streamingCountMin(s, landing, ev.schema,
+          "strcm.sketch", ckpt, "term", depth = 4, width = 1024)
         ev.filter(col("event_id") > split)
-          .write.mode("append").parquet(landing.toString)
-        EventStreams.streamingCountMin(s, landing.toString, ev.schema,
-          "strcm.sketch", ckpt.toString, "term", depth = 4, width = 1024)
+          .write.mode("append").parquet(landing)
+        EventStreams.streamingCountMin(s, landing, ev.schema,
+          "strcm.sketch", ckpt, "term", depth = 4, width = 1024)
         // mergeCountMinLedger, not a bare groupBy-sum: collapses
         // at-least-once replays on (batch_id, pos) before summing
         val (counters, totals) =
@@ -6698,30 +6589,22 @@ object PipelineQueries extends QueryPack {
     //      suppression set -------------------------------------------
     Q("x115_streaming_suppression",
       (s, dir) => {
-        import graft.engine._
         val docs = t(s, dir, "documents")
         val requests = docs.filter(col("doc_id") % 97 === 3)
           .select(col("doc_id"))
         val split = requests.agg(expr("(min(doc_id) + max(doc_id)) div 2"))
           .first().getLong(0)
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("supldg_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/supldg")
-        s.sql("CREATE DATABASE IF NOT EXISTS supldg")
-        s.sql("DROP TABLE IF EXISTS supldg.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("supldg.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "supldg", "ledger")
         requests.filter(col("doc_id") <= split)
-          .write.mode("overwrite").parquet(landing.toString)
-        val schema = s.read.parquet(landing.toString).schema
+          .write.mode("overwrite").parquet(landing)
+        val schema = s.read.parquet(landing).schema
         graft.streaming.EventStreams.streamingSuppressionLedger(s,
-          landing.toString, schema, "supldg.ledger", ckpt.toString,
+          landing, schema, "supldg.ledger", ckpt,
           "doc_id")
         requests.filter(col("doc_id") > split)
-          .write.mode("append").parquet(landing.toString)
+          .write.mode("append").parquet(landing)
         graft.streaming.EventStreams.streamingSuppressionLedger(s,
-          landing.toString, schema, "supldg.ledger", ckpt.toString,
+          landing, schema, "supldg.ledger", ckpt,
           "doc_id")
         val assigned = docs.select(col("doc_id"),
           pmod(col("doc_id"), lit(16L)).as("shard"), col("n_chars"))
@@ -7992,7 +7875,6 @@ object PipelineQueries extends QueryPack {
     //      hourly frame and the z-test reports identically ------------
     Q("x145_streaming_anomaly",
       (s, dir) => {
-        import graft.engine._
         // event_id split (x72's shape) on purpose: the two runs then
         // contribute PARTIAL counts to the SAME hours, exercising the
         // cross-batch additive merge rather than disjoint hour ranges
@@ -8000,22 +7882,15 @@ object PipelineQueries extends QueryPack {
           .select(col("event_id"), col("ts"), col("event_type"))
         val split = ev.agg(expr("(min(event_id) + max(event_id)) div 2"))
           .first().getLong(0)
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("stranom_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/stranom")
-        s.sql("CREATE DATABASE IF NOT EXISTS stranom")
-        s.sql("DROP TABLE IF EXISTS stranom.hourly")
-        for (p <- Seq(landing, ckpt, wh.resolve("stranom.db/hourly")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "stranom", "hourly")
         ev.filter(col("event_id") <= split)
-          .write.mode("overwrite").parquet(landing.toString)
-        EventStreams.streamingHourlyLedger(s, landing.toString, ev.schema,
-          "stranom.hourly", ckpt.toString, "ts", "event_type", "error")
+          .write.mode("overwrite").parquet(landing)
+        EventStreams.streamingHourlyLedger(s, landing, ev.schema,
+          "stranom.hourly", ckpt, "ts", "event_type", "error")
         ev.filter(col("event_id") > split)
-          .write.mode("append").parquet(landing.toString)
-        EventStreams.streamingHourlyLedger(s, landing.toString, ev.schema,
-          "stranom.hourly", ckpt.toString, "ts", "event_type", "error")
+          .write.mode("append").parquet(landing)
+        EventStreams.streamingHourlyLedger(s, landing, ev.schema,
+          "stranom.hourly", ckpt, "ts", "event_type", "error")
         // mergeHourlyLedger, not a bare groupBy-sum: collapses
         // at-least-once replays on batch_id before summing
         graft.operators.Anomaly.spikesFromHourly(
@@ -8034,29 +7909,21 @@ object PipelineQueries extends QueryPack {
     //      bounded by distinct hours, not by microbatch count ----------
     Q("x153_ledger_compaction",
       (s, dir) => {
-        import graft.engine._
         val ev = t(s, dir, "events")
           .select(col("event_id"), col("ts"), col("event_type"))
         val bounds = ev.agg(expr("min(event_id)"), expr("max(event_id)"))
           .first()
         val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
         val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("strcomp_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/strcomp")
-        s.sql("CREATE DATABASE IF NOT EXISTS strcomp")
-        s.sql("DROP TABLE IF EXISTS strcomp.hourly")
-        for (p <- Seq(landing, ckpt, wh.resolve("strcomp.db/hourly")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "strcomp", "hourly")
         def run(): Unit = EventStreams.streamingHourlyLedger(s,
-          landing.toString, ev.schema, "strcomp.hourly", ckpt.toString,
+          landing, ev.schema, "strcomp.hourly", ckpt,
           "ts", "event_type", "error")
         ev.filter(col("event_id") <= c1)
-          .write.mode("overwrite").parquet(landing.toString)
+          .write.mode("overwrite").parquet(landing)
         run()
         ev.filter(col("event_id") > c1 && col("event_id") <= c2)
-          .write.mode("append").parquet(landing.toString)
+          .write.mode("append").parquet(landing)
         run()
         // compact between increments: batch 0 collapses into the
         // batch_id = -1 pre-merged rows, batch 1 stays verbatim; the
@@ -8067,7 +7934,7 @@ object PipelineQueries extends QueryPack {
           .write.mode("overwrite").format("parquet")
           .saveAsTable("strcomp.hourly")
         ev.filter(col("event_id") > c2)
-          .write.mode("append").parquet(landing.toString)
+          .write.mode("append").parquet(landing)
         run()
         graft.operators.Anomaly.spikesFromHourly(
           EventStreams.mergeHourlyLedger(s.table("strcomp.hourly")))
@@ -8255,7 +8122,6 @@ object PipelineQueries extends QueryPack {
     //      is x158's SQL verbatim --------------------------------------
     Q("x159_streaming_profile_drift",
       (s, dir) => {
-        import graft.engine._
         val ev = t(s, dir, "events")
           .select(col("event_id"), col("ts"), col("event_type"),
             col("user_id"), col("value"))
@@ -8268,22 +8134,15 @@ object PipelineQueries extends QueryPack {
           "value_cents" -> round(col("value") * 100).cast("long"))
         val slice = when(unix_micros(col("ts")) <= split, "a")
           .otherwise("b")
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("strprof_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/strprof")
-        s.sql("CREATE DATABASE IF NOT EXISTS strprof")
-        s.sql("DROP TABLE IF EXISTS strprof.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("strprof.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "strprof", "ledger")
         def run(): Unit = EventStreams.streamingProfileLedger(s,
-          landing.toString, ev.schema, "strprof.ledger", ckpt.toString,
+          landing, ev.schema, "strprof.ledger", ckpt,
           profCols, slice)
         ev.filter(col("event_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing.toString)
+          .write.mode("overwrite").parquet(landing)
         run()
         ev.filter(col("event_id") % 2 === 1)
-          .write.mode("append").parquet(landing.toString)
+          .write.mode("append").parquet(landing)
         run()
         val merged = EventStreams.mergeProfileLedger(
           s.table("strprof.ledger"))
@@ -8311,8 +8170,7 @@ object PipelineQueries extends QueryPack {
         val docs = t(s, dir, "documents")
         val split = docs.agg(expr("(min(doc_id) + max(doc_id)) div 2"))
           .first().getLong(0)
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
+        val wh = warehousePath(s)
         val staging = wh.resolve("incrcdc_staging")
         Materializer.deleteRecursively(staging)
         s.sql("DROP TABLE IF EXISTS incrcdc.cdc_ledger")
@@ -8364,26 +8222,18 @@ object PipelineQueries extends QueryPack {
     //      completing the batch/streaming x chunk cell) ----------------
     Q("x161_streaming_cdc_ledger",
       (s, dir) => {
-        import graft.engine._
         val docs = t(s, dir, "documents")
         val split = docs.agg(expr("(min(doc_id) + max(doc_id)) div 2"))
           .first().getLong(0)
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("strcdc_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/strcdc")
-        s.sql("CREATE DATABASE IF NOT EXISTS strcdc")
-        s.sql("DROP TABLE IF EXISTS strcdc.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("strcdc.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "strcdc", "ledger")
         docs.filter(col("doc_id") <= split)
-          .write.mode("overwrite").parquet(landing.toString)
-        EventStreams.streamingCdcDedupLedger(s, landing.toString,
-          docs.schema, "strcdc.ledger", ckpt.toString, "doc_id", "text")
+          .write.mode("overwrite").parquet(landing)
+        EventStreams.streamingCdcDedupLedger(s, landing,
+          docs.schema, "strcdc.ledger", ckpt, "doc_id", "text")
         docs.filter(col("doc_id") > split)
-          .write.mode("append").parquet(landing.toString)
-        EventStreams.streamingCdcDedupLedger(s, landing.toString,
-          docs.schema, "strcdc.ledger", ckpt.toString, "doc_id", "text")
+          .write.mode("append").parquet(landing)
+        EventStreams.streamingCdcDedupLedger(s, landing,
+          docs.schema, "strcdc.ledger", ckpt, "doc_id", "text")
         s.table("strcdc.ledger")
           .groupBy(col("doc"))
           .agg(max(col("kept")).as("kept"))
@@ -8404,25 +8254,17 @@ object PipelineQueries extends QueryPack {
     //      the corpus ------------------------------------------------
     Q("x162_streaming_sample_ledger",
       (s, dir) => {
-        import graft.engine._
         val docs = t(s, dir, "documents")
           .select(col("doc_id"), col("source"))
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("strsamp_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/strsamp")
-        s.sql("CREATE DATABASE IF NOT EXISTS strsamp")
-        s.sql("DROP TABLE IF EXISTS strsamp.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("strsamp.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "strsamp", "ledger")
         def run(): Unit = EventStreams.streamingSampleLedger(s,
-          landing.toString, docs.schema, "strsamp.ledger", ckpt.toString,
+          landing, docs.schema, "strsamp.ledger", ckpt,
           "source", "doc_id", n = 12)
         docs.filter(col("doc_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing.toString)
+          .write.mode("overwrite").parquet(landing)
         run()
         docs.filter(col("doc_id") % 2 === 1)
-          .write.mode("append").parquet(landing.toString)
+          .write.mode("append").parquet(landing)
         run()
         EventStreams.mergeSampleLedger(s.table("strsamp.ledger"),
             "source", "doc_id", n = 12)
@@ -8728,24 +8570,16 @@ object PipelineQueries extends QueryPack {
     //      of this batch is new text" without re-shingling history ----
     Q("x175_streaming_novelty_ledger",
       (s, dir) => {
-        import graft.engine._
         val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("novlg_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/novlg")
-        s.sql("CREATE DATABASE IF NOT EXISTS novlg")
-        s.sql("DROP TABLE IF EXISTS novlg.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("novlg.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "novlg", "ledger")
         def run(): Unit = EventStreams.streamingNoveltyLedger(s,
-          landing.toString, docs.schema, "novlg.ledger", ckpt.toString,
+          landing, docs.schema, "novlg.ledger", ckpt,
           "text", n = 4)
         docs.filter(col("doc_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing.toString)
+          .write.mode("overwrite").parquet(landing)
         run()
         docs.filter(col("doc_id") % 2 === 1)
-          .write.mode("append").parquet(landing.toString)
+          .write.mode("append").parquet(landing)
         run()
         EventStreams.noveltyReport(s.table("novlg.ledger"))
           .orderBy(col("batch_id"))
@@ -8831,25 +8665,17 @@ object PipelineQueries extends QueryPack {
     //      the oracle is x135's SQL verbatim --------------------------
     Q("x172_streaming_retention_ledger",
       (s, dir) => {
-        import graft.engine._
         val ev = t(s, dir, "events")
           .select(col("event_id"), col("user_id"), col("ts"))
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("retlg_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/retlg")
-        s.sql("CREATE DATABASE IF NOT EXISTS retlg")
-        s.sql("DROP TABLE IF EXISTS retlg.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("retlg.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "retlg", "ledger")
         def run(): Unit = EventStreams.streamingRetentionLedger(s,
-          landing.toString, ev.schema, "retlg.ledger", ckpt.toString,
+          landing, ev.schema, "retlg.ledger", ckpt,
           "user_id", "ts")
         ev.filter(col("event_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing.toString)
+          .write.mode("overwrite").parquet(landing)
         run()
         ev.filter(col("event_id") % 2 === 1)
-          .write.mode("append").parquet(landing.toString)
+          .write.mode("append").parquet(landing)
         run()
         graft.operators.Retention.cohortsFromActivity(
             EventStreams.mergeActivityLedger(s.table("retlg.ledger")))
@@ -8972,26 +8798,18 @@ object PipelineQueries extends QueryPack {
     //      x170's SQL verbatim, proving incremental == batch ----------
     Q("x206_streaming_quantile_ledger",
       (s, dir) => {
-        import graft.engine._
         val docs = t(s, dir, "documents")
           .select(col("doc_id"), col("source"), col("n_chars"),
             col("text"))
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("qtlg_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/qtlg")
-        s.sql("CREATE DATABASE IF NOT EXISTS qtlg")
-        s.sql("DROP TABLE IF EXISTS qtlg.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("qtlg.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "qtlg", "ledger")
         def run(): Unit = EventStreams.streamingQuantileLedger(s,
-          landing.toString, docs.schema, "qtlg.ledger", ckpt.toString,
+          landing, docs.schema, "qtlg.ledger", ckpt,
           "source", "n_chars", nTokens(tokens(col("text"))).cast("long"))
         docs.filter(col("doc_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing.toString)
+          .write.mode("overwrite").parquet(landing)
         run()
         docs.filter(col("doc_id") % 2 === 1)
-          .write.mode("append").parquet(landing.toString)
+          .write.mode("append").parquet(landing)
         run()
         EventStreams.mergeQuantileLedger(s.table("qtlg.ledger"),
             "source", "n_chars", Seq(500000L, 900000L, 990000L))
@@ -9083,25 +8901,17 @@ object PipelineQueries extends QueryPack {
 
     Q("x168_streaming_token_ledger",
       (s, dir) => {
-        import graft.engine._
         val docs = t(s, dir, "documents")
           .select(col("doc_id"), col("source"), col("text"))
-        val wh = java.nio.file.Paths.get(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val landing = wh.resolve("toklg_landing")
-        val ckpt = wh.resolve("_graft_checkpoints/toklg")
-        s.sql("CREATE DATABASE IF NOT EXISTS toklg")
-        s.sql("DROP TABLE IF EXISTS toklg.ledger")
-        for (p <- Seq(landing, ckpt, wh.resolve("toklg.db/ledger")))
-          Materializer.deleteRecursively(p)
+        val (landing, ckpt) = resetLedger(s, "toklg", "ledger")
         def run(): Unit = EventStreams.streamingTokenLedger(s,
-          landing.toString, docs.schema, "toklg.ledger", ckpt.toString,
+          landing, docs.schema, "toklg.ledger", ckpt,
           "source", nTokens(tokens(col("text"))))
         docs.filter(col("doc_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing.toString)
+          .write.mode("overwrite").parquet(landing)
         run()
         docs.filter(col("doc_id") % 2 === 1)
-          .write.mode("append").parquet(landing.toString)
+          .write.mode("append").parquet(landing)
         run()
         val merged = EventStreams.mergeTokenLedger(
           s.table("toklg.ledger"), "source")

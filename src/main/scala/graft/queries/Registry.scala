@@ -35,4 +35,27 @@ trait QueryPack {
       graft.functions.EventTime.normalizeTs(
         s.read.parquet(s"$dir/$name.parquet"))
     } else s.read.parquet(s"$dir/$name.parquet")
+
+  /** The session's warehouse directory as a local path. */
+  protected def warehousePath(s: SparkSession): java.nio.file.Path =
+    java.nio.file.Paths.get(new java.net.URI(
+      s.conf.get("spark.sql.warehouse.dir")).getPath)
+
+  /** Fresh state for a streaming-ledger query over table `db.table`:
+    * creates the database, drops the table and deletes the landing
+    * (`<db>_landing`), checkpoint (`_graft_checkpoints/<db>`) and table
+    * directories under the warehouse, so every run starts from batch 0
+    * (the warehouse outlives the in-memory catalog across processes).
+    * Returns (landing, checkpoint) paths. */
+  protected def resetLedger(s: SparkSession, db: String,
+      table: String): (String, String) = {
+    val wh = warehousePath(s)
+    val landing = wh.resolve(s"${db}_landing")
+    val ckpt = wh.resolve(s"_graft_checkpoints/$db")
+    s.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+    s.sql(s"DROP TABLE IF EXISTS $db.$table")
+    for (p <- Seq(landing, ckpt, wh.resolve(s"$db.db/$table")))
+      graft.engine.Materializer.deleteRecursively(p)
+    (landing.toString, ckpt.toString)
+  }
 }

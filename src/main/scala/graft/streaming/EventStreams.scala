@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Structured Streaming surface over the `events` table.
   *
@@ -13,6 +14,25 @@ import org.apache.spark.sql.types.DecimalType
   * synchronous verification we run the stream to completion against a
   * memory sink (`processAllAvailable`), which makes the result equal to
   * the batch computation and therefore oracle-checkable.
+  *
+  * The append-only `streaming*Ledger` family (plus [[streamingHeavyHitters]]
+  * and [[streamingCountMin]]) shares ONE run loop, `runLedger`; each
+  * writer contributes only its per-batch partial. The runner contract:
+  *   - one AvailableNow run over the landing directory; the checkpointed
+  *     offset log is the cursor, so a re-run reads only files that
+  *     arrived since the last run;
+  *   - delivery is at-least-once (`foreachBatch`): a crash between the
+  *     append and the offset commit replays the batch, so every partial
+  *     stamps its rows with the streaming `batch_id` the runner hands it
+  *     and the ledger's merge view collapses replays on it (the dedup
+  *     posting ledgers carry no batch id: their views are max/set
+  *     reads, replay-stable as they are);
+  *   - each partial is rebalanced before its append (`compactForAppend`),
+  *     so a summary-sized batch lands as one file, not one per shuffle
+  *     partition;
+  *   - the appends run in the cloned microbatch session, so after the
+  *     run the CALLER's session refreshes the table — a post-run read
+  *     sees every appended row.
   */
 object EventStreams {
 
@@ -224,11 +244,12 @@ object EventStreams {
       checkpointDir: String, idCol: String, textCol: String,
       n: Int = 4, numHashes: Int = 8, numBands: Int = 4): Unit = {
     import graft.operators.Dedup
-    streamingLedger(spark, landingDir, schema, ledgerTable, checkpointDir,
-      (batch, kept) => Dedup.dedupBatchLedger(batch, kept, idCol, textCol,
-        n, numHashes, numBands),
-      b0 => Dedup.minhashBandPostings(b0, idCol, textCol,
-        n, numHashes, numBands))
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir)(
+      dedupPartial(ledgerTable,
+        (batch, kept) => Dedup.dedupBatchLedger(batch, kept, idCol, textCol,
+          n, numHashes, numBands),
+        b0 => Dedup.minhashBandPostings(b0, idCol, textCol,
+          n, numHashes, numBands)))
   }
 
   /** The embedding twin of [[streamingDedupLedger]] — the same
@@ -241,11 +262,12 @@ object EventStreams {
       checkpointDir: String, idCol: String, vecCol: String, dim: Int,
       numPlanes: Int = 64, numBands: Int = 8): Unit = {
     import graft.operators.Dedup
-    streamingLedger(spark, landingDir, schema, ledgerTable, checkpointDir,
-      (batch, kept) => Dedup.embeddingDedupBatchLedger(batch, kept, idCol,
-        vecCol, dim, numPlanes, numBands),
-      b0 => Dedup.srpBandPostings(b0, idCol, vecCol, dim, numPlanes,
-        numBands))
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir)(
+      dedupPartial(ledgerTable,
+        (batch, kept) => Dedup.embeddingDedupBatchLedger(batch, kept, idCol,
+          vecCol, dim, numPlanes, numBands),
+        b0 => Dedup.srpBandPostings(b0, idCol, vecCol, dim, numPlanes,
+          numBands)))
   }
 
   /** The CONTENT-CHUNK twin of [[streamingDedupLedger]] — the same
@@ -259,10 +281,11 @@ object EventStreams {
       checkpointDir: String, idCol: String, textCol: String,
       w: Int = 16, mask: Int = 63, minChunkLen: Int = 32): Unit = {
     import graft.operators.Cdc
-    streamingLedger(spark, landingDir, schema, ledgerTable, checkpointDir,
-      (batch, kept) => Cdc.cdcDedupBatchLedger(batch, kept, idCol, textCol,
-        w, mask, minChunkLen),
-      b0 => Cdc.chunkPostings(b0, idCol, textCol, w, mask, minChunkLen))
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir)(
+      dedupPartial(ledgerTable,
+        (batch, kept) => Cdc.cdcDedupBatchLedger(batch, kept, idCol, textCol,
+          w, mask, minChunkLen),
+        b0 => Cdc.chunkPostings(b0, idCol, textCol, w, mask, minChunkLen)))
   }
 
   /** Compact a microbatch output before its ledger append (guide §6
@@ -283,37 +306,21 @@ object EventStreams {
     df.hint("rebalance")
   }
 
-  /** Signature-agnostic streaming-ledger core: one AvailableNow run over
-    * the landing dir, each microbatch passed through `step(batch, kept)`
-    * and appended to the ledger table; `emptyPostings(batch.limit(0))`
-    * supplies the posting schema before the ledger's first append. */
-  private def streamingLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
-      checkpointDir: String,
-      step: (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame,
-      emptyPostings: org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame): Unit = {
+  /** The AvailableNow ledger runner (the contract is in the object
+    * scaladoc): one run over the landing dir, each microbatch's
+    * `partial(batch, batchId)` rebalanced and appended to the ledger
+    * table, then the table refreshed in the caller's session. */
+  private def runLedger(spark: SparkSession, landingDir: String,
+      schema: StructType, ledgerTable: String, checkpointDir: String)(
+      partial: (DataFrame, Long) => DataFrame): Unit = {
     val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val s = batch.sparkSession
-        val kept =
-          if (s.catalog.tableExists(ledgerTable)) {
-            // the microbatch runs in a CLONED session whose relation cache
-            // may hold a pre-run file listing of the ledger — refresh so
-            // the history probe sees every batch appended so far
-            s.catalog.refreshTable(ledgerTable)
-            s.table(ledgerTable).filter(col("kept") && col("band") >= 0)
-          }
-          else emptyPostings(batch.limit(0).toDF())
-        step(batch.toDF(), kept)
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-      }
+    val fb: (DataFrame, Long) => Unit = (batch, batchId) =>
+      partial(batch, batchId)
+        .transform(compactForAppend)
+        .write.mode("append").format("parquet").saveAsTable(ledgerTable)
     val q = stream.writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .foreachBatch(fb)
       .start()
     try q.awaitTermination() finally q.stop()
@@ -322,6 +329,27 @@ object EventStreams {
     // this refresh a post-run read sees the pre-run row count
     if (spark.catalog.tableExists(ledgerTable))
       spark.catalog.refreshTable(ledgerTable)
+  }
+
+  /** The dedup-ledger partial: each microbatch passed through
+    * `step(batch, kept)` against the ledger's kept postings so far;
+    * `emptyPostings(batch.limit(0))` supplies the posting schema before
+    * the ledger's first append. */
+  private def dedupPartial(ledgerTable: String,
+      step: (DataFrame, DataFrame) => DataFrame,
+      emptyPostings: DataFrame => DataFrame)(
+      batch: DataFrame, batchId: Long): DataFrame = {
+    val s = batch.sparkSession
+    val kept =
+      if (s.catalog.tableExists(ledgerTable)) {
+        // the microbatch runs in a CLONED session whose relation cache
+        // may hold a pre-run file listing of the ledger — refresh so
+        // the history probe sees every batch appended so far
+        s.catalog.refreshTable(ledgerTable)
+        s.table(ledgerTable).filter(col("kept") && col("band") >= 0)
+      }
+      else emptyPostings(batch.limit(0))
+    step(batch, kept)
   }
 
   /** Streaming heavy-hitters sketch LEDGER — corpus term monitoring that
@@ -351,12 +379,11 @@ object EventStreams {
   def streamingHeavyHitters(spark: SparkSession, landingDir: String,
       schema: org.apache.spark.sql.types.StructType, sketchTable: String,
       checkpointDir: String, termCol: String, capacity: Int): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, batchId) => {
+    runLedger(spark, landingDir, schema, sketchTable, checkpointDir) {
+      (batch, batchId) =>
         val s = batch.sparkSession
         // ONE pass over the microbatch: (n, summary) in a single row
-        val row = batch.toDF().agg(
+        val row = batch.agg(
           count(lit(1)).as("__n"),
           graft.expressions.SketchExpressions
             .misraGriesTopK(col(termCol), capacity).as("__sk")).first()
@@ -364,19 +391,9 @@ object EventStreams {
         val entries = row.getSeq[org.apache.spark.sql.Row](1)
           .map(e => (e.getString(0), e.getLong(1)))
         import s.implicits._
-        val out = ((null.asInstanceOf[String], n) +: entries).toDF("term", "est")
+        ((null.asInstanceOf[String], n) +: entries).toDF("term", "est")
           .withColumn("batch_id", lit(batchId))
-        out.transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(sketchTable)
-      }
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(sketchTable))
-      spark.catalog.refreshTable(sketchTable)
+    }
   }
 
   /** Streaming source-drift ledger: each AvailableNow run appends the
@@ -393,22 +410,12 @@ object EventStreams {
       schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
       checkpointDir: String, sourceCol: String, textCol: String,
       vocab: Seq[String]): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
         graft.operators.CorpusDrift
-          .bucketCountsAgainstVocab(batch.toDF(), sourceCol, textCol, vocab)
+          .bucketCountsAgainstVocab(batch, sourceCol, textCol, vocab)
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+    }
   }
 
   /** Idempotent merge of a [[streamingDriftLedger]]: collapse
@@ -448,26 +455,16 @@ object EventStreams {
       schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
       checkpointDir: String, cols: Seq[(String, Column)],
       slice: Column): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
-        batch.toDF()
+        batch
           .select(slice.as("slice"),
             graft.operators.Profiler.stackedValues(cols)
               .as(Seq("column_name", "value")))
           .groupBy("slice", "column_name", "value")
           .agg(count(lit(1)).as("c"))
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+    }
   }
 
   /** Idempotent merge of a [[streamingProfileLedger]]: collapse
@@ -501,23 +498,13 @@ object EventStreams {
       schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
       checkpointDir: String, groupCol: String, idCol: String,
       n: Int): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
         graft.operators.Sampling.capPerGroup(
-          batch.toDF().select(col(groupCol), col(idCol)),
+          batch.select(col(groupCol), col(idCol)),
           groupCol, idCol, n)
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+    }
   }
 
   /** Merged view of a [[streamingSampleLedger]]: distinct candidates
@@ -541,13 +528,9 @@ object EventStreams {
     * than n candidates in old batches. */
   def compactSampleLedger(ledger: org.apache.spark.sql.DataFrame,
       groupCol: String, idCol: String, n: Int)
-      : org.apache.spark.sql.DataFrame = {
-    val maxId = ledger.agg(max(col("batch_id"))).first().getLong(0)
-    val pre = mergeSampleLedger(ledger.filter(col("batch_id") < maxId),
-        groupCol, idCol, n)
-      .withColumn("batch_id", lit(-1L))
-    pre.unionByName(ledger.filter(col("batch_id") === maxId))
-  }
+      : org.apache.spark.sql.DataFrame =
+    compactBelowMax(ledger)(mergeSampleLedger(_, groupCol, idCol, n)
+      .withColumn("batch_id", lit(-1L)))
 
   /** Streaming SESSION ledger — incremental sessionization (the x10
     * batch op fed batch-by-batch): each microbatch sessionizes ITS OWN
@@ -570,11 +553,10 @@ object EventStreams {
       idCol: String, gapMinutes: Int): Unit = {
     require(gapMinutes >= 1, s"gapMinutes must be >= 1, got $gapMinutes")
     val gapUs = gapMinutes * 60000000L
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, batchId) => {
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
+      (batch, batchId) =>
         val w = Window.partitionBy(col("u")).orderBy(col("us"), col("id"))
-        batch.toDF()
+        batch
           .select(col(userCol).as("u"), unix_micros(col(tsCol)).as("us"),
             col(idCol).cast("long").as("id"))
           .filter(col("u").isNotNull && col("us").isNotNull)
@@ -589,17 +571,7 @@ object EventStreams {
             count(lit(1)).as("n"))
           .drop("sid")
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-      }
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+    }
   }
 
   /** Stitched full-corpus session summaries from a session ledger:
@@ -633,16 +605,9 @@ object EventStreams {
     * merging everything — semantically lossless under
     * [[mergeSessionLedger]]); the max-id batch stays verbatim (the only
     * AvailableNow-replayable batch). */
-  def compactSessionLedger(ledger: DataFrame, gapMinutes: Int): DataFrame = {
-    val maxB = ledger.agg(max(col("batch_id"))).first()
-    if (maxB.isNullAt(0)) return ledger
-    val last = ledger.filter(col("batch_id") === maxB.getLong(0))
-    val older = mergeSessionLedger(
-      ledger.filter(col("batch_id") < maxB.getLong(0)), gapMinutes)
-      .withColumn("batch_id", lit(-1L))
-      .select(ledger.columns.map(col): _*)
-    last.unionByName(older)
-  }
+  def compactSessionLedger(ledger: DataFrame, gapMinutes: Int): DataFrame =
+    compactBelowMax(ledger)(mergeSessionLedger(_, gapMinutes)
+      .withColumn("batch_id", lit(-1L)))
 
   /** Streaming BURSTINESS ledger — [[graft.operators.Burstiness]] (x185)
     * fed incrementally: each microbatch appends per-user partials
@@ -669,11 +634,10 @@ object EventStreams {
       schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
       checkpointDir: String, userCol: String, tsCol: String,
       idCol: String): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, batchId) => {
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
+      (batch, batchId) =>
         val w = Window.partitionBy(col("u")).orderBy(col("us"), col("id"))
-        batch.toDF()
+        batch
           .select(col(userCol).as("u"), unix_micros(col(tsCol)).as("us"),
             col(idCol).cast("long").as("id"))
           .filter(col("u").isNotNull && col("us").isNotNull)
@@ -687,17 +651,7 @@ object EventStreams {
               .cast(DecimalType(38, 0))), lit(0L).cast(DecimalType(38, 0)))
               .cast(DecimalType(38, 0)).as("s2"))
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-      }
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+    }
   }
 
   /** x185's report from a burstiness ledger: stitches boundary gaps
@@ -801,16 +755,10 @@ object EventStreams {
     * associative, so pre-stitching a prefix is lossless under
     * [[mergeBurstinessLedger]]); the max-id batch stays verbatim. */
   def compactBurstinessLedger(ledger: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val d38 = DecimalType(38, 0)
-    val maxB = ledger.agg(max(col("batch_id"))).first()
-    if (maxB.isNullAt(0)) return ledger
-    val last = ledger.filter(col("batch_id") === maxB.getLong(0))
-    val olderRows = ledger.filter(col("batch_id") < maxB.getLong(0))
-      .dropDuplicates("batch_id", "u", "first_us")
     val wO = Window.partitionBy(col("u"))
       .orderBy(col("first_us"), col("last_us"))
-    val older = olderRows
+    compactBelowMax(ledger)(_.dropDuplicates("batch_id", "u", "first_us")
       .withColumn("prev_last", lag(col("last_us"), 1).over(wO))
       .withColumn("b_gap",
         when(col("prev_last").isNull, lit(null).cast("long"))
@@ -830,9 +778,7 @@ object EventStreams {
         (coalesce(sum(col("s2")), lit(0L).cast(d38)) +
           coalesce(sum((col("b_gap") * col("b_gap")).cast(d38)),
             lit(0L).cast(d38))).cast(d38).as("s2"))
-      .withColumn("batch_id", lit(-1L))
-      .select(ledger.columns.map(col): _*)
-    last.unionByName(older)
+      .withColumn("batch_id", lit(-1L)))
   }
 
   /** Streaming KMV CARDINALITY ledger — the bounded-state distinct
@@ -850,25 +796,15 @@ object EventStreams {
       schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
       checkpointDir: String, key: Column, k: Int): Unit = {
     require(k >= 16, s"k must be >= 16 for a usable estimate, got $k")
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
-        batch.toDF()
+        batch
           .select(md5(key.cast("string")).as("h"))
           .filter(col("h").isNotNull)
           .distinct()
           .orderBy(col("h")).limit(k)
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+    }
   }
 
   /** Distinct-count estimate from a KMV ledger: `(k_used, n_rows,
@@ -919,9 +855,8 @@ object EventStreams {
       schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
       checkpointDir: String, tsCol: String, delaySeconds: Long): Unit = {
     require(delaySeconds >= 0, "delaySeconds must be >= 0")
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, batchId) => {
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
+      (batch, batchId) =>
         val wmBefore: Long =
           if (spark.catalog.tableExists(ledgerTable)) {
             val r = spark.table(ledgerTable)
@@ -933,24 +868,14 @@ object EventStreams {
         val lateIf =
           if (wmBefore >= 0L) us < lit(wmBefore - delaySeconds * 1000000L)
           else lit(false)
-        batch.toDF()
+        batch
           .agg(count(lit(1)).as("n_rows"),
             coalesce(max(us), lit(-1L)).as("batch_max_us"),
             sum(when(lateIf, 1L).otherwise(0L)).as("late_rows"))
           .select(lit(batchId).as("batch_id"), col("n_rows"),
             col("batch_max_us"), lit(wmBefore).as("wm_before_us"),
             col("late_rows"))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-      }
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+    }
   }
 
   /** Per-batch lateness shares + a `batch_id = -1` corpus-total row:
@@ -991,25 +916,15 @@ object EventStreams {
       schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
       checkpointDir: String, groupCol: String, opCol: String,
       valueCol: String): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
-        batch.toDF()
+        batch
           .groupBy(col(groupCol))
           .agg(sum(col(opCol).cast("long")).as("rows_delta"),
             sum(col(opCol).cast("long") * col(valueCol).cast("long"))
               .as("value_delta"))
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+    }
   }
 
   /** Net position per group from a retraction ledger: `(group,
@@ -1056,20 +971,10 @@ object EventStreams {
   def streamingTokenLedger(spark: SparkSession, landingDir: String,
       schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
       checkpointDir: String, groupCol: String, tokens: Column): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
-        tokenLedgerPartial(batch.toDF(), groupCol, tokens, batchId)
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+        tokenLedgerPartial(batch, groupCol, tokens, batchId)
+    }
   }
 
   /** One batch's (group, docs, tokens) partial stamped `batchId`,
@@ -1117,10 +1022,9 @@ object EventStreams {
       schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
       checkpointDir: String, groupCol: String, valueCol: String,
       weight: Column): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
-        batch.toDF()
+        batch
           .select(col(groupCol).as("g"),
             when(col(valueCol).isNull, raise_error(
               lit(s"quantile ledger: null $valueCol")))
@@ -1131,16 +1035,7 @@ object EventStreams {
           .groupBy(col("g"), col("v"))
           .agg(sum(col("w")).as("w"))
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+    }
   }
 
   /** Signed retraction batch for a [[streamingQuantileLedger]] — the
@@ -1236,20 +1131,10 @@ object EventStreams {
       schema: org.apache.spark.sql.types.StructType, sketchTable: String,
       checkpointDir: String, termCol: String, depth: Int,
       width: Int): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+    runLedger(spark, landingDir, schema, sketchTable, checkpointDir) {
       (batch, batchId) =>
-        countMinPartial(batch.toDF(), termCol, depth, width, batchId)
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(sketchTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(sketchTable))
-      spark.catalog.refreshTable(sketchTable)
+        countMinPartial(batch, termCol, depth, width, batchId)
+    }
   }
 
   /** One batch's sparse CM partial — (pos, cnt) counters plus the
@@ -1314,27 +1199,16 @@ object EventStreams {
     * by construction — a replayed batch re-asserts ids it already
     * asserted; readers go through [[suppressionSet]], which collapses
     * duplicates and keeps the FIRST asserting batch per id (the audit
-    * trail: when did this id become suppressed). */
+    * trail: when did this id become suppressed). Compact it with
+    * [[compactSetLedger]] on the id column. */
   def streamingSuppressionLedger(spark: SparkSession, landingDir: String,
       schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
       checkpointDir: String, idCol: String): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
-        batch.toDF().select(col(idCol)).distinct()
+        batch.select(col(idCol)).distinct()
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    // appends ran in the cloned microbatch session; refresh the caller's
-    // cached file listing (the streamingLedger convention)
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+    }
   }
 
   /** The deduplicated suppression set from a [[streamingSuppressionLedger]]
@@ -1359,25 +1233,15 @@ object EventStreams {
       schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
       checkpointDir: String, tsCol: String, typeCol: String,
       matchType: String): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
-        batch.toDF()
+        batch
           .select(date_trunc("hour", col(tsCol)).as("hour"),
             (col(typeCol) === matchType).cast("long").as("hit"))
           .groupBy("hour")
           .agg(count(lit(1)).as("n_events"), sum(col("hit")).as("n_matched"))
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+    }
   }
 
   /** Replay-idempotent merge of a [[streamingHourlyLedger]] table back
@@ -1412,18 +1276,26 @@ object EventStreams {
     * Scale shape: one bounded max-id agg (1-row collect), one filter
     * scan, one keys-sized groupBy — no joins. */
   def compactBatchLedger(ledger: DataFrame, keyCols: Seq[String],
-      sumCols: Seq[String]): DataFrame = {
-    val maxB = ledger.agg(max(col("batch_id"))).first()
-    if (maxB.isNullAt(0)) return ledger // empty ledger: nothing to do
-    val last = ledger.filter(col("batch_id") === maxB.getLong(0))
-    val older = ledger.filter(col("batch_id") < maxB.getLong(0))
-      .dropDuplicates("batch_id" +: keyCols)
+      sumCols: Seq[String]): DataFrame =
+    compactBelowMax(ledger)(_.dropDuplicates("batch_id" +: keyCols)
       .groupBy(keyCols.map(col): _*)
       .agg(sum(col(sumCols.head)).as(sumCols.head),
         sumCols.tail.map(c => sum(col(c)).as(c)): _*)
-      .withColumn("batch_id", lit(-1L))
-      .select(ledger.columns.map(col): _*) // original column order
-    last.unionByName(older)
+      .withColumn("batch_id", lit(-1L)))
+
+  /** The skeleton every batch-id compactor shares: the max-id batch is
+    * kept VERBATIM (the only replay-eligible batch, see
+    * [[compactBatchLedger]]), the batches strictly below it are folded
+    * by `older` (which stamps its own `batch_id`), reordered to the
+    * ledger's columns, and unioned after it. An empty ledger has no max
+    * id and is returned as is. */
+  private def compactBelowMax(ledger: DataFrame)(
+      older: DataFrame => DataFrame): DataFrame = {
+    val maxB = ledger.agg(max(col("batch_id"))).first()
+    if (maxB.isNullAt(0)) return ledger // empty ledger: nothing to do
+    val last = ledger.filter(col("batch_id") === maxB.getLong(0))
+    last.unionByName(older(ledger.filter(col("batch_id") < maxB.getLong(0)))
+      .select(ledger.columns.map(col): _*)) // original column order
   }
 
   /** Streaming retention-activity LEDGER — the x135 cohort triangle fed
@@ -1441,24 +1313,14 @@ object EventStreams {
   def streamingRetentionLedger(spark: SparkSession, landingDir: String,
       schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
       checkpointDir: String, userCol: String, tsCol: String): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
-        batch.toDF()
+        batch
           .select(col(userCol).as("u"),
             to_date(date_trunc("week", col(tsCol))).as("week"))
           .distinct()
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+    }
   }
 
   /** Merged view of a [[streamingRetentionLedger]]: the distinct
@@ -1467,22 +1329,16 @@ object EventStreams {
   def mergeActivityLedger(ledger: DataFrame): DataFrame =
     ledger.select(col("u"), col("week")).distinct()
 
-  /** Compact a SET-semantics ledger (retention activity x172, or any
+  /** Compact a SET-semantics ledger (retention activity x172,
+    * suppression x115 on its id column, or any
     * ledger whose merged view is a distinct over key columns): one row
     * per key tuple across the older batches, keeping the FIRST
     * asserting batch as the audit trail (the [[suppressionSet]]
     * convention) — except the max-id batch's rows, kept verbatim for
     * the same replay-collapse reason as [[compactBatchLedger]]. */
-  def compactSetLedger(ledger: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val maxB = ledger.agg(max(col("batch_id"))).first()
-    if (maxB.isNullAt(0)) return ledger
-    val last = ledger.filter(col("batch_id") === maxB.getLong(0))
-    val older = ledger.filter(col("batch_id") < maxB.getLong(0))
-      .groupBy(keyCols.map(col): _*)
-      .agg(min(col("batch_id")).as("batch_id"))
-      .select(ledger.columns.map(col): _*)
-    last.unionByName(older)
-  }
+  def compactSetLedger(ledger: DataFrame, keyCols: Seq[String]): DataFrame =
+    compactBelowMax(ledger)(_.groupBy(keyCols.map(col): _*)
+      .agg(min(col("batch_id")).as("batch_id")))
 
   /** Streaming vocabulary-novelty LEDGER — x129's Heaps-law growth
     * curve fed incrementally: "how much of this batch is text we have
@@ -1502,26 +1358,16 @@ object EventStreams {
   def streamingNoveltyLedger(spark: SparkSession, landingDir: String,
       schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
       checkpointDir: String, textCol: String, n: Int): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
-        batch.toDF()
+        batch
           .select(explode(graft.functions.TextFunctions.shingles(
             graft.functions.TextFunctions.tokens(col(textCol)), n))
             .as("t"))
           .select(md5(col("t")).as("sh"))
           .distinct()
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+    }
   }
 
   /** Per-batch novelty from a [[streamingNoveltyLedger]]: each batch's
@@ -1553,7 +1399,8 @@ object EventStreams {
     * output and leaves every other key's view bit-identical — the
     * per-key locality every merge view in this file has by
     * construction). Idempotent; commutes with the per-key-LOSSLESS
-    * compactors (set/session/suppression/batch — all per-key groupBys)
+    * compactors (set — suppression included —, session, batch: all
+    * per-key groupBys)
     * at the MERGE-VIEW level — raw rows can differ in batch-id
     * bookkeeping when the purged key owned the max batch, since the
     * compactors keep that batch verbatim as the replay cursor.
@@ -1640,21 +1487,5 @@ object EventStreams {
       raw.join(deletes.select(col(keyCol)).distinct(), Seq(keyCol),
         "left_semi"),
       groupCol, tokens, batchId, sign = -1L)
-  }
-
-  /** Compact a [[streamingSuppressionLedger]] table: one row per id,
-    * keeping the FIRST asserting batch (the audit trail [[suppressionSet]]
-    * reads through min) — except the max-id batch's rows, kept verbatim
-    * for the same replay-collapse reason as [[compactBatchLedger]].
-    * Lossless under [[suppressionSet]]: same ids, same first_batch. */
-  def compactSuppressionLedger(ledger: DataFrame, idCol: String): DataFrame = {
-    val maxB = ledger.agg(max(col("batch_id"))).first()
-    if (maxB.isNullAt(0)) return ledger
-    val last = ledger.filter(col("batch_id") === maxB.getLong(0))
-    val older = ledger.filter(col("batch_id") < maxB.getLong(0))
-      .groupBy(col(idCol))
-      .agg(min(col("batch_id")).as("batch_id"))
-      .select(ledger.columns.map(col): _*)
-    last.unionByName(older)
   }
 }

@@ -80,5 +80,18 @@ class PageRankSpec extends SparkSpec {
       assert(java.lang.Double.doubleToRawLongBits(local(k)) ==
         java.lang.Double.doubleToRawLongBits(v),
         s"node $k: local ${local(k)} != distributed $v")
+    // caps past Int range must still take the local path and agree
+    // (the gate's limit(cap + 1) is clamped: Int.MaxValue would wrap to a
+    // negative limit, 2^32 to limit(1))
+    for (cap <- Seq(Int.MaxValue.toLong, 1L << 32)) {
+      val big = PageRank.ranks(df, "src", "dst", iters = 10,
+          localMaxEdges = cap)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(big.keySet == dist.keySet)
+      for ((k, v) <- dist)
+        assert(java.lang.Double.doubleToRawLongBits(big(k)) ==
+          java.lang.Double.doubleToRawLongBits(v),
+          s"cap $cap, node $k: ${big(k)} != distributed $v")
+    }
   }
 }

@@ -232,7 +232,7 @@ class LedgerInvariantsSpec extends SparkSpec {
         _.filter(col("batch_id") === 0),
         l => EventStreams.suppressionSet(l, "doc_id").collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap,
-        EventStreams.compactSuppressionLedger(_, "doc_id")),
+        EventStreams.compactSetLedger(_, Seq("doc_id"))),
       Shape("dedup postings (x50/x58)", postings,
         _.filter(col("doc") >= 3L), // last appended batch
         postingViews, Dedup.compactLedger(_)),
@@ -321,12 +321,12 @@ class LedgerInvariantsSpec extends SparkSpec {
     val sp = EventStreams.purgeLedger(suplg, sdel, "doc_id")
     assert(EventStreams.suppressionSet(sp, "doc_id").collect()
       .map(_.getLong(0)).toSet == Set(11L, 13L, 14L))
-    assert(rowSet(EventStreams.compactSuppressionLedger(
-        EventStreams.purgeLedger(suplg, sdel, "doc_id"), "doc_id"))
+    assert(rowSet(EventStreams.compactSetLedger(
+        EventStreams.purgeLedger(suplg, sdel, "doc_id"), Seq("doc_id")))
       == rowSet(EventStreams.purgeLedger(
-        EventStreams.compactSuppressionLedger(suplg, "doc_id"),
+        EventStreams.compactSetLedger(suplg, Seq("doc_id")),
         sdel, "doc_id")),
-      "purge and compactSuppressionLedger do not commute")
+      "purge and compactSetLedger (suppression) do not commute")
     // session ledger (x196, user-keyed interval summaries): other
     // users' merged sessions bit-identical after a user purge, and
     // purge commutes with the per-user interval-merging compactor
@@ -417,6 +417,17 @@ class LedgerInvariantsSpec extends SparkSpec {
           s"${s.name}: post-compaction replay of the last batch " +
             "changed the merged view")
       }
+    }
+  }
+
+  test("every ledger shape: compacting an empty ledger returns it empty") {
+    // e.g. `run-operation compact_ledger` after a purge removed every key
+    shapes.foreach { s =>
+      val empty = s.ledger().limit(0)
+      val compacted = s.compact(empty)
+      assert(compacted.columns.toSeq == empty.columns.toSeq &&
+        compacted.count() == 0,
+        s"${s.name}: compacting an empty ledger did not return it empty")
     }
   }
 

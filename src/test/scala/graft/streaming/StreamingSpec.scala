@@ -357,6 +357,39 @@ class StreamingSpec extends SparkSpec {
     assert(rep.length == 2 && rep.forall(!_.getBoolean(6)), rep.toSeq)
   }
 
+  test("ledger runner: one file per summary append, caller sees every run") {
+    import spark.implicits._
+    val landing = java.nio.file.Files.createTempDirectory("toklg_t").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("toklg_ck").toString
+    spark.sql("CREATE DATABASE IF NOT EXISTS toklgt")
+    spark.sql("DROP TABLE IF EXISTS toklgt.ledger")
+    val docs = (1L to 40L).map(i => (i, s"s${i % 5}", i % 7 + 1))
+      .toDF("doc_id", "source", "n_tok")
+    def run(): Unit = EventStreams.streamingTokenLedger(spark, landing,
+      docs.schema, "toklgt.ledger", ckpt, "source", col("n_tok"))
+    def docsSeen(): Long = spark.table("toklgt.ledger")
+      .agg(sum(col("docs"))).first().getLong(0)
+    docs.filter(col("doc_id") <= 20).write.mode("overwrite").parquet(landing)
+    run()
+    // the caller's session reads (and caches the listing of) run 1's rows
+    assert(docsSeen() == 20L)
+    docs.filter(col("doc_id") > 20).write.mode("append").parquet(landing)
+    run()
+    // the end-of-run refresh: run 2's append is visible to the caller
+    assert(docsSeen() == 40L, "caller session missed run 2's append")
+    val ledger = spark.table("toklgt.ledger")
+    val batches = ledger.select(col("batch_id")).distinct().count()
+    assert(batches == 2L)
+    // the rebalanced append: one file per groups-sized batch, not one
+    // per shuffle partition (4 here)
+    assert(ledger.inputFiles.length <= batches,
+      s"${ledger.inputFiles.length} files for $batches appended batches")
+    val merged = EventStreams.mergeTokenLedger(ledger, "source")
+      .agg(sum(col("docs")), sum(col("tokens"))).first()
+    assert(merged.getLong(0) == 40L &&
+      merged.getLong(1) == (1L to 40L).map(_ % 7 + 1).sum)
+  }
+
   test("streaming hourly aggregation equals batch group-by") {
     val got = EventStreams.hourlyCounts(spark, sf0001)
     val events = graft.functions.EventTime.normalizeTs(

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.util.Locale
 
 /** Benchmark main. Prints ONE full JSON line (queries detail) followed by a
@@ -469,12 +468,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(cpus, "WARN")
     // untimed warmup: JVM/codegen/parquet-footer init otherwise lands
     // entirely on the first measured query. With per-query cache blocks
     // the warmup must also exercise the INTERPRETED machinery the text

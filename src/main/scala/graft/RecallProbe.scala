@@ -36,13 +36,7 @@ object RecallProbe {
     val ksub = sys.env.getOrElse("KSUB", "128").toInt
     val nlist = sys.env.getOrElse("NLIST", "10").toInt
     val fixture = sys.env.getOrElse("FIXTURE", "corpus")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(cpus, "ERROR")
     import graft.operators.{Pq, Similarity}
     val e = (if (fixture == "clustered")
       clusteredFixture(spark,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Audit main (the Explain/PlanAudit surface): print the formatted
@@ -15,12 +15,7 @@ import org.apache.spark.sql.functions._
   * not prose. Usage: `tools/run.sh graft.RoundPlans > plans/...` */
 object RoundPlans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session("4", "WARN")
     import spark.implicits._
     val ident: DataFrame => DataFrame = identity
     val bcast: DataFrame => DataFrame = broadcast

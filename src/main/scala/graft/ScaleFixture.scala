@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev utility (RecallProbe/ShuffleProbe's sibling): synthesize a
@@ -34,13 +34,7 @@ object ScaleFixture {
     val out = args.lift(1).getOrElse("/tmp/graft_sf1")
     val k = args.lift(2).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(cpus, "WARN")
 
     val keyCols = Set("doc_id", "vec_id", "event_id", "user_id",
       "l_orderkey", "l_partkey", "l_suppkey", "o_orderkey", "o_custkey",

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print ScaleSpec's lint counters (static shuffle count,
   * global-window count) for registered queries — the numbers a new
   * query's shuffle-budget entry is set from, measured under ScaleSpec's
@@ -9,11 +7,7 @@ import org.apache.spark.sql.SparkSession
   * query). Usage: ShuffleProbe <queryName>... */
 object ShuffleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session("4", "ERROR")
     for (n <- args) {
       spark.catalog.clearCache()
       val df = SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")

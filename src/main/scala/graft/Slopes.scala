@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.util.Locale
 
 /** Standing 10×-scaling gate (round-15, VERDICT r14 item 3): the r14
@@ -123,13 +122,7 @@ object Slopes {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     require(java.nio.file.Files.exists(java.nio.file.Paths.get(x10)),
       s"10x fixture $x10 missing — run graft.ScaleFixture first")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(cpus, "WARN")
     // the Bench warmup: JIT/codegen/parquet-footer init must not land on
     // the first measured block
     try {

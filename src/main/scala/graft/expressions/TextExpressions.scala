@@ -75,18 +75,31 @@ private object TextExprUtil {
     new GenericArrayData(ss.map(UTF8String.fromString).toArray[Any])
 }
 
-/** Word n-gram shingles of a space-separated text, one pass.
-  * `distinct=false` keeps positional order (winnowing needs positions). */
-case class WordShingles(child: Expression, n: Int, distinct: Boolean)
-    extends UnaryExpression with CodegenFallback {
-  require(n >= 1, "n must be >= 1")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_shingles"
+/** The input check of a text expression over one string column. */
+trait StringInput extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires string, got ${other.simpleString}")
   }
+}
+
+/** The input check of a text expression over one array<string> column. */
+trait StringArrayInput extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires array<string>, got ${other.simpleString}")
+  }
+}
+
+/** Word n-gram shingles of a space-separated text, one pass.
+  * `distinct=false` keeps positional order (winnowing needs positions). */
+case class WordShingles(child: Expression, n: Int, distinct: Boolean)
+    extends UnaryExpression with CodegenFallback with StringInput {
+  require(n >= 1, "n must be >= 1")
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "word_shingles"
   override def nullSafeEval(input: Any): Any = {
     val toks = TextExprUtil.splitTokens(input.asInstanceOf[UTF8String])
     TextExprUtil.toArrayData(TextExprUtil.shingleStrings(toks, n, distinct))
@@ -98,16 +111,11 @@ case class WordShingles(child: Expression, n: Int, distinct: Boolean)
 /** MinHash signature: element i = min over shingles of md5hex("i|" + s),
   * all `numHashes` seeds in one pass over the shingle array. */
 case class MinHashSignatures(child: Expression, numHashes: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with StringArrayInput {
   require(numHashes >= 1, "numHashes must be >= 1")
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "minhash_signatures"
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.simpleString}")
-  }
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val m = arr.numElements()
@@ -134,14 +142,9 @@ case class MinHashSignatures(child: Expression, numHashes: Int)
   * '0'/'1' string: bit j = sign of Σ (md5 hex digit j ≥ '8' ? +1 : −1),
   * ties → 1. One md5 per distinct token. */
 case class SimHash32(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with StringArrayInput {
   override def dataType: DataType = StringType
   override def prettyName: String = "simhash32"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.simpleString}")
-  }
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val seen = scala.collection.mutable.HashSet[String]()
@@ -175,14 +178,9 @@ case class SimHash32(child: Expression)
   * variant, which birthday-saturated around 2^16 documents. One md5 per
   * distinct token. */
 case class SimHash64(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with StringArrayInput {
   override def dataType: DataType = StringType
   override def prettyName: String = "simhash64"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.simpleString}")
-  }
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val seen = scala.collection.mutable.HashSet[String]()
@@ -270,15 +268,10 @@ case class ByteBlockSimHash64(child: Expression, blockBytes: Int)
 /** md5hex of ordered k-gram shingles + w-window sliding minima,
   * deduplicated — the whole winnowing fingerprint in one pass. */
 case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with StringInput {
   require(k >= 1 && w >= 1, "k and w must be >= 1")
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "winnow_fingerprints"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
   override def nullSafeEval(input: Any): Any = {
     val toks = TextExprUtil.splitTokens(input.asInstanceOf[UTF8String])
     val hashes = TextExprUtil.shingleStrings(toks, k, distinct = false)
@@ -298,16 +291,11 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int)
   * set. Equivalent to `size(filter(tokens, _.isin(profile)))` per
   * profile, without re-walking an interpreted HOF tree per profile. */
 case class ProfileScores(child: Expression, profiles: Seq[Seq[String]])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with StringInput {
   require(profiles.nonEmpty, "at least one profile")
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
   override def prettyName: String = "profile_scores"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
   @transient private lazy val sets: Array[java.util.HashSet[String]] =
     profiles.map { p =>
       val s = new java.util.HashSet[String]()
@@ -342,15 +330,10 @@ case class ProfileScores(child: Expression, profiles: Seq[Seq[String]])
   * HOF form and the DuckDB oracle bit-for-bit (same integer operands,
   * same IEEE ops). Docs too short for an n-gram score 0 on that axis. */
 case class RepetitionSignals(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with StringInput {
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.DoubleType, containsNull = false)
   override def prettyName: String = "repetition_signals"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
   override def nullSafeEval(input: Any): Any = {
     val toks = TextExprUtil.splitTokens(input.asInstanceOf[UTF8String])
     val n2 = toks.length - 1
@@ -399,14 +382,9 @@ case class RepetitionSignals(child: Expression)
   * regex twin `TextFunctions.bpeishTokenCountRegex` stays the oracle
   * form; BpeishSpec proves them bit-equal on unicode fuzz. */
 case class BpeishTokenCount(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with StringInput {
   override def dataType: DataType = org.apache.spark.sql.types.LongType
   override def prettyName: String = "bpeish_token_count"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
   override def nullSafeEval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String]
     val n = s.numBytes
@@ -494,15 +472,10 @@ case class DeflateLength(child: Expression, level: Int)
   * identically. DuckDB's `nfc_normalize` implements the same standard,
   * so outputs are exactly cross-checkable. */
 case class NormalizeText(child: Expression, form: String)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with StringInput {
   private val normForm = java.text.Normalizer.Form.valueOf(form.toUpperCase)
   override def dataType: DataType = StringType
   override def prettyName: String = "normalize_text"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
   override def nullSafeEval(input: Any): Any =
     UTF8String.fromString(java.text.Normalizer.normalize(
       input.asInstanceOf[UTF8String].toString, normForm))
@@ -514,14 +487,9 @@ case class NormalizeText(child: Expression, form: String)
   * category Mn), NFC-recompose — ASCII-folds Latin diacritics the same
   * way DuckDB's `strip_accents` does for the Latin-1 range. */
 case class StripAccents(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with StringInput {
   override def dataType: DataType = StringType
   override def prettyName: String = "strip_accents"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
   override def nullSafeEval(input: Any): Any = {
     val nfd = java.text.Normalizer.normalize(
       input.asInstanceOf[UTF8String].toString,
@@ -553,17 +521,12 @@ case class StripAccents(child: Expression)
   * Matching is at token boundaries over the space-split stream ("scan"
   * never matches inside "rescan" — the C4 word-boundary semantics). */
 case class PhraseHits(child: Expression, phrases: Seq[Seq[String]])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with StringInput {
   require(phrases.nonEmpty, "at least one phrase")
   require(phrases.forall(_.nonEmpty), "phrases must be non-empty")
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
   override def prettyName: String = "phrase_hits"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
 
   // goto/fail/output automaton over the WORD alphabet, built once per
   // executor (transient lazy): children as per-node hash maps, failure
@@ -727,17 +690,12 @@ case class CharGramOverlaps(left: Expression, right: Expression, maxN: Int)
   * O(len·w) interpreted tree walk (the chunking pass was the whole
   * cost of x156's cold pass). */
 case class CdcBoundaries(child: Expression, w: Int, mask: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with StringInput {
   require(w >= 2 && w <= 64, s"window $w outside 2..64")
   require(mask >= 1 && (mask & (mask + 1)) == 0,
     s"mask $mask must be 2^k - 1")
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "cdc_boundaries"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
   private val M = 1L << 20
   private val topPow: Long = {
     var p = 1L; var i = 0

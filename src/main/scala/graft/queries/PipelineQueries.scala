@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.functions.TextFunctions._
@@ -17,6 +18,14 @@ import graft.streaming.EventStreams
   * order over md5 hex strings, cosine values are rounded to 4 decimals
   * before any ranking/thresholding so cross-engine summation-order noise
   * cannot flip results.
+  *
+  * A chain used by two queries lives once in the header: a CTE chain or
+  * Spark chain that two entries would otherwise copy is one private
+  * definition below (e.g. [[nearDupCompSql]], [[nearDupPairs]]), which
+  * the entries interpolate or call. A shared fragment takes only the
+  * values its callers differ in (a threshold, a filter, a CTE name),
+  * never a flag naming the caller; twin queries (batch and streaming
+  * paths of one semantics) share their whole oracle.
   */
 object PipelineQueries extends QueryPack {
 
@@ -26,8 +35,106 @@ object PipelineQueries extends QueryPack {
     """list_distinct(list_transform(range(len(string_split(text,' '))-3),
        i -> string_split(text,' ')[i+1]||'_'||string_split(text,' ')[i+2]||'_'||string_split(text,' ')[i+3]||'_'||string_split(text,' ')[i+4]))"""
 
+  /** The near-dup shingle index over `documents` as CTEs `tk … co`:
+    * 4-shingles with df ≤ 100 (`ex`), per-doc shingle counts `sz(doc,
+    * n_sh)` and pair co-occurrence `co(doc_a, doc_b, common)`. The
+    * oracle twin of [[nearDupPairs]]'s index; callers write `WITH`. */
+  private val nearDupCoSql =
+    s"""tk AS (SELECT doc_id, $shingleSql AS s FROM documents),
+        ex0 AS (SELECT doc_id AS doc, unnest(s) AS sh FROM tk),
+        keep AS (SELECT sh FROM ex0 GROUP BY sh HAVING count(*) <= 100),
+        ex AS (SELECT doc, ex0.sh FROM ex0 JOIN keep ON ex0.sh = keep.sh),
+        sz AS (SELECT doc, count(*) AS n_sh FROM ex GROUP BY doc),
+        co AS (SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS common
+               FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc < b.doc
+               GROUP BY a.doc, b.doc)"""
+
+  /** [[nearDupCoSql]] + `pr(doc_a, doc_b)`: the Jaccard ≥ 0.2 pairs
+    * [[nearDupPairs]] returns. */
+  private val nearDupPairsSql =
+    s"""$nearDupCoSql,
+        pr AS (SELECT doc_a, doc_b
+               FROM co JOIN sz sa ON doc_a = sa.doc JOIN sz sb ON doc_b = sb.doc
+               WHERE CAST(common AS DOUBLE)/(sa.n_sh + sb.n_sh - common) >= 0.2)"""
+
+  /** [[nearDupPairsSql]] + `comp(v, component)`: hash-to-min labels
+    * (min member id) of the near-dup clusters, the oracle of
+    * [[dupComponents]]; callers write `WITH RECURSIVE`. */
+  private val nearDupCompSql =
+    s"""$nearDupPairsSql,
+        edges AS (SELECT doc_a AS s, doc_b AS d FROM pr
+                  UNION SELECT doc_b, doc_a FROM pr),
+        reach AS (SELECT s AS v, s AS l FROM edges
+                  UNION
+                  SELECT e.s, r.l FROM reach r JOIN edges e ON e.d = r.v),
+        comp AS (SELECT v, min(l) AS component FROM reach GROUP BY v)"""
+
+  /** The near-dup pair definition: 4-shingle Jaccard ≥ 0.2 over
+    * shingles with df ≤ 100. */
+  private def nearDupPairs(docs: DataFrame): DataFrame =
+    Dedup.jaccardPairs(docs, "doc_id", "text",
+      n = 4, threshold = 0.2, maxDf = 100L)
+
+  /** Hash-to-min components `(v, comp)` of [[nearDupPairs]]. */
+  private def dupComponents(pairs: DataFrame): DataFrame =
+    Dedup.connectedComponents(pairs, "doc_a", "doc_b", maxRounds = 60)
+
+  /** [[nearDupCompSql]] + `lab(component, doc_id, n_chars)`: every
+    * doc under its near-dup component (itself when unpaired). */
+  private val nearDupLabSql =
+    s"""$nearDupCompSql,
+        lab AS (SELECT coalesce(c.component, d.doc_id) AS component,
+            d.doc_id, d.n_chars
+          FROM documents d LEFT JOIN comp c ON d.doc_id = c.v)"""
+
+  /** Spark twin of [[nearDupLabSql]]: (component, doc_id, n_chars). */
+  private def nearDupLabeled(docs: DataFrame): DataFrame = {
+    val comp = dupComponents(nearDupPairs(docs))
+    docs.select(col("doc_id"), col("n_chars"))
+      .join(comp, docs("doc_id") === comp("v"), "left")
+      .select(coalesce(col("comp"), col("doc_id")).as("component"),
+        col("doc_id"), col("n_chars"))
+  }
+
+  /** Every doc with its near-dup component (itself when unpaired) and
+    * the component's size, by doc_id; x19 and x32 label with different
+    * CC algorithms over the same pairs, so [[componentSizesOracleSql]]
+    * pins both. */
+  private def componentSizes(docs: DataFrame, comp: DataFrame): DataFrame =
+    docs.select(col("doc_id"))
+      .join(comp, docs("doc_id") === comp("v"), "left")
+      .select(col("doc_id"),
+        coalesce(col("comp"), col("doc_id")).as("component"))
+      .withColumn("comp_size",
+        count(lit(1)).over(org.apache.spark.sql.expressions.Window
+          .partitionBy(col("component"))))
+      .orderBy(col("doc_id"))
+
+  private val componentSizesOracleSql =
+    s"""WITH RECURSIVE $nearDupCompSql
+        SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component,
+          count(*) OVER (PARTITION BY coalesce(c.component, d.doc_id)) AS comp_size
+        FROM documents d LEFT JOIN comp c ON d.doc_id = c.v
+        ORDER BY doc_id"""
+
   private def minhashSigSql(seed: Int): String =
     s"list_aggregate(list_transform(s, t -> md5('$seed|'||t)), 'min')"
+
+  /** MinHash-LSH postings as CTEs: `tk(doc_id, s)` 4-shingle sets of
+    * docs with ≥ 4 tokens, `sg` their 8 md5-min signatures, and `cte`
+    * with one `SELECT cols, band, key` row per doc and band (4 bands ×
+    * 2 rows). x03/x63 read `bands`, the x50/x58 and x208 ledger
+    * oracles `posts`. */
+  private def minhashBandsSql(cte: String, cols: String): String = {
+    val sigs = (0 until 8).map(i => s"${minhashSigSql(i)} AS h$i").mkString(", ")
+    val bands = (0 until 4).map(b =>
+      s"SELECT $cols, $b AS band, h${2 * b}||h${2 * b + 1} AS key FROM sg")
+      .mkString(" UNION ALL ")
+    s"""tk AS (SELECT doc_id, $shingleSql AS s FROM documents
+          WHERE len(string_split(text,' ')) >= 4),
+      sg AS (SELECT doc_id, s, $sigs FROM tk),
+      $cte AS ($bands)"""
+  }
 
   /** Shared by x71 (batch) and x72 (streaming ledger): exact top-8 of the
     * synthesized Zipf key over events + hardcoded-true sketch verdicts —
@@ -44,12 +151,6 @@ object PipelineQueries extends QueryPack {
       true AS sketch_ok
     FROM c, tot ORDER BY n_exact DESC, term LIMIT 8"""
 
-  /** Shared by x87 (batch) and x94 (streaming ledger): the DuckDB-side
-    * REBUILD of the whole Count-Min sketch (depth 4 × width 1024, the
-    * same md5 bucket arithmetic) + exact top-8 estimates and verdicts.
-    * CM counters are additive, so the streaming ledger telescopes to
-    * this exact sketch — one oracle pins both paths (the x71/x72
-    * precedent). */
   /** x99's blocklist: lengths 1–3, "slow" ⊂ "slow query" (overlap
     * semantics exercised), "leak" absent from the corpus vocabulary
     * (the zero-hit path). */
@@ -70,14 +171,8 @@ object PipelineQueries extends QueryPack {
     * drift. */
   private val blocklistOracleSql: String = {
     val n = blocklistPhrases.length
-    def cnt(p: String): String = {
-      val ws = p.split(" ")
-      val conj = ws.zipWithIndex
-        .map { case (w, j) => s"ts[i+${j + 1}] = '$w'" }.mkString(" AND ")
-      s"len(list_filter(range(len(ts)-${ws.length - 1}), i -> $conj))"
-    }
     val cols = blocklistPhrases.zipWithIndex
-      .map { case (p, i) => s"${cnt(p)} AS c$i" }.mkString(", ")
+      .map { case (p, i) => s"${phraseCntSql(p)} AS c$i" }.mkString(", ")
     val nhits = (0 until n).map(i => s"c$i").mkString(" + ")
     val nph = (0 until n)
       .map(i => s"CASE WHEN c$i > 0 THEN 1 ELSE 0 END").mkString(" + ")
@@ -216,7 +311,358 @@ object PipelineQueries extends QueryPack {
         true AS never_under, true AS overcount_ok
       FROM e ORDER BY n_exact DESC, term"""
 
+  /** Shared by x87 (batch) and x94 (streaming ledger): the DuckDB-side
+    * REBUILD of the whole Count-Min sketch (depth 4 × width 1024, the
+    * same md5 bucket arithmetic) + exact top-8 estimates and verdicts.
+    * CM counters are additive, so the streaming ledger telescopes to
+    * this exact sketch — one oracle pins both paths (the x71/x72
+    * precedent). */
   private val countMinOracleSql = countMinOracleSqlOver("")
+
+  /** Two AvailableNow runs of a streaming ledger: `first` lands in
+    * `landing` (replacing earlier files) and `run` consumes it, then
+    * `second` is appended and `run` consumes only the new files. */
+  private def runTwice(landing: String, first: DataFrame,
+      second: DataFrame)(run: => Unit): Unit = {
+    first.write.mode("overwrite").parquet(landing)
+    run
+    second.write.mode("append").parquet(landing)
+    run
+  }
+
+  /** A two-batch dedup ledger's verdict per doc: kept when any run
+    * kept it, batch 1 up to the `split` id and 2 after, as (`id`,
+    * kept, batch) ordered by id. */
+  private def ledgerVerdicts(ledger: DataFrame, split: Long,
+      id: String): DataFrame =
+    ledger.groupBy(col("doc"))
+      .agg(max(col("kept")).as("kept"))
+      .withColumn("batch",
+        when(col("doc") <= split, 1L).otherwise(2L))
+      .select(col("doc").as(id), col("kept"), col("batch"))
+      .orderBy(col(id))
+
+  /** The two-run incremental dedup ledger of x50, x56 and x160: `rows`
+    * staged (as dbt source `raw.source`) in two halves split at
+    * (min+max)/2 of `id`, one Incremental/Append model `schema.table`
+    * run per half with the max-id cursor, each run appending
+    * `ledger(batch, keptPosts)`; the first run's kept postings are
+    * `emptyPosts` of an empty batch. Returns [[ledgerVerdicts]]. */
+  private def incrementalLedger(s: SparkSession, rows: DataFrame,
+      id: String, source: String, schema: String, table: String)(
+      emptyPosts: DataFrame => DataFrame)(
+      ledger: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    import graft.engine._
+    val split = rows.agg(expr(s"(min($id) + max($id)) div 2"))
+      .first().getLong(0)
+    val wh = warehousePath(s)
+    val staging = wh.resolve(s"${schema}_staging")
+    Materializer.deleteRecursively(staging)
+    // the warehouse dir outlives the in-memory catalog across JVMs:
+    // remove the stale physical table a previous process may have
+    // left, or run 1's CTAS hits LOCATION_ALREADY_EXISTS (same
+    // pattern as x44). DROP first — in a session where this query
+    // already ran (registry-wide test sweeps), deleting files behind
+    // the still-registered table leaves a cached listing of dead
+    // files and the rebuild fails with FAILED_READ_FILE
+    s.sql(s"DROP TABLE IF EXISTS $schema.$table")
+    Materializer.deleteRecursively(wh.resolve(s"$schema.db/$table"))
+    // fresh Project per run = two separate process invocations in
+    // production; run 1 is full-refresh so reruns are deterministic
+    def freshProject(): Project = {
+      val p = new Project(s, Target("dev", schema, threads = 2))
+      p.source("raw", source, ParquetPath(staging.toString))
+      p.model(table, ModelConfig(materialized =
+        Materialization.Incremental(None,
+          Materialization.IncrementalStrategy.Append))) { ctx =>
+        val arrived = ctx.source("raw", source)
+        val (batch, keptPosts) =
+          if (ctx.isIncremental) {
+            val cursor = ctx.thisDf.agg(max(col("doc"))).first().getLong(0)
+            (arrived.filter(col(id) > cursor),
+              ctx.thisDf.filter(col("kept") && col("band") >= 0))
+          } else
+            (arrived, emptyPosts(arrived.limit(0)))
+        ledger(batch, keptPosts)
+      }
+      p
+    }
+    rows.filter(col(id) <= split)
+      .write.mode("overwrite").parquet(staging.toString)
+    val r1 = freshProject().run(fullRefresh = true)
+    require(r1.ok, s"incremental $schema.$table run 1 failed: ${r1.results}")
+    rows.filter(col(id) > split)
+      .write.mode("append").parquet(staging.toString)
+    val r2 = freshProject().run()
+    require(r2.ok, s"incremental $schema.$table run 2 failed: ${r2.results}")
+    ledgerVerdicts(s.table(s"$schema.$table"), split, id)
+  }
+
+  /** Every 97th packed payload (by `id`) cut to 6 bytes: the corrupt
+    * headers the audio and image decoders must report, not throw on. */
+  private def cutEvery97th(packed: DataFrame): DataFrame =
+    packed.withColumn("payload", when(col("id") % 97 === 0,
+      expr("substring(payload, 1, 6)")).otherwise(col("payload")))
+
+  /** The image spec of x66/x74/x122: (doc_id, fmt, w, h), format
+    * cycling png/jpeg/gif by `doc_id % 3`, dims 1..1024 × 1..768. */
+  private def imageSpec(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      element_at(typedlit(Seq("png", "jpeg", "gif")),
+        (col("doc_id") % 3).cast("int") + 1).as("fmt"),
+      (lit(1) + pmod(col("doc_id") * 7 + col("n_chars"), lit(1024)))
+        .cast("int").as("w"),
+      (lit(1) + pmod(col("doc_id") * 13 + col("n_chars") * 3, lit(768)))
+        .cast("int").as("h"))
+
+  /** The audio fixture shared by x117/x121/x130: the square-wave spec
+    * (doc_id, rate, n, amp, halfp, q, r) range-sorted by doc_id, then
+    * synthesized and packed to WAV map-side, every 97th payload cut to
+    * 6 bytes (the corrupt-header path). Sorting the CHEAP spec up front
+    * keeps every later stage map-side order-preserving: a trailing
+    * orderBy would range-SAMPLE its child, i.e. evaluate the whole
+    * opaque synth+pack+decode chain twice (measured on x121: 0.92 s ->
+    * 1.95 s); synthSquare replaces the per-sample interpreted HOF
+    * (guide §1.2 step 2). */
+  private def synthWavs(s: SparkSession, spec: DataFrame): DataFrame = {
+    val ordered = spec.repartitionByRange(col("doc_id"))
+      .sortWithinPartitions("doc_id")
+    cutEvery97th(Audio.packWav(s, Audio.synthSquare(s, ordered), "doc_id",
+      "rate", "samples").toDF())
+  }
+
+  /** x55/x57's synthetic document URL: four spellings (scheme case,
+    * `www.`, query, fragment, trailing slash) of
+    * `<source>.example.com/page/<doc_id / 40>`. */
+  private def synthUrl = expr("""CASE CAST(doc_id % 4 AS INT)
+      WHEN 0 THEN 'https://www.' || source || '.example.com/page/' ||
+        CAST(doc_id DIV 40 AS STRING) || '?utm_source=feed'
+      WHEN 1 THEN 'HTTP://' || upper(source) || '.Example.COM/page/' ||
+        CAST(doc_id DIV 40 AS STRING) || '#Section'
+      WHEN 2 THEN 'https://' || source || '.example.com/page/' ||
+        CAST(doc_id DIV 40 AS STRING) || '/'
+      ELSE source || '.example.com/page/' || CAST(doc_id DIV 40 AS STRING)
+      END""")
+
+  /** DuckDB twin of [[synthUrl]]: CTE `u(doc_id, text, url)`. */
+  private val synthUrlSql =
+    """u AS (SELECT doc_id, text,
+          CASE CAST(doc_id % 4 AS INT)
+            WHEN 0 THEN 'https://www.' || source || '.example.com/page/' ||
+              CAST(doc_id // 40 AS VARCHAR) || '?utm_source=feed'
+            WHEN 1 THEN 'HTTP://' || upper(source) || '.Example.COM/page/' ||
+              CAST(doc_id // 40 AS VARCHAR) || '#Section'
+            WHEN 2 THEN 'https://' || source || '.example.com/page/' ||
+              CAST(doc_id // 40 AS VARCHAR) || '/'
+            ELSE source || '.example.com/page/' || CAST(doc_id // 40 AS VARCHAR)
+          END AS url FROM documents)"""
+
+  /** 64-bit SimHash of a doc's distinct tokens as a '0'/'1' string:
+    * bit j is the majority vote of md5(token) bit j. Shared by x04,
+    * x18 and x63. */
+  private val simhash64Sql =
+    """array_to_string(list_transform(range(1, 65), j ->
+        CASE WHEN list_sum(list_transform(list_distinct(string_split(text,' ')),
+               t -> CASE WHEN (((strpos('0123456789abcdef',
+                    substr(md5(t), CAST((j-1)//4 + 1 AS INT), 1)) - 1)
+                    >> CAST(3 - (j-1)%4 AS INT)) & 1) = 1
+                 THEN 1 ELSE -1 END)) >= 0
+        THEN '1' ELSE '0' END), '')"""
+
+  /** Hamming distance between the `sig` bit strings of `a` and `b`. */
+  private val sigHammingSql =
+    """len(list_filter(range(64),
+        i -> substr(a.sig, i + 1, 1) <> substr(b.sig, i + 1, 1)))"""
+
+  /** BPE encode assembly: each word of `docs`' text looked up in the
+    * caller's `wid(w, ids)` and the per-doc id lists joined with the id-0
+    * separator into `ids_csv`. Shared by x204 and x214. */
+  private def bpeAssemblySql(docs: String): String =
+    s"""dt AS (SELECT doc_id,
+            unnest(list_transform(string_split(text, ' '),
+              (w, i) -> {'i': i, 'w': w})) AS u
+          FROM $docs),
+        dj AS (SELECT doc_id, u.i AS i, wid.ids AS ids
+          FROM dt JOIN wid ON wid.w = u.w),
+        da AS (SELECT doc_id,
+            flatten(list_transform(
+              list_sort(list({'i': i, 'ids': ids})),
+              (x, j) -> CASE WHEN j = 1 THEN x.ids
+                ELSE [CAST(0 AS BIGINT)] || x.ids END)) AS enc
+          FROM dj GROUP BY doc_id)
+        SELECT doc_id, CAST(len(enc) AS BIGINT) AS n_tokens,
+          array_to_string(enc, ',') AS ids_csv
+        FROM da ORDER BY doc_id"""
+
+  /** `mk`, `ps`: per-shard doc/byte totals and the share hit by the
+    * caller's `del(doc_id)` over `asg(doc_id, shard, n_chars)`; shared
+    * by x114 (batch) and x115 (streaming suppression). */
+  private val shardDeletionSql =
+    """mk AS (SELECT a.shard, a.n_chars,
+            (d.doc_id IS NOT NULL) AS hit
+          FROM asg a LEFT JOIN del d USING (doc_id)),
+        ps AS (SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
+            CAST(sum(n_chars) AS BIGINT) AS n_bytes,
+            CAST(sum(CASE WHEN hit THEN 1 ELSE 0 END) AS BIGINT)
+              AS n_deleted,
+            CAST(sum(CASE WHEN hit THEN n_chars ELSE 0 END) AS BIGINT)
+              AS deleted_bytes
+          FROM mk GROUP BY 1)"""
+
+  /** Apriori pair mining over the caller's baskets `b(bk, it)`: items
+    * in ≥ 2 baskets, co-occurring pairs with support ≥
+    * `minSupportMicro` / 1e6, integer support / confidence / lift.
+    * Shared by x141 (order baskets) and x198 (session baskets). */
+  private def basketPairsTailSql(minSupportMicro: Int): String =
+    s"""n AS (SELECT count(DISTINCT bk) AS nb FROM b),
+        ic AS (SELECT it, CAST(count(*) AS BIGINT) AS c
+          FROM b GROUP BY 1),
+        f AS (SELECT * FROM ic WHERE c >= 2),
+        bf AS (SELECT b.bk, b.it, f.c FROM b JOIN f ON b.it = f.it),
+        p2 AS (SELECT l.it AS item1, r.it AS item2, l.c AS c1,
+            r.c AS c2, CAST(count(*) AS BIGINT) AS pair_count
+          FROM bf l JOIN bf r ON l.bk = r.bk AND l.it < r.it
+          GROUP BY 1, 2, 3, 4)
+        SELECT item1, item2, c1, c2, pair_count,
+          pair_count * 1000000 // nb AS support_micro,
+          pair_count * 1000000 // c1 AS conf12_micro,
+          pair_count * 1000000 // c2 AS conf21_micro,
+          (pair_count * 1000000 // c1) * nb // c2 AS lift_micro
+        FROM p2 CROSS JOIN n
+        WHERE pair_count * 1000000 // nb >= $minSupportMicro
+        ORDER BY item1, item2"""
+
+  /** `base`: purchase/click/view events with the conversion flag,
+    * the input of x180's and x191's last-touch window. */
+  private val attributionBaseSql =
+    """base AS (SELECT user_id AS u, ts, event_id AS id,
+            event_type AS ty,
+            CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS isconv
+          FROM events
+          WHERE event_type IN ('purchase', 'click', 'view'))"""
+
+  /** Per-source Jensen–Shannon divergence (8dp terms, 6dp sum) from
+    * the pooled token distribution over the `vocab` CTE's terms plus
+    * `__oov__`: CTEs `b … j` and the final SELECT over the caller's
+    * `tk(source, term)`. Shared by x78 (batch) and x84 (streaming). */
+  private def jsDriftTailSql(vocab: String): String =
+    s"""b AS (SELECT source, CASE WHEN term IN (SELECT term FROM $vocab)
+          THEN term ELSE '__oov__' END AS bterm FROM tk),
+        ps AS (SELECT source, bterm, count(*) AS cs FROM b
+          GROUP BY source, bterm),
+        so AS (SELECT source, sum(cs) AS ns FROM ps GROUP BY source),
+        c AS (SELECT bterm, sum(cs) AS cq FROM ps GROUP BY bterm),
+        n AS (SELECT sum(cq) AS nq FROM c),
+        g AS (SELECT so.source, so.ns, c.bterm, c.cq, n.nq,
+            coalesce(ps.cs, 0) AS cs
+          FROM so CROSS JOIN c CROSS JOIN n
+          LEFT JOIN ps ON ps.source = so.source AND ps.bterm = c.bterm),
+        j AS (SELECT source, cs, CAST(round((CASE WHEN cs > 0
+            THEN (cs*1.0/ns) * ln((cs*1.0/ns) /
+              (((cs*1.0/ns)+(cq*1.0/nq))/2)) ELSE 0 END
+            + (cq*1.0/nq) * ln((cq*1.0/nq) /
+              (((cs*1.0/ns)+(cq*1.0/nq))/2))) / 2, 8)
+            AS DECIMAL(18,8)) AS contrib FROM g)
+        SELECT source, CAST(sum(cs) AS BIGINT) AS n_tokens,
+          CAST(round(sum(contrib), 6) AS DOUBLE) AS js
+        FROM j GROUP BY source ORDER BY source"""
+
+  /** BM25 (k1 = 1.2, b = 0.75) per-(doc, query term) contributions as
+    * CTEs `dl … sc`: `termFilter` restricts the `tok` terms to the
+    * caller's query terms, `keys` are sc's leading columns ahead of the
+    * 6dp contribution `c`. Shared by x81, x91 and x100. */
+  private def bm25ScoreSql(termFilter: String, keys: String): String =
+    s"""dl AS (SELECT doc_id, len(string_split(text,' ')) AS dl FROM documents),
+        st AS (SELECT count(*) AS n, sum(dl)*1.0/count(*) AS avgdl FROM dl),
+        tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS term
+          FROM documents),
+        tf AS (SELECT doc_id, term, count(*) AS tf FROM tok
+          $termFilter GROUP BY doc_id, term),
+        df AS (SELECT term, count(DISTINCT doc_id) AS df FROM tf
+          GROUP BY term),
+        sc AS (SELECT $keys, CAST(round(
+            ln((st.n - df.df + 0.5)/(df.df + 0.5) + 1) *
+            ((tf.tf * (1.2+1)) /
+             (tf.tf + 1.2 * (1 - 0.75 + 0.75*dl.dl/st.avgdl))), 6)
+            AS DECIMAL(18,6)) AS c
+          FROM tf JOIN df USING (term) JOIN dl USING (doc_id)
+          CROSS JOIN st)"""
+
+  /** Token-weighted n_chars quantiles (p50/p90/p99) per source over
+    * `docs`, the FROM body (`documents`, or x215's retraction clean
+    * set `documents WHERE …`); shared by x170 (batch), x206 (streaming
+    * ledger) and x215 (retracted ledger). */
+  private def weightedQuantileOracleSqlFrom(docs: String): String =
+    s"""WITH d AS (SELECT source, n_chars,
+            CAST(len(string_split(text,' ')) AS BIGINT) AS tok
+          FROM $docs),
+        h AS (SELECT source, n_chars AS v, CAST(sum(tok) AS BIGINT) AS cw
+          FROM d GROUP BY 1, 2),
+        c AS (SELECT source, v, cw,
+            CAST(sum(cw) OVER (PARTITION BY source ORDER BY v
+              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+          FROM h),
+        t AS (SELECT source, CAST(sum(cw) AS BIGINT) AS tot
+          FROM h GROUP BY 1),
+        e AS (SELECT c.source, c.v, t.tot, CAST(q.p AS BIGINT) AS pct_micro
+          FROM c JOIN t ON c.source = t.source
+          CROSS JOIN unnest([500000, 900000, 990000]) AS q(p)
+          WHERE c.cum * 1000000 >= CAST(q.p AS BIGINT) * t.tot)
+        SELECT source, pct_micro, CAST(min(v) AS BIGINT) AS value_at,
+          tot AS total_weight
+        FROM e GROUP BY source, pct_micro, tot
+        ORDER BY source, pct_micro"""
+
+  /** Shared by x135 (batch) and x172 (streaming ledger): weekly cohort
+    * sizes, per-offset active users and integer retention. */
+  private val retentionOracleSql =
+    """WITH f AS (SELECT user_id AS u,
+               CAST(date_trunc('week', min(ts)) AS DATE) AS cohort_week
+               FROM events GROUP BY user_id),
+        a AS (SELECT DISTINCT user_id AS u,
+               CAST(date_trunc('week', ts) AS DATE) AS week FROM events),
+        sz AS (SELECT cohort_week, count(*) AS cohort_size
+               FROM f GROUP BY cohort_week),
+        m AS (SELECT f.cohort_week,
+               CAST(datediff('day', f.cohort_week, a.week) // 7 AS INT)
+                 AS week_offset,
+               count(*) AS n_active
+               FROM a JOIN f ON a.u = f.u
+               GROUP BY f.cohort_week, 2)
+        SELECT CAST(m.cohort_week AS VARCHAR) AS cohort_week,
+          m.week_offset, CAST(m.n_active AS BIGINT) AS n_active,
+          CAST(m.n_active * 1000000 // sz.cohort_size AS BIGINT)
+            AS retention_micro
+        FROM m JOIN sz ON m.cohort_week = sz.cohort_week
+        ORDER BY cohort_week, week_offset"""
+
+  /** Shared by x185 (batch) and x197 (streaming ledger): per-user
+    * inter-arrival gap counts, exact Σg/Σg² sums and B / CV from them —
+    * the ledger merge must reproduce the batch operator verbatim. */
+  private val burstinessOracleSql =
+    """WITH e AS (SELECT user_id AS u, epoch_us(ts) AS ts_us,
+            event_id AS id FROM events
+          WHERE user_id IS NOT NULL AND ts IS NOT NULL),
+        g0 AS (SELECT u, (ts_us - lag(ts_us) OVER
+            (PARTITION BY u ORDER BY ts_us, id)) // 1000000 AS g FROM e),
+        gg AS (SELECT u, g FROM g0 WHERE g IS NOT NULL),
+        a AS (SELECT u, CAST(count(*) AS BIGINT) AS n,
+            CAST(sum(g) AS BIGINT) AS s1,
+            CAST(sum(CAST(g * g AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS s2
+          FROM gg GROUP BY u HAVING count(*) >= 2),
+        b AS (SELECT u, n, s1,
+            CAST(s1 AS DOUBLE) / n AS mu,
+            sqrt(greatest(CAST(n * s2 - CAST(s1 AS DECIMAL(38,0)) * s1
+              AS DOUBLE)
+              / (CAST(n AS DOUBLE) * n), 0.0)) AS sig
+          FROM a)
+        SELECT u AS user_id, n AS n_gaps,
+          CAST(s1 * 1000000 // n AS BIGINT) AS mean_gap_sec_micro,
+          CASE WHEN sig + mu > 0
+            THEN round((sig - mu) / (sig + mu), 6) ELSE 0.0 END
+            AS burstiness,
+          CASE WHEN mu > 0 THEN round(sig / mu, 6) ELSE 0.0 END AS cv
+        FROM b ORDER BY user_id"""
 
   /** Shared IVF scale parameters (x14/x62/the x14 volume counter — ONE
     * derivation so the slope-gate pin cannot drift from the entries):
@@ -234,6 +680,55 @@ object PipelineQueries extends QueryPack {
       math.max(1L, n / math.max(2000L, 20L * nlist)))
   }
 
+  /** The IVF query panel and cells over the cached corpus `e` of `n`
+    * rows, sized by [[ivfScaleParams]]: (nlist, panel of every
+    * panelMod-th id, k-means cells trained on the trainMod sample).
+    * Shared by x14, x62 and the x14 volume counter. */
+  private def ivfPanel(e: DataFrame, n: Long): (Int, DataFrame, DataFrame) = {
+    val (panelMod, nlist, trainMod) = ivfScaleParams(n)
+    val eq = e.filter(col("vec_id") % panelMod === 0)
+    val cents = Similarity.trainKMeans(
+      e.filter(col("vec_id") % trainMod === 0), "vec_id", "embedding",
+      k = nlist, iters = 5)
+    (nlist, eq, cents)
+  }
+
+  /** IVF-PQ top-5 of panel `eq` over `e` (x62, x203): residual PQ
+    * codebooks (m = 16, ksub = 128) under the `cents` cells, the
+    * reconstructed corpus (persisted), top-50 ADC candidates from
+    * `nProbe` cells refined exactly to 5. Returns (recon, approx). */
+  private def ivfPqTop5(e: DataFrame, eq: DataFrame, cents: DataFrame,
+      nProbe: Int): (DataFrame, DataFrame) = {
+    import graft.operators.Pq
+    val centSeq = cents.orderBy(col("cell")).collect()
+      .map(_.getSeq[Float](1)).toIndexedSeq
+    val resid = Pq.residuals(e, "embedding", centSeq)
+    val cbs = Pq.trainCodebooks(resid, "vec_id", "__resid",
+      dim = 64, m = 16, ksub = 128, iters = 5)
+    val recon = Pq.ivfPqReconstruct(e, "vec_id", "embedding",
+      centSeq, cbs).select(col("vec_id"), col("recon").as("embedding"))
+      .persist()
+    val candidates = Similarity.ivfTopK(recon, eq, cents, "vec_id",
+      "embedding", k = 50, nProbe = nProbe)
+      .select(col("query_id"), col("neighbor_id"))
+    (recon, Similarity.refineTopK(candidates, e, eq, "vec_id",
+      "embedding", k = 5).select(col("query_id"), col("neighbor_id")))
+  }
+
+  /** (n_queries, recall_ok): whether `approx`'s (query_id, neighbor_id)
+    * rows recover at least `minRecall` of panel `eq`'s exact top-5
+    * over `e`. Shared by x14 and x62. */
+  private def top5Recall(e: DataFrame, eq: DataFrame, approx: DataFrame,
+      minRecall: Double): DataFrame = {
+    val exact = Similarity.bruteForceTopKBroadcast(e, eq, "vec_id",
+      "embedding", k = 5).select(col("query_id"), col("neighbor_id"))
+    exact.join(approx.withColumn("hit", lit(1)),
+        Seq("query_id", "neighbor_id"), "left")
+      .agg(countDistinct(col("query_id")).as("n_queries"),
+        (sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1))
+          >= minRecall).as("recall_ok"))
+  }
+
   /** Measured VARIABLE-LEG candidate volumes for the volume-faithful
     * slope stories (ADVICE r15 item 4): "candidate volume is
     * ~10×/decade by construction" was prose — these COUNT it.
@@ -244,18 +739,14 @@ object PipelineQueries extends QueryPack {
     * counter reuses the entry's OWN parameter derivation/operator
     * stage, so entry and pin cannot drift apart. */
   val volumeCounters: Map[String,
-      (org.apache.spark.sql.SparkSession, String) => Long] = Map(
+      (SparkSession, String) => Long] = Map(
     // x14: exact leg = panel × corpus; ADC leg = the probed cell rows
     // ivfScanStats measures (ivfTopK's candidate volume exactly)
     "x14_ivf_ann" -> ((s, dir) => {
       val e = t(s, dir, "embeddings").persist()
       val n = e.count()
-      val (panelMod, nlist, trainMod) = ivfScaleParams(n)
+      val (nlist, eq, cents) = ivfPanel(e, n)
       val nProbe = math.max(3, 3 * nlist / 10)
-      val eq = e.filter(col("vec_id") % panelMod === 0)
-      val cents = Similarity.trainKMeans(
-        e.filter(col("vec_id") % trainMod === 0), "vec_id", "embedding",
-        k = nlist, iters = 5)
       val scanned = Similarity.ivfScanStats(e, eq, cents, "vec_id",
         "embedding", nProbe).select(col("scanned_pairs")).first().getLong(0)
       val panel = eq.count()
@@ -283,8 +774,8 @@ object PipelineQueries extends QueryPack {
     * CONSTANT bin-center gray 16+32k (so its ±2 lossy round-trip stays
     * in-bin), GIF a constant arbitrary gray (palette round-trip is
     * exact). [[pixelFixtureSpecSql]] is the same arithmetic in DuckDB. */
-  private def pixelFixtureSpec(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  private def pixelFixtureSpec(docs: DataFrame)
+      : DataFrame = {
     val m3 = col("doc_id") % 3
     docs.select(col("doc_id"),
       element_at(typedlit(Seq("png", "jpeg", "gif")),
@@ -325,24 +816,12 @@ object PipelineQueries extends QueryPack {
     s"list_distinct(list_transform(range(len(string_split(text,' '))-${n - 1}), i -> $parts))"
   }
 
-  /** Two-batch incremental-dedup ledger oracle, shared by x50 (batch,
-    * max-doc-id cursor) and x58 (streaming, offset-log cursor) — the two
-    * mechanisms implement the same semantics, so one from-scratch
-    * recomputation checks both: batches split at (min+max)/2 of doc_id,
-    * batch-1 verdicts by the in-batch bucket-min rule, batch-2 verdicts
-    * against batch-1's KEPT postings plus its own peers, shingleless
-    * docs always kept. */
-  private lazy val minhashLedgerOracleSql: String = {
-    val sigs = (0 until 8).map(i => s"${minhashSigSql(i)} AS h$i").mkString(", ")
-    val bands = (0 until 4).map(b =>
-      s"SELECT doc_id AS doc, $b AS band, h${2 * b}||h${2 * b + 1} AS key FROM sg")
-      .mkString(" UNION ALL ")
-    s"""WITH tk AS (SELECT doc_id, $shingleSql AS s FROM documents
-          WHERE len(string_split(text,' ')) >= 4),
-      sg AS (SELECT doc_id, s, $sigs FROM tk),
-      posts AS ($bands),
-      sp AS (SELECT (min(doc_id) + max(doc_id))//2 AS v FROM documents),
-      b1 AS (SELECT p.* FROM posts p, sp WHERE p.doc <= sp.v),
+  /** Two-batch LSH ledger verdicts over `posts(doc, band, key)` split
+    * at `sp.v`: batch 1 by the in-batch bucket-min rule (`b1v`), batch
+    * 2 against batch 1's kept postings plus its own peers (`b2v`).
+    * Shared by the MinHash and SRP ledger oracles. */
+  private val twoBatchVerdictSql =
+    """b1 AS (SELECT p.* FROM posts p, sp WHERE p.doc <= sp.v),
       b1bad AS (SELECT DISTINCT a.doc FROM b1 a JOIN b1 b
                 ON a.band = b.band AND a.key = b.key AND b.doc < a.doc),
       b1v AS (SELECT doc, doc NOT IN (SELECT doc FROM b1bad) AS kept
@@ -356,7 +835,19 @@ object PipelineQueries extends QueryPack {
                 SELECT DISTINCT a.doc FROM b2 a JOIN hist h
                 ON a.band = h.band AND a.key = h.key),
       b2v AS (SELECT doc, doc NOT IN (SELECT doc FROM b2bad) AS kept
-              FROM (SELECT DISTINCT doc FROM b2)),
+              FROM (SELECT DISTINCT doc FROM b2))"""
+
+  /** Two-batch incremental-dedup ledger oracle, shared by x50 (batch,
+    * max-doc-id cursor) and x58 (streaming, offset-log cursor) — the two
+    * mechanisms implement the same semantics, so one from-scratch
+    * recomputation checks both: batches split at (min+max)/2 of doc_id,
+    * batch-1 verdicts by the in-batch bucket-min rule, batch-2 verdicts
+    * against batch-1's KEPT postings plus its own peers, shingleless
+    * docs always kept. */
+  private lazy val minhashLedgerOracleSql: String =
+    s"""WITH ${minhashBandsSql("posts", "doc_id AS doc")},
+      sp AS (SELECT (min(doc_id) + max(doc_id))//2 AS v FROM documents),
+      $twoBatchVerdictSql,
       led AS (SELECT * FROM b1v UNION ALL SELECT * FROM b2v
               UNION ALL
               SELECT doc_id, true FROM documents
@@ -364,7 +855,6 @@ object PipelineQueries extends QueryPack {
     SELECT led.doc AS doc_id, led.kept,
       CAST(CASE WHEN led.doc <= sp.v THEN 1 ELSE 2 END AS BIGINT) AS batch
     FROM led, sp ORDER BY doc_id"""
-  }
 
   /** Ledger-purge + re-admission oracle (x208): one-batch ledger over
     * the full corpus, the x115/x205 delete list, purge = drop the ids'
@@ -372,15 +862,8 @@ object PipelineQueries extends QueryPack {
     * (+10⁷) and judged against the PURGED kept postings — copies of
     * purged kept docs re-enter, copies whose original blocker survives
     * stay dropped, within-batch peers collapse by the bucket-min rule. */
-  private lazy val ledgerPurgeOracleSql: String = {
-    val sigs = (0 until 8).map(i => s"${minhashSigSql(i)} AS h$i").mkString(", ")
-    val bands = (0 until 4).map(b =>
-      s"SELECT doc_id AS doc, $b AS band, h${2 * b}||h${2 * b + 1} AS key FROM sg")
-      .mkString(" UNION ALL ")
-    s"""WITH tk AS (SELECT doc_id, $shingleSql AS s FROM documents
-          WHERE len(string_split(text,' ')) >= 4),
-      sg AS (SELECT doc_id, s, $sigs FROM tk),
-      posts AS ($bands),
+  private lazy val ledgerPurgeOracleSql: String =
+    s"""WITH ${minhashBandsSql("posts", "doc_id AS doc")},
       bad AS (SELECT DISTINCT a.doc FROM posts a JOIN posts b
               ON a.band = b.band AND a.key = b.key AND b.doc < a.doc),
       v AS (SELECT doc, doc NOT IN (SELECT doc FROM bad) AS kept
@@ -408,7 +891,6 @@ object PipelineQueries extends QueryPack {
     FROM del d JOIN v ON v.doc = d.doc_id
     JOIN rv ON rv.doc = d.doc_id + 10000000
     ORDER BY d.doc_id"""
-  }
 
   /** x59's repetition thresholds — Gopher's filter family (Rae et al.
     * 2021 Table A1) with cutoffs tuned to the synthetic corpus's signal
@@ -421,12 +903,7 @@ object PipelineQueries extends QueryPack {
     * cursor) and x64 (streaming, offset-log cursor) — the SRP analogue
     * of [[minhashLedgerOracleSql]]. */
   private lazy val srpLedgerOracleSql: String = {
-    def bitSql(p: Int) =
-      s"""CASE WHEN round(list_sum(list_transform(range(len(embedding)),
-         i -> CAST(embedding[i+1] AS DOUBLE) *
-           (CASE WHEN substr(md5('${p}_'||CAST(i AS VARCHAR)),1,1) >= '8'
-            THEN 1.0 ELSE -1.0 END))), 4) >= 0 THEN '1' ELSE '0' END"""
-    val bits = (0 until 64).map(p => s"${bitSql(p)} AS b$p").mkString(", ")
+    val bits = (0 until 64).map(p => s"${srpBitSql(p)} AS b$p").mkString(", ")
     val bands = (0 until 8).map(b =>
       s"SELECT doc, $b AS band, " +
         (0 until 8).map(r => s"b${b * 8 + r}").mkString("||") +
@@ -436,21 +913,7 @@ object PipelineQueries extends QueryPack {
       sg AS (SELECT doc, $bits FROM e),
       posts AS ($bands),
       sp AS (SELECT (min(vec_id) + max(vec_id))//2 AS v FROM embeddings),
-      b1 AS (SELECT p.* FROM posts p, sp WHERE p.doc <= sp.v),
-      b1bad AS (SELECT DISTINCT a.doc FROM b1 a JOIN b1 b
-                ON a.band = b.band AND a.key = b.key AND b.doc < a.doc),
-      b1v AS (SELECT doc, doc NOT IN (SELECT doc FROM b1bad) AS kept
-              FROM (SELECT DISTINCT doc FROM b1)),
-      hist AS (SELECT DISTINCT band, key FROM b1 JOIN b1v USING (doc)
-               WHERE kept),
-      b2 AS (SELECT p.* FROM posts p, sp WHERE p.doc > sp.v),
-      b2bad AS (SELECT DISTINCT a.doc FROM b2 a JOIN b2 b
-                ON a.band = b.band AND a.key = b.key AND b.doc < a.doc
-                UNION
-                SELECT DISTINCT a.doc FROM b2 a JOIN hist h
-                ON a.band = h.band AND a.key = h.key),
-      b2v AS (SELECT doc, doc NOT IN (SELECT doc FROM b2bad) AS kept
-              FROM (SELECT DISTINCT doc FROM b2)),
+      $twoBatchVerdictSql,
       led AS (SELECT * FROM b1v UNION ALL SELECT * FROM b2v
               UNION ALL
               SELECT vec_id, true FROM embeddings
@@ -723,11 +1186,12 @@ object PipelineQueries extends QueryPack {
   private val dotSql =
     "list_sum(list_transform(range(len(%s)), i -> CAST(%s[i+1] AS DOUBLE)*CAST(%s[i+1] AS DOUBLE)))"
 
-  /** The x138 hourly-rate anomaly z-test SQL — also x145's oracle and
-    * x153's compacted-ledger oracle: batch, streaming-ledger, and
-    * compacted-streaming-ledger must all equal it. */
-  private val cdcLedgerOracleSql =
-    """WITH t AS (SELECT doc_id, text,
+  /** Content-defined chunks of every non-empty doc as CTEs `t … ch`:
+    * boundaries where a 16-char polynomial rolling hash is 0 mod 64,
+    * `ch(doc_id, s, e, text)` one row per 1-based [s, e] span. Shared
+    * by x156's report and the x160/x161 ledger oracle. */
+  private val cdcChunksSql =
+    """t AS (SELECT doc_id, text,
             CAST(length(text) AS BIGINT) AS len FROM documents
             WHERE text IS NOT NULL AND length(text) >= 1),
         b AS (SELECT doc_id, text, len,
@@ -744,7 +1208,12 @@ object PipelineQueries extends QueryPack {
               END AS s,
             CASE WHEN k <= len(bnds) THEN bnds[CAST(k AS INTEGER)]
               ELSE len END AS e,
-            text FROM sp),
+            text FROM sp)"""
+
+  /** Two-batch CDC chunk-ledger oracle, shared by x160 (batch, max-id
+    * cursor) and x161 (streaming, offset-log cursor). */
+  private val cdcLedgerOracleSql =
+    s"""WITH $cdcChunksSql,
         chk AS (SELECT doc_id, md5(substring(text, CAST(s AS INTEGER),
             CAST(e - s + 1 AS INTEGER))) AS h, e - s + 1 AS clen
           FROM ch WHERE e >= s),
@@ -839,6 +1308,9 @@ object PipelineQueries extends QueryPack {
            OR len_drift_micro > 100000 OR mode_drift) AS drifted
         FROM d ORDER BY column_name"""
 
+  /** The x138 hourly-rate anomaly z-test SQL — also x145's oracle and
+    * x153's compacted-ledger oracle: batch, streaming-ledger, and
+    * compacted-streaming-ledger must all equal it. */
   private val hourlyAnomalySql =
     """WITH h AS (SELECT date_trunc('hour', ts) AS hour,
                count(*) AS n_events,
@@ -890,8 +1362,8 @@ object PipelineQueries extends QueryPack {
 
   /** The x51 scorer chain (x28-rule weak labels → [[graft.operators.NbQuality]]),
     * shared with its x107 calibration report. */
-  private def nbScored(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
+  private def nbScored(s: SparkSession,
+      dir: String): DataFrame = {
     val toks = col("toks")
     val labeled = t(s, dir, "documents")
       .withColumn("toks", tokens(col("text")))
@@ -903,17 +1375,12 @@ object PipelineQueries extends QueryPack {
       .naiveBayesScore(labeled, "doc_id", "text", "label")
   }
 
-  /** x51's oracle body (no ORDER BY) — also the `sc` input of the x107
-    * calibration oracle. */
-  private val nbScoreSql =
-    """WITH d AS (SELECT doc_id, string_split(text,' ') AS ts FROM documents),
-        lab AS (SELECT doc_id, ts,
-          CAST(len(ts) >= 30
-           AND 1.0 - CAST(len(list_distinct(ts)) AS DOUBLE)/len(ts) <= 0.55
-           AND CAST(list_sum(list_transform(ts, t -> length(t))) AS DOUBLE)/len(ts) BETWEEN 4.0 AND 5.0
-           AND len(list_filter(ts, t -> t IN ('the','a','of','and','to','in','is'))) > 0
-          AS BIGINT) AS label FROM d),
-        tok AS (SELECT doc_id, label, unnest(ts) AS w FROM lab),
+  /** Multinomial naive Bayes over the caller's `lab(doc_id, ts,
+    * label)`: CTEs `tok … pri` with add-one token log-likelihoods `lp`
+    * and class log-priors `pri`, both 6dp decimals. Shared by x51's
+    * scorer ([[nbScoreSql]]) and x57's quality gate. */
+  private val nbModelSql =
+    """tok AS (SELECT doc_id, label, unnest(ts) AS w FROM lab),
         tot AS (SELECT
           sum(CASE WHEN label = 1 THEN 1 ELSE 0 END) AS nt1,
           sum(CASE WHEN label = 0 THEN 1 ELSE 0 END) AS nt0,
@@ -931,7 +1398,19 @@ object PipelineQueries extends QueryPack {
         pri AS (SELECT
           CAST(round(ln((nd1 + 1.0) / (nd1 + nd0 + 2.0)), 6) AS DECIMAL(18,6)) AS lpr1,
           CAST(round(ln((nd0 + 1.0) / (nd1 + nd0 + 2.0)), 6) AS DECIMAL(18,6)) AS lpr0
-          FROM tot),
+          FROM tot)"""
+
+  /** x51's oracle body (no ORDER BY) — also the `sc` input of the x107
+    * calibration oracle. */
+  private val nbScoreSql =
+    s"""WITH d AS (SELECT doc_id, string_split(text,' ') AS ts FROM documents),
+        lab AS (SELECT doc_id, ts,
+          CAST(len(ts) >= 30
+           AND 1.0 - CAST(len(list_distinct(ts)) AS DOUBLE)/len(ts) <= 0.55
+           AND CAST(list_sum(list_transform(ts, t -> length(t))) AS DOUBLE)/len(ts) BETWEEN 4.0 AND 5.0
+           AND len(list_filter(ts, t -> t IN ('the','a','of','and','to','in','is'))) > 0
+          AS BIGINT) AS label FROM d),
+        $nbModelSql,
         sc AS (SELECT doc_id, label, count(*) AS n_tokens,
           sum(lp1) AS s1, sum(lp0) AS s0
           FROM tok JOIN lp USING (w) GROUP BY doc_id, label)
@@ -940,6 +1419,27 @@ object PipelineQueries extends QueryPack {
           (s1 + lpr1) - (s0 + lpr0) > 0 AS pred
         FROM sc, pri"""
 
+  /** One SRP sign bit as DuckDB SQL: plane `p` against the md5-seeded
+    * ±1 hyperplane over `embedding`, '0'/'1' by the sign of the 4dp dot. */
+  private def srpBitSql(p: Int): String =
+    s"""CASE WHEN round(list_sum(list_transform(range(len(embedding)),
+       i -> CAST(embedding[i+1] AS DOUBLE) *
+         (CASE WHEN substr(md5('${p}_'||CAST(i AS VARCHAR)),1,1) >= '8'
+          THEN 1.0 ELSE -1.0 END))), 4) >= 0 THEN '1' ELSE '0' END"""
+
+  /** `cand` (pairs sharing a band key) and `pr` (those with 4dp cosine
+    * ≥ `threshold`) over the caller's `e(vec_id, embedding, nrm)` and
+    * `bands(vec_id, band, key)`. */
+  private def srpVerifySql(threshold: Double): String = {
+    val d = dotSql.format("ea.embedding", "ea.embedding", "eb.embedding")
+    s"""cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+               FROM bands a JOIN bands b
+                 ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id),
+      pr AS (SELECT id_a, id_b, round($d / (ea.nrm * eb.nrm), 4) AS cos
+             FROM cand JOIN e ea ON id_a = ea.vec_id JOIN e eb ON id_b = eb.vec_id
+             WHERE round($d / (ea.nrm * eb.nrm), 4) >= $threshold)"""
+  }
+
   /** Shared CTE body for the [[Dedup.embeddingLshPairs]] oracles:
     * `e` (vectors + md5-seeded ±1 projection bits), `bands`, `cand`
     * (blocked candidate pairs), `pr` (exact-cosine-verified pairs above
@@ -947,26 +1447,15 @@ object PipelineQueries extends QueryPack {
   private def srpCtes(numPlanes: Int, numBands: Int, threshold: Double,
       table: String): String = {
     val rows = numPlanes / numBands
-    def bitSql(p: Int) =
-      s"""CASE WHEN round(list_sum(list_transform(range(len(embedding)),
-         i -> CAST(embedding[i+1] AS DOUBLE) *
-           (CASE WHEN substr(md5('${p}_'||CAST(i AS VARCHAR)),1,1) >= '8'
-            THEN 1.0 ELSE -1.0 END))), 4) >= 0 THEN '1' ELSE '0' END"""
-    val bits = (0 until numPlanes).map(p => s"${bitSql(p)} AS b$p").mkString(", ")
+    val bits = (0 until numPlanes).map(p => s"${srpBitSql(p)} AS b$p").mkString(", ")
     val bands = (0 until numBands).map(b =>
       s"SELECT vec_id, $b AS band, " +
         (0 until rows).map(r => s"b${b * rows + r}").mkString("||") +
         " AS key FROM e").mkString(" UNION ALL ")
-    val d = dotSql.format("ea.embedding", "ea.embedding", "eb.embedding")
     val n = dotSql.format("embedding", "embedding", "embedding")
     s"""e AS (SELECT vec_id, embedding, sqrt($n) AS nrm, $bits FROM $table),
       bands AS ($bands),
-      cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-               FROM bands a JOIN bands b
-                 ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id),
-      pr AS (SELECT id_a, id_b, round($d / (ea.nrm * eb.nrm), 4) AS cos
-             FROM cand JOIN e ea ON id_a = ea.vec_id JOIN e eb ON id_b = eb.vec_id
-             WHERE round($d / (ea.nrm * eb.nrm), 4) >= $threshold)"""
+      ${srpVerifySql(threshold)}"""
   }
 
   /** [[srpCtes]] at the CORPUS-SCALED key width
@@ -979,13 +1468,8 @@ object PipelineQueries extends QueryPack {
   private def srpScaledCtes(numBands: Int, threshold: Double,
       table: String, targetBucket: Int = 8, minBits: Int = 8,
       maxBits: Int = 24): String = {
-    def bitSql(p: Int) =
-      s"""CASE WHEN round(list_sum(list_transform(range(len(embedding)),
-         i -> CAST(embedding[i+1] AS DOUBLE) *
-           (CASE WHEN substr(md5('${p}_'||CAST(i AS VARCHAR)),1,1) >= '8'
-            THEN 1.0 ELSE -1.0 END))), 4) >= 0 THEN '1' ELSE '0' END"""
     val bits = (0 until numBands * maxBits)
-      .map(p => s"${bitSql(p)} AS b$p").mkString(", ")
+      .map(p => s"${srpBitSql(p)} AS b$p").mkString(", ")
     val caseChain = (minBits until maxBits).map(b =>
       s"WHEN (SELECT n FROM srpn) <= ${targetBucket.toLong << b} " +
         s"THEN $b").mkString(" ")
@@ -994,18 +1478,12 @@ object PipelineQueries extends QueryPack {
         (0 until maxBits).map(r => s"b${b * maxBits + r}").mkString("||") +
         ", 1, (SELECT bits FROM srpb)) AS key FROM e")
       .mkString(" UNION ALL ")
-    val d = dotSql.format("ea.embedding", "ea.embedding", "eb.embedding")
     val n = dotSql.format("embedding", "embedding", "embedding")
     s"""srpn AS (SELECT count(*) AS n FROM $table),
       srpb AS (SELECT CASE $caseChain ELSE $maxBits END AS bits FROM srpn),
       e AS (SELECT vec_id, embedding, sqrt($n) AS nrm, $bits FROM $table),
       bands AS ($bands),
-      cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-               FROM bands a JOIN bands b
-                 ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id),
-      pr AS (SELECT id_a, id_b, round($d / (ea.nrm * eb.nrm), 4) AS cos
-             FROM cand JOIN e ea ON id_a = ea.vec_id JOIN e eb ON id_b = eb.vec_id
-             WHERE round($d / (ea.nrm * eb.nrm), 4) >= $threshold)"""
+      ${srpVerifySql(threshold)}"""
   }
 
   /** DuckDB oracle for [[Dedup.embeddingLshPairs]] at any (planes, bands,
@@ -1023,12 +1501,7 @@ object PipelineQueries extends QueryPack {
   private def srpDecontOracleSql(numPlanes: Int, numBands: Int,
       threshold: Double): String = {
     val rows = numPlanes / numBands
-    def bitSql(p: Int) =
-      s"""CASE WHEN round(list_sum(list_transform(range(len(embedding)),
-         i -> CAST(embedding[i+1] AS DOUBLE) *
-           (CASE WHEN substr(md5('${p}_'||CAST(i AS VARCHAR)),1,1) >= '8'
-            THEN 1.0 ELSE -1.0 END))), 4) >= 0 THEN '1' ELSE '0' END"""
-    val bits = (0 until numPlanes).map(p => s"${bitSql(p)} AS b$p")
+    val bits = (0 until numPlanes).map(p => s"${srpBitSql(p)} AS b$p")
       .mkString(", ")
     val bands = (0 until numBands).map(b =>
       s"SELECT vec_id, is_bench, $b AS band, " +
@@ -1235,11 +1708,7 @@ object PipelineQueries extends QueryPack {
         conversionType = "purchase", touchTypes = Seq("click", "view"),
         lookbackSeconds = 86400L)
         .orderBy(col("conv_id")),
-      Some("""WITH base AS (SELECT user_id AS u, ts, event_id AS id,
-            event_type AS ty,
-            CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS isconv
-          FROM events
-          WHERE event_type IN ('purchase', 'click', 'view')),
+      Some(s"""WITH $attributionBaseSql,
         sc AS (SELECT *,
             last_value(CASE WHEN isconv = 0 THEN epoch_us(ts) END
               IGNORE NULLS) OVER w AS lt_us,
@@ -1326,12 +1795,8 @@ object PipelineQueries extends QueryPack {
         def run(): Unit = EventStreams.streamingRetractionLedger(s,
           landing, cdc.schema, "rtlg.ledger", ckpt,
           "bucket", "op", "cents")
-        cdc.filter(col("event_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing)
-        run()
-        cdc.filter(col("event_id") % 2 === 1)
-          .write.mode("append").parquet(landing)
-        run()
+        runTwice(landing, cdc.filter(col("event_id") % 2 === 0),
+          cdc.filter(col("event_id") % 2 === 1))(run())
         EventStreams.mergeRetractionLedger(s.table("rtlg.ledger"), "bucket")
           .orderBy(col("bucket"))
       },
@@ -1444,68 +1909,17 @@ object PipelineQueries extends QueryPack {
       (s, dir) => graft.operators.Burstiness.interArrival(
         t(s, dir, "events"), "user_id", "ts", "event_id", minGaps = 2L)
         .orderBy(col("user_id")),
-      Some("""WITH e AS (SELECT user_id AS u, epoch_us(ts) AS ts_us,
-            event_id AS id FROM events
-          WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        g0 AS (SELECT u, (ts_us - lag(ts_us) OVER
-            (PARTITION BY u ORDER BY ts_us, id)) // 1000000 AS g FROM e),
-        gg AS (SELECT u, g FROM g0 WHERE g IS NOT NULL),
-        a AS (SELECT u, CAST(count(*) AS BIGINT) AS n,
-            CAST(sum(g) AS BIGINT) AS s1,
-            CAST(sum(CAST(g * g AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS s2
-          FROM gg GROUP BY u HAVING count(*) >= 2),
-        b AS (SELECT u, n, s1,
-            CAST(s1 AS DOUBLE) / n AS mu,
-            sqrt(greatest(CAST(n * s2 - CAST(s1 AS DECIMAL(38,0)) * s1
-              AS DOUBLE)
-              / (CAST(n AS DOUBLE) * n), 0.0)) AS sig
-          FROM a)
-        SELECT u AS user_id, n AS n_gaps,
-          CAST(s1 * 1000000 // n AS BIGINT) AS mean_gap_sec_micro,
-          CASE WHEN sig + mu > 0
-            THEN round((sig - mu) / (sig + mu), 6) ELSE 0.0 END
-            AS burstiness,
-          CASE WHEN mu > 0 THEN round(sig / mu, 6) ELSE 0.0 END AS cv
-        FROM b ORDER BY user_id""")),
+      Some(burstinessOracleSql)),
 
     // ---- dedup ROI report: the cluster-size histogram + bytes a
     //      keep-first policy saves (Lee et al. ACL'22's evidence
     //      artifact) over the x19 component chain — everything after
     //      the per-cluster agg is histogram-sized -----------------------
     Q("x186_dedup_savings",
-      (s, dir) => {
-        val docs = t(s, dir, "documents")
-        val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          n = 4, threshold = 0.2, maxDf = 100L)
-        val comp = Dedup.connectedComponents(pairs, "doc_a", "doc_b",
-          maxRounds = 60)
-        val labeled = docs.select(col("doc_id"), col("n_chars"))
-          .join(comp, docs("doc_id") === comp("v"), "left")
-          .select(coalesce(col("comp"), col("doc_id")).as("component"),
-            col("doc_id"), col("n_chars"))
-        Dedup.savingsReport(labeled, "component", "doc_id", "n_chars")
-          .orderBy(col("cluster_size"))
-      },
-      Some(s"""WITH RECURSIVE tk AS (SELECT doc_id, $shingleSql AS s FROM documents),
-        ex0 AS (SELECT doc_id AS doc, unnest(s) AS sh FROM tk),
-        keep AS (SELECT sh FROM ex0 GROUP BY sh HAVING count(*) <= 100),
-        ex AS (SELECT doc, ex0.sh FROM ex0 JOIN keep ON ex0.sh = keep.sh),
-        sz AS (SELECT doc, count(*) AS n_sh FROM ex GROUP BY doc),
-        co AS (SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS common
-               FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc < b.doc
-               GROUP BY a.doc, b.doc),
-        pr AS (SELECT doc_a, doc_b
-               FROM co JOIN sz sa ON doc_a = sa.doc JOIN sz sb ON doc_b = sb.doc
-               WHERE CAST(common AS DOUBLE)/(sa.n_sh + sb.n_sh - common) >= 0.2),
-        edges AS (SELECT doc_a AS s, doc_b AS d FROM pr
-                  UNION SELECT doc_b, doc_a FROM pr),
-        reach AS (SELECT s AS v, s AS l FROM edges
-                  UNION
-                  SELECT e.s, r.l FROM reach r JOIN edges e ON e.d = r.v),
-        comp AS (SELECT v, min(l) AS component FROM reach GROUP BY v),
-        lab AS (SELECT coalesce(c.component, d.doc_id) AS component,
-            d.doc_id, d.n_chars
-          FROM documents d LEFT JOIN comp c ON d.doc_id = c.v),
+      (s, dir) => Dedup.savingsReport(nearDupLabeled(t(s, dir, "documents")),
+          "component", "doc_id", "n_chars")
+        .orderBy(col("cluster_size")),
+      Some(s"""WITH RECURSIVE $nearDupLabSql,
         per AS (SELECT component, CAST(count(*) AS BIGINT) AS csz,
             CAST(sum(n_chars) AS BIGINT) AS bytes,
             CAST(arg_min(n_chars, doc_id) AS BIGINT) AS keep_bytes
@@ -1647,11 +2061,7 @@ object PipelineQueries extends QueryPack {
             Seq(500000L, 900000L, 990000L))
           .orderBy(col("attributed"), col("pct_micro"))
       },
-      Some("""WITH base AS (SELECT user_id AS u, ts, event_id AS id,
-            event_type AS ty,
-            CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS isconv
-          FROM events
-          WHERE event_type IN ('purchase', 'click', 'view')),
+      Some(s"""WITH $attributionBaseSql,
         sc AS (SELECT *,
             last_value(CASE WHEN isconv = 0 THEN epoch_us(ts) END
               IGNORE NULLS) OVER w AS lt_us,
@@ -1855,12 +2265,8 @@ object PipelineQueries extends QueryPack {
         def run(): Unit = EventStreams.streamingSessionLedger(s,
           landing, ev.schema, "sslg.ledger", ckpt,
           "user_id", "ts", "event_id", gapMinutes = 30)
-        ev.filter(col("event_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing)
-        run()
-        ev.filter(col("event_id") % 2 === 1)
-          .write.mode("append").parquet(landing)
-        run()
+        runTwice(landing, ev.filter(col("event_id") % 2 === 0),
+          ev.filter(col("event_id") % 2 === 1))(run())
         EventStreams.mergeSessionLedger(s.table("sslg.ledger"), 30)
           .groupBy(col("u"))
           .agg(count(lit(1)).cast("long").as("n_sessions"),
@@ -1901,39 +2307,12 @@ object PipelineQueries extends QueryPack {
           landing, ev.schema, "bulg.ledger", ckpt,
           "user_id", "ts", "event_id")
         val firstHalf = col("ts") < lit("2024-01-16").cast("timestamp")
-        ev.filter(firstHalf)
-          .write.mode("overwrite").parquet(landing)
-        run()
-        ev.filter(!firstHalf)
-          .write.mode("append").parquet(landing)
-        run()
+        runTwice(landing, ev.filter(firstHalf), ev.filter(!firstHalf))(run())
         EventStreams.mergeBurstinessLedger(
             s.table("bulg.ledger"), "user_id", minGaps = 2L)
           .orderBy(col("user_id"))
       },
-      Some("""WITH e AS (SELECT user_id AS u, epoch_us(ts) AS ts_us,
-            event_id AS id FROM events
-          WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        g0 AS (SELECT u, (ts_us - lag(ts_us) OVER
-            (PARTITION BY u ORDER BY ts_us, id)) // 1000000 AS g FROM e),
-        gg AS (SELECT u, g FROM g0 WHERE g IS NOT NULL),
-        a AS (SELECT u, CAST(count(*) AS BIGINT) AS n,
-            CAST(sum(g) AS BIGINT) AS s1,
-            CAST(sum(CAST(g * g AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS s2
-          FROM gg GROUP BY u HAVING count(*) >= 2),
-        b AS (SELECT u, n, s1,
-            CAST(s1 AS DOUBLE) / n AS mu,
-            sqrt(greatest(CAST(n * s2 - CAST(s1 AS DECIMAL(38,0)) * s1
-              AS DOUBLE)
-              / (CAST(n AS DOUBLE) * n), 0.0)) AS sig
-          FROM a)
-        SELECT u AS user_id, n AS n_gaps,
-          CAST(s1 * 1000000 // n AS BIGINT) AS mean_gap_sec_micro,
-          CASE WHEN sig + mu > 0
-            THEN round((sig - mu) / (sig + mu), 6) ELSE 0.0 END
-            AS burstiness,
-          CASE WHEN mu > 0 THEN round(sig / mu, 6) ELSE 0.0 END AS cv
-        FROM b ORDER BY user_id""")),
+      Some(burstinessOracleSql)),
 
     // ---- session-basket co-occurrence: which event types co-occur
     //      within a session more than chance — x10's gap sessions AS
@@ -1960,7 +2339,7 @@ object PipelineQueries extends QueryPack {
             maxBasketSize = 64)
           .orderBy(col("item1"), col("item2"))
       },
-      Some("""WITH x AS (SELECT user_id, event_id, ts, event_type,
+      Some(s"""WITH x AS (SELECT user_id, event_id, ts, event_type,
           CASE WHEN lag(ts) OVER w IS NULL
                  OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
                THEN 1 ELSE 0 END AS is_new
@@ -1971,23 +2350,7 @@ object PipelineQueries extends QueryPack {
               AS sid FROM x),
         b AS (SELECT DISTINCT user_id || '#' || CAST(sid AS VARCHAR)
             AS bk, event_type AS it FROM sx),
-        n AS (SELECT count(DISTINCT bk) AS nb FROM b),
-        ic AS (SELECT it, CAST(count(*) AS BIGINT) AS c
-          FROM b GROUP BY 1),
-        f AS (SELECT * FROM ic WHERE c >= 2),
-        bf AS (SELECT b.bk, b.it, f.c FROM b JOIN f ON b.it = f.it),
-        p2 AS (SELECT l.it AS item1, r.it AS item2, l.c AS c1,
-            r.c AS c2, CAST(count(*) AS BIGINT) AS pair_count
-          FROM bf l JOIN bf r ON l.bk = r.bk AND l.it < r.it
-          GROUP BY 1, 2, 3, 4)
-        SELECT item1, item2, c1, c2, pair_count,
-          pair_count * 1000000 // nb AS support_micro,
-          pair_count * 1000000 // c1 AS conf12_micro,
-          pair_count * 1000000 // c2 AS conf21_micro,
-          (pair_count * 1000000 // c1) * nb // c2 AS lift_micro
-        FROM p2 CROSS JOIN n
-        WHERE pair_count * 1000000 // nb >= 2000
-        ORDER BY item1, item2""")),
+        ${basketPairsTailSql(2000)}""")),
 
     // ---- cross-lingual duplicate audit: do near-dup clusters span
     //      languages? — translated boilerplate / MT-copied content
@@ -1997,10 +2360,7 @@ object PipelineQueries extends QueryPack {
     Q("x199_cross_lingual_dups",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          n = 4, threshold = 0.2, maxDf = 100L)
-        val comp = Dedup.connectedComponents(pairs, "doc_a", "doc_b",
-          maxRounds = 60)
+        val comp = dupComponents(nearDupPairs(docs))
         docs.select(col("doc_id"), col("lang"))
           .join(comp, docs("doc_id") === comp("v"))
           .groupBy(col("comp").as("component"))
@@ -2011,23 +2371,7 @@ object PipelineQueries extends QueryPack {
           .withColumn("cross_lingual", col("n_langs") > 1L)
           .orderBy(col("component"))
       },
-      Some(s"""WITH RECURSIVE tk AS (SELECT doc_id, $shingleSql AS s FROM documents),
-        ex0 AS (SELECT doc_id AS doc, unnest(s) AS sh FROM tk),
-        keep AS (SELECT sh FROM ex0 GROUP BY sh HAVING count(*) <= 100),
-        ex AS (SELECT doc, ex0.sh FROM ex0 JOIN keep ON ex0.sh = keep.sh),
-        sz AS (SELECT doc, count(*) AS n_sh FROM ex GROUP BY doc),
-        co AS (SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS common
-               FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc < b.doc
-               GROUP BY a.doc, b.doc),
-        pr AS (SELECT doc_a, doc_b
-               FROM co JOIN sz sa ON doc_a = sa.doc JOIN sz sb ON doc_b = sb.doc
-               WHERE CAST(common AS DOUBLE)/(sa.n_sh + sb.n_sh - common) >= 0.2),
-        edges AS (SELECT doc_a AS s, doc_b AS d FROM pr
-                  UNION SELECT doc_b, doc_a FROM pr),
-        reach AS (SELECT s AS v, s AS l FROM edges
-                  UNION
-                  SELECT e.s, r.l FROM reach r JOIN edges e ON e.d = r.v),
-        comp AS (SELECT v, min(l) AS component FROM reach GROUP BY v)
+      Some(s"""WITH RECURSIVE $nearDupCompSql
         SELECT c.component, CAST(count(*) AS BIGINT) AS n_members,
           CAST(count(DISTINCT d.lang) AS BIGINT) AS n_langs,
           array_to_string(list_sort(list(DISTINCT d.lang)), ',') AS langs,
@@ -2062,7 +2406,7 @@ object PipelineQueries extends QueryPack {
           graft.expressions.TextExpressions.phraseHits(col("text"), phrases),
           lit(0L), (acc, x) => acc + x)
         val sc = dd.filter(hitsTotal === 0L)
-        def stats(df: org.apache.spark.sql.DataFrame, idx: Int,
+        def stats(df: DataFrame, idx: Int,
             name: String) = df.agg(
           count(lit(1)).cast("long").as("n_docs"),
           coalesce(sum(col("tok")), lit(0L)).cast("long").as("n_tokens"),
@@ -2141,12 +2485,8 @@ object PipelineQueries extends QueryPack {
         def run(): Unit = EventStreams.streamingKmvLedger(s,
           landing, shStream.schema, "kmvlg.ledger",
           ckpt, col("sh"), k = 256)
-        shStream.filter(col("doc_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing)
-        run()
-        shStream.filter(col("doc_id") % 2 === 1)
-          .write.mode("append").parquet(landing)
-        run()
+        runTwice(landing, shStream.filter(col("doc_id") % 2 === 0),
+          shStream.filter(col("doc_id") % 2 === 1))(run())
         val kmv = EventStreams.mergeKmvLedger(s.table("kmvlg.ledger"), 256)
         // exact-distinct adjudicator over the LANDING parquet (the two
         // halves just written = the full shingle stream row-for-row):
@@ -2263,7 +2603,7 @@ object PipelineQueries extends QueryPack {
     //      data artifact, not the production shape; this is) ----------
     Q("x203_ivf_bounded_scan",
       (s, dir) => {
-        import graft.operators.{Pq, Similarity, VectorFixtures}
+        import graft.operators.VectorFixtures
         // cached: the fixture feeds training, all three adjudication
         // legs, and the exact baseline; recon's codebook-literal
         // reconstruction is expensive to re-evaluate per leg
@@ -2277,27 +2617,8 @@ object PipelineQueries extends QueryPack {
         val eq = e.filter(col("vec_id") % 10 === 0)
         val cents = Similarity.trainKMeans(e, "vec_id", "embedding",
           k = 32, iters = 5)
-        val centSeq = cents.orderBy(col("cell")).collect()
-          .map(_.getSeq[Float](1)).toIndexedSeq
-        val resid = Pq.residuals(e, "embedding", centSeq)
-        val cbs = Pq.trainCodebooks(resid, "vec_id", "__resid",
-          dim = 64, m = 16, ksub = 128, iters = 5)
-        val recon = Pq.ivfPqReconstruct(e, "vec_id", "embedding",
-          centSeq, cbs).select(col("vec_id"), col("recon").as("embedding"))
-          .persist()
-        val candidates = Similarity.ivfTopK(recon, eq, cents, "vec_id",
-          "embedding", k = 50, nProbe = 1)
-          .select(col("query_id"), col("neighbor_id"))
-        val approx = Similarity.refineTopK(candidates, e, eq, "vec_id",
-          "embedding", k = 5)
-          .select(col("query_id"), col("neighbor_id"))
-        val exact = Similarity.bruteForceTopKBroadcast(e, eq, "vec_id",
-          "embedding", k = 5).select(col("query_id"), col("neighbor_id"))
-        val recall = exact.join(approx.withColumn("hit", lit(1)),
-            Seq("query_id", "neighbor_id"), "left")
-          .agg(countDistinct(col("query_id")).cast("long").as("n_queries"),
-            (sum(coalesce(col("hit"), lit(0))).cast("double")
-              / count(lit(1)) >= 0.9).as("recall_ok"))
+        val (recon, approx) = ivfPqTop5(e, eq, cents, nProbe = 1)
+        val recall = top5Recall(e, eq, approx, minRecall = 0.9)
         val scan = Similarity.ivfScanStats(recon, eq, cents, "vec_id",
           "embedding", nProbe = 1)
           .select((col("scan_micro") <= 100000L).as("scan_ok"),
@@ -2349,21 +2670,7 @@ object PipelineQueries extends QueryPack {
         wid AS (SELECT w, ids FROM wid0
           UNION ALL SELECT w, CAST([] AS BIGINT[]) FROM ws
           WHERE len(syms) = 0),
-        dt AS (SELECT doc_id,
-            unnest(list_transform(string_split(text, ' '),
-              (w, i) -> {'i': i, 'w': w})) AS u
-          FROM documents),
-        dj AS (SELECT doc_id, u.i AS i, wid.ids AS ids
-          FROM dt JOIN wid ON wid.w = u.w),
-        da AS (SELECT doc_id,
-            flatten(list_transform(
-              list_sort(list({'i': i, 'ids': ids})),
-              (x, j) -> CASE WHEN j = 1 THEN x.ids
-                ELSE [CAST(0 AS BIGINT)] || x.ids END)) AS enc
-          FROM dj GROUP BY doc_id)
-        SELECT doc_id, CAST(len(enc) AS BIGINT) AS n_tokens,
-          array_to_string(enc, ',') AS ids_csv
-        FROM da ORDER BY doc_id""")),
+        ${bpeAssemblySql("documents")}""")),
 
     // ---- UNIGRAM-LM TOKENIZER (Kudo ACL 2018 — SentencePiece's
     //      default): the OTHER subword tokenizer modern pipelines ship,
@@ -2584,14 +2891,11 @@ object PipelineQueries extends QueryPack {
         val split = ev.agg(expr("(min(event_id) + max(event_id)) div 2"))
           .first().getLong(0)
         val (landing, ckpt) = resetLedger(s, "strcmr", "sketch")
-        ev.filter(col("event_id") <= split)
-          .write.mode("overwrite").parquet(landing)
-        EventStreams.streamingCountMin(s, landing, ev.schema,
-          "strcmr.sketch", ckpt, "term", depth = 4, width = 1024)
-        ev.filter(col("event_id") > split)
-          .write.mode("append").parquet(landing)
-        EventStreams.streamingCountMin(s, landing, ev.schema,
-          "strcmr.sketch", ckpt, "term", depth = 4, width = 1024)
+        runTwice(landing, ev.filter(col("event_id") <= split),
+            ev.filter(col("event_id") > split)) {
+          EventStreams.streamingCountMin(s, landing, ev.schema,
+            "strcmr.sketch", ckpt, "term", depth = 4, width = 1024)
+        }
         // the landing parquet now holds exactly ev (both halves): the
         // delete list, the retraction's raw source, and the clean
         // adjudicator read it back instead of re-running the events
@@ -2667,12 +2971,8 @@ object PipelineQueries extends QueryPack {
         def run(): Unit = EventStreams.streamingTokenLedger(s,
           landing, docs.schema, "toklgr.ledger", ckpt,
           "source", nTokens(tokens(col("text"))))
-        docs.filter(col("doc_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing)
-        run()
-        docs.filter(col("doc_id") % 2 === 1)
-          .write.mode("append").parquet(landing)
-        run()
+        runTwice(landing, docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 === 1))(run())
         val deletes = docs.filter(col("doc_id") % 97 === 3)
           .select(col("doc_id"))
         EventStreams.tokenLedgerRetraction(docs, deletes, "doc_id",
@@ -2769,21 +3069,7 @@ object PipelineQueries extends QueryPack {
         wid AS (SELECT w, ids FROM wid0
           UNION ALL SELECT w, CAST([] AS BIGINT[]) FROM wsall
           WHERE len(syms) = 0),
-        dt AS (SELECT doc_id,
-            unnest(list_transform(string_split(text, ' '),
-              (w, i) -> {'i': i, 'w': w})) AS u
-          FROM encdocs),
-        dj AS (SELECT doc_id, u.i AS i, wid.ids AS ids
-          FROM dt JOIN wid ON wid.w = u.w),
-        da AS (SELECT doc_id,
-            flatten(list_transform(
-              list_sort(list({'i': i, 'ids': ids})),
-              (x, j) -> CASE WHEN j = 1 THEN x.ids
-                ELSE [CAST(0 AS BIGINT)] || x.ids END)) AS enc
-          FROM dj GROUP BY doc_id)
-        SELECT doc_id, CAST(len(enc) AS BIGINT) AS n_tokens,
-          array_to_string(enc, ',') AS ids_csv
-        FROM da ORDER BY doc_id""")),
+        ${bpeAssemblySql("encdocs")}""")),
 
     // ---- QUANTILE-LEDGER RETRACTION (the HISTOGRAM member — with x211
     //      count-min cells and x213 group totals, the additive family's
@@ -2803,12 +3089,8 @@ object PipelineQueries extends QueryPack {
         def run(): Unit = EventStreams.streamingQuantileLedger(s,
           landing, docs.schema, "qtlgr.ledger", ckpt,
           "source", "n_chars", nTokens(tokens(col("text"))).cast("long"))
-        docs.filter(col("doc_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing)
-        run()
-        docs.filter(col("doc_id") % 2 === 1)
-          .write.mode("append").parquet(landing)
-        run()
+        runTwice(landing, docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 === 1))(run())
         val deletes = docs.filter(col("doc_id") % 97 === 3)
           .select(col("doc_id"))
         EventStreams.quantileLedgerRetraction(docs, deletes, "doc_id",
@@ -2820,25 +3102,7 @@ object PipelineQueries extends QueryPack {
             "source", "n_chars", Seq(500000L, 900000L, 990000L))
           .orderBy(col("source"), col("pct_micro"))
       },
-      Some("""WITH d AS (SELECT source, n_chars,
-            CAST(len(string_split(text,' ')) AS BIGINT) AS tok
-          FROM documents WHERE doc_id % 97 <> 3),
-        h AS (SELECT source, n_chars AS v, CAST(sum(tok) AS BIGINT) AS cw
-          FROM d GROUP BY 1, 2),
-        c AS (SELECT source, v, cw,
-            CAST(sum(cw) OVER (PARTITION BY source ORDER BY v
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-          FROM h),
-        t AS (SELECT source, CAST(sum(cw) AS BIGINT) AS tot
-          FROM h GROUP BY 1),
-        e AS (SELECT c.source, c.v, t.tot, CAST(q.p AS BIGINT) AS pct_micro
-          FROM c JOIN t ON c.source = t.source
-          CROSS JOIN unnest([500000, 900000, 990000]) AS q(p)
-          WHERE c.cum * 1000000 >= CAST(q.p AS BIGINT) * t.tot)
-        SELECT source, pct_micro, CAST(min(v) AS BIGINT) AS value_at,
-          tot AS total_weight
-        FROM e GROUP BY source, pct_micro, tot
-        ORDER BY source, pct_micro""")),
+      Some(weightedQuantileOracleSqlFrom("documents WHERE doc_id % 97 <> 3"))),
 
     // ---- exact dedup: one hash aggregation -----------------------------
     Q("x01_dedup_exact",
@@ -2850,17 +3114,9 @@ object PipelineQueries extends QueryPack {
 
     // ---- n-gram Jaccard near-dups via inverted shingle index -----------
     Q("x02_jaccard_neardups",
-      (s, dir) => Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-        n = 4, threshold = 0.2, maxDf = 100L)
+      (s, dir) => nearDupPairs(t(s, dir, "documents"))
         .orderBy(col("doc_a"), col("doc_b")),
-      Some(s"""WITH tk AS (SELECT doc_id, $shingleSql AS s FROM documents),
-        ex0 AS (SELECT doc_id AS doc, unnest(s) AS sh FROM tk),
-        keep AS (SELECT sh FROM ex0 GROUP BY sh HAVING count(*) <= 100),
-        ex AS (SELECT doc, ex0.sh FROM ex0 JOIN keep ON ex0.sh = keep.sh),
-        sz AS (SELECT doc, count(*) AS n_sh FROM ex GROUP BY doc),
-        co AS (SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS common
-               FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc < b.doc
-               GROUP BY a.doc, b.doc)
+      Some(s"""WITH $nearDupCoSql
         SELECT doc_a, doc_b,
           CAST(common AS DOUBLE)/(sa.n_sh + sb.n_sh - common) AS jaccard
         FROM co JOIN sz sa ON doc_a = sa.doc JOIN sz sb ON doc_b = sb.doc
@@ -2872,14 +3128,7 @@ object PipelineQueries extends QueryPack {
       (s, dir) => Dedup.containmentPairs(t(s, dir, "documents"), "doc_id",
         "text", n = 4, threshold = 0.6, maxDf = 100L)
         .orderBy(col("doc_a"), col("doc_b")),
-      Some(s"""WITH tk AS (SELECT doc_id, $shingleSql AS s FROM documents),
-        ex0 AS (SELECT doc_id AS doc, unnest(s) AS sh FROM tk),
-        keep AS (SELECT sh FROM ex0 GROUP BY sh HAVING count(*) <= 100),
-        ex AS (SELECT doc, ex0.sh FROM ex0 JOIN keep ON ex0.sh = keep.sh),
-        sz AS (SELECT doc, count(*) AS n_sh FROM ex GROUP BY doc),
-        co AS (SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS common
-               FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc < b.doc
-               GROUP BY a.doc, b.doc)
+      Some(s"""WITH $nearDupCoSql
         SELECT doc_a, doc_b,
           CAST(common AS DOUBLE)/least(sa.n_sh, sb.n_sh) AS containment
         FROM co JOIN sz sa ON doc_a = sa.doc JOIN sz sb ON doc_b = sb.doc
@@ -2891,15 +3140,7 @@ object PipelineQueries extends QueryPack {
       (s, dir) => Dedup.minhashLsh(t(s, dir, "documents"), "doc_id", "text",
         n = 4, numHashes = 8, numBands = 4)
         .orderBy(col("doc_a"), col("doc_b")),
-      Some {
-        val sigs = (0 until 8).map(i => s"${minhashSigSql(i)} AS h$i").mkString(", ")
-        val bands = (0 until 4).map(b =>
-          s"SELECT doc_id, s, $b AS band, h${2 * b}||h${2 * b + 1} AS key FROM sg")
-          .mkString(" UNION ALL ")
-        s"""WITH tk AS (SELECT doc_id, $shingleSql AS s FROM documents
-              WHERE len(string_split(text,' ')) >= 4),
-          sg AS (SELECT doc_id, s, $sigs FROM tk),
-          bands AS ($bands),
+      Some(s"""WITH ${minhashBandsSql("bands", "doc_id, s")},
           cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
                    FROM bands a JOIN bands b
                      ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)
@@ -2907,21 +3148,14 @@ object PipelineQueries extends QueryPack {
             CAST(len(list_intersect(ta.s, tb.s)) AS DOUBLE)
               / len(list_distinct(ta.s || tb.s)) AS jaccard
           FROM cand JOIN tk ta ON doc_a = ta.doc_id JOIN tk tb ON doc_b = tb.doc_id
-          ORDER BY doc_a, doc_b"""
-      }),
+          ORDER BY doc_a, doc_b""")),
 
     // ---- SimHash signature groups --------------------------------------
     Q("x04_simhash_groups",
       (s, dir) => Dedup.simhashGroups(t(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("simhash"), col("keep_id")),
-      Some("""WITH sh AS (SELECT doc_id,
-          array_to_string(list_transform(range(1, 65), j ->
-            CASE WHEN list_sum(list_transform(list_distinct(string_split(text,' ')),
-                   t -> CASE WHEN (((strpos('0123456789abcdef',
-                        substr(md5(t), CAST((j-1)//4 + 1 AS INT), 1)) - 1)
-                        >> CAST(3 - (j-1)%4 AS INT)) & 1) = 1
-                     THEN 1 ELSE -1 END)) >= 0
-            THEN '1' ELSE '0' END), '') AS simhash
+      Some(s"""WITH sh AS (SELECT doc_id,
+          $simhash64Sql AS simhash
           FROM documents)
         SELECT simhash, count(*) AS n_docs, min(doc_id) AS keep_id
         FROM sh GROUP BY simhash ORDER BY simhash, keep_id""")),
@@ -2931,21 +3165,13 @@ object PipelineQueries extends QueryPack {
       (s, dir) => Dedup.simhashNearDups(t(s, dir, "documents"),
         "doc_id", "text", radius = 3, bands = 4)
         .orderBy(col("doc_a"), col("doc_b")),
-      Some("""WITH sh AS (SELECT doc_id,
-          array_to_string(list_transform(range(1, 65), j ->
-            CASE WHEN list_sum(list_transform(list_distinct(string_split(text,' ')),
-                   t -> CASE WHEN (((strpos('0123456789abcdef',
-                        substr(md5(t), CAST((j-1)//4 + 1 AS INT), 1)) - 1)
-                        >> CAST(3 - (j-1)%4 AS INT)) & 1) = 1
-                     THEN 1 ELSE -1 END)) >= 0
-            THEN '1' ELSE '0' END), '') AS sig
+      Some(s"""WITH sh AS (SELECT doc_id,
+          $simhash64Sql AS sig
           FROM documents)
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-          CAST(len(list_filter(range(64),
-            i -> substr(a.sig, i + 1, 1) <> substr(b.sig, i + 1, 1))) AS BIGINT) AS hamming
+          CAST($sigHammingSql AS BIGINT) AS hamming
         FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE len(list_filter(range(64),
-            i -> substr(a.sig, i + 1, 1) <> substr(b.sig, i + 1, 1))) <= 3
+        WHERE $sigHammingSql <= 3
         ORDER BY doc_a, doc_b""")),
 
     // ---- exact cosine top-k, broadcast-corpus scan (the declarative
@@ -3354,40 +3580,9 @@ object PipelineQueries extends QueryPack {
     Q("x19_dup_components",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          n = 4, threshold = 0.2, maxDf = 100L)
-        val comp = Dedup.connectedComponents(pairs, "doc_a", "doc_b",
-          maxRounds = 60)
-        val labeled = docs.select(col("doc_id"))
-          .join(comp, docs("doc_id") === comp("v"), "left")
-          .select(col("doc_id"),
-            coalesce(col("comp"), col("doc_id")).as("component"))
-        labeled.withColumn("comp_size",
-          count(lit(1)).over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("component"))))
-          .orderBy(col("doc_id"))
+        componentSizes(docs, dupComponents(nearDupPairs(docs)))
       },
-      Some(s"""WITH RECURSIVE tk AS (SELECT doc_id, $shingleSql AS s FROM documents),
-        ex0 AS (SELECT doc_id AS doc, unnest(s) AS sh FROM tk),
-        keep AS (SELECT sh FROM ex0 GROUP BY sh HAVING count(*) <= 100),
-        ex AS (SELECT doc, ex0.sh FROM ex0 JOIN keep ON ex0.sh = keep.sh),
-        sz AS (SELECT doc, count(*) AS n_sh FROM ex GROUP BY doc),
-        co AS (SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS common
-               FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc < b.doc
-               GROUP BY a.doc, b.doc),
-        pr AS (SELECT doc_a, doc_b
-               FROM co JOIN sz sa ON doc_a = sa.doc JOIN sz sb ON doc_b = sb.doc
-               WHERE CAST(common AS DOUBLE)/(sa.n_sh + sb.n_sh - common) >= 0.2),
-        edges AS (SELECT doc_a AS s, doc_b AS d FROM pr
-                  UNION SELECT doc_b, doc_a FROM pr),
-        reach AS (SELECT s AS v, s AS l FROM edges
-                  UNION
-                  SELECT e.s, r.l FROM reach r JOIN edges e ON e.d = r.v),
-        comp AS (SELECT v, min(l) AS component FROM reach GROUP BY v)
-        SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component,
-          count(*) OVER (PARTITION BY coalesce(c.component, d.doc_id)) AS comp_size
-        FROM documents d LEFT JOIN comp c ON d.doc_id = c.v
-        ORDER BY doc_id""")),
+      Some(componentSizesOracleSql)),
 
     // ---- duplicate clusters again, via large-star/small-star (the
     //      O(log²)-round scale path for high-diameter graphs; must equal
@@ -3395,39 +3590,10 @@ object PipelineQueries extends QueryPack {
     Q("x32_dup_components_star",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          n = 4, threshold = 0.2, maxDf = 100L)
-        val comp = Dedup.connectedComponentsStar(pairs, "doc_a", "doc_b")
-        val labeled = docs.select(col("doc_id"))
-          .join(comp, docs("doc_id") === comp("v"), "left")
-          .select(col("doc_id"),
-            coalesce(col("comp"), col("doc_id")).as("component"))
-        labeled.withColumn("comp_size",
-          count(lit(1)).over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("component"))))
-          .orderBy(col("doc_id"))
+        componentSizes(docs,
+          Dedup.connectedComponentsStar(nearDupPairs(docs), "doc_a", "doc_b"))
       },
-      Some(s"""WITH RECURSIVE tk AS (SELECT doc_id, $shingleSql AS s FROM documents),
-        ex0 AS (SELECT doc_id AS doc, unnest(s) AS sh FROM tk),
-        keep AS (SELECT sh FROM ex0 GROUP BY sh HAVING count(*) <= 100),
-        ex AS (SELECT doc, ex0.sh FROM ex0 JOIN keep ON ex0.sh = keep.sh),
-        sz AS (SELECT doc, count(*) AS n_sh FROM ex GROUP BY doc),
-        co AS (SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS common
-               FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc < b.doc
-               GROUP BY a.doc, b.doc),
-        pr AS (SELECT doc_a, doc_b
-               FROM co JOIN sz sa ON doc_a = sa.doc JOIN sz sb ON doc_b = sb.doc
-               WHERE CAST(common AS DOUBLE)/(sa.n_sh + sb.n_sh - common) >= 0.2),
-        edges AS (SELECT doc_a AS s, doc_b AS d FROM pr
-                  UNION SELECT doc_b, doc_a FROM pr),
-        reach AS (SELECT s AS v, s AS l FROM edges
-                  UNION
-                  SELECT e.s, r.l FROM reach r JOIN edges e ON e.d = r.v),
-        comp AS (SELECT v, min(l) AS component FROM reach GROUP BY v)
-        SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component,
-          count(*) OVER (PARTITION BY coalesce(c.component, d.doc_id)) AS comp_size
-        FROM documents d LEFT JOIN comp c ON d.doc_id = c.v
-        ORDER BY doc_id""")),
+      Some(componentSizesOracleSql)),
 
     // ---- benchmark decontamination: GPT-3-style n-gram collision rule
     //      (corpus = doc_id % 20 != 0, benchmark = the rest; a training
@@ -3522,32 +3688,13 @@ object PipelineQueries extends QueryPack {
     Q("x27_dedup_keeplist",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          n = 4, threshold = 0.2, maxDf = 100L)
-        val comp = Dedup.connectedComponents(pairs, "doc_a", "doc_b",
-          maxRounds = 60)
+        val comp = dupComponents(nearDupPairs(docs))
         docs.join(comp, docs("doc_id") === comp("v"), "left")
           .filter(col("comp").isNull || col("comp") === col("doc_id"))
           .select(col("doc_id"), col("source"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH RECURSIVE tk AS (SELECT doc_id, $shingleSql AS s FROM documents),
-        ex0 AS (SELECT doc_id AS doc, unnest(s) AS sh FROM tk),
-        keep AS (SELECT sh FROM ex0 GROUP BY sh HAVING count(*) <= 100),
-        ex AS (SELECT doc, ex0.sh FROM ex0 JOIN keep ON ex0.sh = keep.sh),
-        sz AS (SELECT doc, count(*) AS n_sh FROM ex GROUP BY doc),
-        co AS (SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS common
-               FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc < b.doc
-               GROUP BY a.doc, b.doc),
-        pr AS (SELECT doc_a, doc_b
-               FROM co JOIN sz sa ON doc_a = sa.doc JOIN sz sb ON doc_b = sb.doc
-               WHERE CAST(common AS DOUBLE)/(sa.n_sh + sb.n_sh - common) >= 0.2),
-        edges AS (SELECT doc_a AS s, doc_b AS d FROM pr
-                  UNION SELECT doc_b, doc_a FROM pr),
-        reach AS (SELECT s AS v, s AS l FROM edges
-                  UNION
-                  SELECT e.s, r.l FROM reach r JOIN edges e ON e.d = r.v),
-        comp AS (SELECT v, min(l) AS component FROM reach GROUP BY v)
+      Some(s"""WITH RECURSIVE $nearDupCompSql
         SELECT d.doc_id, d.source
         FROM documents d LEFT JOIN comp c ON d.doc_id = c.v
         WHERE c.component IS NULL OR c.component = d.doc_id
@@ -3847,21 +3994,11 @@ object PipelineQueries extends QueryPack {
         // ivfScaleParams: panel/nlist/training-sample derivation shared
         // with x62 and the x14 slope-gate volume counter — identical to
         // the r15 parameters at every driver SF and on the 10x fixture
-        val (panelMod, nlist, trainMod) = ivfScaleParams(n)
+        val (nlist, eq, cents) = ivfPanel(e, n)
         val nProbe = math.max(3, 3 * nlist / 10)
-        val eq = e.filter(col("vec_id") % panelMod === 0)
-        val cents = Similarity.trainKMeans(
-          e.filter(col("vec_id") % trainMod === 0), "vec_id", "embedding",
-          k = nlist, iters = 5)
         val ivf = Similarity.ivfTopK(e, eq, cents, "vec_id", "embedding",
           k = 5, nProbe = nProbe).select(col("query_id"), col("neighbor_id"))
-        val exact = Similarity.bruteForceTopKBroadcast(e, eq, "vec_id",
-          "embedding", k = 5).select(col("query_id"), col("neighbor_id"))
-        exact.join(ivf.withColumn("hit", lit(1)),
-            Seq("query_id", "neighbor_id"), "left")
-          .agg(countDistinct(col("query_id")).as("n_queries"),
-            (sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1))
-              >= 0.5).as("recall_ok"))
+        top5Recall(e, eq, ivf, minRecall = 0.5)
       },
       Some("""SELECT count(*) AS n_queries, true AS recall_ok
         FROM embeddings
@@ -4063,61 +4200,11 @@ object PipelineQueries extends QueryPack {
     //      both batch verdicts from scratch, proving the two-run
     //      incremental composition equals the one-shot semantics --------
     Q("x50_incremental_dedup",
-      (s, dir) => {
-        import graft.engine._
-        val docs = t(s, dir, "documents")
-        val split = docs.agg(expr("(min(doc_id) + max(doc_id)) div 2"))
-          .first().getLong(0)
-        val wh = warehousePath(s)
-        val staging = wh.resolve("incrq_staging")
-        Materializer.deleteRecursively(staging)
-        // the warehouse dir outlives the in-memory catalog across JVMs:
-        // remove the stale physical table a previous process may have
-        // left, or run 1's CTAS hits LOCATION_ALREADY_EXISTS (same
-        // pattern as x44). DROP first — in a session where this query
-        // already ran (registry-wide test sweeps), deleting files behind
-        // the still-registered table leaves a cached listing of dead
-        // files and the rebuild fails with FAILED_READ_FILE
-        s.sql("DROP TABLE IF EXISTS incrq.dedup_ledger")
-        Materializer.deleteRecursively(wh.resolve("incrq.db/dedup_ledger"))
-        // fresh Project per run = two separate process invocations in
-        // production; run 1 is full-refresh so reruns are deterministic
-        def freshProject(): Project = {
-          val p = new Project(s, Target("dev", "incrq", threads = 2))
-          p.source("raw", "docs", ParquetPath(staging.toString))
-          p.model("dedup_ledger", ModelConfig(materialized =
-            Materialization.Incremental(None,
-              Materialization.IncrementalStrategy.Append))) { ctx =>
-            val arrived = ctx.source("raw", "docs")
-            val (batch, keptPosts) =
-              if (ctx.isIncremental) {
-                val cursor = ctx.thisDf.agg(max(col("doc"))).first().getLong(0)
-                (arrived.filter(col("doc_id") > cursor),
-                  ctx.thisDf.filter(col("kept") && col("band") >= 0))
-              } else
-                (arrived, graft.operators.Dedup.minhashBandPostings(
-                  arrived.limit(0), "doc_id", "text"))
-            Dedup.dedupBatchLedger(batch, keptPosts, "doc_id", "text",
-              n = 4, numHashes = 8, numBands = 4)
-          }
-          p
-        }
-        docs.filter(col("doc_id") <= split)
-          .write.mode("overwrite").parquet(staging.toString)
-        val r1 = freshProject().run(fullRefresh = true)
-        require(r1.ok, s"incremental dedup run 1 failed: ${r1.results}")
-        docs.filter(col("doc_id") > split)
-          .write.mode("append").parquet(staging.toString)
-        val r2 = freshProject().run()
-        require(r2.ok, s"incremental dedup run 2 failed: ${r2.results}")
-        s.table("incrq.dedup_ledger")
-          .groupBy(col("doc"))
-          .agg(max(col("kept")).as("kept"))
-          .withColumn("batch",
-            when(col("doc") <= split, 1L).otherwise(2L))
-          .select(col("doc").as("doc_id"), col("kept"), col("batch"))
-          .orderBy(col("doc_id"))
-      },
+      (s, dir) => incrementalLedger(s, t(s, dir, "documents"), "doc_id",
+        "docs", "incrq", "dedup_ledger")(
+        graft.operators.Dedup.minhashBandPostings(_, "doc_id", "text"))(
+        Dedup.dedupBatchLedger(_, _, "doc_id", "text",
+          n = 4, numHashes = 8, numBands = 4)),
       Some(minhashLedgerOracleSql)),
 
     // ---- STREAMING incremental dedup: the same two-batch ledger, but
@@ -4132,21 +4219,12 @@ object PipelineQueries extends QueryPack {
         val split = docs.agg(expr("(min(doc_id) + max(doc_id)) div 2"))
           .first().getLong(0)
         val (landing, ckpt) = resetLedger(s, "strldg", "ledger")
-        docs.filter(col("doc_id") <= split)
-          .write.mode("overwrite").parquet(landing)
-        EventStreams.streamingDedupLedger(s, landing, docs.schema,
-          "strldg.ledger", ckpt, "doc_id", "text")
-        docs.filter(col("doc_id") > split)
-          .write.mode("append").parquet(landing)
-        EventStreams.streamingDedupLedger(s, landing, docs.schema,
-          "strldg.ledger", ckpt, "doc_id", "text")
-        s.table("strldg.ledger")
-          .groupBy(col("doc"))
-          .agg(max(col("kept")).as("kept"))
-          .withColumn("batch",
-            when(col("doc") <= split, 1L).otherwise(2L))
-          .select(col("doc").as("doc_id"), col("kept"), col("batch"))
-          .orderBy(col("doc_id"))
+        runTwice(landing, docs.filter(col("doc_id") <= split),
+            docs.filter(col("doc_id") > split)) {
+          EventStreams.streamingDedupLedger(s, landing, docs.schema,
+            "strldg.ledger", ckpt, "doc_id", "text")
+        }
+        ledgerVerdicts(s.table("strldg.ledger"), split, "doc_id")
       },
       Some(minhashLedgerOracleSql)),
 
@@ -4253,7 +4331,7 @@ object PipelineQueries extends QueryPack {
             blockBytes = 4)
           .orderBy(col("media_type"), col("id_a"), col("id_b"))
       },
-      Some("""WITH p AS (SELECT doc_id AS id,
+      Some(s"""WITH p AS (SELECT doc_id AS id,
           CASE WHEN doc_id % 2 = 0 THEN 'text/plain'
                ELSE 'text/markdown' END AS media_type,
           hex(encode(text)) AS hx, octet_length(encode(text)) AS nb
@@ -4272,12 +4350,10 @@ object PipelineQueries extends QueryPack {
             THEN '1' ELSE '0' END), '') AS sig
           FROM ds)
         SELECT a.media_type, a.id AS id_a, b.id AS id_b,
-          CAST(len(list_filter(range(64),
-            i -> substr(a.sig, i + 1, 1) <> substr(b.sig, i + 1, 1))) AS BIGINT) AS hamming
+          CAST($sigHammingSql AS BIGINT) AS hamming
         FROM sh a JOIN sh b
           ON a.media_type = b.media_type AND a.id < b.id
-        WHERE len(list_filter(range(64),
-            i -> substr(a.sig, i + 1, 1) <> substr(b.sig, i + 1, 1))) <= 3
+        WHERE $sigHammingSql <= 3
         ORDER BY a.media_type, id_a, id_b""")),
 
     // ---- URL/domain curation: C4-style canonicalization + per-domain
@@ -4288,34 +4364,16 @@ object PipelineQueries extends QueryPack {
     //      query/fragment variants that must all collapse --------------
     Q("x55_url_domain_curation",
       (s, dir) => {
-        val url = expr("""CASE CAST(doc_id % 4 AS INT)
-          WHEN 0 THEN 'https://www.' || source || '.example.com/page/' ||
-            CAST(doc_id DIV 40 AS STRING) || '?utm_source=feed'
-          WHEN 1 THEN 'HTTP://' || upper(source) || '.Example.COM/page/' ||
-            CAST(doc_id DIV 40 AS STRING) || '#Section'
-          WHEN 2 THEN 'https://' || source || '.example.com/page/' ||
-            CAST(doc_id DIV 40 AS STRING) || '/'
-          ELSE source || '.example.com/page/' || CAST(doc_id DIV 40 AS STRING)
-          END""")
         graft.operators.UrlCuration.domainStats(
-            t(s, dir, "documents").withColumn("url", url),
+            t(s, dir, "documents").withColumn("url", synthUrl),
             "url", "text", "doc_id", capN = 10)
           .orderBy(col("domain"))
       },
-      Some("""WITH u AS (SELECT doc_id, text,
-          CASE CAST(doc_id % 4 AS INT)
-            WHEN 0 THEN 'https://www.' || source || '.example.com/page/' ||
-              CAST(doc_id // 40 AS VARCHAR) || '?utm_source=feed'
-            WHEN 1 THEN 'HTTP://' || upper(source) || '.Example.COM/page/' ||
-              CAST(doc_id // 40 AS VARCHAR) || '#Section'
-            WHEN 2 THEN 'https://' || source || '.example.com/page/' ||
-              CAST(doc_id // 40 AS VARCHAR) || '/'
-            ELSE source || '.example.com/page/' || CAST(doc_id // 40 AS VARCHAR)
-          END AS url FROM documents),
+      Some(raw"""WITH $synthUrlSql,
         c AS (SELECT doc_id, text,
           regexp_replace(regexp_replace(regexp_replace(
             lower(split_part(split_part(url, '#', 1), '?', 1)),
-            '^[a-z][a-z0-9+.-]*://', ''), '^www\.', ''), '/+$', '') AS curl
+            '^[a-z][a-z0-9+.-]*://', ''), '^www\.', ''), '/+$$', '') AS curl
           FROM u),
         d AS (SELECT doc_id, text, curl,
           split_part(split_part(curl, '/', 1), ':', 1) AS domain FROM c),
@@ -4339,52 +4397,11 @@ object PipelineQueries extends QueryPack {
     //      run projects only the NEW batch (history never re-projected).
     //      Oracle recomputes both batch verdicts from scratch -----------
     Q("x56_incremental_embedding_dedup",
-      (s, dir) => {
-        import graft.engine._
-        val vecs = t(s, dir, "embeddings")
-        val split = vecs.agg(expr("(min(vec_id) + max(vec_id)) div 2"))
-          .first().getLong(0)
-        val wh = warehousePath(s)
-        val staging = wh.resolve("incrv_staging")
-        Materializer.deleteRecursively(staging)
-        s.sql("DROP TABLE IF EXISTS incrv.vec_ledger")
-        Materializer.deleteRecursively(wh.resolve("incrv.db/vec_ledger"))
-        def freshProject(): Project = {
-          val p = new Project(s, Target("dev", "incrv", threads = 2))
-          p.source("raw", "vecs", ParquetPath(staging.toString))
-          p.model("vec_ledger", ModelConfig(materialized =
-            Materialization.Incremental(None,
-              Materialization.IncrementalStrategy.Append))) { ctx =>
-            val arrived = ctx.source("raw", "vecs")
-            val (batch, keptPosts) =
-              if (ctx.isIncremental) {
-                val cursor = ctx.thisDf.agg(max(col("doc"))).first().getLong(0)
-                (arrived.filter(col("vec_id") > cursor),
-                  ctx.thisDf.filter(col("kept") && col("band") >= 0))
-              } else
-                (arrived, Dedup.srpBandPostings(
-                  arrived.limit(0), "vec_id", "embedding", dim = 64))
-            Dedup.embeddingDedupBatchLedger(batch, keptPosts,
-              "vec_id", "embedding", dim = 64, numPlanes = 64, numBands = 8)
-          }
-          p
-        }
-        vecs.filter(col("vec_id") <= split)
-          .write.mode("overwrite").parquet(staging.toString)
-        val r1 = freshProject().run(fullRefresh = true)
-        require(r1.ok, s"incremental embedding dedup run 1 failed: ${r1.results}")
-        vecs.filter(col("vec_id") > split)
-          .write.mode("append").parquet(staging.toString)
-        val r2 = freshProject().run()
-        require(r2.ok, s"incremental embedding dedup run 2 failed: ${r2.results}")
-        s.table("incrv.vec_ledger")
-          .groupBy(col("doc"))
-          .agg(max(col("kept")).as("kept"))
-          .withColumn("batch",
-            when(col("doc") <= split, 1L).otherwise(2L))
-          .select(col("doc").as("vec_id"), col("kept"), col("batch"))
-          .orderBy(col("vec_id"))
-      },
+      (s, dir) => incrementalLedger(s, t(s, dir, "embeddings"), "vec_id",
+        "vecs", "incrv", "vec_ledger")(
+        Dedup.srpBandPostings(_, "vec_id", "embedding", dim = 64))(
+        Dedup.embeddingDedupBatchLedger(_, _, "vec_id", "embedding",
+          dim = 64, numPlanes = 64, numBands = 8)),
       Some(srpLedgerOracleSql)),
 
     // ---- the round-8 operators composed into ONE nightly training-mix
@@ -4396,16 +4413,7 @@ object PipelineQueries extends QueryPack {
       (s, dir) => {
         import graft.operators.{Bpe, NbQuality, Sampling, UrlCuration}
         val docs = t(s, dir, "documents")
-        val url = expr("""CASE CAST(doc_id % 4 AS INT)
-          WHEN 0 THEN 'https://www.' || source || '.example.com/page/' ||
-            CAST(doc_id DIV 40 AS STRING) || '?utm_source=feed'
-          WHEN 1 THEN 'HTTP://' || upper(source) || '.Example.COM/page/' ||
-            CAST(doc_id DIV 40 AS STRING) || '#Section'
-          WHEN 2 THEN 'https://' || source || '.example.com/page/' ||
-            CAST(doc_id DIV 40 AS STRING) || '/'
-          ELSE source || '.example.com/page/' || CAST(doc_id DIV 40 AS STRING)
-          END""")
-        val withDomain = docs.withColumn("url", url)
+        val withDomain = docs.withColumn("url", synthUrl)
           .withColumn("domain",
             UrlCuration.domainOf(UrlCuration.canonicalUrl(col("url"))))
           .drop("url")
@@ -4444,16 +4452,7 @@ object PipelineQueries extends QueryPack {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH RECURSIVE
-        u AS (SELECT doc_id, text,
-          CASE CAST(doc_id % 4 AS INT)
-            WHEN 0 THEN 'https://www.' || source || '.example.com/page/' ||
-              CAST(doc_id // 40 AS VARCHAR) || '?utm_source=feed'
-            WHEN 1 THEN 'HTTP://' || upper(source) || '.Example.COM/page/' ||
-              CAST(doc_id // 40 AS VARCHAR) || '#Section'
-            WHEN 2 THEN 'https://' || source || '.example.com/page/' ||
-              CAST(doc_id // 40 AS VARCHAR) || '/'
-            ELSE source || '.example.com/page/' || CAST(doc_id // 40 AS VARCHAR)
-          END AS url FROM documents),
+        $synthUrlSql,
         dmn AS (SELECT doc_id, text,
           split_part(split_part(
             regexp_replace(regexp_replace(regexp_replace(
@@ -4470,25 +4469,7 @@ object PipelineQueries extends QueryPack {
            AND CAST(list_sum(list_transform(string_split(text,' '), t -> length(t))) AS DOUBLE)/len(string_split(text,' ')) BETWEEN 4.0 AND 5.0
            AND len(list_filter(string_split(text,' '), t -> t IN ('the','a','of','and','to','in','is'))) > 0
           AS BIGINT) AS label FROM cap),
-        tok AS (SELECT doc_id, label, unnest(ts) AS w FROM lab),
-        tot AS (SELECT
-          sum(CASE WHEN label = 1 THEN 1 ELSE 0 END) AS nt1,
-          sum(CASE WHEN label = 0 THEN 1 ELSE 0 END) AS nt0,
-          count(DISTINCT CASE WHEN label = 1 THEN doc_id END) AS nd1,
-          count(DISTINCT CASE WHEN label = 0 THEN doc_id END) AS nd0,
-          count(DISTINCT w) AS vsz FROM tok),
-        wc AS (SELECT w,
-          sum(CASE WHEN label = 1 THEN 1 ELSE 0 END) AS c1,
-          sum(CASE WHEN label = 0 THEN 1 ELSE 0 END) AS c0
-          FROM tok GROUP BY w),
-        lp AS (SELECT w,
-          CAST(round(ln((c1 + 1.0) / (nt1 + vsz)), 6) AS DECIMAL(18,6)) AS lp1,
-          CAST(round(ln((c0 + 1.0) / (nt0 + vsz)), 6) AS DECIMAL(18,6)) AS lp0
-          FROM wc CROSS JOIN tot),
-        pri AS (SELECT
-          CAST(round(ln((nd1 + 1.0) / (nd1 + nd0 + 2.0)), 6) AS DECIMAL(18,6)) AS lpr1,
-          CAST(round(ln((nd0 + 1.0) / (nd1 + nd0 + 2.0)), 6) AS DECIMAL(18,6)) AS lpr0
-          FROM tot),
+        $nbModelSql,
         sc AS (SELECT doc_id, sum(lp1) AS s1, sum(lp0) AS s0
           FROM tok JOIN lp USING (w) GROUP BY doc_id),
         qk AS (SELECT doc_id,
@@ -4620,7 +4601,6 @@ object PipelineQueries extends QueryPack {
     //      PQ training is the one linear corpus pass -------------------
     Q("x62_ivf_pq_ann",
       (s, dir) => {
-        import graft.operators.{Pq, Similarity}
         // cached: the corpus feeds training, the ADC scan, the refine
         // and the exact baseline; recon's codebook-literal expression
         // is expensive to re-evaluate per leg (the x203 lesson)
@@ -4633,33 +4613,10 @@ object PipelineQueries extends QueryPack {
         // sample keeps it (20·nlist)·nlist. trainMod = 1 at every
         // driver SF (n ≤ 2000 < trainTarget), so the registered
         // behavior there is unchanged.
-        val (panelMod, nlist, trainMod) = ivfScaleParams(n)
+        val (nlist, eq, cents) = ivfPanel(e, n)
         val nProbe = math.max(7, 7 * nlist / 10)
-        val eq = e.filter(col("vec_id") % panelMod === 0)
-        val cents = Similarity.trainKMeans(
-          e.filter(col("vec_id") % trainMod === 0), "vec_id", "embedding",
-          k = nlist, iters = 5)
-        val centSeq = cents.orderBy(col("cell")).collect()
-          .map(_.getSeq[Float](1)).toIndexedSeq
-        val resid = Pq.residuals(e, "embedding", centSeq)
-        val cbs = Pq.trainCodebooks(resid, "vec_id", "__resid",
-          dim = 64, m = 16, ksub = 128, iters = 5)
-        val recon = Pq.ivfPqReconstruct(e, "vec_id", "embedding",
-          centSeq, cbs).select(col("vec_id"), col("recon").as("embedding"))
-          .persist()
-        val candidates = Similarity.ivfTopK(recon, eq, cents, "vec_id",
-          "embedding", k = 50, nProbe = nProbe)
-          .select(col("query_id"), col("neighbor_id"))
-        val approx = Similarity.refineTopK(candidates, e, eq, "vec_id",
-          "embedding", k = 5)
-          .select(col("query_id"), col("neighbor_id"))
-        val exact = Similarity.bruteForceTopKBroadcast(e, eq, "vec_id",
-          "embedding", k = 5).select(col("query_id"), col("neighbor_id"))
-        exact.join(approx.withColumn("hit", lit(1)),
-            Seq("query_id", "neighbor_id"), "left")
-          .agg(countDistinct(col("query_id")).as("n_queries"),
-            (sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1))
-              >= 0.7).as("recall_ok"))
+        val (_, approx) = ivfPqTop5(e, eq, cents, nProbe = nProbe)
+        top5Recall(e, eq, approx, minRecall = 0.7)
           .withColumn("code_bits", lit(112L))
       },
       Some("""SELECT count(*) AS n_queries, true AS recall_ok,
@@ -4689,15 +4646,7 @@ object PipelineQueries extends QueryPack {
             (col("comp").isNull || col("comp") === col("doc_id")).as("kept"))
           .orderBy(col("doc_id"))
       },
-      Some {
-        val sigs = (0 until 8).map(i => s"${minhashSigSql(i)} AS h$i").mkString(", ")
-        val bands = (0 until 4).map(b =>
-          s"SELECT doc_id, s, $b AS band, h${2 * b}||h${2 * b + 1} AS key FROM sg")
-          .mkString(" UNION ALL ")
-        s"""WITH RECURSIVE tk AS (SELECT doc_id, $shingleSql AS s FROM documents
-              WHERE len(string_split(text,' ')) >= 4),
-          sg AS (SELECT doc_id, s, $sigs FROM tk),
-          bands AS ($bands),
+      Some(s"""WITH RECURSIVE ${minhashBandsSql("bands", "doc_id, s")},
           cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
                    FROM bands a JOIN bands b
                      ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
@@ -4706,18 +4655,11 @@ object PipelineQueries extends QueryPack {
                  WHERE CAST(len(list_intersect(ta.s, tb.s)) AS DOUBLE)
                    / len(list_distinct(ta.s || tb.s)) >= 0.2),
           shs AS (SELECT doc_id,
-              array_to_string(list_transform(range(1, 65), j ->
-                CASE WHEN list_sum(list_transform(list_distinct(string_split(text,' ')),
-                       t -> CASE WHEN (((strpos('0123456789abcdef',
-                            substr(md5(t), CAST((j-1)//4 + 1 AS INT), 1)) - 1)
-                            >> CAST(3 - (j-1)%4 AS INT)) & 1) = 1
-                         THEN 1 ELSE -1 END)) >= 0
-                THEN '1' ELSE '0' END), '') AS sig
+              $simhash64Sql AS sig
               FROM documents),
           sp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
                  FROM shs a JOIN shs b ON a.doc_id < b.doc_id
-                 WHERE len(list_filter(range(64),
-                   i -> substr(a.sig, i + 1, 1) <> substr(b.sig, i + 1, 1))) <= 3),
+                 WHERE $sigHammingSql <= 3),
           pr AS (SELECT doc_a, doc_b FROM mh UNION SELECT doc_a, doc_b FROM sp),
           edges AS (SELECT doc_a AS es, doc_b AS ed FROM pr
                     UNION SELECT doc_b, doc_a FROM pr),
@@ -4728,8 +4670,7 @@ object PipelineQueries extends QueryPack {
         SELECT d.doc_id,
           (c.component IS NULL OR c.component = d.doc_id) AS kept
         FROM documents d LEFT JOIN comp c ON d.doc_id = c.v
-        ORDER BY doc_id"""
-      }),
+        ORDER BY doc_id""")),
 
     // ---- STREAMING incremental EMBEDDING dedup — completes the
     //      batch/streaming × text/embedding ledger matrix (x50/x56/x58/
@@ -4741,23 +4682,13 @@ object PipelineQueries extends QueryPack {
         val split = vecs.agg(expr("(min(vec_id) + max(vec_id)) div 2"))
           .first().getLong(0)
         val (landing, ckpt) = resetLedger(s, "strvldg", "ledger")
-        vecs.filter(col("vec_id") <= split)
-          .write.mode("overwrite").parquet(landing)
-        EventStreams.streamingEmbeddingDedupLedger(s, landing,
-          vecs.schema, "strvldg.ledger", ckpt, "vec_id",
-          "embedding", dim = 64)
-        vecs.filter(col("vec_id") > split)
-          .write.mode("append").parquet(landing)
-        EventStreams.streamingEmbeddingDedupLedger(s, landing,
-          vecs.schema, "strvldg.ledger", ckpt, "vec_id",
-          "embedding", dim = 64)
-        s.table("strvldg.ledger")
-          .groupBy(col("doc"))
-          .agg(max(col("kept")).as("kept"))
-          .withColumn("batch",
-            when(col("doc") <= split, 1L).otherwise(2L))
-          .select(col("doc").as("vec_id"), col("kept"), col("batch"))
-          .orderBy(col("vec_id"))
+        runTwice(landing, vecs.filter(col("vec_id") <= split),
+            vecs.filter(col("vec_id") > split)) {
+          EventStreams.streamingEmbeddingDedupLedger(s, landing,
+            vecs.schema, "strvldg.ledger", ckpt, "vec_id",
+            "embedding", dim = 64)
+        }
+        ledgerVerdicts(s.table("strvldg.ledger"), split, "vec_id")
       },
       Some(srpLedgerOracleSql)),
 
@@ -4801,24 +4732,15 @@ object PipelineQueries extends QueryPack {
     //      is the identity on (format, width, height). -----------------
     Q("x66_image_decode",
       (s, dir) => {
-        val spec = t(s, dir, "documents").select(col("doc_id"),
-          element_at(typedlit(Seq("png", "jpeg", "gif")),
-            (col("doc_id") % 3).cast("int") + 1).as("fmt"),
-          (lit(1) + pmod(col("doc_id") * 7 + col("n_chars"), lit(1024)))
-            .cast("int").as("w"),
-          (lit(1) + pmod(col("doc_id") * 13 + col("n_chars") * 3, lit(768)))
-            .cast("int").as("h"))
+        val spec = imageSpec(t(s, dir, "documents"))
         // pre-sorted spec (the x13/x121 discipline): spreads the codec
         // map off the one-split scan AND drops the trailing orderBy's
         // double evaluation of the opaque chain
-        val packed = Multimodal.packImages(s,
+        val packed = cutEvery97th(Multimodal.packImages(s,
           spec.repartitionByRange(s.sparkContext.defaultParallelism,
               col("doc_id"))
             .sortWithinPartitions("doc_id"),
-          "doc_id", "fmt", "w", "h")
-          .toDF()
-          .withColumn("payload", when(col("id") % 97 === 0,
-            expr("substring(payload, 1, 6)")).otherwise(col("payload")))
+          "doc_id", "fmt", "w", "h").toDF())
         Multimodal.decodeHeaders(s, packed).toDF()
           .select(col("id"), col("format"),
             col("width").cast("long").as("width"),
@@ -5002,14 +4924,11 @@ object PipelineQueries extends QueryPack {
         val split = ev.agg(expr("(min(event_id) + max(event_id)) div 2"))
           .first().getLong(0)
         val (landing, ckpt) = resetLedger(s, "strhh", "sketch")
-        ev.filter(col("event_id") <= split)
-          .write.mode("overwrite").parquet(landing)
-        EventStreams.streamingHeavyHitters(s, landing, ev.schema,
-          "strhh.sketch", ckpt, "term", capacity = 128)
-        ev.filter(col("event_id") > split)
-          .write.mode("append").parquet(landing)
-        EventStreams.streamingHeavyHitters(s, landing, ev.schema,
-          "strhh.sketch", ckpt, "term", capacity = 128)
+        runTwice(landing, ev.filter(col("event_id") <= split),
+            ev.filter(col("event_id") > split)) {
+          EventStreams.streamingHeavyHitters(s, landing, ev.schema,
+            "strhh.sketch", ckpt, "term", capacity = 128)
+        }
         // mergeSketchLedger, not a bare groupBy-sum: collapses
         // at-least-once replays on batch_id before summing
         val (summary, totals) =
@@ -5079,17 +4998,9 @@ object PipelineQueries extends QueryPack {
     //      bytes_kept verifies the CONTAINER sizes byte-for-byte --------
     Q("x74_multimodal_curation",
       (s, dir) => {
-        val spec = t(s, dir, "documents").select(col("doc_id"),
-          element_at(typedlit(Seq("png", "jpeg", "gif")),
-            (col("doc_id") % 3).cast("int") + 1).as("fmt"),
-          (lit(1) + pmod(col("doc_id") * 7 + col("n_chars"), lit(1024)))
-            .cast("int").as("w"),
-          (lit(1) + pmod(col("doc_id") * 13 + col("n_chars") * 3, lit(768)))
-            .cast("int").as("h"))
-        val packed = Multimodal.packImages(s, spec, "doc_id", "fmt", "w", "h")
-          .toDF()
-          .withColumn("payload", when(col("id") % 97 === 0,
-            expr("substring(payload, 1, 6)")).otherwise(col("payload")))
+        val spec = imageSpec(t(s, dir, "documents"))
+        val packed = cutEvery97th(
+          Multimodal.packImages(s, spec, "doc_id", "fmt", "w", "h").toDF())
         val decoded = Multimodal.decodeHeaders(s, packed).toDF()
         val keyed = decoded.filter(col("format").isNotNull)
           .join(packed.select(col("id"), col("payload")), "id")
@@ -5198,31 +5109,12 @@ object PipelineQueries extends QueryPack {
     Q("x77_leakage_safe_split",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          n = 4, threshold = 0.2, maxDf = 100L)
-        val comp = Dedup.connectedComponents(pairs, "doc_a", "doc_b",
-          maxRounds = 60)
+        val comp = dupComponents(nearDupPairs(docs))
         graft.operators.Sampling.leakageSafeSplit(docs, "doc_id", comp)
           .select(col("doc_id"), col("component"), col("split"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH RECURSIVE tk AS (SELECT doc_id, $shingleSql AS s FROM documents),
-        ex0 AS (SELECT doc_id AS doc, unnest(s) AS sh FROM tk),
-        keep AS (SELECT sh FROM ex0 GROUP BY sh HAVING count(*) <= 100),
-        ex AS (SELECT doc, ex0.sh FROM ex0 JOIN keep ON ex0.sh = keep.sh),
-        sz AS (SELECT doc, count(*) AS n_sh FROM ex GROUP BY doc),
-        co AS (SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS common
-               FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc < b.doc
-               GROUP BY a.doc, b.doc),
-        pr AS (SELECT doc_a, doc_b
-               FROM co JOIN sz sa ON doc_a = sa.doc JOIN sz sb ON doc_b = sb.doc
-               WHERE CAST(common AS DOUBLE)/(sa.n_sh + sb.n_sh - common) >= 0.2),
-        edges AS (SELECT doc_a AS s, doc_b AS d FROM pr
-                  UNION SELECT doc_b, doc_a FROM pr),
-        reach AS (SELECT s AS v, s AS l FROM edges
-                  UNION
-                  SELECT e.s, r.l FROM reach r JOIN edges e ON e.d = r.v),
-        comp AS (SELECT v, min(l) AS component FROM reach GROUP BY v)
+      Some(s"""WITH RECURSIVE $nearDupCompSql
         SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component,
           CASE WHEN substr(md5(CAST(coalesce(c.component, d.doc_id)
                  AS VARCHAR)),1,2) < 'cd'
@@ -5239,30 +5131,11 @@ object PipelineQueries extends QueryPack {
       (s, dir) => graft.operators.CorpusDrift.jsDivergencePerSource(
         t(s, dir, "documents"), "source", "text", k = 64)
         .orderBy(col("source")),
-      Some("""WITH tk AS (SELECT source, unnest(string_split(text,' ')) AS term
+      Some(s"""WITH tk AS (SELECT source, unnest(string_split(text,' ')) AS term
           FROM documents),
         gc AS (SELECT term, count(*) AS cg FROM tk GROUP BY term),
         vocab AS (SELECT term FROM gc ORDER BY cg DESC, term LIMIT 64),
-        b AS (SELECT source, CASE WHEN term IN (SELECT term FROM vocab)
-          THEN term ELSE '__oov__' END AS bterm FROM tk),
-        ps AS (SELECT source, bterm, count(*) AS cs FROM b
-          GROUP BY source, bterm),
-        so AS (SELECT source, sum(cs) AS ns FROM ps GROUP BY source),
-        c AS (SELECT bterm, sum(cs) AS cq FROM ps GROUP BY bterm),
-        n AS (SELECT sum(cq) AS nq FROM c),
-        g AS (SELECT so.source, so.ns, c.bterm, c.cq, n.nq,
-            coalesce(ps.cs, 0) AS cs
-          FROM so CROSS JOIN c CROSS JOIN n
-          LEFT JOIN ps ON ps.source = so.source AND ps.bterm = c.bterm),
-        j AS (SELECT source, cs, CAST(round((CASE WHEN cs > 0
-            THEN (cs*1.0/ns) * ln((cs*1.0/ns) /
-              (((cs*1.0/ns)+(cq*1.0/nq))/2)) ELSE 0 END
-            + (cq*1.0/nq) * ln((cq*1.0/nq) /
-              (((cs*1.0/ns)+(cq*1.0/nq))/2))) / 2, 8)
-            AS DECIMAL(18,8)) AS contrib FROM g)
-        SELECT source, CAST(sum(cs) AS BIGINT) AS n_tokens,
-          CAST(round(sum(contrib), 6) AS DOUBLE) AS js
-        FROM j GROUP BY source ORDER BY source""")),
+        ${jsDriftTailSql("vocab")}""")),
 
     // ---- main-content extraction (jusText/C4 block-length heuristic):
     //      each doc wrapped in deterministic HTML chrome (title, nav,
@@ -5334,22 +5207,8 @@ object PipelineQueries extends QueryPack {
         queryTerms = Seq("spark", "window", "hash", "join", "stream"),
         topK = 20)
         .orderBy(col("doc_id")),
-      Some("""WITH q AS (SELECT unnest(['spark','window','hash','join','stream']) AS term),
-        dl AS (SELECT doc_id, len(string_split(text,' ')) AS dl FROM documents),
-        st AS (SELECT count(*) AS n, sum(dl)*1.0/count(*) AS avgdl FROM dl),
-        tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS term
-          FROM documents),
-        tf AS (SELECT doc_id, term, count(*) AS tf FROM tok
-          JOIN q USING (term) GROUP BY doc_id, term),
-        df AS (SELECT term, count(DISTINCT doc_id) AS df FROM tf
-          GROUP BY term),
-        sc AS (SELECT tf.doc_id, CAST(round(
-            ln((st.n - df.df + 0.5)/(df.df + 0.5) + 1) *
-            ((tf.tf * (1.2+1)) /
-             (tf.tf + 1.2 * (1 - 0.75 + 0.75*dl.dl/st.avgdl))), 6)
-            AS DECIMAL(18,6)) AS c
-          FROM tf JOIN df USING (term) JOIN dl USING (doc_id)
-          CROSS JOIN st),
+      Some(s"""WITH q AS (SELECT unnest(['spark','window','hash','join','stream']) AS term),
+        ${bm25ScoreSql("JOIN q USING (term)", "tf.doc_id")},
         agg AS (SELECT doc_id, count(*) AS n_hit_terms,
           CAST(round(sum(c), 4) AS DOUBLE) AS score
           FROM sc GROUP BY doc_id),
@@ -5442,44 +5301,22 @@ object PipelineQueries extends QueryPack {
         val vocab = graft.operators.CorpusDrift.referenceVocabulary(
           docs.filter(col("doc_id") % 10 === 0), "text", k = 64)
         val (landing, ckpt) = resetLedger(s, "strdrift", "ledger")
-        docs.filter(col("doc_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing)
-        EventStreams.streamingDriftLedger(s, landing, docs.schema,
-          "strdrift.ledger", ckpt, "source", "text", vocab)
-        docs.filter(col("doc_id") % 2 === 1)
-          .write.mode("append").parquet(landing)
-        EventStreams.streamingDriftLedger(s, landing, docs.schema,
-          "strdrift.ledger", ckpt, "source", "text", vocab)
+        runTwice(landing, docs.filter(col("doc_id") % 2 === 0),
+            docs.filter(col("doc_id") % 2 === 1)) {
+          EventStreams.streamingDriftLedger(s, landing, docs.schema,
+            "strdrift.ledger", ckpt, "source", "text", vocab)
+        }
         val merged = EventStreams.mergeDriftLedger(s.table("strdrift.ledger"))
         graft.operators.CorpusDrift.jsFromBucketCounts(merged)
           .orderBy(col("source"))
       },
-      Some("""WITH v AS (SELECT term FROM (
+      Some(s"""WITH v AS (SELECT term FROM (
             SELECT unnest(string_split(text,' ')) AS term FROM documents
             WHERE doc_id % 10 = 0)
           GROUP BY term ORDER BY count(*) DESC, term LIMIT 64),
         tk AS (SELECT source, unnest(string_split(text,' ')) AS term
           FROM documents),
-        b AS (SELECT source, CASE WHEN term IN (SELECT term FROM v)
-          THEN term ELSE '__oov__' END AS bterm FROM tk),
-        ps AS (SELECT source, bterm, count(*) AS cs FROM b
-          GROUP BY source, bterm),
-        so AS (SELECT source, sum(cs) AS ns FROM ps GROUP BY source),
-        c AS (SELECT bterm, sum(cs) AS cq FROM ps GROUP BY bterm),
-        n AS (SELECT sum(cq) AS nq FROM c),
-        g AS (SELECT so.source, so.ns, c.bterm, c.cq, n.nq,
-            coalesce(ps.cs, 0) AS cs
-          FROM so CROSS JOIN c CROSS JOIN n
-          LEFT JOIN ps ON ps.source = so.source AND ps.bterm = c.bterm),
-        j AS (SELECT source, cs, CAST(round((CASE WHEN cs > 0
-            THEN (cs*1.0/ns) * ln((cs*1.0/ns) /
-              (((cs*1.0/ns)+(cq*1.0/nq))/2)) ELSE 0 END
-            + (cq*1.0/nq) * ln((cq*1.0/nq) /
-              (((cs*1.0/ns)+(cq*1.0/nq))/2))) / 2, 8)
-            AS DECIMAL(18,8)) AS contrib FROM g)
-        SELECT source, CAST(sum(cs) AS BIGINT) AS n_tokens,
-          CAST(round(sum(contrib), 6) AS DOUBLE) AS js
-        FROM j GROUP BY source ORDER BY source""")),
+        ${jsDriftTailSql("v")}""")),
 
     // ---- split-leakage AUDIT: the quantified case for x77. Count
     //      near-dup pairs straddling train/holdout under (a) the naive
@@ -5492,10 +5329,8 @@ object PipelineQueries extends QueryPack {
         val docs = t(s, dir, "documents")
         // persisted: three consumers (CC + both audits) would otherwise
         // re-run the band join per consumer
-        val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          n = 4, threshold = 0.2, maxDf = 100L).persist()
-        val comp = Dedup.connectedComponents(pairs, "doc_a", "doc_b",
-          maxRounds = 60)
+        val pairs = nearDupPairs(docs).persist()
+        val comp = dupComponents(pairs)
         val ids = docs.select(col("doc_id"))
         val naive = Sampling.hashSplit(ids, "doc_id")
         val safe = Sampling.leakageSafeSplit(ids, "doc_id", comp)
@@ -5506,23 +5341,7 @@ object PipelineQueries extends QueryPack {
             safe, "doc_id", "split", "hash_by_component"))
           .orderBy(col("method"))
       },
-      Some(s"""WITH RECURSIVE tk AS (SELECT doc_id, $shingleSql AS s FROM documents),
-        ex0 AS (SELECT doc_id AS doc, unnest(s) AS sh FROM tk),
-        keep AS (SELECT sh FROM ex0 GROUP BY sh HAVING count(*) <= 100),
-        ex AS (SELECT doc, ex0.sh FROM ex0 JOIN keep ON ex0.sh = keep.sh),
-        sz AS (SELECT doc, count(*) AS n_sh FROM ex GROUP BY doc),
-        co AS (SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS common
-               FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc < b.doc
-               GROUP BY a.doc, b.doc),
-        pr AS (SELECT doc_a, doc_b
-               FROM co JOIN sz sa ON doc_a = sa.doc JOIN sz sb ON doc_b = sb.doc
-               WHERE CAST(common AS DOUBLE)/(sa.n_sh + sb.n_sh - common) >= 0.2),
-        edges AS (SELECT doc_a AS s, doc_b AS d FROM pr
-                  UNION SELECT doc_b, doc_a FROM pr),
-        reach AS (SELECT s AS v, s AS l FROM edges
-                  UNION
-                  SELECT e.s, r.l FROM reach r JOIN edges e ON e.d = r.v),
-        comp AS (SELECT v, min(l) AS component FROM reach GROUP BY v),
+      Some(s"""WITH RECURSIVE $nearDupCompSql,
         naive AS (SELECT doc_id, CASE WHEN
             substr(md5(CAST(doc_id AS VARCHAR)),1,2) < 'cd'
           THEN 'train' ELSE 'holdout' END AS split FROM documents),
@@ -5713,21 +5532,7 @@ object PipelineQueries extends QueryPack {
         val d = dotSql.format("e.embedding", "e.embedding", "qv.embedding")
         val nq = dotSql.format("embedding", "embedding", "embedding")
         s"""WITH q AS (SELECT unnest(['spark','window','hash','join','stream']) AS term),
-          dl AS (SELECT doc_id, len(string_split(text,' ')) AS dl FROM documents),
-          st AS (SELECT count(*) AS n, sum(dl)*1.0/count(*) AS avgdl FROM dl),
-          tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS term
-            FROM documents),
-          tf AS (SELECT doc_id, term, count(*) AS tf FROM tok
-            JOIN q USING (term) GROUP BY doc_id, term),
-          df AS (SELECT term, count(DISTINCT doc_id) AS df FROM tf
-            GROUP BY term),
-          sc AS (SELECT tf.doc_id, CAST(round(
-              ln((st.n - df.df + 0.5)/(df.df + 0.5) + 1) *
-              ((tf.tf * (1.2+1)) /
-               (tf.tf + 1.2 * (1 - 0.75 + 0.75*dl.dl/st.avgdl))), 6)
-              AS DECIMAL(18,6)) AS c
-            FROM tf JOIN df USING (term) JOIN dl USING (doc_id)
-            CROSS JOIN st),
+          ${bm25ScoreSql("JOIN q USING (term)", "tf.doc_id")},
           lexagg AS (SELECT doc_id, CAST(round(sum(c), 4) AS DOUBLE)
               AS score
             FROM sc GROUP BY doc_id),
@@ -5796,7 +5601,7 @@ object PipelineQueries extends QueryPack {
     Q("x93_perceptual_neardups",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        def dims(d: org.apache.spark.sql.DataFrame) = d.select(
+        def dims(d: DataFrame) = d.select(
           col("__id").as("id"), col("doc_id").as("pat"),
           (lit(8) + pmod(col("doc_id") * 7 + col("n_chars"), lit(57)))
             .cast("int").as("w"),
@@ -5867,14 +5672,11 @@ object PipelineQueries extends QueryPack {
         val split = ev.agg(expr("(min(event_id) + max(event_id)) div 2"))
           .first().getLong(0)
         val (landing, ckpt) = resetLedger(s, "strcm", "sketch")
-        ev.filter(col("event_id") <= split)
-          .write.mode("overwrite").parquet(landing)
-        EventStreams.streamingCountMin(s, landing, ev.schema,
-          "strcm.sketch", ckpt, "term", depth = 4, width = 1024)
-        ev.filter(col("event_id") > split)
-          .write.mode("append").parquet(landing)
-        EventStreams.streamingCountMin(s, landing, ev.schema,
-          "strcm.sketch", ckpt, "term", depth = 4, width = 1024)
+        runTwice(landing, ev.filter(col("event_id") <= split),
+            ev.filter(col("event_id") > split)) {
+          EventStreams.streamingCountMin(s, landing, ev.schema,
+            "strcm.sketch", ckpt, "term", depth = 4, width = 1024)
+        }
         // mergeCountMinLedger, not a bare groupBy-sum: collapses
         // at-least-once replays on (batch_id, pos) before summing
         val (counters, totals) =
@@ -6092,30 +5894,14 @@ object PipelineQueries extends QueryPack {
           queries, topK = 10)
           .orderBy(col("query_id"), col("rank"))
       },
-      Some("""WITH qtok AS (SELECT DISTINCT doc_id AS query_id,
+      Some(s"""WITH qtok AS (SELECT DISTINCT doc_id AS query_id,
           unnest(string_split(text,' ')) AS term
         FROM documents WHERE doc_id % 97 = 1),
       qt AS (SELECT query_id, term FROM (
           SELECT query_id, term, row_number() OVER (PARTITION BY query_id
             ORDER BY md5(query_id || ':' || term)) AS rn FROM qtok)
         WHERE rn <= 4),
-      dl AS (SELECT doc_id, len(string_split(text,' ')) AS dl
-        FROM documents),
-      st AS (SELECT count(*) AS n, sum(dl)*1.0/count(*) AS avgdl FROM dl),
-      tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS term
-        FROM documents),
-      tf AS (SELECT doc_id, term, count(*) AS tf FROM tok
-        WHERE term IN (SELECT DISTINCT term FROM qt)
-        GROUP BY doc_id, term),
-      df AS (SELECT term, count(DISTINCT doc_id) AS df FROM tf
-        GROUP BY term),
-      sc AS (SELECT tf.doc_id, tf.term, CAST(round(
-          ln((st.n - df.df + 0.5)/(df.df + 0.5) + 1) *
-          ((tf.tf * (1.2+1)) /
-           (tf.tf + 1.2 * (1 - 0.75 + 0.75*dl.dl/st.avgdl))), 6)
-          AS DECIMAL(18,6)) AS c
-        FROM tf JOIN df USING (term) JOIN dl USING (doc_id)
-        CROSS JOIN st),
+      ${bm25ScoreSql("WHERE term IN (SELECT DISTINCT term FROM qt)", "tf.doc_id, tf.term")},
       agg AS (SELECT qt.query_id, sc.doc_id, count(*) AS n_hit_terms,
           CAST(round(sum(sc.c), 4) AS DOUBLE) AS score
         FROM sc JOIN qt USING (term)
@@ -6555,21 +6341,12 @@ object PipelineQueries extends QueryPack {
           "doc_id", "shard", "n_chars")
           .orderBy(col("shard"))
       },
-      Some("""WITH asg AS (SELECT doc_id, doc_id % 16 AS shard,
+      Some(s"""WITH asg AS (SELECT doc_id, doc_id % 16 AS shard,
             n_chars FROM documents),
         del AS (SELECT DISTINCT doc_id FROM (
             SELECT doc_id FROM documents WHERE doc_id % 97 = 3
             UNION ALL SELECT 10000000 AS doc_id)),
-        mk AS (SELECT a.shard, a.n_chars,
-            (d.doc_id IS NOT NULL) AS hit
-          FROM asg a LEFT JOIN del d USING (doc_id)),
-        ps AS (SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
-            CAST(sum(n_chars) AS BIGINT) AS n_bytes,
-            CAST(sum(CASE WHEN hit THEN 1 ELSE 0 END) AS BIGINT)
-              AS n_deleted,
-            CAST(sum(CASE WHEN hit THEN n_chars ELSE 0 END) AS BIGINT)
-              AS deleted_bytes
-          FROM mk GROUP BY 1),
+        $shardDeletionSql,
         um AS (SELECT CAST(count(*) AS BIGINT) AS n_unmatched
           FROM del WHERE doc_id NOT IN (SELECT doc_id FROM asg))
         SELECT shard, n_docs, n_bytes, n_deleted, deleted_bytes,
@@ -6614,20 +6391,11 @@ object PipelineQueries extends QueryPack {
           "doc_id", "shard", "n_chars")
           .orderBy(col("shard"))
       },
-      Some("""WITH asg AS (SELECT doc_id, doc_id % 16 AS shard,
+      Some(s"""WITH asg AS (SELECT doc_id, doc_id % 16 AS shard,
             n_chars FROM documents),
         del AS (SELECT DISTINCT doc_id FROM documents
           WHERE doc_id % 97 = 3),
-        mk AS (SELECT a.shard, a.n_chars,
-            (d.doc_id IS NOT NULL) AS hit
-          FROM asg a LEFT JOIN del d USING (doc_id)),
-        ps AS (SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
-            CAST(sum(n_chars) AS BIGINT) AS n_bytes,
-            CAST(sum(CASE WHEN hit THEN 1 ELSE 0 END) AS BIGINT)
-              AS n_deleted,
-            CAST(sum(CASE WHEN hit THEN n_chars ELSE 0 END) AS BIGINT)
-              AS deleted_bytes
-          FROM mk GROUP BY 1)
+        $shardDeletionSql
         SELECT shard, n_docs, n_bytes, n_deleted, deleted_bytes,
           CAST((n_deleted*2000000 + n_docs) // (2*n_docs) AS DOUBLE)
             /1000000.0 AS share_docs_deleted,
@@ -6683,17 +6451,8 @@ object PipelineQueries extends QueryPack {
           (pmod(col("doc_id") * 3 + 1, lit(5)) * 80).cast("int").as("q"),
           lit(0).as("r"))
         // silent prefix of q samples, then a ±amp square wave of
-        // half-period halfp — synthesized map-side (the per-sample HOF
-        // was interpreted), over a spec pre-sorted by id so no trailing
-        // orderBy re-evaluates the opaque chain for range sampling
-        val ordered = spec.repartitionByRange(col("doc_id"))
-          .sortWithinPartitions("doc_id")
-        val withSamples = Audio.synthSquare(s, ordered)
-        val packed = Audio.packWav(s, withSamples, "doc_id", "rate",
-          "samples").toDF()
-          .withColumn("payload", when(col("id") % 97 === 0,
-            expr("substring(payload, 1, 6)")).otherwise(col("payload")))
-        Audio.analyze(s, packed).toDF()
+        // half-period halfp
+        Audio.analyze(s, synthWavs(s, spec)).toDF()
       },
       Some("""WITH s AS (SELECT doc_id AS id,
           CASE WHEN doc_id % 3 = 0 THEN 8000
@@ -6845,19 +6604,7 @@ object PipelineQueries extends QueryPack {
           (lit(4) + pmod(col("doc_id"), lit(13))).cast("int").as("halfp"),
           (pmod(col("doc_id") * 3 + 1, lit(5)) * 80).cast("int").as("q"),
           (pmod(col("doc_id") * 7 + 2, lit(5)) * 40).cast("int").as("r"))
-        // sort the CHEAP spec up front and keep every later stage
-        // map-side order-preserving: a trailing orderBy would range-
-        // SAMPLE its child, i.e. evaluate the whole opaque synth+pack+
-        // trim chain twice (measured: 0.92 s -> 1.95 s); synthSquare
-        // replaces the per-sample interpreted HOF (guide §1.2 step 2)
-        val ordered = spec.repartitionByRange(col("doc_id"))
-          .sortWithinPartitions("doc_id")
-        val withSamples = Audio.synthSquare(s, ordered)
-        val packed = Audio.packWav(s, withSamples, "doc_id", "rate",
-          "samples").toDF()
-          .withColumn("payload", when(col("id") % 97 === 0,
-            expr("substring(payload, 1, 6)")).otherwise(col("payload")))
-        Audio.trimSilence(s, packed).toDF()
+        Audio.trimSilence(s, synthWavs(s, spec)).toDF()
           .select(col("id"), col("trimmed"), col("n_in"), col("n_out"),
             col("lead_trimmed"), col("trail_trimmed"),
             col("duration_out_ms"), col("n_bytes"))
@@ -6893,17 +6640,9 @@ object PipelineQueries extends QueryPack {
     Q("x122_pair_curation",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val spec = docs.select(col("doc_id"),
-          element_at(typedlit(Seq("png", "jpeg", "gif")),
-            (col("doc_id") % 3).cast("int") + 1).as("fmt"),
-          (lit(1) + pmod(col("doc_id") * 7 + col("n_chars"), lit(1024)))
-            .cast("int").as("w"),
-          (lit(1) + pmod(col("doc_id") * 13 + col("n_chars") * 3, lit(768)))
-            .cast("int").as("h"))
-        val packed = Multimodal.packImages(s, spec, "doc_id", "fmt", "w", "h")
-          .toDF()
-          .withColumn("payload", when(col("id") % 97 === 0,
-            expr("substring(payload, 1, 6)")).otherwise(col("payload")))
+        val spec = imageSpec(docs)
+        val packed = cutEvery97th(
+          Multimodal.packImages(s, spec, "doc_id", "fmt", "w", "h").toDF())
         val dec = Multimodal.decodeHeaders(s, packed).toDF()
           .select(col("id").as("doc_id"),
             col("width").cast("long").as("width"),
@@ -7165,22 +6904,11 @@ object PipelineQueries extends QueryPack {
     Q("x128_bleu_pair_qa",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          n = 4, threshold = 0.2, maxDf = 100L)
+        val pairs = nearDupPairs(docs)
         Bleu.scorePairs(pairs, docs, "doc_a", "doc_b", "doc_id", "text")
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      Some(s"""WITH tk AS (SELECT doc_id, $shingleSql AS s FROM documents),
-        ex0 AS (SELECT doc_id AS doc, unnest(s) AS sh FROM tk),
-        keep AS (SELECT sh FROM ex0 GROUP BY sh HAVING count(*) <= 100),
-        ex AS (SELECT doc, ex0.sh FROM ex0 JOIN keep ON ex0.sh = keep.sh),
-        sz AS (SELECT doc, count(*) AS n_sh FROM ex GROUP BY doc),
-        co AS (SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS common
-               FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc < b.doc
-               GROUP BY a.doc, b.doc),
-        pr AS (SELECT doc_a, doc_b
-               FROM co JOIN sz sa ON doc_a = sa.doc JOIN sz sb ON doc_b = sb.doc
-               WHERE CAST(common AS DOUBLE)/(sa.n_sh + sb.n_sh - common) >= 0.2),
+      Some(s"""WITH $nearDupPairsSql,
         tx AS (SELECT doc_id, string_split(text,' ') AS ts FROM documents),
         j AS (SELECT doc_a, doc_b, a.ts AS ta, b.ts AS tb FROM pr
               JOIN tx a ON doc_a = a.doc_id JOIN tx b ON doc_b = b.doc_id
@@ -7273,16 +7001,7 @@ object PipelineQueries extends QueryPack {
           (lit(2) * (lit(2) + pmod(col("doc_id"), lit(12))))
             .cast("int").as("halfp"),
           lit(0).as("q"), lit(0).as("r"))
-        // map-side synth over a pre-sorted spec (see x117/x121): no
-        // per-sample interpreted HOF, no trailing orderBy double-eval
-        val ordered = spec.repartitionByRange(col("doc_id"))
-          .sortWithinPartitions("doc_id")
-        val withSamples = Audio.synthSquare(s, ordered)
-        val packed = Audio.packWav(s, withSamples, "doc_id", "rate",
-          "samples").toDF()
-          .withColumn("payload", when(col("id") % 97 === 0,
-            expr("substring(payload, 1, 6)")).otherwise(col("payload")))
-        Audio.resample(s, packed, factor = 2).toDF()
+        Audio.resample(s, synthWavs(s, spec), factor = 2).toDF()
           .select(col("id"), col("resampled"), col("rate_in"),
             col("rate_out"), col("n_in"), col("n_out"), col("peak_out"),
             col("sum_sq_out"), col("duration_out_ms"), col("n_bytes"))
@@ -7320,22 +7039,11 @@ object PipelineQueries extends QueryPack {
     Q("x131_chrf_pair_qa",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          n = 4, threshold = 0.2, maxDf = 100L)
+        val pairs = nearDupPairs(docs)
         Chrf.scorePairs(pairs, docs, "doc_a", "doc_b", "doc_id", "text")
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      Some(s"""WITH tk AS (SELECT doc_id, $shingleSql AS s FROM documents),
-        ex0 AS (SELECT doc_id AS doc, unnest(s) AS sh FROM tk),
-        keep AS (SELECT sh FROM ex0 GROUP BY sh HAVING count(*) <= 100),
-        ex AS (SELECT doc, ex0.sh FROM ex0 JOIN keep ON ex0.sh = keep.sh),
-        sz AS (SELECT doc, count(*) AS n_sh FROM ex GROUP BY doc),
-        co AS (SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS common
-               FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc < b.doc
-               GROUP BY a.doc, b.doc),
-        pr AS (SELECT doc_a, doc_b
-               FROM co JOIN sz sa ON doc_a = sa.doc JOIN sz sb ON doc_b = sb.doc
-               WHERE CAST(common AS DOUBLE)/(sa.n_sh + sb.n_sh - common) >= 0.2),
+      Some(s"""WITH $nearDupPairsSql,
         tx AS (SELECT doc_id, regexp_replace(text, '\\s+', '', 'g') AS cs
                FROM documents),
         j AS (SELECT doc_a, doc_b, a.cs AS sa, b.cs AS sb FROM pr
@@ -7532,25 +7240,7 @@ object PipelineQueries extends QueryPack {
       (s, dir) => graft.operators.Retention.weeklyCohorts(
         t(s, dir, "events"), "user_id", "ts")
         .orderBy(col("cohort_week"), col("week_offset")),
-      Some("""WITH f AS (SELECT user_id AS u,
-               CAST(date_trunc('week', min(ts)) AS DATE) AS cohort_week
-               FROM events GROUP BY user_id),
-        a AS (SELECT DISTINCT user_id AS u,
-               CAST(date_trunc('week', ts) AS DATE) AS week FROM events),
-        sz AS (SELECT cohort_week, count(*) AS cohort_size
-               FROM f GROUP BY cohort_week),
-        m AS (SELECT f.cohort_week,
-               CAST(datediff('day', f.cohort_week, a.week) // 7 AS INT)
-                 AS week_offset,
-               count(*) AS n_active
-               FROM a JOIN f ON a.u = f.u
-               GROUP BY f.cohort_week, 2)
-        SELECT CAST(m.cohort_week AS VARCHAR) AS cohort_week,
-          m.week_offset, CAST(m.n_active AS BIGINT) AS n_active,
-          CAST(m.n_active * 1000000 // sz.cohort_size AS BIGINT)
-            AS retention_micro
-        FROM m JOIN sz ON m.cohort_week = sz.cohort_week
-        ORDER BY cohort_week, week_offset""")),
+      Some(retentionOracleSql)),
 
     // ---- shard rebalancing plan (Thaler-Ravishankar HRW/rendezvous
     //      vs naive mod-hash, 12 -> 16 shards): the movement matrix a
@@ -7746,26 +7436,10 @@ object PipelineQueries extends QueryPack {
           .select(col("l_orderkey"), col("p_brand")),
         "l_orderkey", "p_brand")
         .orderBy(col("item1"), col("item2")),
-      Some("""WITH b AS (SELECT DISTINCT l.l_orderkey AS bk,
+      Some(s"""WITH b AS (SELECT DISTINCT l.l_orderkey AS bk,
             p.p_brand AS it
           FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
-        n AS (SELECT count(DISTINCT bk) AS nb FROM b),
-        ic AS (SELECT it, CAST(count(*) AS BIGINT) AS c
-          FROM b GROUP BY 1),
-        f AS (SELECT * FROM ic WHERE c >= 2),
-        bf AS (SELECT b.bk, b.it, f.c FROM b JOIN f ON b.it = f.it),
-        p2 AS (SELECT l.it AS item1, r.it AS item2, l.c AS c1,
-            r.c AS c2, CAST(count(*) AS BIGINT) AS pair_count
-          FROM bf l JOIN bf r ON l.bk = r.bk AND l.it < r.it
-          GROUP BY 1, 2, 3, 4)
-        SELECT item1, item2, c1, c2, pair_count,
-          pair_count * 1000000 // nb AS support_micro,
-          pair_count * 1000000 // c1 AS conf12_micro,
-          pair_count * 1000000 // c2 AS conf21_micro,
-          (pair_count * 1000000 // c1) * nb // c2 AS lift_micro
-        FROM p2 CROSS JOIN n
-        WHERE pair_count * 1000000 // nb >= 10000
-        ORDER BY item1, item2""")),
+        ${basketPairsTailSql(10000)}""")),
 
     // ---- first-order Markov transition matrix over the clickstream:
     //      session-gap-bounded consecutive pairs per user, row-
@@ -7883,14 +7557,11 @@ object PipelineQueries extends QueryPack {
         val split = ev.agg(expr("(min(event_id) + max(event_id)) div 2"))
           .first().getLong(0)
         val (landing, ckpt) = resetLedger(s, "stranom", "hourly")
-        ev.filter(col("event_id") <= split)
-          .write.mode("overwrite").parquet(landing)
-        EventStreams.streamingHourlyLedger(s, landing, ev.schema,
-          "stranom.hourly", ckpt, "ts", "event_type", "error")
-        ev.filter(col("event_id") > split)
-          .write.mode("append").parquet(landing)
-        EventStreams.streamingHourlyLedger(s, landing, ev.schema,
-          "stranom.hourly", ckpt, "ts", "event_type", "error")
+        runTwice(landing, ev.filter(col("event_id") <= split),
+            ev.filter(col("event_id") > split)) {
+          EventStreams.streamingHourlyLedger(s, landing, ev.schema,
+            "stranom.hourly", ckpt, "ts", "event_type", "error")
+        }
         // mergeHourlyLedger, not a bare groupBy-sum: collapses
         // at-least-once replays on batch_id before summing
         graft.operators.Anomaly.spikesFromHourly(
@@ -7919,12 +7590,8 @@ object PipelineQueries extends QueryPack {
         def run(): Unit = EventStreams.streamingHourlyLedger(s,
           landing, ev.schema, "strcomp.hourly", ckpt,
           "ts", "event_type", "error")
-        ev.filter(col("event_id") <= c1)
-          .write.mode("overwrite").parquet(landing)
-        run()
-        ev.filter(col("event_id") > c1 && col("event_id") <= c2)
-          .write.mode("append").parquet(landing)
-        run()
+        runTwice(landing, ev.filter(col("event_id") <= c1),
+          ev.filter(col("event_id") > c1 && col("event_id") <= c2))(run())
         // compact between increments: batch 0 collapses into the
         // batch_id = -1 pre-merged rows, batch 1 stays verbatim; the
         // localCheckpoint pins the read before the same-table overwrite
@@ -8027,24 +7694,7 @@ object PipelineQueries extends QueryPack {
       (s, dir) => graft.operators.Cdc.dupChunkReport(
         t(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id")),
-      Some("""WITH t AS (SELECT doc_id, text,
-            CAST(length(text) AS BIGINT) AS len FROM documents
-            WHERE text IS NOT NULL AND length(text) >= 1),
-        b AS (SELECT doc_id, text, len,
-            CASE WHEN len >= 16 THEN
-              list_filter(range(16, len + 1), i ->
-                list_sum(list_transform(range(16), j ->
-                  ascii(substring(text, CAST(i - 15 + j AS INTEGER), 1))
-                    * ([122335, 748097, 903583, 198273, 107871, 307905, 618783, 290561, 77023, 408385, 317599, 923521, 29791, 961, 31, 1])[j + 1])) % 64 = 0)
-            ELSE [] END AS bnds FROM t),
-        sp AS (SELECT doc_id, text, len, bnds,
-            unnest(range(1, CAST(len(bnds) + 2 AS BIGINT))) AS k FROM b),
-        ch AS (SELECT doc_id,
-            CASE WHEN k = 1 THEN 1 ELSE bnds[CAST(k - 1 AS INTEGER)] + 1
-              END AS s,
-            CASE WHEN k <= len(bnds) THEN bnds[CAST(k AS INTEGER)]
-              ELSE len END AS e,
-            text FROM sp),
+      Some(s"""WITH $cdcChunksSql,
         chk AS (SELECT doc_id, md5(substring(text, CAST(s AS INTEGER),
             CAST(e - s + 1 AS INTEGER))) AS h FROM ch WHERE e >= s),
         fr AS (SELECT h, count(*) AS c FROM chk GROUP BY h)
@@ -8098,7 +7748,7 @@ object PipelineQueries extends QueryPack {
         val b = ev.agg(min(unix_micros(col("ts"))),
           max(unix_micros(col("ts")))).first()
         val split = (b.getLong(0) + b.getLong(1)) / 2
-        def prof(d: org.apache.spark.sql.DataFrame) =
+        def prof(d: DataFrame) =
           graft.operators.Profiler.profile(d, Seq(
             "event_type" -> col("event_type"),
             "user_id" -> col("user_id"),
@@ -8138,12 +7788,8 @@ object PipelineQueries extends QueryPack {
         def run(): Unit = EventStreams.streamingProfileLedger(s,
           landing, ev.schema, "strprof.ledger", ckpt,
           profCols, slice)
-        ev.filter(col("event_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing)
-        run()
-        ev.filter(col("event_id") % 2 === 1)
-          .write.mode("append").parquet(landing)
-        run()
+        runTwice(landing, ev.filter(col("event_id") % 2 === 0),
+          ev.filter(col("event_id") % 2 === 1))(run())
         val merged = EventStreams.mergeProfileLedger(
           s.table("strprof.ledger"))
         graft.operators.Profiler.drift(
@@ -8165,52 +7811,10 @@ object PipelineQueries extends QueryPack {
     //      as x50 (run 2 processes only docs past run 1's max id), same
     //      ledger schema/views/compactor (LedgerInvariantsSpec) --------
     Q("x160_incremental_cdc_dedup",
-      (s, dir) => {
-        import graft.engine._
-        val docs = t(s, dir, "documents")
-        val split = docs.agg(expr("(min(doc_id) + max(doc_id)) div 2"))
-          .first().getLong(0)
-        val wh = warehousePath(s)
-        val staging = wh.resolve("incrcdc_staging")
-        Materializer.deleteRecursively(staging)
-        s.sql("DROP TABLE IF EXISTS incrcdc.cdc_ledger")
-        Materializer.deleteRecursively(wh.resolve("incrcdc.db/cdc_ledger"))
-        def freshProject(): Project = {
-          val p = new Project(s, Target("dev", "incrcdc", threads = 2))
-          p.source("raw", "docs", ParquetPath(staging.toString))
-          p.model("cdc_ledger", ModelConfig(materialized =
-            Materialization.Incremental(None,
-              Materialization.IncrementalStrategy.Append))) { ctx =>
-            val arrived = ctx.source("raw", "docs")
-            val (batch, keptPosts) =
-              if (ctx.isIncremental) {
-                val cursor = ctx.thisDf.agg(max(col("doc"))).first().getLong(0)
-                (arrived.filter(col("doc_id") > cursor),
-                  ctx.thisDf.filter(col("kept") && col("band") >= 0))
-              } else
-                (arrived, graft.operators.Cdc.chunkPostings(
-                  arrived.limit(0), "doc_id", "text"))
-            graft.operators.Cdc.cdcDedupBatchLedger(batch, keptPosts,
-              "doc_id", "text")
-          }
-          p
-        }
-        docs.filter(col("doc_id") <= split)
-          .write.mode("overwrite").parquet(staging.toString)
-        val r1 = freshProject().run(fullRefresh = true)
-        require(r1.ok, s"incremental cdc dedup run 1 failed: ${r1.results}")
-        docs.filter(col("doc_id") > split)
-          .write.mode("append").parquet(staging.toString)
-        val r2 = freshProject().run()
-        require(r2.ok, s"incremental cdc dedup run 2 failed: ${r2.results}")
-        s.table("incrcdc.cdc_ledger")
-          .groupBy(col("doc"))
-          .agg(max(col("kept")).as("kept"))
-          .withColumn("batch",
-            when(col("doc") <= split, 1L).otherwise(2L))
-          .select(col("doc").as("doc_id"), col("kept"), col("batch"))
-          .orderBy(col("doc_id"))
-      },
+      (s, dir) => incrementalLedger(s, t(s, dir, "documents"), "doc_id",
+        "docs", "incrcdc", "cdc_ledger")(
+        graft.operators.Cdc.chunkPostings(_, "doc_id", "text"))(
+        graft.operators.Cdc.cdcDedupBatchLedger(_, _, "doc_id", "text")),
       Some(cdcLedgerOracleSql)),
 
     // ---- STREAMING CDC dedup: x160's chunk-signature ledger with the
@@ -8226,21 +7830,12 @@ object PipelineQueries extends QueryPack {
         val split = docs.agg(expr("(min(doc_id) + max(doc_id)) div 2"))
           .first().getLong(0)
         val (landing, ckpt) = resetLedger(s, "strcdc", "ledger")
-        docs.filter(col("doc_id") <= split)
-          .write.mode("overwrite").parquet(landing)
-        EventStreams.streamingCdcDedupLedger(s, landing,
-          docs.schema, "strcdc.ledger", ckpt, "doc_id", "text")
-        docs.filter(col("doc_id") > split)
-          .write.mode("append").parquet(landing)
-        EventStreams.streamingCdcDedupLedger(s, landing,
-          docs.schema, "strcdc.ledger", ckpt, "doc_id", "text")
-        s.table("strcdc.ledger")
-          .groupBy(col("doc"))
-          .agg(max(col("kept")).as("kept"))
-          .withColumn("batch",
-            when(col("doc") <= split, 1L).otherwise(2L))
-          .select(col("doc").as("doc_id"), col("kept"), col("batch"))
-          .orderBy(col("doc_id"))
+        runTwice(landing, docs.filter(col("doc_id") <= split),
+            docs.filter(col("doc_id") > split)) {
+          EventStreams.streamingCdcDedupLedger(s, landing,
+            docs.schema, "strcdc.ledger", ckpt, "doc_id", "text")
+        }
+        ledgerVerdicts(s.table("strcdc.ledger"), split, "doc_id")
       },
       Some(cdcLedgerOracleSql)),
 
@@ -8260,12 +7855,8 @@ object PipelineQueries extends QueryPack {
         def run(): Unit = EventStreams.streamingSampleLedger(s,
           landing, docs.schema, "strsamp.ledger", ckpt,
           "source", "doc_id", n = 12)
-        docs.filter(col("doc_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing)
-        run()
-        docs.filter(col("doc_id") % 2 === 1)
-          .write.mode("append").parquet(landing)
-        run()
+        runTwice(landing, docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 === 1))(run())
         EventStreams.mergeSampleLedger(s.table("strsamp.ledger"),
             "source", "doc_id", n = 12)
           .orderBy(col("source"), col("doc_id"))
@@ -8575,12 +8166,8 @@ object PipelineQueries extends QueryPack {
         def run(): Unit = EventStreams.streamingNoveltyLedger(s,
           landing, docs.schema, "novlg.ledger", ckpt,
           "text", n = 4)
-        docs.filter(col("doc_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing)
-        run()
-        docs.filter(col("doc_id") % 2 === 1)
-          .write.mode("append").parquet(landing)
-        run()
+        runTwice(landing, docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 === 1))(run())
         EventStreams.noveltyReport(s.table("novlg.ledger"))
           .orderBy(col("batch_id"))
       },
@@ -8671,35 +8258,13 @@ object PipelineQueries extends QueryPack {
         def run(): Unit = EventStreams.streamingRetentionLedger(s,
           landing, ev.schema, "retlg.ledger", ckpt,
           "user_id", "ts")
-        ev.filter(col("event_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing)
-        run()
-        ev.filter(col("event_id") % 2 === 1)
-          .write.mode("append").parquet(landing)
-        run()
+        runTwice(landing, ev.filter(col("event_id") % 2 === 0),
+          ev.filter(col("event_id") % 2 === 1))(run())
         graft.operators.Retention.cohortsFromActivity(
             EventStreams.mergeActivityLedger(s.table("retlg.ledger")))
           .orderBy(col("cohort_week"), col("week_offset"))
       },
-      Some("""WITH f AS (SELECT user_id AS u,
-               CAST(date_trunc('week', min(ts)) AS DATE) AS cohort_week
-               FROM events GROUP BY user_id),
-        a AS (SELECT DISTINCT user_id AS u,
-               CAST(date_trunc('week', ts) AS DATE) AS week FROM events),
-        sz AS (SELECT cohort_week, count(*) AS cohort_size
-               FROM f GROUP BY cohort_week),
-        m AS (SELECT f.cohort_week,
-               CAST(datediff('day', f.cohort_week, a.week) // 7 AS INT)
-                 AS week_offset,
-               count(*) AS n_active
-               FROM a JOIN f ON a.u = f.u
-               GROUP BY f.cohort_week, 2)
-        SELECT CAST(m.cohort_week AS VARCHAR) AS cohort_week,
-          m.week_offset, CAST(m.n_active AS BIGINT) AS n_active,
-          CAST(m.n_active * 1000000 // sz.cohort_size AS BIGINT)
-            AS retention_micro
-        FROM m JOIN sz ON m.cohort_week = sz.cohort_week
-        ORDER BY cohort_week, week_offset""")),
+      Some(retentionOracleSql)),
 
     // ---- join-explosion pre-flight: exact |A JOIN B| per key BEFORE
     //      running it (Σ ca·cb over the two key-count tables, never the
@@ -8739,25 +8304,7 @@ object PipelineQueries extends QueryPack {
           nTokens(tokens(col("text"))).cast("long").as("tok")),
         "source", "n_chars", "tok", Seq(500000L, 900000L, 990000L))
         .orderBy(col("source"), col("pct_micro")),
-      Some("""WITH d AS (SELECT source, n_chars,
-            CAST(len(string_split(text,' ')) AS BIGINT) AS tok
-          FROM documents),
-        h AS (SELECT source, n_chars AS v, CAST(sum(tok) AS BIGINT) AS cw
-          FROM d GROUP BY 1, 2),
-        c AS (SELECT source, v, cw,
-            CAST(sum(cw) OVER (PARTITION BY source ORDER BY v
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-          FROM h),
-        t AS (SELECT source, CAST(sum(cw) AS BIGINT) AS tot
-          FROM h GROUP BY 1),
-        e AS (SELECT c.source, c.v, t.tot, CAST(q.p AS BIGINT) AS pct_micro
-          FROM c JOIN t ON c.source = t.source
-          CROSS JOIN unnest([500000, 900000, 990000]) AS q(p)
-          WHERE c.cum * 1000000 >= CAST(q.p AS BIGINT) * t.tot)
-        SELECT source, pct_micro, CAST(min(v) AS BIGINT) AS value_at,
-          tot AS total_weight
-        FROM e GROUP BY source, pct_micro, tot
-        ORDER BY source, pct_micro""")),
+      Some(weightedQuantileOracleSqlFrom("documents"))),
 
     // ---- session transcript assembly: the chat-log-to-training-
     //      example step — x10's gap sessions rendered as ordered,
@@ -8805,35 +8352,13 @@ object PipelineQueries extends QueryPack {
         def run(): Unit = EventStreams.streamingQuantileLedger(s,
           landing, docs.schema, "qtlg.ledger", ckpt,
           "source", "n_chars", nTokens(tokens(col("text"))).cast("long"))
-        docs.filter(col("doc_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing)
-        run()
-        docs.filter(col("doc_id") % 2 === 1)
-          .write.mode("append").parquet(landing)
-        run()
+        runTwice(landing, docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 === 1))(run())
         EventStreams.mergeQuantileLedger(s.table("qtlg.ledger"),
             "source", "n_chars", Seq(500000L, 900000L, 990000L))
           .orderBy(col("source"), col("pct_micro"))
       },
-      Some("""WITH d AS (SELECT source, n_chars,
-            CAST(len(string_split(text,' ')) AS BIGINT) AS tok
-          FROM documents),
-        h AS (SELECT source, n_chars AS v, CAST(sum(tok) AS BIGINT) AS cw
-          FROM d GROUP BY 1, 2),
-        c AS (SELECT source, v, cw,
-            CAST(sum(cw) OVER (PARTITION BY source ORDER BY v
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-          FROM h),
-        t AS (SELECT source, CAST(sum(cw) AS BIGINT) AS tot
-          FROM h GROUP BY 1),
-        e AS (SELECT c.source, c.v, t.tot, CAST(q.p AS BIGINT) AS pct_micro
-          FROM c JOIN t ON c.source = t.source
-          CROSS JOIN unnest([500000, 900000, 990000]) AS q(p)
-          WHERE c.cum * 1000000 >= CAST(q.p AS BIGINT) * t.tot)
-        SELECT source, pct_micro, CAST(min(v) AS BIGINT) AS value_at,
-          tot AS total_weight
-        FROM e GROUP BY source, pct_micro, tot
-        ORDER BY source, pct_micro""")),
+      Some(weightedQuantileOracleSqlFrom("documents"))),
 
     // ---- rank-biased overlap (Webber TOIS 2010): how much of the
     //      diversity scorer's top-weighted ordering survives
@@ -8907,12 +8432,8 @@ object PipelineQueries extends QueryPack {
         def run(): Unit = EventStreams.streamingTokenLedger(s,
           landing, docs.schema, "toklg.ledger", ckpt,
           "source", nTokens(tokens(col("text"))))
-        docs.filter(col("doc_id") % 2 === 0)
-          .write.mode("overwrite").parquet(landing)
-        run()
-        docs.filter(col("doc_id") % 2 === 1)
-          .write.mode("append").parquet(landing)
-        run()
+        runTwice(landing, docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 === 1))(run())
         val merged = EventStreams.mergeTokenLedger(
           s.table("toklg.ledger"), "source")
         val tot = merged.agg(sum(col("tokens")).as("tt"))
@@ -8933,39 +8454,10 @@ object PipelineQueries extends QueryPack {
     //      instead of min id — "keep the best copy, not the first";
     //      two-stage argmax, no per-cluster window --------------------
     Q("x167_best_in_cluster",
-      (s, dir) => {
-        val docs = t(s, dir, "documents")
-        val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          n = 4, threshold = 0.2, maxDf = 100L)
-        val comp = Dedup.connectedComponents(pairs, "doc_a", "doc_b",
-          maxRounds = 60)
-        val labeled = docs.select(col("doc_id"), col("n_chars"))
-          .join(comp, docs("doc_id") === comp("v"), "left")
-          .select(coalesce(col("comp"), col("doc_id")).as("component"),
-            col("doc_id"), col("n_chars"))
-        Dedup.bestInGroup(labeled, "component", "doc_id", "n_chars")
-          .orderBy(col("component"))
-      },
-      Some(s"""WITH RECURSIVE tk AS (SELECT doc_id, $shingleSql AS s FROM documents),
-        ex0 AS (SELECT doc_id AS doc, unnest(s) AS sh FROM tk),
-        keep AS (SELECT sh FROM ex0 GROUP BY sh HAVING count(*) <= 100),
-        ex AS (SELECT doc, ex0.sh FROM ex0 JOIN keep ON ex0.sh = keep.sh),
-        sz AS (SELECT doc, count(*) AS n_sh FROM ex GROUP BY doc),
-        co AS (SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS common
-               FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc < b.doc
-               GROUP BY a.doc, b.doc),
-        pr AS (SELECT doc_a, doc_b
-               FROM co JOIN sz sa ON doc_a = sa.doc JOIN sz sb ON doc_b = sb.doc
-               WHERE CAST(common AS DOUBLE)/(sa.n_sh + sb.n_sh - common) >= 0.2),
-        edges AS (SELECT doc_a AS s, doc_b AS d FROM pr
-                  UNION SELECT doc_b, doc_a FROM pr),
-        reach AS (SELECT s AS v, s AS l FROM edges
-                  UNION
-                  SELECT e.s, r.l FROM reach r JOIN edges e ON e.d = r.v),
-        comp AS (SELECT v, min(l) AS component FROM reach GROUP BY v),
-        lab AS (SELECT coalesce(c.component, d.doc_id) AS component,
-            d.doc_id, d.n_chars
-          FROM documents d LEFT JOIN comp c ON d.doc_id = c.v),
+      (s, dir) => Dedup.bestInGroup(nearDupLabeled(t(s, dir, "documents")),
+          "component", "doc_id", "n_chars")
+        .orderBy(col("component")),
+      Some(s"""WITH RECURSIVE $nearDupLabSql,
         mx AS (SELECT component, max(n_chars) AS kept_score,
             CAST(count(*) AS BIGINT) AS n_members
           FROM lab GROUP BY component)
@@ -9113,14 +8605,6 @@ object PipelineQueries extends QueryPack {
     (0 until bits).flatMap(k => Seq(
       s"((($a >> $k) & 1) << ${2 * k})",
       s"((($b >> $k) & 1) << ${2 * k + 1})")).mkString(" + ")
-
-  /** One SRP sign bit as DuckDB SQL (srpCtes' bitSql, shared shape):
-    * plane `p` against the md5-seeded ±1 hyperplane over `embedding`. */
-  private def srpBitSql(p: Int): String =
-    s"""CASE WHEN round(list_sum(list_transform(range(len(embedding)),
-       i -> CAST(embedding[i+1] AS DOUBLE) *
-         (CASE WHEN substr(md5('${p}_'||CAST(i AS VARCHAR)),1,1) >= '8'
-          THEN 1.0 ELSE -1.0 END))), 4) >= 0 THEN '1' ELSE '0' END"""
 
   /** x116's nested-subset thresholds (permille) and the hex-string
     * CASE chain their oracle replays: frac < p·16^6/1000 ⟺ the first

@@ -323,7 +323,10 @@ object EventStreams {
       .trigger(Trigger.AvailableNow())
       .foreachBatch(fb)
       .start()
-    try q.awaitTermination() finally q.stop()
+    // stop only a query still running (interrupt or failure): stopping a
+    // cleanly terminated one cancels its finished job group, which Spark
+    // logs as "Failed to cancel job group" twice per run
+    try q.awaitTermination() finally if (q.isActive) q.stop()
     // the appends above went through the cloned microbatch session; the
     // CALLER's session still caches the old ledger file listing — without
     // this refresh a post-run read sees the pre-run row count

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Audit main (the Explain/PlanAudit surface): print the formatted
   * physical plan of ONE REPRESENTATIVE ROUND of each iterative operator
-  * — PageRank, both connected-components variants — in both join
+  * — PageRank and the connected-components star round — in both join
   * regimes (per-vertex tables broadcast / plain shuffle). The loops
   * localCheckpoint every round, so a whole-query explain shows only the
   * final `Scan ExistingRDD → Sort` frame (r16 verdict "what's wrong"
@@ -29,12 +29,6 @@ object RoundPlans {
       graft.operators.Dedup.starRound(edgesUV, bcast))
     show("cc_star_round shuffle-mins",
       graft.operators.Dedup.starRound(edgesUV, ident))
-    val edgesSD = Seq((1L, 2L), (2L, 3L)).toDF("s", "d")
-    val labels = Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("v", "comp")
-    show("cc_propagation_round broadcast-labels",
-      graft.operators.Dedup.propagationRound(edgesSD, labels, bcast))
-    show("cc_propagation_round shuffle-labels",
-      graft.operators.Dedup.propagationRound(edgesSD, labels, ident))
     val ewd = Seq((1L, 2L, 1L), (2L, 1L, 1L)).toDF("node", "dst", "outd")
     val ranks = Seq((1L, 0.5), (2L, 0.5)).toDF("node", "rank")
     val nodes = Seq(Tuple1(1L), Tuple1(2L)).toDF("node")

@@ -145,7 +145,7 @@ object Materializer {
             .option("checkpointLocation", ckpt)
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .toTable(physical))
-        try q.awaitTermination() finally q.stop()
+        try q.awaitTermination() finally if (q.isActive) q.stop()
       case Materialization.Incremental(uniqueKey, strategy) =>
         ensureSchema(p, p.schemaFor(m.config))
         if (!p.spark.catalog.tableExists(physical)) {

@@ -69,6 +69,17 @@ object CacheScope {
       case None => df.persist()
     }
 
+  /** Drop the blocks of a `localCheckpoint`ed frame (and of any other
+    * checkpoint it reads) once nothing reads it. Left alone, the blocks
+    * stay until a GC lets the ContextCleaner free them — at an arbitrary
+    * later point, possibly inside another pipeline stage's
+    * [[cachedBlockCount]] bracket. A frame that reads a released
+    * checkpoint fails, so release only what no live plan still reads. */
+  private[operators] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.foreach(_.unpersist(blocking = false))
+
   /** Count of CACHED storage blocks currently materialized in the
     * session — the observable a residency spec asserts returns to its
     * baseline after [[release]]. */

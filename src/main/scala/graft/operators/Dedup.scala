@@ -427,132 +427,164 @@ object Dedup {
       .dropDuplicates("doc_a", "doc_b")
   }
 
-  /** Connected components over an undirected pair list (near-dup pairs →
+  /** Connected components of an undirected pair list (near-dup pairs →
     * duplicate CLUSTERS, so one canonical document survives per cluster
-    * even when A~B and B~C but A!~C). Hash-to-min label propagation:
-    * every vertex repeatedly adopts the minimum label among itself and
-    * its neighbors until a fixpoint — rounds = cluster diameter, and
-    * near-dup clusters are shallow. Each round is one shuffle join + one
-    * aggregation over the EDGE list only (vertices outside any pair never
-    * enter the loop); each round's result is localCheckpointed, which
-    * truncates lineage (superseded rounds' blocks are freed by the
-    * ContextCleaner once unreferenced). Throws rather than silently
-    * returning partial labels if `maxRounds` is hit before the fixpoint.
-    * For high-diameter graphs at web scale, use
-    * [[connectedComponentsStar]] — same join/agg primitives, O(log²)
-    * rounds regardless of diameter.
+    * even when A~B and B~C but A!~C). Returns (v, comp): every endpoint
+    * of a pair is a vertex and comp is the minimum vertex id reachable
+    * from it; a self-pair alone makes a singleton.
     *
-    * Returns (vertex, component) with component = min vertex id reachable.
-    */
-  /** Driver-local union–find over a BOUNDED, already-materialized pair
-    * list — the small-graph fast path both CC variants take below
-    * `localMaxEdges`. At audit scale a near-dup graph is a few 10⁴–10⁵
-    * edges, where the distributed rounds' wall cost is pure per-round
-    * job latency (3–5 rounds × 2–4 exchanges over tiny frames); the
-    * contract is fully order-independent, so the local path computes the
-    * IDENTICAL result: (vertex, component = min vertex id reachable),
-    * every pair endpoint a vertex, self-pairs singletons (DedupSpec's CC
-    * cases run on this path; the star/propagation loops remain the
-    * >cap scale path). Driver memory is bounded by the edge cap — two
-    * longs per edge, the kppSeeds/BPE-head bounded-collect class. */
-  private def localComponentsFromPairs(p0: DataFrame): DataFrame = {
-    val spark = p0.sparkSession
-    import spark.implicits._
-    val edges: Array[(Long, Long)] =
-      p0.rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
-    val idx = new java.util.HashMap[Long, Integer]()
-    val ids = new scala.collection.mutable.ArrayBuffer[Long]()
-    val parent = new scala.collection.mutable.ArrayBuffer[Int]()
-    def node(v: Long): Int = {
-      val e = idx.get(v)
-      if (e != null) e.intValue
-      else {
-        val i = ids.length
-        idx.put(v, i); ids += v; parent += i; i
-      }
+    * Two paths behind one gate ([[GraphGate]]), with identical output:
+    *  - at most `localMaxEdges` pairs with LongType ids: one bounded
+    *    collect and a driver-local union–find. It runs no rounds, so
+    *    `maxRounds` does not apply;
+    *  - above the cap: alternating large-star/small-star rounds
+    *    (R. Kiveris et al., "Connected Components in MapReduce and
+    *    Beyond", SoCC 2014), O(log² n) rounds on ANY topology — label
+    *    propagation would need one round per unit of cluster diameter.
+    *    Throws rather than return partial labels if `maxRounds` rounds
+    *    pass without a fixpoint. Below `broadcastMaxVertices` vertices
+    *    the per-vertex min tables are broadcast into the round joins.
+    *
+    * Nulls: a pair with a null endpoint is no edge. Both paths drop it
+    * before the gate, so its other endpoint is a vertex only if another
+    * pair names it.
+    *
+    * Lineage: each round's edge set is localCheckpointed (eager), which
+    * truncates lineage — a persist() chain keeps the logical plan growing
+    * and Catalyst re-analyzes the whole tree every round (quadratic driver
+    * time, observed as a multi-minute stall on a 29-round path graph). A
+    * round's checkpoint is released once the next one is materialized;
+    * the returned frame reads the last one and the vertex set. On a
+    * cluster with an HDFS checkpoint dir, sc.setCheckpointDir +
+    * .checkpoint() is the fault-tolerant equivalent. */
+  def connectedComponents(pairs: DataFrame, srcCol: String, dstCol: String,
+      maxRounds: Int = 25, broadcastMaxVertices: Long = 2000000L,
+      localMaxEdges: Long = 4000000L): DataFrame = {
+    val p0 = GraphGate.edges(pairs, srcCol, dstCol)
+    GraphGate.local(p0, localMaxEdges) match {
+      case Some(g) => localComponents(pairs.sparkSession, g)
+      case None => starComponents(p0, maxRounds, broadcastMaxVertices)
     }
+  }
+
+  /** Driver-local union–find over the gate's bounded edge list. */
+  private def localComponents(spark: org.apache.spark.sql.SparkSession,
+      g: GraphGate.LocalGraph): DataFrame = {
+    import spark.implicits._
+    val parent = Array.tabulate(g.ids.length)(identity)
     def find(x0: Int): Int = {
       var x = x0
       while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
       x
     }
-    edges.foreach { case (a, b) =>
-      val ra = find(node(a)); val rb = find(node(b))
+    for (i <- g.src.indices) {
+      val ra = find(g.src(i)); val rb = find(g.dst(i))
       if (ra != rb) parent(ra) = rb
     }
-    val minOf = new java.util.HashMap[Integer, java.lang.Long]()
-    var i = 0
-    while (i < ids.length) {
-      val r = Integer.valueOf(find(i))
-      val cur = minOf.get(r)
-      if (cur == null || ids(i) < cur.longValue) minOf.put(r, ids(i))
-      i += 1
+    val minOf = Array.fill(g.ids.length)(Long.MaxValue) // by root index
+    for (i <- g.ids.indices) {
+      val r = find(i)
+      minOf(r) = math.min(minOf(r), g.ids(i))
     }
-    ids.indices.map(i => (ids(i), minOf.get(Integer.valueOf(find(i)))
-      .longValue)).toDF("v", "comp")
+    g.ids.indices.map(i => (g.ids(i), minOf(find(i)))).toDF("v", "comp")
   }
 
-  /** True when every pair column is LongType — the only id shape the
-    * local union–find path handles without changing the output schema. */
-  private def longPairSchema(p0: DataFrame): Boolean =
-    p0.schema.fields.forall(_.dataType ==
-      org.apache.spark.sql.types.LongType)
-
-  def connectedComponents(pairs: DataFrame, srcCol: String, dstCol: String,
-      maxRounds: Int = 25, broadcastMaxVertices: Long = 2000000L,
-      localMaxEdges: Long = 4000000L): DataFrame = {
-    // Iterative algorithms MUST truncate lineage per round: a persist()
-    // chain keeps the full logical plan growing linearly, and Catalyst
-    // re-analyzes the whole tree every round (quadratic driver time —
-    // observed as a multi-minute stall on a 29-round path graph).
-    // localCheckpoint (eager) replaces the plan with its materialized RDD;
-    // on a real cluster with an HDFS checkpoint dir, sc.setCheckpointDir +
-    // .checkpoint() is the fault-tolerant equivalent.
-    // Materialize the caller's pair chain ONCE: the union below reads
-    // its input twice (one evaluation per branch), so an un-persisted
-    // pair GENERATOR (LSH chains, shingle joins) would run twice before
-    // the loop even starts. One id-pair-sized checkpoint, then both
-    // branches scan the materialized RDD.
-    val p0 = pairs.select(col(srcCol).as("s"), col(dstCol).as("d"))
-      .localCheckpoint()
-    // bounded-graph fast path: one count over the MATERIALIZED pair RDD
-    // (no re-evaluation) decides; below the cap the driver-local
-    // union–find replaces 3-5 rounds of per-round job latency with one
-    // collect (identical result — see localComponentsFromPairs)
-    if (longPairSchema(p0) && p0.count() <= localMaxEdges)
-      return localComponentsFromPairs(p0)
-    val edges = p0
-      .union(p0.select(col("d").as("s"), col("s").as("d")))
+  /** The distributed path of [[connectedComponents]] over the gate's
+    * materialized (src, dst) edges.
+    *
+    * - large-star: every vertex attaches its strictly-larger neighbors
+    *   to the minimum of its closed neighborhood;
+    * - small-star: edges oriented large→small, every vertex attaches its
+    *   smaller-or-equal neighbors (and itself) to that minimum.
+    *
+    * Both preserve connectivity and only ever decrease edge endpoints;
+    * the fixpoint is a star forest (every vertex → its component root).
+    * Convergence is detected by an edge-set signature (count + xxhash64
+    * xor-fold), one extra cheap action per round. */
+  private def starComponents(p0: DataFrame, maxRounds: Int,
+      broadcastMaxVertices: Long): DataFrame = {
+    val vertices = p0.select(col("src").as("pv"))
+      .union(p0.select(col("dst").as("pv")))
       .distinct()
       .localCheckpoint()
-    var labels = edges.select(col("s").as("v")).distinct()
-      .withColumn("comp", col("v"))
+    var edges = p0
+      .filter(col("src") =!= col("dst"))
+      .select(greatest(col("src"), col("dst")).as("u"),
+        least(col("src"), col("dst")).as("v")) // oriented large→small
+      .distinct()
       .localCheckpoint()
-    // The label table is one (v, comp) row per vertex. Below
-    // `broadcastMaxVertices` each round broadcasts it into the edge join
-    // (and the per-vertex min back into the label join), so the edge
-    // table is never re-shuffled by the loop — the only exchange per
-    // round is the per-vertex min aggregation (guide §2.4/§3.1). Past
-    // the threshold the rounds keep the shuffle joins; the hint only
-    // picks the join strategy, results are identical.
-    val bcastLabels = labels.count() <= broadcastMaxVertices
-    def hinted(df: DataFrame): DataFrame =
-      if (bcastLabels) broadcast(df) else df
-    var changed = 1L
+    CacheScope.releaseCheckpoint(p0)
+    val hinted = GraphGate.hint(vertices.count(), broadcastMaxVertices)
+    def signature(e: DataFrame): (Long, Long) = {
+      // xor-fold (order-independent, cannot overflow ANSI long math;
+      // edges are distinct so nothing self-cancels)
+      val r = e.agg(count(lit(1)),
+        expr("bit_xor(xxhash64(u, v))")).first()
+      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    }
+    var sig = signature(edges)
+    var stable = false
     var round = 0
-    while (changed > 0 && round < maxRounds) {
-      val cand = propagationRound(edges, labels, hinted)
-        .localCheckpoint() // eager: one job, O(1) plan next round
-      changed = cand.filter(col("comp2") < col("comp")).count()
-      labels = cand.select(col("v"), col("comp2").as("comp"))
+    while (!stable && round < maxRounds) {
+      val next = starRound(edges, hinted).localCheckpoint()
+      val nextSig = signature(next)
+      stable = nextSig == sig
+      CacheScope.releaseCheckpoint(edges)
+      edges = next
+      sig = nextSig
       round += 1
     }
-    if (changed > 0)
+    if (!stable) {
+      CacheScope.releaseCheckpoint(edges)
+      CacheScope.releaseCheckpoint(vertices)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxRounds rounds " +
-          s"($changed labels still changing) — raise maxRounds " +
-          "(rounds needed = cluster diameter)")
-    labels
+          "— O(log² n) bound exceeded; raise maxRounds")
+    }
+    // fixpoint edges are (vertex, root); vertices without edges (only
+    // self-pairs in the input) are their own component
+    val stars = edges.select(col("u").as("su"), col("v").as("scomp"))
+    vertices.join(stars, vertices("pv") === stars("su"), "left")
+      .select(col("pv").as("v"),
+        coalesce(col("scomp"), col("pv")).as("comp"))
+  }
+
+  /** ONE star round (largeStar then smallStar) over oriented (u, v)
+    * edges — factored out of the [[starComponents]] loop so the plan
+    * audit can capture a REPRESENTATIVE ROUND's physical plan (the
+    * checkpointed loop hides every round behind a Scan ExistingRDD;
+    * r16 verdict "what's wrong" #1). `hinted` wraps the per-vertex min
+    * tables ([[GraphGate.hint]]). Exchanges per round: largeStar min-agg
+    * + smallStar min-agg + the output distinct — 3 with the mins
+    * broadcast. */
+  private[graft] def starRound(e: DataFrame,
+      hinted: DataFrame => DataFrame): DataFrame =
+    smallStar(largeStar(e, hinted), hinted)
+
+  private def largeStar(e: DataFrame,
+      hinted: DataFrame => DataFrame): DataFrame = {
+    val nbrs = e.union(e.select(col("v").as("u"), col("u").as("v")))
+    val mins = nbrs.groupBy(col("u").as("mu")).agg(min(col("v")).as("mn"))
+      .select(col("mu"), least(col("mn"), col("mu")).as("m"))
+    nbrs.join(hinted(mins), nbrs("u") === mins("mu"))
+      .filter(col("v") > col("u")) // strictly-larger neighbors only
+      .select(col("v").as("u"), col("m").as("v"))
+      .filter(col("u") =!= col("v"))
+    // no distinct here: duplicates cannot change smallStar's min-agg
+    // and its final distinct collapses them — dropping the exchange
+    // saves one of the round's four shuffles (guide §2.4); the edge
+    // set each round CHECKPOINTS is smallStar's output, still distinct
+  }
+
+  private def smallStar(e: DataFrame,
+      hinted: DataFrame => DataFrame): DataFrame = {
+    val mins = e.groupBy(col("u").as("mu")).agg(min(col("v")).as("m"))
+    e.join(hinted(mins), e("u") === mins("mu"))
+      .filter(col("v") =!= col("m"))
+      .select(col("v").as("u"), col("m").as("v"))
+      .union(mins.select(col("mu").as("u"), col("m").as("v")))
+      .filter(col("u") =!= col("v"))
+      .distinct()
   }
 
   /** Cross-document repeated spans — the detection step of exact
@@ -753,146 +785,6 @@ object Dedup {
       .select(col("bench_id"), col("n_sh"),
         coalesce(col("n_hit_shingles"), lit(0L)).as("n_hit_shingles"),
         coalesce(col("n_hit_docs"), lit(0L)).as("n_hit_docs"))
-  }
-
-  /** Connected components via alternating large-star/small-star rounds
-    * (R. Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC 2014): O(log² n) rounds on ANY topology, where hash-to-min
-    * label propagation ([[connectedComponents]]) needs diameter rounds —
-    * the scale path for high-diameter duplicate graphs (chains of
-    * partial overlaps). Hash-to-min stays the fast path for the shallow
-    * clusters near-dup detection usually produces.
-    *
-    * - large-star: every vertex attaches its strictly-larger neighbors
-    *   to the minimum of its closed neighborhood;
-    * - small-star: edges oriented large→small, every vertex attaches its
-    *   smaller-or-equal neighbors (and itself) to that minimum.
-    *
-    * Both preserve connectivity and only ever decrease edge endpoints;
-    * the fixpoint is a star forest (every vertex → its component root).
-    * Each round is two join+agg passes over the edge list, result
-    * localCheckpointed (same lineage-truncation rationale as
-    * [[connectedComponents]]); convergence is detected by an edge-set
-    * signature (count + xxhash64 xor-fold), one extra cheap action per
-    * round.
-    *
-    * Returns (vertex, component) with component = min vertex id
-    * reachable, identical to [[connectedComponents]]. */
-  def connectedComponentsStar(pairs: DataFrame, srcCol: String,
-      dstCol: String, maxRounds: Int = 50,
-      broadcastMaxVertices: Long = 2000000L,
-      localMaxEdges: Long = 4000000L): DataFrame = {
-    // Materialize the caller's pair chain ONCE (see connectedComponents):
-    // vertices reads it twice (one evaluation per union branch) and the
-    // edge orientation once more — an un-persisted pair GENERATOR would
-    // run three times before the star rounds even start.
-    val p0 = pairs.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .localCheckpoint()
-    // bounded-graph fast path (see connectedComponents): identical
-    // (vertex, min-reachable-id) output, O(log²)-round machinery kept
-    // as the >cap scale path
-    if (longPairSchema(p0) && p0.count() <= localMaxEdges)
-      return localComponentsFromPairs(p0)
-    val vertices = p0.select(col("a").as("pv"))
-      .union(p0.select(col("b").as("pv")))
-      .distinct()
-      .localCheckpoint()
-    var edges = p0
-      .filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("u"),
-        least(col("a"), col("b")).as("v")) // oriented large→small
-      .distinct()
-      .localCheckpoint()
-    // Per-vertex min tables are one row per vertex: below
-    // `broadcastMaxVertices` they broadcast into the star joins so the
-    // edge relation is never shuffled BY THE JOIN — each star op keeps
-    // its aggregation exchange and its output distinct, dropping
-    // 3 exchanges per op to 2 (guide §2.4/§3.1). Join strategy only;
-    // results identical either way.
-    val bcastMins = vertices.count() <= broadcastMaxVertices
-    def hinted(df: DataFrame): DataFrame =
-      if (bcastMins) broadcast(df) else df
-    def signature(e: DataFrame): (Long, Long) = {
-      // xor-fold (order-independent, cannot overflow ANSI long math;
-      // edges are distinct so nothing self-cancels)
-      val r = e.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(u, v))")).first()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-
-    var sig = signature(edges)
-    var stable = false
-    var round = 0
-    while (!stable && round < maxRounds) {
-      val next = starRound(edges, hinted).localCheckpoint()
-      val nextSig = signature(next)
-      stable = nextSig == sig
-      edges = next
-      sig = nextSig
-      round += 1
-    }
-    if (!stable)
-      throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxRounds rounds " +
-          "— O(log² n) bound exceeded; raise maxRounds")
-    // fixpoint edges are (vertex, root); vertices without edges (only
-    // self-pairs in the input) are their own component
-    val stars = edges.select(col("u").as("su"), col("v").as("scomp"))
-    vertices.join(stars, vertices("pv") === stars("su"), "left")
-      .select(col("pv").as("v"),
-        coalesce(col("scomp"), col("pv")).as("comp"))
-  }
-
-  /** ONE star round (largeStar then smallStar) over oriented (u, v)
-    * edges — factored out of the [[connectedComponentsStar]] loop so the
-    * plan audit can capture a REPRESENTATIVE ROUND's physical plan (the
-    * checkpointed loop hides every round behind a Scan ExistingRDD;
-    * r16 verdict "what's wrong" #1). `hinted` wraps the per-vertex min
-    * tables (broadcast below the loop's vertex threshold, identity
-    * above). Exchanges per round: largeStar min-agg + smallStar min-agg
-    * + the output distinct — 3 with the mins broadcast. */
-  private[graft] def starRound(e: DataFrame,
-      hinted: DataFrame => DataFrame): DataFrame =
-    smallStar(largeStar(e, hinted), hinted)
-
-  private def largeStar(e: DataFrame,
-      hinted: DataFrame => DataFrame): DataFrame = {
-    val nbrs = e.union(e.select(col("v").as("u"), col("u").as("v")))
-    val mins = nbrs.groupBy(col("u").as("mu")).agg(min(col("v")).as("mn"))
-      .select(col("mu"), least(col("mn"), col("mu")).as("m"))
-    nbrs.join(hinted(mins), nbrs("u") === mins("mu"))
-      .filter(col("v") > col("u")) // strictly-larger neighbors only
-      .select(col("v").as("u"), col("m").as("v"))
-      .filter(col("u") =!= col("v"))
-    // no distinct here: duplicates cannot change smallStar's min-agg
-    // and its final distinct collapses them — dropping the exchange
-    // saves one of the round's four shuffles (guide §2.4); the edge
-    // set each round CHECKPOINTS is smallStar's output, still distinct
-  }
-
-  private def smallStar(e: DataFrame,
-      hinted: DataFrame => DataFrame): DataFrame = {
-    val mins = e.groupBy(col("u").as("mu")).agg(min(col("v")).as("m"))
-    e.join(hinted(mins), e("u") === mins("mu"))
-      .filter(col("v") =!= col("m"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .union(mins.select(col("mu").as("u"), col("m").as("v")))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-  }
-
-  /** ONE hash-to-min propagation round — the [[connectedComponents]]
-    * loop body (neighbor-min agg + label join), factored out for the
-    * same per-round plan-audit reason as [[starRound]]. Exchanges per
-    * round with the label/min tables broadcast: the per-vertex min
-    * aggregation only. */
-  private[graft] def propagationRound(edges: DataFrame, labels: DataFrame,
-      hinted: DataFrame => DataFrame): DataFrame = {
-    val viaNbr = edges.join(hinted(labels), edges("d") === labels("v"))
-      .groupBy(col("s").as("nv")).agg(min(col("comp")).as("ncomp"))
-    labels.join(hinted(viaNbr), labels("v") === col("nv"), "left")
-      .select(col("v"), col("comp"),
-        least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp2"))
   }
 
   /** Embedding near-duplicate pairs above a cosine threshold (brute-force

@@ -68,11 +68,13 @@ object Hierarchy {
       // done-ness propagates from the row jumped through.
       val up = st.select(col("id").as("__uid"), col("ptr").as("__uptr"),
         col("d").as("__ud"), col("done").as("__udone"))
-      st = st.join(up, col("ptr") === col("__uid"))
+      val next = st.join(up, col("ptr") === col("__uid"))
         .select(col("id"), col("__uptr").as("ptr"),
           (col("d") + col("__ud")).as("d"),
           (col("done") || col("__udone")).as("done"))
         .localCheckpoint() // eager: one job, O(1) plan next round
+      CacheScope.releaseCheckpoint(st) // superseded: nothing reads it now
+      st = next
       active = st.filter(!col("done")).count()
       round += 1
     }

@@ -5,18 +5,20 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** PageRank (Brin & Page, WWW 1998) over an edge list — the canonical
-  * iterative graph-analytics operator, complementing the connected-
-  * components family ([[Dedup.connectedComponents]]): corpus-level link
-  * authority for crawl prioritization and source weighting.
+  * iterative graph-analytics operator, complementing connected
+  * components ([[Dedup.connectedComponents]]): corpus-level link
+  * authority for crawl prioritization and source weighting. Both sit
+  * behind the same local-vs-distributed gate ([[GraphGate]]): at most
+  * `localMaxEdges` edges run on the driver, bit-identically.
   *
   * Scale shape: each of the (driver-bounded) `iters` rounds is ONE
   * contribution join + ONE per-destination aggregation — the classic
   * rank-vector × adjacency product, shuffling id-width rows keyed by
   * node; no global collect, no window. The rank frame is
-  * `localCheckpoint`ed each round (eager) so lineage stays flat — the
-  * [[Dedup.connectedComponents]] iteration discipline; on a long-lived
-  * cluster swap in a reliable checkpoint dir exactly as documented
-  * there.
+  * `localCheckpoint`ed each round (eager) so lineage stays flat, and the
+  * superseded round is released — the [[Dedup.connectedComponents]]
+  * iteration discipline; on a long-lived cluster swap in a reliable
+  * checkpoint dir exactly as documented there.
   *
   * Cross-engine determinism (so a SQL oracle can replay every round
   * bit-for-bit): ranks are 8dp-rounded doubles; each contribution
@@ -31,31 +33,28 @@ object PageRank {
   /** Ranks after `iters` rounds of r' = (1−d)/N + d·Σ_in r/outdeg.
     * `edges` must be a deduplicated (srcCol, dstCol) edge list whose
     * node set is exactly the nodes to rank (isolated nodes: add a
-    * self-loop). Returns (node, rank). */
+    * self-loop); a pair with a null endpoint is no edge and is dropped
+    * on both sides of the gate. Returns (node, rank). */
   def ranks(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 10, damping: Double = 0.85,
       broadcastMaxNodes: Long = 2000000L,
       localMaxEdges: Long = 4000000L): DataFrame = {
     require(iters >= 1 && iters <= 100, "iters must be in [1, 100]")
     require(damping > 0.0 && damping < 1.0, "damping must be in (0, 1)")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .persist()   // read every round (join) + for degrees/nodes
-    // bounded-graph fast path (the CC localMaxEdges discipline): every
-    // round's arithmetic is IEEE double ops + shortest-decimal HALF_UP
-    // roundings + an exact decimal sum — all replicable on the driver
-    // bit-for-bit — and at audit scale the rounds' wall cost is pure
-    // per-round job latency. Two longs per edge under the cap; the
-    // broadcast/shuffle rounds below remain the scale path. `limit`
-    // takes an Int: clamp the cap first, or a cap >= Int.MaxValue wraps to a
-    // negative (analysis error) or tiny (everything local) limit.
-    if (e.schema.fields.forall(_.dataType ==
-        org.apache.spark.sql.types.LongType) &&
-        e.limit(math.min(localMaxEdges, Int.MaxValue - 1L).toInt + 1)
-          .count() <= localMaxEdges) {
-      val out = localRanks(e, iters, damping)
-      e.unpersist(blocking = false)
-      return out
+    val e = GraphGate.edges(edges, srcCol, dstCol)
+    // bounded-graph fast path ([[GraphGate]]): every round's arithmetic
+    // is IEEE double ops + shortest-decimal HALF_UP roundings + an exact
+    // decimal sum — all replicable on the driver bit-for-bit
+    GraphGate.local(e, localMaxEdges) match {
+      case Some(g) => localRanks(edges.sparkSession, g, iters, damping)
+      case None => distributedRanks(e, iters, damping, broadcastMaxNodes)
     }
+  }
+
+  /** The broadcast/shuffle rounds over the gate's materialized (src, dst)
+    * edges — the scale path of [[ranks]]. */
+  private def distributedRanks(e: DataFrame, iters: Int, damping: Double,
+      broadcastMaxNodes: Long): DataFrame = {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().persist()
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outd"))
@@ -85,17 +84,18 @@ object PageRank {
     // (graphs whose rank vector is no longer join-metadata-sized) the
     // rounds keep the plain shuffle joins — same results either way,
     // the hint only picks the join strategy.
-    val bcastRanks = n <= broadcastMaxNodes
-    def hinted(df: DataFrame): DataFrame =
-      if (bcastRanks) broadcast(df) else df
+    val hinted = GraphGate.hint(n, broadcastMaxNodes)
     for (_ <- 1 to iters) {
-      ranks = distributedRound(edgesWithDeg, ranks, nodes, teleport,
+      val next = distributedRound(edgesWithDeg, ranks, nodes, teleport,
         damping, hinted).localCheckpoint()
+      CacheScope.releaseCheckpoint(ranks)
+      ranks = next
     }
-    // the returned frame is a localCheckpoint — lineage-free — so the
-    // iteration-internal caches can be dropped eagerly, not left to the
-    // session (the CacheScope concern does not arise here)
-    e.unpersist(blocking = false)
+    // the returned frame is a localCheckpoint — lineage-free — so every
+    // iteration-internal cache and checkpoint is dropped eagerly, not
+    // left to the session or the ContextCleaner
+    CacheScope.releaseCheckpoint(edgesWithDeg)
+    CacheScope.releaseCheckpoint(e)
     nodes.unpersist(blocking = false)
     ranks
   }
@@ -133,20 +133,11 @@ object PageRank {
     * through the same decimal→double nearest conversion the
     * `cast("double")` performs, then `round₈(teleport + d·mass)`.
     * Same degree/dangling contract, same error messages' semantics. */
-  private def localRanks(e: DataFrame, iters: Int,
-      damping: Double): DataFrame = {
-    val spark = e.sparkSession
+  private def localRanks(spark: org.apache.spark.sql.SparkSession,
+      g: GraphGate.LocalGraph, iters: Int, damping: Double): DataFrame = {
     import spark.implicits._
-    val edges: Array[(Long, Long)] =
-      e.rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
-    val idx = new java.util.HashMap[Long, Integer]()
-    val ids = new scala.collection.mutable.ArrayBuffer[Long]()
-    def node(v: Long): Int = {
-      val got = idx.get(v)
-      if (got != null) got.intValue
-      else { val i = ids.length; idx.put(v, i); ids += v; i }
-    }
-    val es = edges.map { case (s, d) => (node(s), node(d)) }
+    val es = g.src.zip(g.dst)
+    val ids = g.ids
     val n = ids.length
     require(n > 0, "empty graph")
     val outd = new Array[Long](n)

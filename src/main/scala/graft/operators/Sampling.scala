@@ -66,13 +66,13 @@ object Sampling {
     * Data Makes Language Models Better", ACL 2022 §6.2).
     *
     * `components` is a (v, comp) frame as produced by
-    * [[Dedup.connectedComponents]] / [[Dedup.connectedComponentsStar]]
-    * over any near-dup pair generator; documents absent from it (no
-    * near-dup edge) are their own singleton component. The join is on the
-    * doc id — component frames are dedup outputs, orders of magnitude
-    * smaller than the corpus, so AQE broadcasts them when they fit and
-    * shuffle-joins on id otherwise; the split itself stays a pure
-    * map-side md5 expression on the component label. */
+    * [[Dedup.connectedComponents]] over any near-dup pair generator;
+    * documents absent from it (no near-dup edge) are their own singleton
+    * component. The join is on the doc id — component frames are dedup
+    * outputs, orders of magnitude smaller than the corpus, so AQE
+    * broadcasts them when they fit and shuffle-joins on id otherwise; the
+    * split itself stays a pure map-side md5 expression on the component
+    * label. */
   def leakageSafeSplit(docs: DataFrame, idCol: String,
       components: DataFrame, trainHexLt: String = "cd",
       splitCol: String = "split"): DataFrame = {

@@ -16,7 +16,8 @@ import graft.functions.VectorFunctions._
   *
   * Deterministic variant of the paper's rule: duplicate groups are the
   * connected components of the within-cluster tau-graph
-  * ([[Dedup.connectedComponentsStar]], O(log² n) rounds), and the kept
+  * ([[Dedup.connectedComponents]]: driver-local below its edge cap,
+  * O(log² n) star rounds above it), and the kept
   * representative is the minimum id per component (the paper keeps the
   * member with lowest centroid-similarity; min-id is order-free and
   * reproducible across engines/runs, the same canonical rule as every
@@ -92,7 +93,7 @@ object SemDedup {
     val assigned = scope.map(_.persist(assigned0)).getOrElse(assigned0)
     val pairs0 = clusterPairs(assigned, idCol, vecCol, tau)
     val pairs = scope.map(_.persist(pairs0)).getOrElse(pairs0)
-    val comps = Dedup.connectedComponentsStar(pairs, "id_a", "id_b")
+    val comps = Dedup.connectedComponents(pairs, "id_a", "id_b")
     val dropped = comps.filter(col("v") =!= col("comp"))
       .select(col("v").as("__drop"))
     assigned.select(col(idCol).as("id"), col("cell"))

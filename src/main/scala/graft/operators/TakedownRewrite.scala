@@ -83,7 +83,8 @@ object TakedownRewrite {
         .select(keepCols.map(col): _*)
         // materialize BEFORE the overwrite: Spark (correctly) refuses
         // to overwrite a path its own plan is still reading; the
-        // checkpoint holds only the touched shards' survivors
+        // checkpoint holds only the touched shards' survivors and is
+        // released once the surviving shard set is read back from it
         .localCheckpoint()
       graft.engine.SessionConf.withConf(spark,
         "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
@@ -94,6 +95,7 @@ object TakedownRewrite {
       // keep its old files — drop those partitions explicitly
       val survived = keep.select(col(shardCol)).distinct()
         .collect().map(_.get(0)).toSet
+      CacheScope.releaseCheckpoint(keep)
       bad.filterNot(survived.contains).foreach { sh =>
         spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION " +
           s"($shardCol = '${sh.toString.replace("'", "''")}')")

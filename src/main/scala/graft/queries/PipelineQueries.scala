@@ -57,8 +57,8 @@ object PipelineQueries extends QueryPack {
                FROM co JOIN sz sa ON doc_a = sa.doc JOIN sz sb ON doc_b = sb.doc
                WHERE CAST(common AS DOUBLE)/(sa.n_sh + sb.n_sh - common) >= 0.2)"""
 
-  /** [[nearDupPairsSql]] + `comp(v, component)`: hash-to-min labels
-    * (min member id) of the near-dup clusters, the oracle of
+  /** [[nearDupPairsSql]] + `comp(v, component)`: the min member id
+    * reachable from each vertex of the near-dup clusters, the oracle of
     * [[dupComponents]]; callers write `WITH RECURSIVE`. */
   private val nearDupCompSql =
     s"""$nearDupPairsSql,
@@ -75,9 +75,9 @@ object PipelineQueries extends QueryPack {
     Dedup.jaccardPairs(docs, "doc_id", "text",
       n = 4, threshold = 0.2, maxDf = 100L)
 
-  /** Hash-to-min components `(v, comp)` of [[nearDupPairs]]. */
+  /** Connected components `(v, comp)` of [[nearDupPairs]]. */
   private def dupComponents(pairs: DataFrame): DataFrame =
-    Dedup.connectedComponents(pairs, "doc_a", "doc_b", maxRounds = 60)
+    Dedup.connectedComponents(pairs, "doc_a", "doc_b")
 
   /** [[nearDupCompSql]] + `lab(component, doc_id, n_chars)`: every
     * doc under its near-dup component (itself when unpaired). */
@@ -3584,14 +3584,15 @@ object PipelineQueries extends QueryPack {
       },
       Some(componentSizesOracleSql)),
 
-    // ---- duplicate clusters again, via large-star/small-star (the
-    //      O(log²)-round scale path for high-diameter graphs; must equal
-    //      x19's hash-to-min labels exactly — same oracle) ---------------
+    // ---- duplicate clusters again, forced onto the distributed
+    //      large-star/small-star rounds (localMaxEdges = 0: the scale
+    //      path, which x19's driver-local union–find never reaches at
+    //      these sizes); must equal x19's labels exactly — same oracle --
     Q("x32_dup_components_star",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        componentSizes(docs,
-          Dedup.connectedComponentsStar(nearDupPairs(docs), "doc_a", "doc_b"))
+        componentSizes(docs, Dedup.connectedComponents(nearDupPairs(docs),
+          "doc_a", "doc_b", localMaxEdges = 0L))
       },
       Some(componentSizesOracleSql)),
 
@@ -4083,7 +4084,7 @@ object PipelineQueries extends QueryPack {
         val emb = t(s, dir, "embeddings")
         val pairs = Dedup.embeddingLshPairsScaled(emb, "vec_id",
           "embedding", threshold = 0.35, dim = 64, numBands = 12)
-        val comp = Dedup.connectedComponentsStar(pairs, "id_a", "id_b")
+        val comp = Dedup.connectedComponents(pairs, "id_a", "id_b")
         emb.join(comp, emb("vec_id") === comp("v"), "left")
           .filter(col("comp").isNull || col("comp") === col("vec_id"))
           .select(col("vec_id"))
@@ -4640,7 +4641,7 @@ object PipelineQueries extends QueryPack {
         val sh = Dedup.simhashNearDups(docs, "doc_id", "text",
             radius = 3, bands = 4).select("doc_a", "doc_b")
         val pairs = mh.unionByName(sh).distinct()
-        val comp = Dedup.connectedComponentsStar(pairs, "doc_a", "doc_b")
+        val comp = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
         docs.join(comp, docs("doc_id") === comp("v"), "left")
           .select(col("doc_id"),
             (col("comp").isNull || col("comp") === col("doc_id")).as("kept"))
@@ -4780,7 +4781,7 @@ object PipelineQueries extends QueryPack {
         val pairs = SemDedup
           .clusterPairs(assigned, "vec_id", "embedding", tau = 0.35)
           .localCheckpoint()
-        val comps = Dedup.connectedComponentsStar(pairs, "id_a", "id_b")
+        val comps = Dedup.connectedComponents(pairs, "id_a", "id_b")
         val dropped = comps.filter(col("v") =!= col("comp"))
           .select(col("v").as("id"), lit(true).as("is_dropped"))
         val res = assigned.select(col("vec_id").as("id"), col("cell"))

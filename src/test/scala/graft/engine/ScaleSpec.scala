@@ -960,13 +960,13 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("iterative-round plans: broadcast joins + exchange budgets hold " +
-      "per round (PageRank, both CC variants)") {
+      "per round (PageRank, CC star)") {
     // r16/r17 verdict item: the loops localCheckpoint every round, so a
     // whole-query explain is blind to the per-round plan shape. These
     // are the REPRESENTATIVE round frames the loops actually run
-    // (factored loop bodies — starRound/propagationRound/
-    // distributedRound), asserted in both join regimes; graft.RoundPlans
-    // dumps the same frames for plans/.
+    // (factored loop bodies — starRound/distributedRound), asserted in
+    // both join regimes; graft.RoundPlans dumps the same frames for
+    // plans/.
     import spark.implicits._
     val bcast: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       org.apache.spark.sql.functions.broadcast
@@ -991,15 +991,6 @@ class ScaleSpec extends SparkSpec {
     assert(graft.PlanAudit.shuffleCount(starB) <= 6,
       s"star round broadcast regime: ${graft.PlanAudit.shuffleCount(starB)} " +
         "static exchanges (budget 6 = 3 distinct after ReusedExchange)")
-    val edgesSD = Seq((1L, 2L), (2L, 3L)).toDF("s", "d")
-    val labels = Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("v", "comp")
-    val propB = graft.operators.Dedup.propagationRound(edgesSD, labels, bcast)
-    assert(plan(propB).contains("BroadcastHashJoin"),
-      "propagation round: labels not broadcast under the hint")
-    assert(graft.PlanAudit.shuffleCount(propB) <= 1,
-      s"propagation round broadcast regime: " +
-        s"${graft.PlanAudit.shuffleCount(propB)} shuffles (budget 1: the " +
-        "per-vertex min agg)")
     val ewd = Seq((1L, 2L, 1L), (2L, 1L, 1L)).toDF("node", "dst", "outd")
     val ranks = Seq((1L, 0.5), (2L, 0.5)).toDF("node", "rank")
     val nodes = Seq(Tuple1(1L)).toDF("node")

@@ -63,35 +63,4 @@ class PageRankSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("out-degree"))
   }
-
-  test("driver-local path == distributed rounds bit-for-bit") {
-    val n = 40L
-    val edges = ((0L until n).flatMap(i =>
-      Seq((i, (i + 1) % n), (i, (i * 7 + 3) % n), (i * 3 % n, i))) ++
-      Seq((5L, 5L))).distinct
-    val df = edges.toDF("src", "dst")
-    val local = PageRank.ranks(df, "src", "dst", iters = 10)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val dist = PageRank.ranks(df, "src", "dst", iters = 10,
-        localMaxEdges = 0L) // force the distributed rounds
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(local.keySet == dist.keySet)
-    for ((k, v) <- dist)
-      assert(java.lang.Double.doubleToRawLongBits(local(k)) ==
-        java.lang.Double.doubleToRawLongBits(v),
-        s"node $k: local ${local(k)} != distributed $v")
-    // caps past Int range must still take the local path and agree
-    // (the gate's limit(cap + 1) is clamped: Int.MaxValue would wrap to a
-    // negative limit, 2^32 to limit(1))
-    for (cap <- Seq(Int.MaxValue.toLong, 1L << 32)) {
-      val big = PageRank.ranks(df, "src", "dst", iters = 10,
-          localMaxEdges = cap)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(big.keySet == dist.keySet)
-      for ((k, v) <- dist)
-        assert(java.lang.Double.doubleToRawLongBits(big(k)) ==
-          java.lang.Double.doubleToRawLongBits(v),
-          s"cap $cap, node $k: ${big(k)} != distributed $v")
-    }
-  }
 }

@@ -10,8 +10,8 @@ import java.util.Locale
   * query's cache state to what the solo min-of-N baseline protocol saw:
   * its own persisted internals warm across its passes, NOTHING inherited
   * from other queries. The previous interleaved-sweep design let ~100
-  * queries' session-persisted internals (CacheScope.route(None))
-  * accumulate, and late-alphabet queries ran under memory pressure that
+  * queries' session-persisted internals (CacheScope.persist outside
+  * any scope) accumulate, and late-alphabet queries ran under memory pressure that
   * solo adjudication could never reproduce — x60's chronic
   * sweep-2x/solo-0.7x split (r10 verdict flag, r11 sweep repeat) was
   * exactly this. Host-descheduling windows (BASELINE.md) are ~20 min, so

@@ -47,17 +47,19 @@ object PortableMath {
     * fast path: one multiply + floor/ceil + divide, which is exact
     * because the scaled integer is exactly representable and IEEE
     * division is correctly rounded. The fast path only differs from the
-    * definition when `x·10⁴` sits within ~1 ulp of the .5 rounding grid
-    * — a guard band (1e-9, vastly wider than the ~2e-12 multiply error
-    * for |x| ≤ 1) falls back to the exact definition there, and for
-    * non-finite input (same NumberFormatException as before). Bit-
-    * identical by construction; PortableMathSpec sweeps the boundary. */
+    * definition when `x·10⁴` sits near the .5 rounding grid: the
+    * definition rounds x's shortest decimal d, and |y − d·10⁴| is at
+    * most 0.5·ulp(x)·10⁴ + 0.5·ulp(y) ≤ 1.11·ulp(y). A guard band of
+    * 4·ulp(y), so scaled with |x| over the whole domain, falls back to
+    * the exact definition there, and for non-finite input (same
+    * NumberFormatException as before). Bit-identical by construction;
+    * PortableMathSpec sweeps the boundary up to |x| ~ 10¹². */
   def round4HalfUp(x: Double): Double = {
     val y = x * 1e4
     if (java.lang.Double.isNaN(y) || java.lang.Double.isInfinite(y))
       return BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     val f = y - math.floor(y)
-    if (math.abs(f - 0.5) < 1e-9)
+    if (math.abs(f - 0.5) < 4 * math.ulp(y))
       BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     else {
       val z = if (y >= 0) math.floor(y + 0.5) else math.ceil(y - 0.5)

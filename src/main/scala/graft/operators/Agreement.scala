@@ -34,10 +34,10 @@ object Agreement {
     * The classes²-sized cell table feeds THREE consumers (totals and
     * both marginals), so it is persisted — otherwise the rater columns'
     * whole upstream (often a full scoring chain) replans per consumer
-    * (the CacheScope residency discipline; `scope` bounds the persist). */
-  def cohenKappa(df: DataFrame, raterACol: String, raterBCol: String,
-      scope: Option[CacheScope] = None): DataFrame = {
-    val cells = CacheScope.route(scope,
+    * ([[CacheScope]]). */
+  def cohenKappa(df: DataFrame, raterACol: String,
+      raterBCol: String): DataFrame = {
+    val cells = CacheScope.persist(
       df.select(col(raterACol).as("a"), col(raterBCol).as("b"))
         .filter(col("a").isNotNull && col("b").isNotNull)
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c")))

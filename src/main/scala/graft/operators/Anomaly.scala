@@ -35,13 +35,13 @@ object Anomaly {
     * baseline_hours, baseline_mean_micro, flag). */
   def hourlyRateSpikes(events: DataFrame, tsCol: String, typeCol: String,
       matchType: String, trailingHours: Int = 24, z: Int = 3,
-      minBaseline: Int = 12, scope: Option[CacheScope] = None): DataFrame =
+      minBaseline: Int = 12): DataFrame =
     spikesFromHourly(events
       .select(date_trunc("hour", col(tsCol)).as("hour"),
         (col(typeCol) === matchType).cast("long").as("hit"))
       .groupBy("hour")
       .agg(count(lit(1)).as("n_events"), sum(col("hit")).as("n_matched")),
-      trailingHours, z, minBaseline, scope)
+      trailingHours, z, minBaseline)
 
   /** The z-test over a pre-aggregated (hour, n_events, n_matched)
     * frame — the seam the streaming hourly LEDGER (x145) shares with
@@ -49,13 +49,12 @@ object Anomaly {
     * exactly the batch hourly frame and this report is identical on
     * both. */
   def spikesFromHourly(hourlyCounts: DataFrame, trailingHours: Int = 24,
-      z: Int = 3, minBaseline: Int = 12,
-      scope: Option[CacheScope] = None): DataFrame = {
+      z: Int = 3, minBaseline: Int = 12): DataFrame = {
     require(trailingHours >= 1, s"bad window $trailingHours")
     require(z >= 1, s"bad z $z")
     require(minBaseline >= 1 && minBaseline <= trailingHours,
       s"minBaseline $minBaseline outside 1..$trailingHours")
-    val hourly = CacheScope.route(scope, hourlyCounts
+    val hourly = CacheScope.persist(hourlyCounts
       .withColumn("share_micro", expr("n_matched * 1000000 div n_events"))
       .withColumn("epoch", col("hour").cast("long")))
     val offsets = hourly

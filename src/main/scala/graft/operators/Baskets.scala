@@ -33,11 +33,11 @@ object Baskets {
     * minSupportMicro. */
   def frequentPairs(rows: DataFrame, basketCol: String, itemCol: String,
       minSupportMicro: Long = 10000, minItemCount: Long = 2,
-      maxBasketSize: Int = 64, scope: Option[CacheScope] = None): DataFrame = {
+      maxBasketSize: Int = 64): DataFrame = {
     require(minSupportMicro >= 0, s"bad minSupportMicro $minSupportMicro")
     require(minItemCount >= 1, s"bad minItemCount $minItemCount")
     require(maxBasketSize >= 2, s"bad maxBasketSize $maxBasketSize")
-    val b = CacheScope.route(scope, rows
+    val b = CacheScope.persist(rows
       .select(col(basketCol).as("bk"), col(itemCol).as("it"))
       .distinct())
     val sizes = b.groupBy("bk").agg(count(lit(1)).as("sz"))

@@ -30,13 +30,13 @@ object Bm25 {
     * (doc_id, n_hit_terms, score), ranked (score desc, doc_id). */
   def topDocs(docs: DataFrame, idCol: String, textCol: String,
       queryTerms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
-      topK: Int = 20, scope: Option[CacheScope] = None): DataFrame = {
+      topK: Int = 20): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
     require(queryTerms.distinct.size == queryTerms.size,
       "queryTerms must be distinct")
     // narrow (id, dl) frame: feeds the N/avgdl aggregate AND the score
     // join — persisted so the corpus text scans once for lengths
-    val dl = CacheScope.route(scope, docs.select(col(idCol).as("doc_id"),
+    val dl = CacheScope.persist(docs.select(col(idCol).as("doc_id"),
       size(split(col(textCol), " ")).as("dl")))
     val st = dl.agg(count(lit(1)).as("n"),
       (sum(col("dl")) * lit(1.0) / count(lit(1))).as("avgdl"))

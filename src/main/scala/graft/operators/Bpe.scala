@@ -133,6 +133,7 @@ object Bpe {
       }
       .toDF("w", "syms")
       .localCheckpoint()
+    CacheScope.releaseCheckpoint(w0) // `words` no longer reads it
     Model(mergeList,
       words.select(col("w"), size(col("syms")).cast("long").as("n_subtokens")),
       words.select(col("w"), col("syms")))

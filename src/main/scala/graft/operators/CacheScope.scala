@@ -3,28 +3,38 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
 
-/** Deterministic cache-residency for operators that persist internal
-  * relations their RETURNED plan still reads (postings indexes, bigram
-  * streams, inverted indexes): the persist cannot be dropped before the
-  * caller's terminal action, so by default it lives until the
-  * ContextCleaner or a `spark.catalog.clearCache()` reclaims it — fine
-  * for job-scoped runs, an accumulating leak in a long-lived session
-  * driving many pipeline stages.
+/** The one cache-lifetime rule for operator internals. Operators persist
+  * internal relations their RETURNED plan still reads (postings indexes,
+  * bigram streams, inverted indexes), so the persist cannot be dropped
+  * before the caller's terminal action. Every such persist goes through
+  * [[CacheScope.persist]], and its lifetime is a property of the
+  * caller's block, not an operator parameter:
+  *   - outside any [[CacheScope.withScope]] block it is a plain
+  *     `df.persist()`, living until the ContextCleaner or a
+  *     `spark.catalog.clearCache()` reclaims it — fine for job-scoped
+  *     runs, an accumulating leak in a long-lived session;
+  *   - inside a block it is tracked by that block's scope and
+  *     blocking-unpersisted when the block exits (success or failure), so
+  *     the CacheManager entry AND the storage blocks are both gone, and
+  *     nothing else the session cached is touched (unlike `clearCache()`).
   *
-  * A CacheScope makes the hand-off explicit: operators route internal
-  * `persist()` calls through [[persist]], the caller runs its action,
-  * then [[release]] (or the bracketing [[CacheScope.withScope]])
-  * unpersists exactly the relations this scope acquired — blocking, via
-  * the Dataset API, so the CacheManager entry AND the storage blocks are
-  * both gone, and nothing else the session cached is touched (unlike
-  * `clearCache()`).
+  * A scope covers only the thread that opened it: an operator built on
+  * another thread while the block is open persists as if no block were
+  * open. Blocks nest: the inner block owns the persists made inside it,
+  * releases them on exit and restores the outer scope. The streaming
+  * ledger runner opens one block per microbatch around its partial and
+  * append, so a ledger step's internal persists end with the batch.
   *
   * {{{
-  * val out = CacheScope.withScope { sc =>
-  *   LmScore.bigramNll(docs, "doc_id", "text", scope = Some(sc))
+  * val out = CacheScope.withScope { _ =>
+  *   LmScore.bigramNll(docs, "doc_id", "text")
   *     .collect()                     // action runs while caches live
   * }                                  // scope released here
   * }}}
+  *
+  * The few transients an operator unpersists itself before returning
+  * (k-means training rows, a greedy-selection pool) stay plain
+  * `persist()`/`unpersist()` pairs.
   */
 final class CacheScope {
 
@@ -51,23 +61,29 @@ final class CacheScope {
 
 object CacheScope {
 
-  /** Bracket: run `body` with a fresh scope, always release on the way
-    * out (success or failure). The body must CONSUME its plans (run the
+  private val current = new ThreadLocal[CacheScope]
+
+  /** Bracket: run `body` with a fresh scope open on this thread, always
+    * release on the way out (success or failure) and restore the scope
+    * that was open before. The body must CONSUME its plans (run the
     * action) before returning — a lazily returned DataFrame would read
     * already-unpersisted inputs and silently recompute them. */
   def withScope[T](body: CacheScope => T): T = {
+    val outer = current.get
     val s = new CacheScope
-    try body(s) finally s.release()
+    current.set(s)
+    try body(s)
+    finally {
+      current.set(outer)
+      s.release()
+    }
   }
 
-  /** Routing helper for operators with an `Option[CacheScope]` knob:
-    * scoped persist when a scope is supplied, session-lifetime persist
-    * (the documented legacy trade) when not. */
-  private[operators] def route(scope: Option[CacheScope], df: DataFrame): DataFrame =
-    scope match {
-      case Some(s) => s.persist(df)
-      case None => df.persist()
-    }
+  /** Persist an operator-internal relation: tracked by this thread's
+    * innermost open [[withScope]] block, a plain session-lifetime
+    * `persist()` when none is open. */
+  private[operators] def persist(df: DataFrame): DataFrame =
+    Option(current.get).fold(df.persist())(_.persist(df))
 
   /** Drop the blocks of a `localCheckpoint`ed frame (and of any other
     * checkpoint it reads) once nothing reads it. Left alone, the blocks

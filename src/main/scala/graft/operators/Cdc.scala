@@ -109,11 +109,10 @@ object Cdc {
     * dup_ratio on a doc whose doc-level hash is unique is exactly the
     * shifted/partial near-copy x01 cannot see. */
   def dupChunkReport(df: DataFrame, idCol: String, textCol: String,
-      w: Int = 16, mask: Int = 63,
-      scope: Option[CacheScope] = None): DataFrame = {
+      w: Int = 16, mask: Int = 63): DataFrame = {
     // persisted: the global frequency agg and the join probe both read
     // the chunk stream; unpersisted, every text re-chunks twice
-    val chunks = CacheScope.route(scope,
+    val chunks = CacheScope.persist(
       chunkHashes(df, idCol, textCol, w, mask))
     val freq = chunks.groupBy(col("chunk_hash"))
       .agg(count(lit(1)).as("__cnt"))

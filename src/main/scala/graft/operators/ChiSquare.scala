@@ -37,8 +37,7 @@ object ChiSquare {
     * `vFlag` (effect-size gate — at corpus scale everything is
     * "significant"; V is the magnitude that matters). */
   def audit(df: DataFrame, pairs: Seq[(String, String)],
-      vFlag: Double = 0.1,
-      scope: Option[CacheScope] = None): DataFrame = {
+      vFlag: Double = 0.1): DataFrame = {
     require(pairs.nonEmpty, "no column pairs to audit")
     require(vFlag > 0, s"vFlag must be positive, got $vFlag")
     val stacked = df.select(explode(array(pairs.map { case (a, b) =>
@@ -49,7 +48,7 @@ object ChiSquare {
     // persisted: the classes-sized cell table feeds both margins, the
     // totals, the dims count AND the contribution join — without the
     // cache the stacked corpus pass re-executes per consumer
-    val cells = CacheScope.route(scope, stacked.groupBy("pair", "va", "vb")
+    val cells = CacheScope.persist(stacked.groupBy("pair", "va", "vb")
       .agg(count(lit(1)).as("o")))
     val rowm = cells.groupBy("pair", "va").agg(sum(col("o")).as("ra"))
     val colm = cells.groupBy("pair", "vb").agg(sum(col("o")).as("cb"))

@@ -37,8 +37,7 @@ object ClassifierCalibration {
     * row. `scored` needs a 0/1 label, a double llr, and a boolean
     * prediction column. */
   def reliabilityReport(scored: DataFrame, labelCol: String = "label",
-      llrCol: String = "llr", predCol: String = "pred",
-      scope: Option[CacheScope] = None): DataFrame = {
+      llrCol: String = "llr", predCol: String = "pred"): DataFrame = {
     val D6 = DecimalType(18, 6)
     val p1 = round(lit(1.0) / (lit(1.0) + exp(-col(llrCol))), 6)
     val conf = round(when(col(predCol), p1).otherwise(lit(1.0) - p1), 6)
@@ -46,7 +45,7 @@ object ClassifierCalibration {
     // column pruning makes the two cells subtrees non-identical — Spark's
     // exchange reuse would NOT collapse them, so without the persist the
     // whole upstream scoring chain runs twice
-    val cells = CacheScope.route(scope, scored
+    val cells = CacheScope.persist(scored
       .select(conf.as("conf"),
         (col(predCol) === (col(labelCol).cast("long") === 1L)).as("ok"))
       .withColumn("cm", expr("CAST(round(conf*1000000) AS BIGINT)"))

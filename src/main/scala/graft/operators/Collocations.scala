@@ -28,20 +28,18 @@ object Collocations {
 
   /** Top-`topK` adjacent-pair collocations by PMI (ties by pair),
     * among pairs with count >= minCount.
-    * Columns: (w1, w2, n_pair, n_w1, n_w2, pmi).
-    * Pass a [[CacheScope]] to bound the two internal persists (unigram
-    * table, bigram table) to the caller's action. */
+    * Columns: (w1, w2, n_pair, n_w1, n_w2, pmi). */
   def topPmi(df: DataFrame, textCol: String, minCount: Long = 5L,
-      topK: Int = 20, scope: Option[CacheScope] = None): DataFrame = {
+      topK: Int = 20): DataFrame = {
     require(minCount >= 1L && topK >= 1, "minCount and topK must be >= 1")
     val toks = df.select(split(col(textCol), " ").as("ts"))
-    val uni = CacheScope.route(scope,
+    val uni = CacheScope.persist(
       toks.select(explode(col("ts")).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("n_w")))
       // joined twice (w1 and w2 sides) + the totals agg
     // pair counts BEFORE the minCount filter feed the bigram total —
     // N_bi is the MLE denominator over ALL bigrams, not the survivors
-    val biAll = CacheScope.route(scope, toks
+    val biAll = CacheScope.persist(toks
       .select(explode(zip_with(
         slice(col("ts"), lit(1), greatest(size(col("ts")) - 1, lit(0))),
         slice(col("ts"), lit(2), greatest(size(col("ts")) - 1, lit(0))),

@@ -34,15 +34,11 @@ object CorpusDrift {
 
   /** (source, n_tokens, js) per source: JS divergence (nats, rounded to
     * 6 decimals) between the source's token distribution and the corpus
-    * distribution over the global top-`k` terms + OOV.
-    *
-    * Pass a [[CacheScope]] to bound the token-stream persist to the
-    * caller's action instead of the session lifetime. */
+    * distribution over the global top-`k` terms + OOV. */
   def jsDivergencePerSource(docs: DataFrame, sourceCol: String,
-      textCol: String, k: Int = 64,
-      scope: Option[CacheScope] = None): DataFrame = {
+      textCol: String, k: Int = 64): DataFrame = {
     require(k > 0, "k must be positive")
-    val toks = CacheScope.route(scope,
+    val toks = CacheScope.persist(
       docs.select(col(sourceCol).as("source"),
         explode(split(col(textCol), " ")).as("term")))
     // global top-K vocabulary: full term counts (map-side combine onto
@@ -57,7 +53,7 @@ object CorpusDrift {
           .as("bterm"))
     // persisted: the S×(K+1) bucket-count table feeds the per-source
     // totals, the corpus bucket counts, AND the grid probe — all tiny
-    val perSource = CacheScope.route(scope,
+    val perSource = CacheScope.persist(
       bucketed.groupBy("source", "bterm").agg(count(lit(1)).as("cs")))
     jsFromBucketCounts(perSource)
   }

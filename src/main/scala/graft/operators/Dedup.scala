@@ -34,18 +34,14 @@ object Dedup {
     * sides of the self-join and the sizes aggregation), and without the
     * persist Catalyst recomputes the tokenize+explode+df-filter subtree
     * each time — measured as the dominant cost of x02/x19/x27/x30. The
-    * cached blocks are freed by the ContextCleaner once the returned plan
-    * is unreferenced; on a cluster an explicit checkpoint dir works too,
-    * and callers of the public entry points can pass a [[CacheScope]] to
-    * reclaim them deterministically after their action. */
+    * persist's lifetime is the caller's ([[CacheScope]]). */
   private def filteredPostings(df: DataFrame, idCol: String, textCol: String,
-      n: Int, maxDf: Long,
-      scope: Option[CacheScope] = None): (DataFrame, DataFrame) = {
+      n: Int, maxDf: Long): (DataFrame, DataFrame) = {
     val sh = df
       .select(col(idCol).as("doc"),
         explode(graft.expressions.TextExpressions
           .wordShingles(col(textCol), n)).as("sh"))
-    val kept = CacheScope.route(scope, sh.join(
+    val kept = CacheScope.persist(sh.join(
       sh.groupBy("sh").agg(count(lit(1)).as("df_count"))
         .filter(col("df_count") <= maxDf)
         .select("sh"),
@@ -68,9 +64,8 @@ object Dedup {
     * Never materializes non-overlapping pairs. The only shuffles are the
     * postings join key (shingle) and the pair aggregation. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 4, threshold: Double = 0.2, maxDf: Long = 100L,
-      scope: Option[CacheScope] = None): DataFrame = {
-    val (kept, sizes) = filteredPostings(df, idCol, textCol, n, maxDf, scope)
+      n: Int = 4, threshold: Double = 0.2, maxDf: Long = 100L): DataFrame = {
+    val (kept, sizes) = filteredPostings(df, idCol, textCol, n, maxDf)
     val pairs = kept.select(col("doc").as("doc_a"), col("sh"))
       .join(kept.select(col("doc").as("doc_b"), col("sh")), "sh")
       .filter(col("doc_a") < col("doc_b"))
@@ -90,9 +85,8 @@ object Dedup {
     * inverted-index shape as [[jaccardPairs]]: only co-occurring pairs
     * materialize, shuffles on shingle then pair. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 4, threshold: Double = 0.6, maxDf: Long = 100L,
-      scope: Option[CacheScope] = None): DataFrame = {
-    val (kept, sizes) = filteredPostings(df, idCol, textCol, n, maxDf, scope)
+      n: Int = 4, threshold: Double = 0.6, maxDf: Long = 100L): DataFrame = {
+    val (kept, sizes) = filteredPostings(df, idCol, textCol, n, maxDf)
     kept.select(col("doc").as("doc_a"), col("sh"))
       .join(kept.select(col("doc").as("doc_b"), col("sh")), "sh")
       .filter(col("doc_a") < col("doc_b"))
@@ -121,10 +115,9 @@ object Dedup {
     // persisted because it is read three times (signature branch + both
     // sides of the candidate verify join); without it the scan+shingle
     // subtree recomputes each time
-    val withSh = df.select(col(idCol).as("doc"),
+    val withSh = CacheScope.persist(df.select(col(idCol).as("doc"),
       graft.expressions.TextExpressions.wordShingles(col(textCol), n).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .persist()
+      .filter(size(col("sh")) > 0))
     // all numHashes signature values in ONE pass over the shingle array
     // (native expression; the per-seed HOF fold re-walked the array
     // numHashes times, interpreted)
@@ -203,10 +196,9 @@ object Dedup {
     *
     * Scale shape: batch postings are computed per-row (no shuffle) and
     * persisted once (read by the history probe, the bucket-min
-    * aggregation, and the final verdict join — cache residency lasts
-    * until the caller's action completes and is reclaimed via
-    * `spark.catalog.clearCache()`/session stop, the documented trade of
-    * [[LmScore.bigramNll]]); the history probe is a
+    * aggregation, and the final verdict join; the streaming ledger
+    * runner releases it once the batch's append commits, see
+    * [[CacheScope]]); the history probe is a
     * left_semi join on (band, key) — at warehouse scale the ledger table
     * should be bucketed by those keys so the probe co-locates; the
     * within-batch rule is one aggregation + one join on (band, key).
@@ -229,7 +221,7 @@ object Dedup {
     * (max processed doc) stays correct. */
   private[operators] def ledgerStep(docIds: DataFrame, postings: DataFrame,
       keptPostings: DataFrame): DataFrame = {
-    val posts = postings.persist()
+    val posts = CacheScope.persist(postings)
     val histBad = posts
       .join(keptPostings.select(col("band"), col("key")), Seq("band", "key"),
         "left_semi")
@@ -619,20 +611,17 @@ object Dedup {
     * (no shuffle). Returns (doc_id, clean_text, n_removed).
     *
     * Scale shape: positional-span postings are built once and persisted
-    * (read by the repeated-set aggregation and the bad-start join — the
-    * returned plan still reads the cache, so residency lasts until the
-    * caller's `spark.catalog.clearCache()`/session stop, the same
-    * documented trade as [[LmScore.bigramNll]]); the
+    * (read by the repeated-set aggregation and the bad-start join; the
+    * returned plan still reads it, see [[CacheScope]]); the
     * per-doc start list is collected into an array column — bounded by
     * tokens-per-document, not corpus size — so the coverage test is a
     * codegen'd higher-order function over (tokens × starts). */
   def removeRepeatedSpans(df: DataFrame, idCol: String, textCol: String,
       n: Int = 10, minDocs: Long = 2L): DataFrame = {
-    val spans = df.select(col(idCol).as("doc"),
+    val spans = CacheScope.persist(df.select(col(idCol).as("doc"),
       posexplode(graft.expressions.TextExpressions
         .wordShingles(col(textCol), n, distinct = false)).as(Seq("pos", "span")))
-      .select(col("doc"), col("pos"), md5(col("span")).as("span_hash"))
-      .persist()
+      .select(col("doc"), col("pos"), md5(col("span")).as("span_hash")))
     val repeated = spans.groupBy("span_hash")
       .agg(countDistinct(col("doc")).as("n_docs"))
       .filter(col("n_docs") >= minDocs)
@@ -853,9 +842,8 @@ object Dedup {
     require(numPlanes % numBands == 0, "numPlanes must divide into bands")
     val signs = srpSigns(numPlanes, dim)
     // persisted: read by the signature branch and both verify joins
-    val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("nrm", norm(col("v")))
-      .persist()
+    val base = CacheScope.persist(df.select(col(idCol).as("id"),
+      col(vecCol).as("v")).withColumn("nrm", norm(col("v"))))
     val bands = srpBandFrame(base, numPlanes, numBands, signs)
     srpVerifyPairs(base, bands, threshold)
   }
@@ -897,9 +885,8 @@ object Dedup {
       threshold: Double, dim: Int, numBands: Int = 12,
       targetBucket: Int = 8, minBits: Int = 8,
       maxBits: Int = 24): DataFrame = {
-    val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("nrm", norm(col("v")))
-      .persist()
+    val base = CacheScope.persist(df.select(col(idCol).as("id"),
+      col(vecCol).as("v")).withColumn("nrm", norm(col("v"))))
     val bands = srpScaledBandFrame(base, numBands, targetBucket, minBits,
       maxBits, dim)
     srpVerifyPairs(base, bands, threshold)
@@ -1002,12 +989,11 @@ object Dedup {
     * Returns the surviving corpus rows (all columns). */
   def semanticDecontaminate(corpus: DataFrame, bench: DataFrame,
       idCol: String, vecCol: String, threshold: Double, dim: Int,
-      numPlanes: Int = 128, numBands: Int = 16,
-      scope: Option[CacheScope] = None): DataFrame = {
+      numPlanes: Int = 128, numBands: Int = 16): DataFrame = {
     require(numPlanes % numBands == 0, "numPlanes must divide into bands")
     val signs = srpSigns(numPlanes, dim)
     def baseOf(df: DataFrame): DataFrame =
-      CacheScope.route(scope,       // bands + the verify join read it twice
+      CacheScope.persist(      // bands + the verify join read it twice
         df.select(col(idCol).as("id"), col(vecCol).as("v"))
           .withColumn("nrm", norm(col("v"))))
     val cBase = baseOf(corpus)

@@ -38,19 +38,19 @@ object DomainReweight {
     * half-up 6dp micro-rounded; mix sums to 1 within S micro-ulps. */
   def doremiMix(docs: DataFrame, idCol: String, textCol: String,
       domainCol: String, eta: Double = 1.0, smoothNum: Long = 1L,
-      smoothDen: Long = 5L, scope: Option[CacheScope] = None): DataFrame = {
+      smoothDen: Long = 5L): DataFrame = {
     require(eta > 0, s"eta must be > 0, got $eta")
     require(smoothDen >= 1 && smoothNum >= 0 && smoothNum <= smoothDen,
       s"smoothing fraction invalid: $smoothNum/$smoothDen")
     val D4 = DecimalType(18, 4)
-    val scored = LmScore.bigramNll(docs, idCol, textCol, scope = scope)
+    val scored = LmScore.bigramNll(docs, idCol, textCol)
       .join(docs.select(col(idCol).as("doc_id"),
         col(domainCol).as("__dom")), "doc_id")
     // the ONE corpus-sized pass; persisted (domains-sized) because the
     // reference and the boost total both derive from it — the x105
     // totals-from-cells shape keeps every downstream consumer off the
     // corpus
-    val dom = CacheScope.route(scope, scored.groupBy(col("__dom"))
+    val dom = CacheScope.persist(scored.groupBy(col("__dom"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("avg_nll").cast(D4)).as("snll")))
     // corpus reference = exact-decimal fold of the per-domain sums

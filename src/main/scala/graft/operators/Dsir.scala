@@ -61,23 +61,19 @@ object Dsir {
 
   /** (doc_id, is_target, n_feats, logw) for every document: the decimal-
     * exact hashed-n-gram log importance weight of the doc under the
-    * target-vs-raw bucket distributions.
-    *
-    * Pass a [[CacheScope]] to bound the feature-stream persist to the
-    * caller's action instead of the session lifetime. */
+    * target-vs-raw bucket distributions. */
   def importanceScores(docs: DataFrame, idCol: String, textCol: String,
-      isTarget: Column, buckets: Int = 256,
-      scope: Option[CacheScope] = None): DataFrame = {
+      isTarget: Column, buckets: Int = 256): DataFrame = {
     require(buckets > 0, "buckets must be positive")
     // persisted: consumed by BOTH the bucket-count aggregation and the
     // per-doc scoring sum — unpersisted, the corpus would tokenize+hash
     // twice (the stream is corpus-sized; MEMORY_AND_DISK spills)
-    val feat = CacheScope.route(scope,
+    val feat = CacheScope.persist(
       hashedFeatures(docs, idCol, textCol, isTarget, buckets))
     // B-row bucket-count table, persisted: consumed by BOTH the totals
     // aggregate and the log-ratio projection — unpersisted, the
     // corpus-sized feature stream would aggregate twice
-    val stats = CacheScope.route(scope, feat.groupBy("bucket").agg(
+    val stats = CacheScope.persist(feat.groupBy("bucket").agg(
       count(lit(1)).as("cr"),
       sum(when(col("is_target"), 1L).otherwise(0L)).as("ct")))
     val tot = stats.agg(sum(col("cr")).as("tr"), sum(col("ct")).as("tt"))

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * embeddings), each collapsing map-side to groups x dims partial rows;
   * the means frame joins back by BROADCAST (groups x dims rows). The
   * stats frame feeds two consumers (dim rows + group rollup) and
-  * persists via the CacheScope knob. No windows, no collects, no
+  * persists ([[CacheScope]]). No windows, no collects, no
   * corpus-sized shuffles.
   *
   * Assumes fixed-dimension vectors per group (the group-summary row
@@ -41,7 +41,7 @@ object EmbeddingGeometry {
     * 1e-4 / 1e-8 units; plus one dim = -1 summary row per group:
     * (group, -1, n_vecs, null, null, aniso_micro). */
   def report(vecs: DataFrame, vecCol: String, groupCol: String,
-      unitScale: Int = 10000, scope: Option[CacheScope] = None): DataFrame = {
+      unitScale: Int = 10000): DataFrame = {
     require(unitScale >= 1, s"bad unitScale $unitScale")
     def exploded = vecs
       .select(col(groupCol).as("grp"),
@@ -51,7 +51,7 @@ object EmbeddingGeometry {
     val means = exploded.groupBy("grp", "dim")
       .agg(count(lit(1)).as("n_vecs"), sum(col("e")).as("s1"))
       .withColumn("m", expr("s1 div n_vecs"))
-    val stats = CacheScope.route(scope, exploded
+    val stats = CacheScope.persist(exploded
       .join(broadcast(means), Seq("grp", "dim"))
       .groupBy("grp", "dim", "n_vecs", "s1", "m")
       .agg(sum((col("e") - col("m")) * (col("e") - col("m"))).as("ss"))

@@ -31,8 +31,7 @@ object FdAudit {
     * violations, g3_micro, holds)`. `violations` = rows to delete for
     * exactness; `holds` ⟺ violations = 0. */
   def audit(df: DataFrame,
-      candidates: Seq[(Seq[String], String)],
-      scope: Option[CacheScope] = None): DataFrame = {
+      candidates: Seq[(Seq[String], String)]): DataFrame = {
     require(candidates.nonEmpty, "no FD candidates")
     candidates.foreach { case (lhs, rhs) =>
       require(lhs.nonEmpty, s"empty LHS for RHS '$rhs'")
@@ -50,7 +49,7 @@ object FdAudit {
     }: _*)).as("s")).select(col("s.cand").as("cand"),
       col("s.a").as("a"), col("s.b").as("b"))
     // persisted classes-sized cell table; margins re-aggregate it
-    val cells = CacheScope.route(scope, stacked.groupBy("cand", "a", "b")
+    val cells = CacheScope.persist(stacked.groupBy("cand", "a", "b")
       .agg(count(lit(1)).as("o")))
     val perLhs = cells.groupBy("cand", "a")
       .agg(sum(col("o")).as("ca"), max(col("o")).as("mab"))

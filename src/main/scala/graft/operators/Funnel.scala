@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * row_number over an ordering with ties.
   *
   * Scale shape: the events frame is projected to (user, ts, type),
-  * filtered to funnel types, and persisted once (CacheScope knob —
+  * filtered to funnel types, and persisted once ([[CacheScope]] —
   * K stage passes read it); each stage is a user-keyed aggregation
   * joined user-keyed against the previous stage frame — K shuffles on
   * the SAME key, no windows, no per-user sorting, no collects. The
@@ -31,12 +31,11 @@ object Funnel {
     * conv_vs_top_micro), one row per funnel stage in order. */
   def firstCompletion(spark: SparkSession, events: DataFrame,
       userCol: String, tsCol: String, typeCol: String,
-      stages: Seq[String], windowHours: Int,
-      scope: Option[CacheScope] = None): DataFrame = {
+      stages: Seq[String], windowHours: Int): DataFrame = {
     require(stages.size >= 2, s"a funnel needs >= 2 stages, got $stages")
     require(stages.distinct.size == stages.size, s"duplicate stage in $stages")
     require(windowHours > 0, s"bad window $windowHours")
-    val evs = CacheScope.route(scope, events
+    val evs = CacheScope.persist(events
       .filter(col(typeCol).isin(stages: _*))
       .select(col(userCol).as("u"), col(tsCol).as("ts"),
         col(typeCol).as("et")))

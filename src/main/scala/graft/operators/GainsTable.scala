@@ -33,8 +33,7 @@ object GainsTable {
     * base rate. A zero-positive corpus fails loudly (lift undefined). */
   def byRank(df: DataFrame, idCol: String, keyCol: String,
       outcomeCol: String, parts: Int = 10, bucketChars: Int = 4,
-      superChars: Int = 1,
-      scope: Option[CacheScope] = None): DataFrame = {
+      superChars: Int = 1): DataFrame = {
     require(parts >= 2 && parts <= 1000,
       s"parts must be in 2..1000, got $parts")
     val outcome = df.select(col(idCol).cast("long").as("__oid"),
@@ -48,7 +47,7 @@ object GainsTable {
       .join(outcome, col(idCol) === col("__oid"))
       .crossJoin(broadcast(tot))
       .withColumn("bucket", expr(s"(pos - 1) * ${parts}L DIV __n + 1"))
-    val per = CacheScope.route(scope, bucketed.groupBy(col("bucket"))
+    val per = CacheScope.persist(bucketed.groupBy(col("bucket"))
       .agg(count(lit(1)).cast("long").as("n"),
         sum(when(col("__y"), 1L).otherwise(0L)).cast("long")
           .as("positives")))

@@ -145,8 +145,7 @@ object GlobalOrder {
     * rank 0 (N < parts) have no splitter row — that part is empty by
     * construction. */
   def rangeSplitters(df: DataFrame, keyCol: String, parts: Int,
-      bucketChars: Int = 4, superChars: Int = 1,
-      scope: Option[CacheScope] = None): DataFrame = {
+      bucketChars: Int = 4, superChars: Int = 1): DataFrame = {
     require(parts >= 2 && parts <= 4096,
       s"parts must be in 2..4096, got $parts")
     require(bucketChars >= 1 && superChars >= 1 &&
@@ -176,7 +175,7 @@ object GlobalOrder {
     // persisted: the NDV-sized cumulative histogram feeds both the
     // 1-row total and the splitter filter (the Profiler count-table
     // convention) — without the cache the corpus pass re-executes
-    val cum = CacheScope.route(scope, hist
+    val cum = CacheScope.persist(hist
       .join(broadcast(bOff), Seq("__b"))
       .withColumn("cum", col("__off") + sum(col("__c")).over(wK)))
     val total = cum.agg(sum(col("__c")).cast("long").as("__n"))

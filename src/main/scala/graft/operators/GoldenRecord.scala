@@ -22,19 +22,19 @@ import org.apache.spark.sql.functions._
   * + equi-join mode selection (the x140 shape — a window partitioned
   * by (cluster, attr) would funnel a mega-cluster's whole value set
   * through one task; the two-stage form doesn't care). Member counts
-  * are one cluster-keyed agg. The count table persists via the
-  * CacheScope knob (three consumers). */
+  * are one cluster-keyed agg. The count table persists
+  * ([[CacheScope]]; three consumers). */
 object GoldenRecord {
 
   /** (cluster, n_members, attr, golden_value, support, n_values) —
     * attrs are profiled as rendered strings; pre-quantize floats. */
   def survivorship(records: DataFrame, clusterCol: String,
-      attrs: Seq[String], scope: Option[CacheScope] = None): DataFrame = {
+      attrs: Seq[String]): DataFrame = {
     require(attrs.nonEmpty, "no attributes to fuse")
     require(attrs.distinct.size == attrs.size, s"duplicate attrs $attrs")
     val members = records.groupBy(col(clusterCol).as("cluster"))
       .agg(count(lit(1)).as("n_members"))
-    val g = CacheScope.route(scope, records
+    val g = CacheScope.persist(records
       .select(col(clusterCol).as("cluster"),
         stack((lit(attrs.size) +: attrs.flatMap(a => Seq(
           lit(a), col(a).cast("string")))): _*).as(Seq("attr", "value")))

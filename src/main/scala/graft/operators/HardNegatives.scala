@@ -36,19 +36,18 @@ object HardNegatives {
     * ranked (score desc, doc_id). */
   def mine(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, k1: Double = 1.2, b: Double = 0.75,
-      topK: Int = 10, salts: Int = 32,
-      scope: Option[CacheScope] = None): DataFrame = {
+      topK: Int = 10, salts: Int = 32): DataFrame = {
     require(topK >= 1 && salts >= 1, "topK and salts must be >= 1")
     val qt = queries.select(col("query_id"),
       explode(col("terms")).as("term"))
     val terms = qt.select(col("term")).distinct()
-    val dl = CacheScope.route(scope, docs.select(col(idCol).as("doc_id"),
+    val dl = CacheScope.persist(docs.select(col(idCol).as("doc_id"),
       size(split(col(textCol), " ")).as("dl")))
     val st = dl.agg(count(lit(1)).as("n"),
       (sum(col("dl")) * lit(1.0) / count(lit(1))).as("avgdl"))
     // (doc, term) term frequencies over the union of query terms — the
     // broadcast semi-join keeps the filter map-side
-    val tf = CacheScope.route(scope, docs
+    val tf = CacheScope.persist(docs
       .select(col(idCol).as("doc_id"),
         explode(split(col(textCol), " ")).as("term"))
       .join(broadcast(terms), Seq("term"), "left_semi")

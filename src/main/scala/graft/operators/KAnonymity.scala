@@ -22,7 +22,7 @@ object KAnonymity {
     * `k_anonymous` (n >= k) + `share_of_corpus` (6dp micro-rounded).
     * `quasi` columns are evaluated against `df`. */
   def classReport(df: DataFrame, quasi: Seq[(String, Column)],
-      k: Long, scope: Option[CacheScope] = None): DataFrame = {
+      k: Long): DataFrame = {
     require(quasi.nonEmpty, "need at least one quasi-identifier")
     require(k >= 1, s"k must be >= 1, got $k")
     val names = quasi.map(_._1)
@@ -30,7 +30,7 @@ object KAnonymity {
       s"duplicate quasi-identifier names: $names")
     // persisted (classes-sized): the corpus total is its second
     // consumer — without it the corpus aggregation runs twice
-    val classes = CacheScope.route(scope, df
+    val classes = CacheScope.persist(df
       .groupBy(quasi.map { case (n, c) => c.as(n) }: _*)
       .agg(count(lit(1)).as("n")))
     val tot = classes.agg(sum(col("n")).as("nt"))

@@ -47,11 +47,11 @@ object KmvOverlap {
     * |est_jaccard − exact_jaccard| <= 0.1, > 3σ of the matches ~
     * Binomial(k, J) sampling noise at k = 256 (σ <= 0.5/√k ≈ 0.031). */
   def overlapEstimates(df: DataFrame, sourceCol: String, textCol: String,
-      n: Int = 4, k: Int = 256, scope: Option[CacheScope] = None): DataFrame = {
+      n: Int = 4, k: Int = 256): DataFrame = {
     require(k >= 2, "k must be >= 2")
     // 48-bit portable hash per (source, shingle) occurrence; KMV set
     // semantics absorb duplicates, no distinct pass needed
-    val hashes = CacheScope.route(scope, df
+    val hashes = CacheScope.persist(df
       .select(col(sourceCol).as("source"),
         explode(graft.expressions.TextExpressions
           .wordShingles(col(textCol), n)).as("sh"))
@@ -97,7 +97,7 @@ object KmvOverlap {
         col("est_jaccard"), col("est_inter"))
     // exact adjudication baseline: x60's inverted-index shape over the
     // SAME hashes (one corpus shuffle; totals derived from the index)
-    val bySrcSet = CacheScope.route(scope, hashes
+    val bySrcSet = CacheScope.persist(hashes
       .groupBy(col("h"))
       .agg(sort_array(collect_set(col("source"))).as("srcs")))
     val totals = bySrcSet

@@ -30,8 +30,7 @@ object KsDrift {
     * crit_micro the α-level Smirnov line for the given c(α) (1.358 =
     * α 0.05), drifted ⟺ d_micro > crit_micro. */
   def twoSample(df: DataFrame, inA: Column, keyCol: String,
-      cAlphaMicro: Long = 1358000L,
-      scope: Option[CacheScope] = None): DataFrame = {
+      cAlphaMicro: Long = 1358000L): DataFrame = {
     require(cAlphaMicro > 0, s"cAlphaMicro must be > 0, got $cAlphaMicro")
     val hist = df
       .filter(col(keyCol).isNotNull)
@@ -40,7 +39,7 @@ object KsDrift {
         sum(when(inA, 0L).otherwise(1L)).as("cb"))
     // persisted: the NDV-sized CDF table feeds the totals, the max,
     // and the argmax (the Profiler count-table convention)
-    val cums = CacheScope.route(scope,
+    val cums = CacheScope.persist(
       GlobalOrder.cumulativeSums(hist, "k", Seq("ca", "cb")))
     val tot = cums.agg(sum(col("ca")).cast("long").as("n_a"),
       sum(col("cb")).cast("long").as("n_b"))

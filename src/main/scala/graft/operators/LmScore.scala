@@ -40,22 +40,19 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   */
 object LmScore {
 
-  /** (doc_id, n_bigrams, avg_nll) per document with >= 1 bigram.
-    *
-    * Pass a [[CacheScope]] to bound the `uni`/`bg` residency to the
-    * caller's action instead of the session lifetime. */
+  /** (doc_id, n_bigrams, avg_nll) per document with >= 1 bigram. */
   def bigramNll(docs: DataFrame, idCol: String, textCol: String,
-      scoreScale: Int = 4, scope: Option[CacheScope] = None): DataFrame = {
+      scoreScale: Int = 4): DataFrame = {
     val D6 = DecimalType(18, 6)
     val toks = docs.select(col(idCol).as("doc_id"),
       split(col(textCol), " ").as("ts"))
     // persisted: consumed by BOTH the vocabulary-size count and the
     // scoring join — unpersisted, the corpus would tokenize+aggregate
     // twice (the table itself is vocab-sized, cheap to hold)
-    val uni = CacheScope.route(scope, toks.select(explode(col("ts")).as("w"))
+    val uni = CacheScope.persist(toks.select(explode(col("ts")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c1")))
     val vsz = uni.agg(count(lit(1)).as("vsz"))
-    val bg = CacheScope.route(scope, toks.select(col("doc_id"),
+    val bg = CacheScope.persist(toks.select(col("doc_id"),
       explode(transform(slice(col("ts"), lit(1), size(col("ts")) - 1),
         (w, i) => struct(w.as("w1"),
           element_at(col("ts"), i + 2).as("w2")))).as("b"))
@@ -102,11 +99,11 @@ object LmScore {
     * scoring join attaches three vocab-sized tables (AQE broadcasts
     * them when they fit). */
   def kneserNeyNll(docs: DataFrame, idCol: String, textCol: String,
-      scoreScale: Int = 4, scope: Option[CacheScope] = None): DataFrame = {
+      scoreScale: Int = 4): DataFrame = {
     val D6 = DecimalType(18, 6)
     val toks = docs.select(col(idCol).as("doc_id"),
       split(col(textCol), " ").as("ts"))
-    val bg = CacheScope.route(scope, toks.select(col("doc_id"),
+    val bg = CacheScope.persist(toks.select(col("doc_id"),
       explode(transform(slice(col("ts"), lit(1), size(col("ts")) - 1),
         (w, i) => struct(w.as("w1"),
           element_at(col("ts"), i + 2).as("w2")))).as("b"))
@@ -114,7 +111,7 @@ object LmScore {
     // the bigram TYPE table carries everything the model needs: c2 per
     // type, context totals + continuation fan-out per w1, preceding-
     // context fan-out per w2, and the type count T
-    val bi = CacheScope.route(scope,
+    val bi = CacheScope.persist(
       bg.groupBy("w1", "w2").agg(count(lit(1)).as("c2")))
     val ctx = bi.groupBy("w1")
       .agg(sum(col("c2")).as("c1"), count(lit(1)).as("n1p"))

@@ -32,12 +32,12 @@ object LshTuning {
     * 6). */
   def report(spark: SparkSession, df: DataFrame, idCol: String,
       textCol: String, n: Int = 4, threshold: Double = 0.5,
-      numHashes: Int = 32, bandsGrid: Seq[Int] = Seq(32, 16, 8, 4),
-      scope: Option[CacheScope] = None): DataFrame = {
+      numHashes: Int = 32,
+      bandsGrid: Seq[Int] = Seq(32, 16, 8, 4)): DataFrame = {
     require(bandsGrid.nonEmpty && bandsGrid.forall(b =>
       b >= 1 && numHashes % b == 0),
       s"every bands entry must divide numHashes=$numHashes")
-    val sigs = CacheScope.route(scope, df
+    val sigs = CacheScope.persist(df
       .select(col(idCol).as("doc"),
         graft.expressions.TextExpressions.wordShingles(col(textCol), n)
           .as("sh"))
@@ -45,7 +45,7 @@ object LshTuning {
       .withColumn("sigs", graft.expressions.TextExpressions
         .minhashSignatures(col("sh"), numHashes))
       .select(col("doc"), col("sigs")))
-    val truth = CacheScope.route(scope,
+    val truth = CacheScope.persist(
       SetSimJoin.jaccardJoinExact(df, idCol, textCol, n, threshold)
         .select(col("doc_a"), col("doc_b")))
     val nTrue = truth.count()

@@ -403,7 +403,7 @@ object Multimodal {
     *
     * Returns (media_type, id_a, id_b, hamming), id_a < id_b. */
   def payloadNearDups(packed: DataFrame, radius: Int = 3, bands: Int = 4,
-      blockBytes: Int = 4, scope: Option[CacheScope] = None): DataFrame = {
+      blockBytes: Int = 4): DataFrame = {
     require(radius < bands, "pigeonhole needs radius < bands")
     require(64 % bands == 0, "bands must divide 64")
     require(blockBytes > 0, "blockBytes must be positive")
@@ -416,7 +416,7 @@ object Multimodal {
     // with simhash64Native over hex-window tokens — MultimodalSpec
     // asserts the equality — but skips materializing the hex string and
     // the per-row block array).
-    val sigs = CacheScope.route(scope,
+    val sigs = CacheScope.persist(
       packed.filter(col("n_bytes") >= blockBytes)
         .select(col("media_type"), col("id"),
           graft.expressions.TextExpressions
@@ -565,9 +565,9 @@ object Multimodal {
     * stay strings end to end — no conv() to long, whose unsigned parse
     * nulls out hashes with the top bit set. */
   def perceptualNearDups(hashes: DataFrame, radius: Int = 3,
-      bands: Int = 4, scope: Option[CacheScope] = None): DataFrame = {
+      bands: Int = 4): DataFrame = {
     require(radius < bands, "pigeonhole needs radius < bands")
-    val h = CacheScope.route(scope,
+    val h = CacheScope.persist(
       hashes.filter(col("phash").isNotNull)
         .select(col("id"), col("phash")))
     val probe = h.select(length(col("phash"))).take(1)

@@ -42,10 +42,9 @@ object NbQuality {
   /** (doc_id, label, n_tokens, llr, pred) per document, llr rounded to
     * `scoreScale` decimals, pred decided on the exact decimal sum. */
   def naiveBayesScore(docs: DataFrame, idCol: String, textCol: String,
-      labelCol: String, scoreScale: Int = 4,
-      scope: Option[CacheScope] = None): DataFrame = {
+      labelCol: String, scoreScale: Int = 4): DataFrame = {
     val D6 = DecimalType(18, 6)
-    val toks = CacheScope.route(scope, docs
+    val toks = CacheScope.persist(docs
       .select(col(idCol).as("doc_id"), col(labelCol).cast("long").as("label"),
         explode(split(col(textCol), " ")).as("w")))
     val totals = toks.agg(

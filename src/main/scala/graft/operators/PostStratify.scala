@@ -32,8 +32,7 @@ object PostStratify {
     * pooled:global. Cells with `n_sample = 0` report their pool's
     * weight (their population mass is carried by the pool). */
   def weights(population: DataFrame, sample: DataFrame,
-      strataCols: Seq[String], minCell: Long = 20L,
-      scope: Option[CacheScope] = None): DataFrame = {
+      strataCols: Seq[String], minCell: Long = 20L): DataFrame = {
     require(strataCols.nonEmpty, "no strata columns")
     require(minCell >= 1, s"minCell must be >= 1, got $minCell")
     val ks = strataCols.map(col)
@@ -41,7 +40,7 @@ object PostStratify {
       .agg(count(lit(1)).as("n_pop"))
     val smp = sample.groupBy(ks: _*)
       .agg(count(lit(1)).as("n_sample"))
-    val cells = CacheScope.route(scope,
+    val cells = CacheScope.persist(
       pop.join(smp, strataCols, "left")
         .withColumn("n_sample", coalesce(col("n_sample"), lit(0L))))
     val fat = cells.filter(col("n_sample") >= minCell)
@@ -50,7 +49,7 @@ object PostStratify {
         expr(s"n_pop * 1000000L DIV n_sample"))
     val thin = cells.filter(col("n_sample") < minCell)
     val head = strataCols.head
-    val pools = CacheScope.route(scope, thin.groupBy(col(head))
+    val pools = CacheScope.persist(thin.groupBy(col(head))
       .agg(sum(col("n_pop")).as("pnp"), sum(col("n_sample")).as("pns")))
     val pooledSrc = thin.join(pools.filter(col("pns") >= minCell),
         Seq(head))

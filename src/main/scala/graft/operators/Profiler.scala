@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * mode is the two-stage max-count + equi-join form — a window
   * partitioned by only k column names would funnel each column's whole
   * distinct set through one task at scale. The count table feeds three
-  * consumers and persists via the CacheScope knob. avg_len_micro is a
+  * consumers and persists ([[CacheScope]]). avg_len_micro is a
   * truncating BIGINT product — exact while total rendered chars per
   * column stay under ~9*10^12 (terabytes of text in ONE column;
   * document-scale tables hit the distinct-shuffle wall long before).
@@ -104,8 +104,7 @@ object Profiler {
       lit(n), c.cast("string")) }): _*)
   }
 
-  def profile(df: DataFrame, cols: Seq[(String, Column)],
-      scope: Option[CacheScope] = None): DataFrame = {
+  def profile(df: DataFrame, cols: Seq[(String, Column)]): DataFrame = {
     // validate HERE too (not only in stackedValues): pass A's aggs run
     // first and a duplicate name would otherwise surface as an opaque
     // AnalysisException instead of the loud contract error
@@ -124,7 +123,7 @@ object Profiler {
     val rep = reportFromCounts(df
       .select(stackedValues(cols).as(Seq("column_name", "value")))
       .groupBy("column_name", "value")
-      .agg(count(lit(1)).as("c")), scope)
+      .agg(count(lit(1)).as("c")))
     rep.join(mm, Seq("column_name"))
       .select(col("column_name"), col("n_rows"), col("n_null"),
         col("n_distinct"), col("min_value"), col("max_value"),
@@ -138,9 +137,8 @@ object Profiler {
     * profiles without re-scanning history. No min_value/max_value
     * (native-order min/max needs pass A over the corpus; [[drift]] does
     * not read them). */
-  def reportFromCounts(g0: DataFrame,
-      scope: Option[CacheScope] = None): DataFrame = {
-    val g = CacheScope.route(scope, g0)
+  def reportFromCounts(g0: DataFrame): DataFrame = {
+    val g = CacheScope.persist(g0)
     val rollup = g.groupBy("column_name")
       .agg(sum(col("c")).as("n_rows"),
         sum(when(col("value").isNull, col("c")).otherwise(0L)).as("n_null"),

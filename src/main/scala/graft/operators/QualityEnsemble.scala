@@ -34,8 +34,7 @@ object QualityEnsemble {
     * evaluated against `df`'s columns and rounded to 6dp before
     * normalization; population variance. */
   def zscoreComposite(df: DataFrame, idCol: String, groupCol: String,
-      signals: Seq[(String, Column)],
-      scope: Option[CacheScope] = None): DataFrame = {
+      signals: Seq[(String, Column)]): DataFrame = {
     require(signals.nonEmpty, "need at least one signal")
     val D6 = DecimalType(18, 6)
     val names = signals.map(_._1)
@@ -45,7 +44,7 @@ object QualityEnsemble {
     // probe side of the stats join — unpersisted, the (possibly
     // expensive) signal chain upstream would evaluate twice. The
     // projection is narrow: id + group + one 6dp decimal per signal.
-    val base = CacheScope.route(scope, df.select(
+    val base = CacheScope.persist(df.select(
       (col(idCol) +: col(groupCol).as("__grp") +:
         signals.map { case (n, c) =>
           round(c.cast(DoubleType), 6).cast(D6).as(s"__s_$n") }): _*))

@@ -33,19 +33,18 @@ object Retention {
     * (explode of w offsets — fan-out = window length, never a range
     * scan), then one distinct + count per window. Exact, no sketches,
     * no windows-over-corpus; the (user, day) distinct frame persists
-    * via the CacheScope knob (one consumer per window + the observed-
+    * ([[CacheScope]]; one consumer per window + the observed-
     * day frame). Report days are epoch-day integers rendered as date
     * strings; only OBSERVED days report (no phantom trailing days).
     *
     * Output: (day, active_1, active_7, active_28) — a window with no
     * active users on an observed day reports 0. */
   def rollingActive(events: DataFrame, userCol: String, tsCol: String,
-      windows: Seq[Int] = Seq(1, 7, 28),
-      scope: Option[CacheScope] = None): DataFrame = {
+      windows: Seq[Int] = Seq(1, 7, 28)): DataFrame = {
     require(windows.nonEmpty && windows.forall(_ >= 1) &&
       windows.distinct.size == windows.size, s"bad windows $windows")
     val epoch = lit("1970-01-01").cast("date")
-    val ud = CacheScope.route(scope, events
+    val ud = CacheScope.persist(events
       .select(col(userCol).as("u"),
         datediff(to_date(col(tsCol)), epoch).as("d"))
       .distinct())

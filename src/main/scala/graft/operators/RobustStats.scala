@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * partitioned by group (never the corpus), the deviation table is a
   * re-aggregation of the count table, and the per-group (median, mad)
   * frame joins back to the corpus by BROADCAST. The count table feeds
-  * two consumers and persists via the CacheScope knob. */
+  * two consumers and persists ([[CacheScope]]). */
 object RobustStats {
 
   /** Lower median per grp of the (grp, v, c) count table as `out`. */
@@ -45,12 +45,11 @@ object RobustStats {
   /** (id, group, v, median, mad, flag) per input row; flag = |v -
     * median| > k * mad. */
   def madOutliers(df: DataFrame, idCol: String, groupCol: String,
-      valueCol: String, k: Int = 3,
-      scope: Option[CacheScope] = None): DataFrame = {
+      valueCol: String, k: Int = 3): DataFrame = {
     require(k >= 1, s"bad k $k")
     val base = df.select(col(idCol).as("id"), col(groupCol).as("grp"),
       col(valueCol).cast("long").as("v"))
-    val counts = CacheScope.route(scope, base.groupBy("grp", "v")
+    val counts = CacheScope.persist(base.groupBy("grp", "v")
       .agg(count(lit(1)).as("c")))
     val med = lowerMedian(counts, "median")
     val devCounts = counts.join(med, "grp")

@@ -81,18 +81,14 @@ object SemDedup {
     * component. Returns (id, cell, kept) for every input vector.
     *
     * The assignment+pair subplan is consumed twice (pairs feed both the
-    * component rounds and the verdict join), so it is persisted through
-    * `scope` when provided — the [[CacheScope]] hand-off — else left to
-    * Spark's shuffle reuse. */
+    * component rounds and the verdict join), so both are persisted
+    * ([[CacheScope]]). */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
-      k: Int, tau: Double, iters: Int = 5,
-      scope: Option[CacheScope] = None): DataFrame = {
+      k: Int, tau: Double, iters: Int = 5): DataFrame = {
     val cents = Similarity.trainKMeans(df, idCol, vecCol, k, iters)
-    val assigned0 = assignCells(df.select(col(idCol), col(vecCol)),
-      vecCol, cents)
-    val assigned = scope.map(_.persist(assigned0)).getOrElse(assigned0)
-    val pairs0 = clusterPairs(assigned, idCol, vecCol, tau)
-    val pairs = scope.map(_.persist(pairs0)).getOrElse(pairs0)
+    val assigned = CacheScope.persist(
+      assignCells(df.select(col(idCol), col(vecCol)), vecCol, cents))
+    val pairs = CacheScope.persist(clusterPairs(assigned, idCol, vecCol, tau))
     val comps = Dedup.connectedComponents(pairs, "id_a", "id_b")
     val dropped = comps.filter(col("v") =!= col("comp"))
       .select(col("v").as("__drop"))

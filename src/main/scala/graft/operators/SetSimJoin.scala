@@ -44,14 +44,13 @@ object SetSimJoin {
     * >= threshold, exactly. Columns: (doc_a, doc_b, jaccard), jaccard
     * the raw double ratio of the distinct-shingle counts.
     *
-    * The doc → shingle-array relation is persisted (routed through
-    * `scope` when given): it feeds the postings, the per-doc sizes and
+    * The doc → shingle-array relation is persisted ([[CacheScope]]):
+    * it feeds the postings, the per-doc sizes and
     * both sides of the verify join — unpersisted, Catalyst re-shingles
     * the corpus per consumer. */
   def jaccardJoinExact(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 4, threshold: Double = 0.3,
-      scope: Option[CacheScope] = None): DataFrame = {
-    val docs = shingleSets(df, idCol, textCol, n, scope)
+      n: Int = 4, threshold: Double = 0.3): DataFrame = {
+    val docs = shingleSets(df, idCol, textCol, n)
     val cands = prefixCandidates(docs, threshold)
     // exact verification on the full distinct-shingle arrays — the
     // candidate set is collision-bounded, so carrying two arrays per
@@ -70,8 +69,8 @@ object SetSimJoin {
 
   /** The (doc, distinct-shingle-array) relation both stages read. */
   private def shingleSets(df: DataFrame, idCol: String, textCol: String,
-      n: Int, scope: Option[CacheScope]): DataFrame =
-    CacheScope.route(scope, df
+      n: Int): DataFrame =
+    CacheScope.persist(df
       .select(col(idCol).as("doc"),
         graft.expressions.TextExpressions
           .wordShingles(col(textCol), n).as("shs"))
@@ -85,7 +84,7 @@ object SetSimJoin {
     * must scale ~10×/decade — asserted by counting, not prose). */
   def prefixCandidateCount(df: DataFrame, idCol: String, textCol: String,
       n: Int = 4, threshold: Double = 0.3): Long =
-    prefixCandidates(shingleSets(df, idCol, textCol, n, None), threshold)
+    prefixCandidates(shingleSets(df, idCol, textCol, n), threshold)
       .count()
 
   private def prefixCandidates(docs: DataFrame,

@@ -68,15 +68,15 @@ object Skew {
     *    straggler before the join runs.
     *
     * Scale shape: ONE key-count aggregation (map-side combined,
-    * key-cardinality-sized output, persisted via the CacheScope knob —
+    * key-cardinality-sized output, persisted ([[CacheScope]]) —
     * three consumers); top keys via sort-limit (TakeOrdered); buckets
     * re-aggregate the count table, not the corpus; the total rides a
     * 1-row broadcast. Metrics are truncating BIGINT micro divisions. */
   def keyProfile(df: DataFrame, keyCol: String, partitions: Int,
-      topK: Int, scope: Option[CacheScope] = None): DataFrame = {
+      topK: Int): DataFrame = {
     require(partitions >= 2, s"bad partition count $partitions")
     require(topK >= 1, s"bad topK $topK")
-    val counts = CacheScope.route(scope,
+    val counts = CacheScope.persist(
       df.select(col(keyCol).cast("string").as("k"))
         .groupBy("k").agg(count(lit(1)).as("n")))
     val total = counts.agg(sum(col("n")).as("total"))

@@ -68,8 +68,7 @@ object SortedNeighborhood {
     */
   def candidatePairs(df: DataFrame, idCol: String, keyCol: String,
       window: Int, bucketChars: Int = 4, superChars: Int = 1,
-      segSize: Long = 4096L, maxBucket: Long = 1L << 22,
-      scope: Option[CacheScope] = None): DataFrame = {
+      segSize: Long = 4096L, maxBucket: Long = 1L << 22): DataFrame = {
     require(window >= 2 && window <= 64,
       s"window must be in 2..64, got $window")
     require(bucketChars >= 1 && superChars >= 1 &&
@@ -84,7 +83,7 @@ object SortedNeighborhood {
     // persisted: the positioning chain ([[GlobalOrder.positions]] —
     // histograms + rank window) feeds both tilings; without the cache
     // it would re-execute per tiling
-    val positioned = CacheScope.route(scope, GlobalOrder
+    val positioned = CacheScope.persist(GlobalOrder
       .positions(df, idCol, keyCol, bucketChars, superChars, maxBucket)
       .select(col(idCol).as("__id"), col(keyCol).as("__k"),
         col("pos").as("__pos"))

@@ -37,18 +37,17 @@ object SourceOverlap {
     * The corpus is scanned ONCE: the inverted index (sh, srcs) is
     * persisted and feeds both the per-source totals and the pair counts
     * (without it Catalyst re-derives the index per consumer — three
-    * corpus scans+shingles). Cache residency lasts until the caller's
-    * action completes — the documented [[LmScore.bigramNll]] trade; pass
-    * a [[CacheScope]] to reclaim it deterministically afterwards. */
+    * corpus scans+shingles). Its lifetime is the caller's
+    * ([[CacheScope]]). */
   def overlapMatrix(df: DataFrame, sourceCol: String, textCol: String,
-      n: Int = 4, scope: Option[CacheScope] = None): DataFrame = {
+      n: Int = 4): DataFrame = {
     val srcs = col("srcs")
     // NO explicit distinct before the collect: collect_set dedups by
     // definition and its PARTIAL (map-side) aggregation absorbs repeat
     // (sh, source) occurrences before the wire — a prior .distinct()
     // here was a second corpus-sized shuffle buying nothing (r9: its
     // removal halved x60's shuffle traffic, hash-identical result)
-    val byShingle = CacheScope.route(scope, df
+    val byShingle = CacheScope.persist(df
       .select(col(sourceCol).as("source"),
         explode(graft.expressions.TextExpressions
           .wordShingles(col(textCol), n)).as("sh"))

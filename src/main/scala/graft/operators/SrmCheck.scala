@@ -34,8 +34,7 @@ object SrmCheck {
     * `(bucket, n, expected_micro, observed_micro, dev_micro, chi2)` —
     * chi2 is populated (6dp) only on the summary row, −1 elsewhere. */
   def goodnessOfFit(df: DataFrame, bucketCol: String,
-      weights: Seq[(String, Long)],
-      scope: Option[CacheScope] = None): DataFrame = {
+      weights: Seq[(String, Long)]): DataFrame = {
     require(weights.nonEmpty, "no declared buckets")
     require(weights.forall(_._2 > 0), "weights must be positive")
     require(weights.map(_._1).distinct.size == weights.size,
@@ -56,7 +55,7 @@ object SrmCheck {
       .groupBy("bucket").agg(count(lit(1)).as("o"))
     // declared LEFT join observed: zero-count buckets still contribute;
     // the anti side (observed but undeclared) is a loud corruption
-    val joined = CacheScope.route(scope,
+    val joined = CacheScope.persist(
       declared.join(obs, Seq("bucket"), "full")
         .select(
           when(col("w").isNull, raise_error(concat(

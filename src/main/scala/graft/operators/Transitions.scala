@@ -21,13 +21,12 @@ import org.apache.spark.sql.functions._
   * timestamp — partitioned by the high-cardinality user key, never
   * global), one (from, to) count aggregation (map-side combined,
   * states^2-bounded output), then a states-sized rollup join. The
-  * count matrix persists via the CacheScope knob (two consumers). */
+  * count matrix persists ([[CacheScope]]; two consumers). */
 object Transitions {
 
   /** (from_type, to_type, n, from_total, prob_micro). */
   def matrix(events: DataFrame, userCol: String, tsCol: String,
-      tieCol: String, typeCol: String, maxGapMinutes: Int = 30,
-      scope: Option[CacheScope] = None): DataFrame = {
+      tieCol: String, typeCol: String, maxGapMinutes: Int = 30): DataFrame = {
     require(maxGapMinutes >= 1, s"bad maxGapMinutes $maxGapMinutes")
     val w = Window.partitionBy("u").orderBy(col("us"), col("tie"))
     val pairs = events
@@ -37,7 +36,7 @@ object Transitions {
       .withColumn("to_us", lead(col("us"), 1).over(w))
       .filter(col("to_type").isNotNull &&
         col("to_us") - col("us") <= maxGapMinutes * 60000000L)
-    val counts = CacheScope.route(scope, pairs
+    val counts = CacheScope.persist(pairs
       .groupBy("from_type", "to_type")
       .agg(count(lit(1)).as("n")))
     val totals = counts.groupBy("from_type")

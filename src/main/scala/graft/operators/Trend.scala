@@ -18,16 +18,16 @@ import org.apache.spark.sql.functions._
   * Scale shape: ONE corpus (group, day) count aggregation (map-side
   * combined, time×groups-bounded output), then two tiny re-aggs over
   * the daily frame (means, then centered sums). The daily frame
-  * persists via the CacheScope knob (two consumers). A single-day
+  * persists ([[CacheScope]]; two consumers). A single-day
   * group has no slope (sxx = 0) and reports null, never a crash. */
 object Trend {
 
   /** (group, n_days, total_events, mean_per_day, slope_micro,
     * rel_slope_micro). */
   def dailyVolumeSlope(events: DataFrame, tsCol: String,
-      groupCol: String, scope: Option[CacheScope] = None): DataFrame = {
+      groupCol: String): DataFrame = {
     val epoch = lit("1970-01-01").cast("date")
-    val daily = CacheScope.route(scope, events
+    val daily = CacheScope.persist(events
       .select(col(groupCol).as("grp"),
         datediff(to_date(col(tsCol)), epoch).as("d"))
       .groupBy("grp", "d")

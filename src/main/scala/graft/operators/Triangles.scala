@@ -24,28 +24,27 @@ import org.apache.spark.sql.functions._
   * joins to attach degrees, the src-keyed wedge self-join, the (v, w)
   * closing equi-join, one corner count agg — every frame edge-list-
   * bounded, no windows, no collects, no cross joins. Degrees and the
-  * oriented edge list persist via the CacheScope knob (two and three
+  * oriented edge list persist ([[CacheScope]]; two and three
   * consumers). Ratios are truncating BIGINT micro. */
 object Triangles {
 
   /** (id, degree, triangles, cc_micro) per node; cc = 2t / d(d-1),
     * 0 when degree < 2. */
-  def perNode(edges: DataFrame, aCol: String, bCol: String,
-      scope: Option[CacheScope] = None): DataFrame = {
+  def perNode(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     val e = edges
       .select(least(col(aCol), col(bCol)).as("a"),
         greatest(col(aCol), col(bCol)).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull &&
         col("a") =!= col("b"))
       .distinct()
-    val deg = CacheScope.route(scope, e
+    val deg = CacheScope.persist(e
       .select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("degree")))
     val withDeg = e
       .join(deg.select(col("id").as("a"), col("degree").as("da")), "a")
       .join(deg.select(col("id").as("b"), col("degree").as("db")), "b")
     val aFirst = struct(col("da"), col("a")) < struct(col("db"), col("b"))
-    val o = CacheScope.route(scope, withDeg.select(
+    val o = CacheScope.persist(withDeg.select(
       when(aFirst, col("a")).otherwise(col("b")).as("src"),
       when(aFirst, col("db")).otherwise(col("da")).as("dd"),
       when(aFirst, col("b")).otherwise(col("a")).as("did")))

@@ -215,6 +215,7 @@ object Unigram {
       .select(explode(split(col("w"), "")).as("ch"))
       .filter(col("ch") =!= "").distinct()
       .collect().map(_.getString(0)).toSet
+    CacheScope.releaseCheckpoint(words) // the rest runs on the driver
     // head substrings (len 1..maxPieceLen), occurrence-weighted —
     // codepoint-sliced exactly as the old substr()-over-length() HOF
     val subCounts: Map[String, Long] = {

@@ -105,12 +105,12 @@ object ZipfFit {
     * Scale shape: one docs-sized rank window per source, one corpus
     * (source, word) min aggregation, then everything runs on docs-/
     * points-sized frames. The ranked-docs frame feeds two consumers
-    * (token curve + first-occurrence agg), so it persists via `scope`
-    * ([[CacheScope]] knob, the x40 residency trade). */
+    * (token curve + first-occurrence agg), so it persists
+    * ([[CacheScope]]). */
   def heapsReport(df: DataFrame, idCol: String, textCol: String,
-      sourceCol: String, scope: Option[CacheScope] = None): DataFrame = {
+      sourceCol: String): DataFrame = {
     val wRank = Window.partitionBy(col("source")).orderBy(col("doc"))
-    val ranked = CacheScope.route(scope, df
+    val ranked = CacheScope.persist(df
       .select(col(sourceCol).as("source"), col(idCol).as("doc"),
         split(col(textCol), " ").as("ts"))
       .withColumn("dr", row_number().over(wRank).cast("long"))

@@ -3,8 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DecimalType, StructType}
+import graft.operators.CacheScope
 
 /** Structured Streaming surface over the `events` table.
   *
@@ -12,8 +13,9 @@ import org.apache.spark.sql.types.{DecimalType, StructType}
   * path: the same parquet drives a file-source stream, so incremental
   * models can be re-expressed as streaming queries with watermarks. For
   * synchronous verification we run the stream to completion against a
-  * memory sink (`processAllAvailable`), which makes the result equal to
-  * the batch computation and therefore oracle-checkable.
+  * memory sink (an AvailableNow run, or `processAllAvailable`), which
+  * makes the result equal to the batch computation and therefore
+  * oracle-checkable.
   *
   * The append-only `streaming*Ledger` family (plus [[streamingHeavyHitters]]
   * and [[streamingCountMin]]) shares ONE run loop, `runLedger`; each
@@ -91,10 +93,9 @@ object EventStreams {
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("hour"),
         col("event_type"), col("n"), col("sum_value"))
     val name = "graft_stream_hourly"
-    val q = withStatePartitions(spark, 8)(
+    runToEnd(withStatePartitions(spark, 8)(
       agg.writeStream.outputMode("complete").format("memory")
-        .queryName(name).start())
-    try q.processAllAvailable() finally q.stop()
+        .queryName(name).trigger(Trigger.AvailableNow()).start()))
     spark.table(name).orderBy(col("hour"), col("event_type"))
   }
 
@@ -112,10 +113,9 @@ object EventStreams {
       .dropDuplicatesWithinWatermark("event_id")
       .select(col("event_id"), col("event_type"))
     val name = "graft_stream_dedup"
-    val q = withStatePartitions(spark, 8)(
+    runToEnd(withStatePartitions(spark, 8)(
       dedup.writeStream.outputMode("append").format("memory")
-        .queryName(name).start())
-    try q.processAllAvailable() finally q.stop()
+        .queryName(name).trigger(Trigger.AvailableNow()).start()))
     spark.table(name).groupBy(col("event_type"))
       .agg(count(lit(1)).as("n")).orderBy(col("event_type"))
   }
@@ -314,25 +314,33 @@ object EventStreams {
       schema: StructType, ledgerTable: String, checkpointDir: String)(
       partial: (DataFrame, Long) => DataFrame): Unit = {
     val stream = spark.readStream.schema(schema).parquet(landingDir)
+    // one cache scope per microbatch: the partial's internal persists
+    // (a ledger step's batch postings) are released once the append
+    // commits, not left to the session
     val fb: (DataFrame, Long) => Unit = (batch, batchId) =>
-      partial(batch, batchId)
-        .transform(compactForAppend)
-        .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
+      CacheScope.withScope { _ =>
+        partial(batch, batchId)
+          .transform(compactForAppend)
+          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
+      }
+    runToEnd(stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch(fb)
-      .start()
-    // stop only a query still running (interrupt or failure): stopping a
-    // cleanly terminated one cancels its finished job group, which Spark
-    // logs as "Failed to cancel job group" twice per run
-    try q.awaitTermination() finally if (q.isActive) q.stop()
+      .start())
     // the appends above went through the cloned microbatch session; the
     // CALLER's session still caches the old ledger file listing — without
     // this refresh a post-run read sees the pre-run row count
     if (spark.catalog.tableExists(ledgerTable))
       spark.catalog.refreshTable(ledgerTable)
   }
+
+  /** Wait for an AvailableNow query to finish. Stop only a query still
+    * running (interrupt or failure): stopping a cleanly terminated one
+    * cancels its finished job group, which Spark logs as "Failed to
+    * cancel job group" twice per run. */
+  private def runToEnd(q: StreamingQuery): Unit =
+    try q.awaitTermination() finally if (q.isActive) q.stop()
 
   /** The dedup-ledger partial: each microbatch passed through
     * `step(batch, kept)` against the ledger's kept postings so far;

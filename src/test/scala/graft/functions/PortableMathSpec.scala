@@ -41,6 +41,23 @@ class PortableMathSpec extends AnyFunSuite {
     }
   }
 
+  test("round4HalfUp == BigDecimal HALF_UP on large-magnitude .5-grid ties") {
+    // the multiply error grows with |x| (about one ulp of x·10⁴), so a
+    // fixed guard band misroutes ties once |x| ≳ 10³: these three went
+    // the wrong way under the old 1e-9 band
+    for (x <- Seq(6570.77925, 88643.68675, 605543.12565))
+      assert(PortableMath.round4HalfUp(x) == ref(x), s"mismatch at x=$x")
+    val rnd = new scala.util.Random(8675309L)
+    for (e <- 1 to 12; _ <- 1 to 20000) {
+      // the tie (m + 0.5)·10⁻⁴ with |x| in [10^(e-1), 10^e)
+      val m = (math.pow(10, e - 1 + rnd.nextDouble()) * 1e4).toLong
+      val b = BigDecimal(BigInt(m) * 10 + 5, 5).toDouble
+      for (x <- Seq(b, -b, math.nextUp(b), math.nextDown(b)))
+        assert(PortableMath.round4HalfUp(x) == ref(x),
+          s"mismatch at x=$x (tie $b)")
+    }
+  }
+
   test("round4HalfUp canonicalizes tiny negatives to +0.0") {
     val got = PortableMath.round4HalfUp(-1e-9)
     assert(got == 0.0 &&

@@ -63,7 +63,7 @@ class Bm25Spec extends SparkSpec {
   test("n_hit_terms counts distinct matched query terms; scope releases") {
     val out = CacheScope.withScope { sc =>
       Bm25.topDocs(docs.toDF("doc_id", "text"), "doc_id", "text",
-        Seq("x", "y"), scope = Some(sc)).collect()
+        Seq("x", "y")).collect()
     }
     val hits = out.map(r => r.getAs[Long]("doc_id") ->
       r.getAs[Long]("n_hit_terms")).toMap

@@ -20,6 +20,21 @@ class BpeSpec extends SparkSpec {
       Seq(("l", "o", 4L), ("lo", "w", 4L), ("e", "s", 2L)), m.merges)
   }
 
+  test("train leaves persisted only the checkpoint its Model reads") {
+    import spark.implicits._
+    val docs = Seq((1L, "low low lower"), (2L, "low newest newest"))
+      .toDF("doc_id", "text")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val m = Bpe.train(docs, "text", topK = 50, numMerges = 3)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val read = Seq(m.wordSubtokens, m.wordSyms)
+      .flatMap(_.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }).toSet
+    assert(read.size == 1, s"the Model should read one checkpoint: $read")
+    assert(left == read, s"persisted after train: $left; Model reads $read")
+  }
+
   test("greedy left-to-right non-overlapping merge application") {
     import spark.implicits._
     val docs = Seq((1L, "aaa")).toDF("doc_id", "text")

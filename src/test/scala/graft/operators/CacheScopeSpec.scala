@@ -22,7 +22,7 @@ class CacheScopeSpec extends SparkSpec {
     val unscoped = LmScore.bigramNll(docs, "doc_id", "text").collect().toSeq
     spark.catalog.clearCache()
     val scoped = CacheScope.withScope { sc =>
-      val out = LmScore.bigramNll(docs, "doc_id", "text", scope = Some(sc))
+      val out = LmScore.bigramNll(docs, "doc_id", "text")
         .collect().toSeq
       during = CacheScope.cachedBlockCount(spark)
       assert(sc.trackedCount == 2, "uni + bg should both route via the scope")
@@ -46,10 +46,10 @@ class CacheScopeSpec extends SparkSpec {
       threshold = 0.1).orderBy("doc_a", "doc_b").collect().toSeq
     spark.catalog.clearCache()
     val (gotO, gotJ) = CacheScope.withScope { sc =>
-      (SourceOverlap.overlapMatrix(src, "source", "text", n = 2,
-          scope = Some(sc)).orderBy("src_a", "src_b").collect().toSeq,
-        Dedup.jaccardPairs(docs, "doc_id", "text", n = 2, threshold = 0.1,
-          scope = Some(sc)).orderBy("doc_a", "doc_b").collect().toSeq)
+      (SourceOverlap.overlapMatrix(src, "source", "text", n = 2)
+          .orderBy("src_a", "src_b").collect().toSeq,
+        Dedup.jaccardPairs(docs, "doc_id", "text", n = 2, threshold = 0.1)
+          .orderBy("doc_a", "doc_b").collect().toSeq)
     }
     assert(CacheScope.cachedBlockCount(spark) <= baseline,
       "cached blocks survived release()")
@@ -64,44 +64,43 @@ class CacheScopeSpec extends SparkSpec {
     // (name, scoped-run → collected result, unscoped-run)
     val cases: Seq[(String, CacheScope => Seq[String], () => Seq[String])] =
       Seq(
-        ("ChiSquare", sc => ChiSquare.audit(tbl, Seq(("src", "lang")),
-          scope = Some(sc)).orderBy("pair").collect().map(_.toString).toSeq,
+        ("ChiSquare", sc => ChiSquare.audit(tbl, Seq(("src", "lang")))
+          .orderBy("pair").collect().map(_.toString).toSeq,
           () => ChiSquare.audit(tbl, Seq(("src", "lang")))
             .orderBy("pair").collect().map(_.toString).toSeq),
-        ("FdAudit", sc => FdAudit.audit(tbl, Seq((Seq("src"), "lang")),
-          scope = Some(sc)).orderBy("candidate").collect()
-          .map(_.toString).toSeq,
+        ("FdAudit", sc => FdAudit.audit(tbl, Seq((Seq("src"), "lang")))
+          .orderBy("candidate").collect().map(_.toString).toSeq,
           () => FdAudit.audit(tbl, Seq((Seq("src"), "lang")))
             .orderBy("candidate").collect().map(_.toString).toSeq),
         ("SrmCheck", sc => SrmCheck.goodnessOfFit(tbl, "src",
-          (0 until 4).map(i => (s"s$i", 1L)), scope = Some(sc))
+          (0 until 4).map(i => (s"s$i", 1L)))
           .orderBy("bucket").collect().map(_.toString).toSeq,
           () => SrmCheck.goodnessOfFit(tbl, "src",
             (0 until 4).map(i => (s"s$i", 1L)))
             .orderBy("bucket").collect().map(_.toString).toSeq),
-        ("KsDrift", sc => KsDrift.twoSample(tbl, col("y"), "k",
-          scope = Some(sc)).collect().map(_.toString).toSeq,
+        ("KsDrift", sc => KsDrift.twoSample(tbl, col("y"), "k")
+          .collect().map(_.toString).toSeq,
           () => KsDrift.twoSample(tbl, col("y"), "k")
             .collect().map(_.toString).toSeq),
         ("GainsTable", sc => GainsTable.byRank(tbl, "id", "k", "y",
-          parts = 4, scope = Some(sc)).orderBy("bucket").collect()
+          parts = 4).orderBy("bucket").collect()
           .map(_.toString).toSeq,
           () => GainsTable.byRank(tbl, "id", "k", "y", parts = 4)
             .orderBy("bucket").collect().map(_.toString).toSeq),
         ("PostStratify", sc => PostStratify.weights(tbl,
-          tbl.filter(col("id") <= 40), Seq("src"), minCell = 2L,
-          scope = Some(sc)).orderBy("src").collect().map(_.toString).toSeq,
+          tbl.filter(col("id") <= 40), Seq("src"), minCell = 2L)
+          .orderBy("src").collect().map(_.toString).toSeq,
           () => PostStratify.weights(tbl, tbl.filter(col("id") <= 40),
             Seq("src"), minCell = 2L)
             .orderBy("src").collect().map(_.toString).toSeq),
         ("SortedNeighborhood", sc => SortedNeighborhood.candidatePairs(
-          tbl, "id", "k", window = 3, segSize = 8L, scope = Some(sc))
+          tbl, "id", "k", window = 3, segSize = 8L)
           .orderBy("id_a", "id_b").collect().map(_.toString).toSeq,
           () => SortedNeighborhood.candidatePairs(tbl, "id", "k",
             window = 3, segSize = 8L)
             .orderBy("id_a", "id_b").collect().map(_.toString).toSeq),
         ("GlobalOrder.rangeSplitters", sc => GlobalOrder.rangeSplitters(
-          tbl, "k", parts = 4, scope = Some(sc)).orderBy("split_idx")
+          tbl, "k", parts = 4).orderBy("split_idx")
           .collect().map(_.toString).toSeq,
           () => GlobalOrder.rangeSplitters(tbl, "k", parts = 4)
             .orderBy("split_idx").collect().map(_.toString).toSeq))
@@ -116,6 +115,76 @@ class CacheScopeSpec extends SparkSpec {
       assert(CacheScope.cachedBlockCount(spark) <= baseline,
         s"$name left cached blocks after release()")
       assert(got == unscoped(), s"$name: scoping changed results")
+    }
+  }
+
+  test("nested blocks: the inner block releases only its own persists") {
+    import spark.implicits._
+    spark.catalog.clearCache()
+    val baseline = CacheScope.cachedBlockCount(spark)
+    CacheScope.withScope { outer =>
+      val a = CacheScope.persist((1 to 50).toDF("v"))
+      a.count()
+      var b: org.apache.spark.sql.DataFrame = null
+      CacheScope.withScope { inner =>
+        b = CacheScope.persist((1 to 60).toDF("v"))
+        b.count()
+        assert(inner.trackedCount == 1 && outer.trackedCount == 1)
+      }
+      assert(!b.storageLevel.isValid, "inner block kept its own persist")
+      assert(a.storageLevel.isValid, "inner block released the outer one")
+      // the outer scope is current again once the inner block exits
+      CacheScope.persist((1 to 70).toDF("v")).count()
+      assert(outer.trackedCount == 2)
+    }
+    assert(CacheScope.cachedBlockCount(spark) <= baseline,
+      "cached blocks survived the outer release()")
+  }
+
+  test("a persist made on another thread is not captured by the scope") {
+    import spark.implicits._
+    var other: org.apache.spark.sql.DataFrame = null
+    CacheScope.withScope { sc =>
+      val t = new Thread(() => other = CacheScope.persist((1 to 40).toDF("v")))
+      t.start()
+      t.join()
+      assert(sc.trackedCount == 0, "another thread's persist was tracked")
+    }
+    assert(other.storageLevel.isValid,
+      "the scope released a persist it did not own")
+    other.unpersist(blocking = true)
+  }
+
+  test("Dedup's internal persists are tracked by the scope and reclaimed") {
+    import spark.implicits._
+    def vec(xs: Double*) = xs.map(_.toFloat).toArray
+    val emb = Seq(1L -> vec(1, 0, 0, 0), 2L -> vec(0.99, 0.141, 0, 0),
+      3L -> vec(0, 0, 1, 0)).toDF("vec_id", "embedding")
+    val cases: Seq[(String, () => Seq[String])] = Seq(
+      ("minhashLsh", () => Dedup.minhashLsh(docs, "doc_id", "text", n = 2)
+        .orderBy("doc_a", "doc_b").collect().map(_.toString).toSeq),
+      ("removeRepeatedSpans", () => Dedup.removeRepeatedSpans(docs,
+        "doc_id", "text", n = 3).orderBy("doc_id").collect()
+        .map(_.toString).toSeq),
+      ("embeddingLshPairs", () => Dedup.embeddingLshPairs(emb, "vec_id",
+        "embedding", threshold = 0.9, dim = 4, numPlanes = 8, numBands = 8)
+        .orderBy("id_a", "id_b").collect().map(_.toString).toSeq),
+      ("embeddingLshPairsScaled", () => Dedup.embeddingLshPairsScaled(emb,
+        "vec_id", "embedding", threshold = 0.9, dim = 4, numBands = 4,
+        minBits = 1, maxBits = 4).orderBy("id_a", "id_b").collect()
+        .map(_.toString).toSeq))
+    for ((name, run) <- cases) {
+      val unscoped = run()
+      spark.catalog.clearCache()
+      val baseline = CacheScope.cachedBlockCount(spark)
+      var tracked = -1
+      val got = CacheScope.withScope { sc =>
+        val out = run(); tracked = sc.trackedCount; out
+      }
+      assert(tracked == 1, s"$name tracked $tracked persists, not 1")
+      assert(CacheScope.cachedBlockCount(spark) <= baseline,
+        s"$name left cached blocks after release()")
+      assert(got == unscoped, s"$name: scoping changed results")
     }
   }
 

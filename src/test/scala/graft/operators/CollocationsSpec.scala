@@ -60,7 +60,7 @@ class CollocationsSpec extends SparkSpec {
     val before = CacheScope.cachedBlockCount(spark)
     val scoped = CacheScope.withScope { sc =>
       Collocations.topPmi(docs.toDF("doc_id", "text"), "text",
-        minCount = 1L, topK = 100, scope = Some(sc)).collect()
+        minCount = 1L, topK = 100).collect()
     }
     assert(CacheScope.cachedBlockCount(spark) == before)
     assert(scoped.map(_.toString).sorted.toSeq ==

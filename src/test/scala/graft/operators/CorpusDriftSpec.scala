@@ -75,8 +75,8 @@ class CorpusDriftSpec extends SparkSpec {
 
   test("n_tokens equals the source token count; scope releases") {
     val out = CacheScope.withScope { sc =>
-      CorpusDrift.jsDivergencePerSource(fixture, "source", "text", k = 3,
-        scope = Some(sc)).collect()
+      CorpusDrift.jsDivergencePerSource(fixture, "source", "text", k = 3)
+        .collect()
     }
     val n = out.map(r =>
       r.getAs[String]("source") -> r.getAs[Long]("n_tokens")).toMap

@@ -393,8 +393,7 @@ class DedupSpec extends SparkSpec {
     val baseline = CacheScope.cachedBlockCount(spark)
     val kept = CacheScope.withScope { s =>
       Dedup.semanticDecontaminate(corpus, bench, "vec_id", "embedding",
-        threshold = 0.9, dim = 4, numPlanes = 16, numBands = 8,
-        scope = Some(s))
+        threshold = 0.9, dim = 4, numPlanes = 16, numBands = 8)
         .select("vec_id").collect().map(_.getLong(0)).toSet
     }
     assert(kept == Set(2L), kept)

@@ -48,7 +48,7 @@ class DsirSpec extends SparkSpec {
   test("scores are deterministic across runs and scope-released") {
     val run = () => CacheScope.withScope { sc =>
       Dsir.importanceScores(fixture, "doc_id", "text",
-        isTarget = col("is_t"), buckets = 64, scope = Some(sc))
+        isTarget = col("is_t"), buckets = 64)
         .orderBy("doc_id").collect().toSeq
     }
     assert(run() == run())

@@ -76,8 +76,7 @@ class KmvOverlapSpec extends SparkSpec {
     spark.catalog.clearCache()
     val before = CacheScope.cachedBlockCount(spark)
     val scoped = CacheScope.withScope { sc =>
-      KmvOverlap.overlapEstimates(docs, "source", "text",
-        scope = Some(sc)).collect()
+      KmvOverlap.overlapEstimates(docs, "source", "text").collect()
     }
     assert(CacheScope.cachedBlockCount(spark) == before)
     assert(scoped.map(_.toString).sorted.toSeq ==

@@ -27,6 +27,16 @@ class UnigramSpec extends SparkSpec {
       .select(col("doc_id"), col("text")))
   }
 
+  test("train leaves no checkpoint persisted (its Model is a Map)") {
+    import spark.implicits._
+    val docs = Seq((1L, "low low lower"), (2L, "low newest newest"))
+      .toDF("doc_id", "text")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Unigram.train(docs, "text")
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"persisted after train: $left")
+  }
+
   test("local Viterbi == the HOF executable spec on every corpus word") {
     // the encode path runs viterbiPiecesLocal (mapPartitions); the HOF
     // viterbiPieces stays as the executable specification the oracle

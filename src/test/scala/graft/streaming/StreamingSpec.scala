@@ -167,6 +167,32 @@ class StreamingSpec extends SparkSpec {
     assert(spark.table("strldgt.ledger").count() == 33) // +2 docs x 4 bands
   }
 
+  test("dedup ledger runner releases each batch's postings persist") {
+    import spark.implicits._
+    import graft.operators.CacheScope
+    val landing = java.nio.file.Files.createTempDirectory("strldg_c").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("strldg_cck").toString
+    spark.sql("CREATE DATABASE IF NOT EXISTS strldgc")
+    spark.sql("DROP TABLE IF EXISTS strldgc.ledger")
+    spark.catalog.clearCache()
+    val baseline = CacheScope.cachedBlockCount(spark)
+    // the x58 shape: two AvailableNow runs, the second over new files
+    Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "x y z w q"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(landing)
+    val schema = spark.read.parquet(landing).schema
+    def run(): Unit = EventStreams.streamingDedupLedger(
+      spark, landing, schema, "strldgc.ledger", ckpt, "doc_id", "text")
+    run()
+    Seq((4L, "a b c d e"), (5L, "p q r s t"))
+      .toDF("doc_id", "text").write.mode("append").parquet(landing)
+    run()
+    assert(spark.table("strldgc.ledger").count() == 20) // 5 docs x 4 bands
+    // <= not ==: the ContextCleaner may drain other suites' stale blocks
+    // meanwhile; a leaked postings persist adds one cached RDD per batch
+    assert(CacheScope.cachedBlockCount(spark) <= baseline,
+      "a microbatch's ledger-step persist outlived its append")
+  }
+
   test("streaming embedding ledger equals the batch ledger on the same batches") {
     import spark.implicits._
     import graft.operators.Dedup

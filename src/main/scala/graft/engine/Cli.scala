@@ -30,13 +30,9 @@ object Cli {
       case (None, _) => project0
     }
     val out = args.toList match {
-      case "run" :: rest =>
+      case (cmd @ ("run" | "build")) :: rest =>
         val res = project.run(selectArg(rest),
-          exclude = excludeArg(rest),
-          fullRefresh = rest.contains("--full-refresh"))
-        res.results.map(r => s"${r.status.toUpperCase} ${r.id} ${r.durationMs}ms")
-      case "build" :: rest =>
-        val res = project.run(selectArg(rest), blockOnTestFailure = true,
+          blockOnTestFailure = cmd == "build",
           exclude = excludeArg(rest),
           fullRefresh = rest.contains("--full-refresh"))
         res.results.map(r => s"${r.status.toUpperCase} ${r.id} ${r.durationMs}ms")

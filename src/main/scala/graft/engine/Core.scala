@@ -19,7 +19,13 @@ final case class Target(
   * (`dbt_project.yml:32-36`) with per-model `table` overrides
   * (`models/example/my_first_dbt_model.sql:10`); the rest are declared
   * capability slots (seeds/snapshots dirs, incremental). */
-sealed trait Materialization
+sealed trait Materialization {
+  /** Physical: the model writes a catalog relation that consumers read.
+    * Views and ephemerals are not physical — consumers inline their plan.
+    * The one definition of that test. */
+  private[engine] def isPhysical: Boolean =
+    this != Materialization.View && this != Materialization.Ephemeral
+}
 object Materialization {
   case object View extends Materialization
   case object Table extends Materialization
@@ -122,26 +128,78 @@ final case class SourceDef(
   def name: String = s"$sourceName.$tableName"
   def id: String = s"source.$sourceName.$tableName"
 }
-sealed trait SourceLocation
-final case class ParquetPath(path: String) extends SourceLocation
-final case class CatalogTable(table: String) extends SourceLocation
+/** Where a source's rows live. Each location states how it is read once,
+  * in [[reader]]: the batch and streaming reads, the compiled relation and
+  * the docs' physical name all derive from it. */
+sealed trait SourceLocation {
+  /** `Left(table)` for a catalog table, else the file read. */
+  private[engine] def reader: Either[String, FileRead]
+}
+final case class ParquetPath(path: String) extends SourceLocation {
+  private[engine] def reader = Right(FileRead("parquet", path))
+}
+final case class CatalogTable(table: String) extends SourceLocation {
+  private[engine] def reader = Left(table)
+}
 /** CSV source (header/schema-inference defaults match `spark.read.csv`
   * conventions for raw drops; pass an explicit DDL `schema` at scale —
   * inference scans the data twice). */
 final case class CsvPath(path: String, header: Boolean = true,
-    schema: Option[String] = None) extends SourceLocation
+    schema: Option[String] = None) extends SourceLocation {
+  private[engine] def reader = Right(FileRead("csv", path,
+    Map("header" -> header.toString) ++
+      (if (schema.isEmpty) Map("inferSchema" -> "true") else Map.empty),
+    schema))
+}
 /** JSON-lines source; same schema guidance as [[CsvPath]]. */
 final case class JsonPath(path: String,
-    schema: Option[String] = None) extends SourceLocation
+    schema: Option[String] = None) extends SourceLocation {
+  private[engine] def reader = Right(FileRead("json", path, schema = schema))
+}
 /** ORC source (columnar twin of [[ParquetPath]] — Spark's built-in
   * reader, predicate pushdown and column pruning included). */
-final case class OrcPath(path: String) extends SourceLocation
+final case class OrcPath(path: String) extends SourceLocation {
+  private[engine] def reader = Right(FileRead("orc", path))
+}
 /** Raw-binary source (`binaryFile`): one row per file with (path,
   * modificationTime, length, content) — how image/audio/video corpora
   * land before [[graft.operators.Multimodal]] packs them. Optional glob
   * (e.g. `*.jpg`) filters the directory scan. */
 final case class BinaryPath(path: String,
-    glob: Option[String] = None) extends SourceLocation
+    glob: Option[String] = None) extends SourceLocation {
+  private[engine] def reader = Right(FileRead("binaryFile", path,
+    glob.map("pathGlobFilter" -> _).toMap))
+}
+
+/** A path-based source read: Spark format, path, reader options (shared
+  * by the batch and the streaming read; `inferSchema` is inert once the
+  * stream fixes the schema) and an optional DDL schema. */
+private[engine] final case class FileRead(format: String, path: String,
+    options: Map[String, String] = Map.empty, schema: Option[String] = None) {
+  def batch(spark: SparkSession): DataFrame = {
+    val r = spark.read.format(format).options(options)
+    schema.fold(r)(r.schema).load(path)
+  }
+
+  /** File stream with the batch read's schema (Structured Streaming
+    * requires one upfront). A path naming one FILE streams its parent
+    * directory under a glob filter of that name — the file source wants a
+    * directory — unless the location brings its own glob. */
+  def stream(spark: SparkSession): DataFrame = {
+    val f = new java.io.File(path)
+    val (dir, opts) =
+      if (f.isFile && !options.contains("pathGlobFilter"))
+        (f.getParent, options + ("pathGlobFilter" -> f.getName))
+      else (path, options)
+    spark.readStream
+      .schema(schema.fold(batch(spark).schema)(
+        org.apache.spark.sql.types.StructType.fromDDL))
+      .options(opts).format(format).load(dir)
+  }
+
+  /** The relation a compiled SQL text reads: ``format.`path` ``. */
+  def relation: String = s"$format.`$path`"
+}
 
 /** A seed: CSV loaded as a table (`dbt_project.yml:17`). */
 final case class Seed(

@@ -48,12 +48,7 @@ object Docs {
       case m: Model => Some(project.physicalName(m))
       case s: Seed => Some(project.physicalName(s))
       case s: Snapshot => Some(project.physicalName(s))
-      case SourceDef(_, _, CatalogTable(t)) => Some(t)
-      case SourceDef(_, _, ParquetPath(p)) => Some(p)
-      case SourceDef(_, _, CsvPath(p, _, _)) => Some(p)
-      case SourceDef(_, _, JsonPath(p, _)) => Some(p)
-      case SourceDef(_, _, OrcPath(p)) => Some(p)
-      case SourceDef(_, _, BinaryPath(p, _)) => Some(p)
+      case sd: SourceDef => Some(sd.location.reader.fold(identity, _.path))
       case _ => None
     }
 

@@ -120,14 +120,11 @@ object Macros {
   def compactLedger(spark: SparkSession,
       kwargs: Map[String, String]): Seq[String] = {
     import graft.streaming.EventStreams
-    val table = kwargs.get("table") match {
-      case Some(t) => t
-      case None => return Seq("compact_ledger: pass table (e.g. " +
-        "--args '{table: mydb.ledger, shape: batch, keys: hour, " +
-        "vals: n_events}')")
-    }
-    if (!spark.catalog.tableExists(table))
-      return Seq(s"compact_ledger: table $table does not exist")
+    val usage = usageErrors(spark, "compact_ledger", kwargs, Seq("table"),
+      "{table: mydb.ledger, shape: batch, keys: hour, vals: n_events}",
+      Seq("table" -> "table"))
+    if (usage.nonEmpty) return usage
+    val table = kwargs("table")
     val ledger = spark.table(table)
     val compacted = kwargs.get("shape") match {
       case Some("batch") =>
@@ -176,11 +173,7 @@ object Macros {
           "postings|set|sample|sessions|burstiness, " +
           s"got ${other.getOrElse("(none)")}")
     }
-    val before = ledger.count()
-    val pinned = compacted.localCheckpoint()
-    val after = pinned.count()
-    pinned.write.mode("overwrite").format("parquet").saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    val (before, after) = overwriteInPlace(spark, table, compacted)
     Seq(s"compacted $table: $before rows -> $after rows")
   }
 
@@ -197,18 +190,12 @@ object Macros {
     * x115 intake ledger. */
   def applyTakedown(spark: SparkSession,
       kwargs: Map[String, String]): Seq[String] = {
-    val required = Seq("table", "deletes", "id", "shard")
-    val missing = required.filterNot(kwargs.contains)
-    if (missing.nonEmpty)
-      return Seq("apply_takedown: pass " + missing.mkString(", ") +
-        " (e.g. --args '{table: corpus.shards, deletes: gov.takedowns, " +
-        "id: doc_id, shard: shard}')")
+    val usage = usageErrors(spark, "apply_takedown", kwargs,
+      Seq("table", "deletes", "id", "shard"),
+      "{table: corpus.shards, deletes: gov.takedowns, id: doc_id, shard: shard}",
+      Seq("table" -> "table", "deletes" -> "deletes relation"))
+    if (usage.nonEmpty) return usage
     val table = kwargs("table")
-    if (!spark.catalog.tableExists(table))
-      return Seq(s"apply_takedown: table $table does not exist")
-    if (!spark.catalog.tableExists(kwargs("deletes")))
-      return Seq(s"apply_takedown: deletes relation ${kwargs("deletes")} " +
-        "does not exist")
     val report = graft.operators.TakedownRewrite.rewriteShards(spark,
         table, spark.table(kwargs("deletes")), kwargs("id"),
         kwargs("shard"))
@@ -241,18 +228,12 @@ object Macros {
     * re-admission contract — are LedgerInvariantsSpec's subject. */
   def purgeLedger(spark: SparkSession,
       kwargs: Map[String, String]): Seq[String] = {
-    val required = Seq("table", "deletes", "key")
-    val missing = required.filterNot(kwargs.contains)
-    if (missing.nonEmpty)
-      return Seq("purge_ledger: pass " + missing.mkString(", ") +
-        " (e.g. --args '{table: ldg.dedup_ledger, deletes: " +
-        "gov.takedowns, key: doc}')")
+    val usage = usageErrors(spark, "purge_ledger", kwargs,
+      Seq("table", "deletes", "key"),
+      "{table: ldg.dedup_ledger, deletes: gov.takedowns, key: doc}",
+      Seq("table" -> "table", "deletes" -> "deletes relation"))
+    if (usage.nonEmpty) return usage
     val table = kwargs("table")
-    if (!spark.catalog.tableExists(table))
-      return Seq(s"purge_ledger: table $table does not exist")
-    if (!spark.catalog.tableExists(kwargs("deletes")))
-      return Seq(s"purge_ledger: deletes relation ${kwargs("deletes")} " +
-        "does not exist")
     val key = kwargs("key")
     if (!spark.table(table).columns.contains(key))
       return Seq(s"purge_ledger: $table has no column '$key' " +
@@ -262,13 +243,8 @@ object Macros {
       case Left(err) => return Seq(err)
       case Right(df) => df
     }
-    val before = spark.table(table).count()
-    val purged = graft.streaming.EventStreams
-      .purgeLedger(spark.table(table), deletes, key)
-      .localCheckpoint() // pin before overwriting a path the plan reads
-    val after = purged.count()
-    purged.write.mode("overwrite").format("parquet").saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    val (before, after) = overwriteInPlace(spark, table,
+      graft.streaming.EventStreams.purgeLedger(spark.table(table), deletes, key))
     val leftover = spark.table(table)
       .join(deletes, Seq(key), "left_semi").count()
     val verdict =
@@ -310,18 +286,13 @@ object Macros {
     *    (no second batch). */
   def retractCountMin(spark: SparkSession,
       kwargs: Map[String, String]): Seq[String] = {
-    val required = Seq("table", "events", "deletes", "key", "term",
-      "depth", "width")
-    val missing = required.filterNot(kwargs.contains)
-    if (missing.nonEmpty)
-      return Seq("retract_countmin: pass " + missing.mkString(", ") +
-        " (e.g. --args '{table: cm.sketch, events: raw.events, " +
-        "deletes: gov.takedowns, key: user_id, term: term, depth: 4, " +
-        "width: 1024}')")
+    val usage = usageErrors(spark, "retract_countmin", kwargs,
+      Seq("table", "events", "deletes", "key", "term", "depth", "width"),
+      "{table: cm.sketch, events: raw.events, deletes: gov.takedowns, " +
+        "key: user_id, term: term, depth: 4, width: 1024}",
+      Seq("table", "events", "deletes").map(_ -> "relation"))
+    if (usage.nonEmpty) return usage
     val table = kwargs("table")
-    for (rel <- Seq(table, kwargs("events"), kwargs("deletes")))
-      if (!spark.catalog.tableExists(rel))
-        return Seq(s"retract_countmin: relation $rel does not exist")
     val (depth, width) =
       (kwargs("depth").toIntOption, kwargs("width").toIntOption) match {
         case (Some(d), Some(w)) if d > 0 && w > 0 => (d, w)
@@ -427,6 +398,35 @@ object Macros {
       s"retract_countmin: $table netted — merged sentinel $want == " +
         "clean-events count AND every counter cell equals the " +
         "clean-events sketch (CM linearity holds)")
+  }
+
+  /** A run-operation's argument checks, in order: every `required` kwarg
+    * is present (else the usage line with `example`), then each
+    * `(kwarg, label)` relation exists. Empty when the call may proceed. */
+  private def usageErrors(spark: SparkSession, op: String,
+      kwargs: Map[String, String], required: Seq[String], example: String,
+      relations: Seq[(String, String)]): Seq[String] = {
+    val missing = required.filterNot(kwargs.contains)
+    if (missing.nonEmpty)
+      Seq(s"$op: pass ${missing.mkString(", ")} (e.g. --args '$example')")
+    else relations.collectFirst {
+      case (k, label) if !spark.catalog.tableExists(kwargs(k)) =>
+        s"$op: $label ${kwargs(k)} does not exist"
+    }.toSeq
+  }
+
+  /** Overwrite a ledger `table` in place with `next`, a plan that reads
+    * it — the x153 discipline: localCheckpoint pins `next` before the
+    * same-table overwrite, and the refresh drops the stale file listing.
+    * Returns the row counts before and after. */
+  private def overwriteInPlace(spark: SparkSession, table: String,
+      next: DataFrame): (Long, Long) = {
+    val before = spark.table(table).count()
+    val pinned = next.localCheckpoint()
+    val after = pinned.count()
+    pinned.write.mode("overwrite").format("parquet").saveAsTable(table)
+    spark.catalog.refreshTable(table)
+    (before, after)
   }
 
   /** Purge column of a deletes relation: its only column, or the one

@@ -29,21 +29,12 @@ object Materializer {
     * session temp views). */
   private[engine] def persistentViewSql(p: Project, m: Model): Option[String] =
     m.sqlText.flatMap { sql =>
-      def isPhysical(mat: Materialization): Boolean = mat match {
-        case Materialization.Table | _: Materialization.Incremental |
-             _: Materialization.BucketedTable |
-             _: Materialization.InsertOverwrite |
-             _: Materialization.StreamingTable => true
-        case _ => false
-      }
       def refPhysical(name: String): Option[String] =
         p.modelOpt(name).collect {
-          case dep if isPhysical(dep.config.materialized) => p.physicalName(dep)
+          case dep if dep.config.materialized.isPhysical => p.physicalName(dep)
         }
       def srcPhysical(s0: String, t0: String): Option[String] =
-        p.sourceOpt(s0, t0).collect {
-          case SourceDef(_, _, CatalogTable(t)) => t
-        }
+        p.sourceOpt(s0, t0).flatMap(_.location.reader.left.toOption)
       val refs = Project.RefPat.findAllMatchIn(sql)
         .map(x => refPhysical(x.group(1))).toList
       val srcs = Project.SrcPat.findAllMatchIn(sql)
@@ -85,6 +76,7 @@ object Materializer {
       throw new IllegalStateException(
         s"contract violation in ${m.id}: ${violations.mkString("; ")}")
     val physical = p.physicalName(m)
+    if (m.config.materialized.isPhysical) ensureSchema(p, p.schemaFor(m.config))
     m.config.materialized match {
       case Materialization.Ephemeral => ()
       case Materialization.View =>
@@ -98,16 +90,13 @@ object Materializer {
             df.createOrReplaceTempView(physical.replace(".", "__"))
         }
       case Materialization.Table =>
-        ensureSchema(p, p.schemaFor(m.config))
         df.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(physical)
       case Materialization.BucketedTable(bucketCols, n, sortCols) =>
-        ensureSchema(p, p.schemaFor(m.config))
         val w = df.write.mode(SaveMode.Overwrite).format("parquet")
           .bucketBy(n, bucketCols.head, bucketCols.tail: _*)
         (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*)
          else w).saveAsTable(physical)
       case Materialization.InsertOverwrite(partitionCols) =>
-        ensureSchema(p, p.schemaFor(m.config))
         if (!p.spark.catalog.tableExists(physical)) {
           df.write.mode(SaveMode.Overwrite).format("parquet")
             .partitionBy(partitionCols: _*).saveAsTable(physical)
@@ -132,22 +121,19 @@ object Materializer {
         require(df.isStreaming,
           s"${m.id} is materialized StreamingTable but its build returned " +
             "a batch DataFrame — read inputs with ctx.sourceStream")
-        ensureSchema(p, p.schemaFor(m.config))
         val ckpt = streamingCheckpointPath(p, m, checkpoint)
         // start() captures session confs, and run() builds nodes
         // concurrently — take the SessionConf lock (no kvs) across the
         // start so another node's temporary conf swap (e.g. dynamic
         // partitionOverwriteMode) cannot be observed; await OUTSIDE the
         // lock so ingest doesn't serialize unrelated builds
-        val q = SessionConf.withConf(p.spark)(
+        graft.streaming.EventStreams.runToEnd(SessionConf.withConf(p.spark)(
           df.writeStream
             .format("parquet")
             .option("checkpointLocation", ckpt)
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .toTable(physical))
-        try q.awaitTermination() finally if (q.isActive) q.stop()
+            .toTable(physical)))
       case Materialization.Incremental(uniqueKey, strategy) =>
-        ensureSchema(p, p.schemaFor(m.config))
         if (!p.spark.catalog.tableExists(physical)) {
           df.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(physical)
         } else (uniqueKey, strategy) match {

@@ -26,15 +26,18 @@ final class Project(val spark: SparkSession, val target: Target) {
 
   def model(name: String, config: ModelConfig = ModelConfig())(
       build: Ctx => DataFrame): this.type = {
-    // snapshots share the ref namespace ('model wins' on resolution), so a
-    // model shadowing an earlier snapshot must fail at declare time just
-    // like the reverse order does in snapshot(); analyses share the
-    // compiledSql namespace
-    require(!models.contains(name) && !snapshots.contains(name) &&
-      !analyses.contains(name), s"duplicate node $name")
+    requireNewName(name)
     models(name) = Model(name, config, build)
     this
   }
+
+  /** Models, snapshots and analyses share one name space: snapshots share
+    * the ref namespace ('model wins' on resolution), so a model shadowing
+    * an earlier snapshot must fail at declare time just like the reverse
+    * order does; analyses share the compiledSql namespace. */
+  private def requireNewName(name: String): Unit =
+    require(!models.contains(name) && !snapshots.contains(name) &&
+      !analyses.contains(name), s"duplicate node $name")
 
   /** SQL-text model: `{{ ref('x') }}` / `{{ source('a','b') }}`
     * placeholders are resolved to temp views before `spark.sql`, mirroring
@@ -43,8 +46,7 @@ final class Project(val spark: SparkSession, val target: Target) {
     * `CREATE VIEW` when every dependency is a physical table. */
   def sqlModel(name: String, config: ModelConfig = ModelConfig())(
       sql: String): this.type = {
-    require(!models.contains(name) && !snapshots.contains(name) &&
-      !analyses.contains(name), s"duplicate node $name")
+    requireNewName(name)
     Project.lintSqlModel(spark, name, sql)
     models(name) = Model(name, config, sqlBuild(sql), sqlText = Some(sql))
     this
@@ -78,8 +80,7 @@ final class Project(val spark: SparkSession, val target: Target) {
     * docs/`ls` list it) but NEVER materialized by run/build — dbt has no
     * command that executes an analysis. */
   def analysis(name: String)(sql: String): this.type = {
-    require(!analyses.contains(name) && !models.contains(name) &&
-      !snapshots.contains(name), s"duplicate node $name")
+    requireNewName(name)
     Project.lintSqlModel(spark, name, sql)
     analyses(name) = Analysis(name, sqlBuild(sql), sql)
     this
@@ -117,8 +118,7 @@ final class Project(val spark: SparkSession, val target: Target) {
         () => new java.sql.Timestamp(System.currentTimeMillis()),
       partitions: Option[Int] = None)(
       build: Ctx => DataFrame): this.type = {
-    require(!snapshots.contains(name) && !models.contains(name) &&
-      !analyses.contains(name), s"duplicate node $name")
+    requireNewName(name)
     snapshots(name) =
       Snapshot(name, build, uniqueKey, checkCols, config, asOf, partitions)
     this
@@ -310,6 +310,9 @@ final class Project(val spark: SparkSession, val target: Target) {
         }
     }
 
+  private def declaredModel(name: String): Model = models.getOrElse(name,
+    throw new NoSuchElementException(s"unknown model '$name'"))
+
   private val resolved = mutable.Map[String, DataFrame]()
   private val resolving = mutable.LinkedHashSet[String]() // cycle detection
   private val edges = mutable.Map[String, mutable.Set[String]]()
@@ -327,7 +330,7 @@ final class Project(val spark: SparkSession, val target: Target) {
       if (!resolving.add(key))
         throw new IllegalStateException(
           s"ref cycle: ${resolving.mkString(" -> ")} -> $key")
-      val df = try snapshots(name).build(ctxFor(key))
+      val df = try snapshots(name).build(ctxFor(key, resolve))
       finally resolving.remove(key)
       snapFresh(name) = df
       df
@@ -352,106 +355,52 @@ final class Project(val spark: SparkSession, val target: Target) {
     * materialized models still resolve to the *unbuilt* plan here — the
     * runner decides what to persist. */
   def resolve(name: String): DataFrame = resolved.getOrElseUpdate(name, {
-    val m = models.getOrElse(name,
-      throw new NoSuchElementException(s"unknown model '$name'"))
+    val m = declaredModel(name)
     if (!resolving.add(name))
       throw new IllegalStateException(
         s"ref cycle: ${resolving.mkString(" -> ")} -> $name")
-    try m.build(ctxFor(m.id)) finally resolving.remove(name)
+    try m.build(ctxFor(m.id, resolve)) finally resolving.remove(name)
   })
 
-  private def sourceDf(s: SourceDef): DataFrame = s.location match {
-    case ParquetPath(p) => spark.read.parquet(p)
-    case CatalogTable(t) => spark.table(t)
-    case CsvPath(p, header, schema) =>
-      val r = spark.read.option("header", header.toString)
-      schema.fold(r.option("inferSchema", "true"))(r.schema).csv(p)
-    case JsonPath(p, schema) =>
-      schema.fold(spark.read)(spark.read.schema).json(p)
-    case OrcPath(p) => spark.read.orc(p)
-    case BinaryPath(p, glob) =>
-      glob.fold(spark.read)(g =>
-        spark.read.option("pathGlobFilter", g)).format("binaryFile").load(p)
-  }
+  private def sourceDf(s: SourceDef): DataFrame =
+    s.location.reader.fold(spark.table, _.batch(spark))
 
-  /** Streaming read of a source: file stream over its location with the
-    * batch-read schema (Structured Streaming requires one upfront), or
-    * `readStream.table` for catalog tables. A path pointing at one FILE
-    * streams its parent directory under a glob filter — the file source
-    * wants a directory. */
-  private def sourceStreamDf(s: SourceDef): DataFrame = {
-    def dirAndFilter(p: String): (String, Option[String]) = {
-      val f = new java.io.File(p)
-      if (f.isFile) (f.getParent, Some(f.getName)) else (p, None)
-    }
-    s.location match {
-      case ParquetPath(p) =>
-        val schema = spark.read.parquet(p).schema
-        val (dir, glob) = dirAndFilter(p)
-        val r = spark.readStream.schema(schema)
-        glob.fold(r)(g => r.option("pathGlobFilter", g)).parquet(dir)
-      case CsvPath(p, header, schemaDdl) =>
-        val schema = schemaDdl.map(
-          org.apache.spark.sql.types.StructType.fromDDL)
-          .getOrElse(spark.read.option("header", header.toString)
-            .option("inferSchema", "true").csv(p).schema)
-        val (dir, glob) = dirAndFilter(p)
-        val r = spark.readStream.schema(schema)
-          .option("header", header.toString)
-        glob.fold(r)(g => r.option("pathGlobFilter", g)).csv(dir)
-      case JsonPath(p, schemaDdl) =>
-        val schema = schemaDdl.map(
-          org.apache.spark.sql.types.StructType.fromDDL)
-          .getOrElse(spark.read.json(p).schema)
-        val (dir, glob) = dirAndFilter(p)
-        val r = spark.readStream.schema(schema)
-        glob.fold(r)(g => r.option("pathGlobFilter", g)).json(dir)
-      case OrcPath(p) =>
-        val schema = spark.read.orc(p).schema
-        val (dir, glob) = dirAndFilter(p)
-        val r = spark.readStream.schema(schema)
-        glob.fold(r)(g => r.option("pathGlobFilter", g)).orc(dir)
-      case BinaryPath(p, glob) =>
-        // binaryFile has a FIXED schema; Structured Streaming still
-        // requires it upfront
-        val schema = spark.read.format("binaryFile")
-          .load(p).schema
-        val r = spark.readStream.schema(schema)
-        glob.fold(r)(g => r.option("pathGlobFilter", g))
-          .format("binaryFile").load(p)
-      case CatalogTable(t) => spark.readStream.table(t)
-    }
-  }
+  /** Streaming read of a source: [[FileRead.stream]], or
+    * `readStream.table` for catalog tables. */
+  private def sourceStreamDf(s: SourceDef): DataFrame =
+    s.location.reader.fold(spark.readStream.table, _.stream(spark))
 
-  private def ctxFor(nodeId: String): Ctx = new Ctx(
-    spark,
-    (depName0, version) => {
-      val depName = versionedName(depName0, version)
-      // snapshots share the ref namespace (dbt refs snapshots by name);
-      // a model of the same name wins, versioned refs are models-only
-      if (!models.contains(depName) && version.isEmpty &&
-          snapshots.contains(depName0)) {
-        recordEdge(nodeId, s"snapshot.$depName0")
-        snapshotDf(snapshots(depName0))
-      } else {
-        recordEdge(nodeId, s"model.$depName")
-        resolve(depName)
-      }
-    },
-    (s0, t0) => {
+  /** The one project [[Ctx]]: `refModel` is the rule that turns a model
+    * ref into a DataFrame — the memoized compile-time [[resolve]], or
+    * [[execRef]] at exec time. Snapshot refs, sources, `this` and edge
+    * recording are the same for both. */
+  private def ctxFor(nodeId: String, refModel: String => DataFrame): Ctx = {
+    def declaredSource(s0: String, t0: String): SourceDef = {
       val sd = sources.getOrElse((s0, t0),
         throw new NoSuchElementException(s"unknown source '$s0.$t0'"))
       recordEdge(nodeId, sd.id)
-      sourceDf(sd)
-    },
-    thisPhysical = models.get(nodeId.stripPrefix("model."))
-      .map(physicalName),
-    resolveSourceStream = (s0, t0) => {
-      val sd = sources.getOrElse((s0, t0),
-        throw new NoSuchElementException(s"unknown source '$s0.$t0'"))
-      recordEdge(nodeId, sd.id)
-      sourceStreamDf(sd)
-    })
+      sd
+    }
+    new Ctx(
+      spark,
+      (depName0, version) => {
+        val depName = versionedName(depName0, version)
+        // snapshots share the ref namespace (dbt refs snapshots by name);
+        // a model of the same name wins, versioned refs are models-only
+        if (!models.contains(depName) && version.isEmpty &&
+            snapshots.contains(depName0)) {
+          recordEdge(nodeId, s"snapshot.$depName0")
+          snapshotDf(snapshots(depName0))
+        } else {
+          recordEdge(nodeId, s"model.$depName")
+          refModel(depName)
+        }
+      },
+      (s0, t0) => sourceDf(declaredSource(s0, t0)),
+      thisPhysical = models.get(nodeId.stripPrefix("model."))
+        .map(physicalName),
+      resolveSourceStream = (s0, t0) => sourceStreamDf(declaredSource(s0, t0)))
+  }
 
   /** Execution-time resolution (dbt ref semantics): a ref to a physically
     * materialized upstream (table / incremental / bucketed /
@@ -464,61 +413,29 @@ final class Project(val spark: SparkSession, val target: Target) {
     * memoized WITHIN one call so a diamond of views costs one build per
     * dep, not 2^depth. */
   private[engine] def resolveForRun(name: String): DataFrame =
-    execResolve(name, mutable.Map[String, DataFrame]())
+    execResolve(declaredModel(name), mutable.Map[String, DataFrame]())
 
-  private def execResolve(name: String,
+  private def execResolve(m: Model,
       memo: mutable.Map[String, DataFrame]): DataFrame =
-    memo.getOrElseUpdate(name, {
-      val m = models.getOrElse(name,
-        throw new NoSuchElementException(s"unknown model '$name'"))
-      m.build(execCtxFor(m.id, memo))
-    })
+    memo.getOrElseUpdate(m.name, m.build(ctxFor(m.id, execRef(memo))))
 
-  private def execCtxFor(nodeId: String,
-      memo: mutable.Map[String, DataFrame]): Ctx = new Ctx(
-    spark,
-    (depName0, version) => {
-      val depName = versionedName(depName0, version)
-      if (!models.contains(depName) && version.isEmpty &&
-          snapshots.contains(depName0)) {
-        recordEdge(nodeId, s"snapshot.$depName0")
-        snapshotDf(snapshots(depName0))
-      } else {
-        recordEdge(nodeId, s"model.$depName")
-        val dep = models.getOrElse(depName,
-          throw new NoSuchElementException(s"unknown model '$depName'"))
-        dep.config.materialized match {
-          case Materialization.View | Materialization.Ephemeral =>
-            execResolve(depName, memo)
-          case _ if spark.catalog.tableExists(physicalName(dep)) =>
-            spark.table(physicalName(dep))
-          case _: Materialization.StreamingTable =>
-            // re-running the build would hand a STREAMING DataFrame to a
-            // batch consumer — Spark's 'must be executed with
-            // writeStream.start()' error is opaque; fail actionably
-            throw new IllegalStateException(
-              s"model.$depName is a StreamingTable that has not been " +
-                "built yet — run it before batch consumers read it " +
-                "(topo-ordered run() does; ad-hoc resolution cannot)")
-          case _ => // physical upstream not built yet (ad-hoc resolution)
-            execResolve(depName, memo)
-        }
-      }
-    },
-    (s0, t0) => {
-      val sd = sources.getOrElse((s0, t0),
-        throw new NoSuchElementException(s"unknown source '$s0.$t0'"))
-      recordEdge(nodeId, sd.id)
-      sourceDf(sd)
-    },
-    thisPhysical = models.get(nodeId.stripPrefix("model."))
-      .map(physicalName),
-    resolveSourceStream = (s0, t0) => {
-      val sd = sources.getOrElse((s0, t0),
-        throw new NoSuchElementException(s"unknown source '$s0.$t0'"))
-      recordEdge(nodeId, sd.id)
-      sourceStreamDf(sd)
-    })
+  /** The exec-time ref rule: read the catalog table if the upstream is
+    * physical and built, otherwise build its plan. */
+  private def execRef(memo: mutable.Map[String, DataFrame])(
+      name: String): DataFrame = {
+    val m = declaredModel(name)
+    if (m.config.materialized.isPhysical &&
+        spark.catalog.tableExists(physicalName(m))) spark.table(physicalName(m))
+    else if (m.config.materialized.isInstanceOf[Materialization.StreamingTable])
+      // re-running the build would hand a STREAMING DataFrame to a batch
+      // consumer — Spark's 'must be executed with writeStream.start()'
+      // error is opaque; fail actionably
+      throw new IllegalStateException(
+        s"model.$name is a StreamingTable that has not been " +
+          "built yet — run it before batch consumers read it " +
+          "(topo-ordered run() does; ad-hoc resolution cannot)")
+    else execResolve(m, memo) // a view, or a physical upstream not built yet
+  }
 
   /** dbt `compile` analogue for SQL-text nodes: the declared SQL with
     * every placeholder replaced by the PHYSICAL relation it resolves to
@@ -541,14 +458,8 @@ final class Project(val spark: SparkSession, val target: Target) {
       val sd = sources.getOrElse((m2.group(1), m2.group(2)),
         throw new NoSuchElementException(
           s"unknown source '${m2.group(1)}.${m2.group(2)}'"))
-      java.util.regex.Matcher.quoteReplacement(sd.location match {
-        case CatalogTable(t) => t
-        case ParquetPath(p) => s"parquet.`$p`"
-        case CsvPath(p, _, _) => s"csv.`$p`"
-        case JsonPath(p, _) => s"json.`$p`"
-        case OrcPath(p) => s"orc.`$p`"
-        case BinaryPath(p, _) => s"binaryFile.`$p`"
-      })
+      java.util.regex.Matcher.quoteReplacement(
+        sd.location.reader.fold(identity, _.relation))
     })
   }
 
@@ -592,7 +503,7 @@ final class Project(val spark: SparkSession, val target: Target) {
     analysisResolved.getOrElseUpdate(name, {
       val a = analyses.getOrElse(name,
         throw new NoSuchElementException(s"unknown analysis '$name'"))
-      a.build(ctxFor(a.id))
+      a.build(ctxFor(a.id, resolve))
     })
 
   /** Force-resolve everything and return the introspectable graph. */
@@ -691,7 +602,8 @@ final class Project(val spark: SparkSession, val target: Target) {
         }
         val upstreamF = Future.sequence(ups.filter(selected).map(nodeFuture))
         upstreamF.map { ups =>
-          if (ups.exists(r => r.status == "error" || r.status == "fail"))
+          // an error, a fail or a skip upstream skips the whole subgraph
+          if (ups.exists(r => r.status != "success"))
             NodeResult(id, "skipped", 0, "upstream failure")
           else runNode(graph.nodes(id))
         }
@@ -732,7 +644,7 @@ final class Project(val spark: SparkSession, val target: Target) {
         case s: Snapshot =>
           // fresh query built with EXEC-time resolution (reads
           // materialized upstreams, which topo order has already built)
-          val fresh = s.build(execCtxFor(s.id, mutable.Map()))
+          val fresh = s.build(ctxFor(s.id, execRef(mutable.Map())))
           Materializer.snapshot(this, physicalName(s), fresh,
             s.uniqueKey, s.checkCols, s.asOf(), s.partitions)
           NodeResult(s.id, "success", ms)
@@ -793,11 +705,9 @@ final class Project(val spark: SparkSession, val target: Target) {
     * the materialized relation if one exists, else the exec-resolved plan
     * (which itself reads materialized upstreams — dbt ref semantics). */
   def materializedDf(name: String): DataFrame = models.get(name) match {
-    case Some(m) => m.config.materialized match {
-      case Materialization.Ephemeral => resolveForRun(name)
-      case Materialization.View => resolveForRun(name) // view == same plan
-      case _ => spark.table(physicalName(m))
-    }
+    case Some(m) =>
+      if (m.config.materialized.isPhysical) spark.table(physicalName(m))
+      else resolveForRun(name) // view == same plan
     case None if snapshots.contains(name) => // tests target snapshots too
       spark.table(physicalName(snapshots(name)))
     case None =>

@@ -339,7 +339,7 @@ object EventStreams {
     * running (interrupt or failure): stopping a cleanly terminated one
     * cancels its finished job group, which Spark logs as "Failed to
     * cancel job group" twice per run. */
-  private def runToEnd(q: StreamingQuery): Unit =
+  private[graft] def runToEnd(q: StreamingQuery): Unit =
     try q.awaitTermination() finally if (q.isActive) q.stop()
 
   /** The dedup-ledger partial: each microbatch passed through

@@ -1,0 +1,53 @@
+package graft.engine
+
+import graft.SourceLint._
+import java.nio.file.Paths
+import org.scalatest.funsuite.AnyFunSuite
+import scala.util.matching.Regex
+
+/** Source lint pinning one definition per engine decision: how a source
+  * location is read ([[SourceLocation]]'s reader, in Core.scala), how a
+  * project [[Ctx]] is built (`Project.ctxFor`) and what counts as a
+  * physical materialization ([[Materialization.isPhysical]]). */
+class EngineRulesLintSpec extends AnyFunSuite {
+
+  private val engineDir = Paths.get("src/main/scala/graft/engine")
+
+  /** `file:line: code` of every code line matching `pattern` whose
+    * (file, top-level method) is not `allowed`. */
+  private def hits(pattern: Regex,
+      allowed: (String, String) => Boolean): Seq[String] =
+    for {
+      p <- scalaFiles(engineDir)
+      file = p.getFileName.toString
+      lines = codeLines(p)
+      i <- lines.indices
+      if pattern.findFirstIn(lines(i)).isDefined &&
+        !allowed(file, methodAt(lines, i))
+    } yield s"$file:${i + 1}: ${lines(i).trim}"
+
+  test("one location-to-format definition: path locations only in Core.scala") {
+    val h = hits("""\b(?:Parquet|Csv|Json|Orc|Binary)Path\(""".r,
+      (file, _) => file == "Core.scala")
+    assert(h.isEmpty, h.mkString("\n"))
+  }
+
+  test("one Ctx factory: new Ctx only in ctxFor and the unit-test mock") {
+    val h = hits("""\bnew Ctx\(""".r, (file, method) =>
+      file == "Project.scala" && Set("ctxFor", "runUnitTest")(method))
+    assert(h.isEmpty, h.mkString("\n"))
+  }
+
+  test("one physical test: View/Ephemeral matched only where kinds dispatch") {
+    // materialize writes each kind its own way, compiledRelation renders
+    // an ephemeral inline and a view by name, and the evaluator's
+    // unused-ephemeral lint names one kind: none of them asks "physical?"
+    val dispatch = Set("Materializer.scala" -> "materialize",
+      "Project.scala" -> "compiledRelation",
+      "Macros.scala" -> "evaluateProject")
+    val h = hits("""\bMaterialization\.(?:View|Ephemeral)\b""".r,
+      (file, method) => file == "Core.scala" || dispatch(file -> method)) ++
+      hits("""\bdef isPhysical\b""".r, (file, _) => file == "Core.scala")
+    assert(h.isEmpty, h.mkString("\n"))
+  }
+}

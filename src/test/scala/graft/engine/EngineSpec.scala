@@ -128,10 +128,23 @@ class EngineSpec extends SparkSpec {
     p.model("downstream", ModelConfig(materialized = Materialization.Table)) {
       ctx => ctx.ref("bad")
     }
+    // the skip reaches every descendant, and a test of a skipped model is
+    // skipped too (dbt skips the whole subgraph)
+    p.model("downstream2", ModelConfig(materialized = Materialization.Table)) {
+      ctx => ctx.ref("downstream")
+    }
+    p.model("sibling", ModelConfig(materialized = Materialization.Table)) {
+      ctx => ctx.ref("bad")
+    }
+    p.testNotNull("sibling", "id")
     val res = p.build()
     val by = res.byId
     assert(by("test.not_null__bad__id").status == "fail")
     assert(by("model.downstream").status == "skipped")
+    assert(by("model.downstream2").status == "skipped")
+    assert(!spark.catalog.tableExists("blocked.downstream2"))
+    assert(by("model.sibling").status == "skipped")
+    assert(by("test.not_null__sibling__id").status == "skipped")
   }
 
   test("is_incremental / this: max-ts filter pattern appends only new rows") {

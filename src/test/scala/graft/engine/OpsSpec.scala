@@ -612,15 +612,66 @@ class OpsSpec extends SparkSpec {
     val compiled = Cli.run(p2, Seq("compile"))
     val sql = compiled(compiled.indexOf("-- compiled model.orc_sql") + 1)
     assert(sql.contains(s"orc.`$orcDir`"), sql)
-    // the streaming read path works for ORC too (StreamingTable ingest)
+    // the streaming read path, for every path-based location: each source
+    // streams into a StreamingTable whose rows equal its batch read
+    def onePart(df: org.apache.spark.sql.DataFrame, to: String) = {
+      val d = dir.resolve(to + "_src").toString
+      df.coalesce(1).write.parquet(d)
+      val files = java.nio.file.Files.list(java.nio.file.Paths.get(d))
+      try files.filter(_.toString.endsWith(".parquet")).findFirst().get
+      finally files.close()
+    }
+    val pqDir = dir.resolve("pq")
+    java.nio.file.Files.createDirectories(pqDir)
+    java.nio.file.Files.copy(onePart(Seq((7L, "eta")).toDF("id", "name"), "a"),
+      pqDir.resolve("a.parquet"))
+    // a sibling file the single-file location must not read
+    java.nio.file.Files.copy(onePart(Seq((8L, "theta")).toDF("id", "name"), "b"),
+      pqDir.resolve("b.parquet"))
+    val csvDir = dir.resolve("csv")
+    java.nio.file.Files.createDirectories(csvDir)
+    java.nio.file.Files.writeString(csvDir.resolve("data.csv"),
+      "id,name\n9,iota\n10,kappa\n")
+    val jsonDir = dir.resolve("json")
+    java.nio.file.Files.createDirectories(jsonDir)
+    java.nio.file.Files.writeString(jsonDir.resolve("data.json"),
+      "{\"id\": 11, \"name\": \"lambda\"}\n{\"id\": 12, \"name\": \"mu\"}\n")
+    val locations = Seq(
+      "o" -> OrcPath(orcDir),
+      "pq_dir" -> ParquetPath(pqDir.toString),
+      "pq_file" -> ParquetPath(pqDir.resolve("a.parquet").toString),
+      "csv_inferred" -> CsvPath(csvDir.toString),
+      "csv_ddl" -> CsvPath(csvDir.toString, schema = Some("id LONG, name STRING")),
+      "json" -> JsonPath(jsonDir.toString),
+      "bin" -> BinaryPath(binDir.toString, glob = Some("*.jpg")))
     val p3 = new Project(spark, Target("dev", "srcfmt2c", threads = 2))
-    p3.source("raw", "o", OrcPath(orcDir))
-    p3.model("orc_stream", ModelConfig(materialized =
-      Materialization.StreamingTable())) { ctx =>
-      ctx.sourceStream("raw", "o")
+    for ((name, loc) <- locations) {
+      p3.source("raw", name, loc)
+      p3.model(s"${name}_stream", ModelConfig(materialized =
+        Materialization.StreamingTable())) { ctx =>
+        ctx.sourceStream("raw", name)
+      }
+      p3.model(s"${name}_batch")(ctx => ctx.source("raw", name))
     }
     assert(p3.run().ok)
-    assert(spark.table("srcfmt2c.orc_stream").count() == 2)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().toSeq.map(_.toSeq.map {
+        case b: Array[Byte] => b.toSeq
+        case v => v
+      }.mkString("|")).sorted
+    for ((name, _) <- locations) {
+      val streamed = spark.table(s"srcfmt2c.${name}_stream")
+      val batch = p3.materializedDf(s"${name}_batch")
+      assert(streamed.schema.map(f => f.name -> f.dataType) ==
+        batch.schema.map(f => f.name -> f.dataType), name)
+      assert(rows(streamed) == rows(batch), name)
+    }
+    assert(spark.table("srcfmt2c.o_stream").count() == 2)
+    assert(spark.table("srcfmt2c.pq_dir_stream").count() == 2)
+    assert(rows(spark.table("srcfmt2c.pq_file_stream")) == Seq("7|eta"))
+    assert(rows(spark.table("srcfmt2c.csv_ddl_stream")) ==
+      Seq("10|kappa", "9|iota"))
+    assert(spark.table("srcfmt2c.bin_stream").count() == 1)
   }
 
   test("deps: lock-style report resolves every reference package") {

@@ -1,8 +1,8 @@
 package graft.operators
 
-import java.nio.file.{Files, Path, Paths}
+import graft.SourceLint._
+import java.nio.file.Paths
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** Source lint pinning the one cache-lifetime rule ([[CacheScope]]): an
   * operator-internal persist goes through `CacheScope.persist`, whose
@@ -22,21 +22,6 @@ class CacheLifetimeLintSpec extends AnyFunSuite {
     "Pq.scala" -> "trainCodebooks",
     "Similarity.scala" -> "trainKMeans")
 
-  private def scalaFiles(dir: Path): Seq[Path] = {
-    assert(Files.isDirectory(dir), s"$dir not found (run from the repo root)")
-    Files.walk(dir).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
-  }
-
-  /** Source lines with comments blanked, so prose never trips the lint. */
-  private def codeLines(p: Path): IndexedSeq[String] = {
-    val noBlocks = "(?s)/\\*.*?\\*/".r.replaceAllIn(
-      new String(Files.readAllBytes(p), "UTF-8"),
-      m => java.util.regex.Matcher.quoteReplacement(
-        m.matched.replaceAll("[^\n]", " ")))
-    noBlocks.split("\n", -1).toIndexedSeq.map(_.replaceAll("//.*$", ""))
-  }
-
   test("no operator takes a scope parameter or calls CacheScope.route") {
     val hits = for {
       p <- scalaFiles(mainDir)
@@ -48,7 +33,6 @@ class CacheLifetimeLintSpec extends AnyFunSuite {
 
   test("bare persist()/cache() only in the self-released transients") {
     val persistCall = """(?<!CacheScope)\.(persist|cache)\(""".r
-    val objectDef = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r.unanchored
     val valDef = """\bval (\w+)\s*=""".r.unanchored
     val found = for {
       p <- scalaFiles(opsDir) if p.getFileName.toString != "CacheScope.scala"
@@ -56,13 +40,12 @@ class CacheLifetimeLintSpec extends AnyFunSuite {
       i <- lines.indices if persistCall.findFirstIn(lines(i)).isDefined
     } yield {
       val file = p.getFileName.toString
-      val start = (i to 0 by -1).find(j => objectDef.matches(lines(j)))
-      val method = start.map(j => objectDef.findFirstMatchIn(lines(j)).get
-        .group(1)).getOrElse("<none>")
+      val start = methodStart(lines, i)
+      val method = methodAt(lines, i)
       assert(transients(file -> method),
         s"$file:${i + 1}: bare persist in $method; use CacheScope.persist")
       val end = lines.indices.drop(i + 1)
-        .find(j => objectDef.matches(lines(j))).getOrElse(lines.size)
+        .find(j => methodDef.matches(lines(j))).getOrElse(lines.size)
       val name = (i to start.get by -1).iterator
         .flatMap(j => valDef.findFirstMatchIn(lines(j)).map(_.group(1)))
         .next()

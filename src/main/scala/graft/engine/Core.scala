@@ -109,8 +109,9 @@ sealed trait Node {
 /** A model: a named build function + config. `build` receives a [[Ctx]]
   * whose `ref`/`source` calls both resolve to DataFrames and record DAG
   * edges — replacing dbt's Jinja render-time dependency extraction
-  * (SURVEY.md §3.1 stage 3). `sqlText` is set for SQL-text models
-  * (enables persistent CREATE VIEW materialization — SURVEY §7.4.2). */
+  * (SURVEY.md §3.1 stage 3). `sqlText` is set for SQL-text models: their
+  * edges are read from the text's placeholders at compile time, and it
+  * enables persistent CREATE VIEW materialization (SURVEY §7.4.2). */
 final case class Model(
     name: String,
     config: ModelConfig,
@@ -230,11 +231,11 @@ final case class Snapshot(
   def id: String = s"snapshot.$name"
 }
 
-/** An analysis: SQL that is compiled (placeholder-resolved, linted,
-  * schema-resolved) and documented but NEVER materialized — the
-  * reference's `analyses/` resource slot (`dbt_project.yml:15`
-  * `analysis-paths`; dbt compiles analyses with the project and renders
-  * them in docs, but no command ever runs them). */
+/** An analysis: SQL that is compiled (linted, edges from its
+  * placeholders, schema resolved on demand) and documented but NEVER
+  * materialized — the reference's `analyses/` resource slot
+  * (`dbt_project.yml:15` `analysis-paths`; dbt compiles analyses with the
+  * project and renders them in docs, but no command ever runs them). */
 final case class Analysis(
     name: String,
     build: Ctx => DataFrame,

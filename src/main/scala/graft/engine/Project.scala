@@ -7,11 +7,16 @@ import scala.concurrent.duration.Duration
 import java.util.concurrent.Executors
 
 /** The project registry + runner: models/sources/seeds/tests are declared
-  * as Scala values; `compile()` resolves every model once (memoized,
-  * cycle-checked) while recording `ref`/`source` edges; `run()` builds the
-  * DAG in topological order with bounded parallelism (the reference's
-  * `threads: 16` contract) and interleaves data tests `dbt build`-style:
-  * a failing test blocks downstream models (`README.md:280`).
+  * as Scala values. `compile()` records the `ref`/`source` edges: a
+  * SQL-text model's or an analysis' from its template text, a DataFrame
+  * model's or a snapshot's by running its build function once. Plans are
+  * resolved lazily (memoized, cycle-checked) when something asks for one.
+  * `run()` builds the DAG in topological order with bounded parallelism
+  * (the reference's `threads: 16` contract) and interleaves data tests
+  * `dbt build`-style: a failing test blocks downstream models
+  * (`README.md:280`). While one `run`/`build`/`testOnly` is in flight, a
+  * memo shares each source read and each view or ephemeral exec-time plan
+  * across its node threads; it is dropped when the call returns.
   */
 final class Project(val spark: SparkSession, val target: Target) {
 
@@ -54,31 +59,40 @@ final class Project(val spark: SparkSession, val target: Target) {
 
   /** Build function for SQL text: `{{ ref }}`/`{{ source }}` placeholders
     * resolve to temp views before `spark.sql` (shared by [[sqlModel]] and
-    * [[analysis]]). */
+    * [[analysis]]). The view names carry a number unique to this build,
+    * so concurrent builds that bind one dependency to different plans
+    * never read each other's binding, and the views are dropped once
+    * `spark.sql` has analyzed the text (the plan holds what they bound). */
   private def sqlBuild(sql: String): Ctx => DataFrame = { ctx =>
-    var out = sql
-    for (m <- Project.RefPat.findAllMatchIn(sql).toList.distinctBy(_.group(1))) {
-      val dep = m.group(1)
-      val view = s"graft_ref_${Ident.normalize(dep)}"
-      ctx.ref(dep).createOrReplaceTempView(view)
-      out = Project.RefPat.replaceAllIn(out,
-        m2 => if (m2.group(1) == dep) view else m2.matched)
+    val build = Project.buildSeq.incrementAndGet()
+    val views = mutable.ArrayBuffer[String]()
+    def bind(prefix: String, df: => DataFrame): String = {
+      val view = s"${prefix}_$build"
+      df.createOrReplaceTempView(view)
+      views += view
+      java.util.regex.Matcher.quoteReplacement(view)
     }
-    for (m <- Project.SrcPat.findAllMatchIn(sql).toList.distinctBy(m => (m.group(1), m.group(2)))) {
-      val (s0, t0) = (m.group(1), m.group(2))
-      val view = s"graft_src_${Ident.normalize(s0)}_${Ident.normalize(t0)}"
-      ctx.source(s0, t0).createOrReplaceTempView(view)
-      out = Project.SrcPat.replaceAllIn(out,
-        m2 => if (m2.group(1) == s0 && m2.group(2) == t0) view else m2.matched)
-    }
-    ctx.spark.sql(out)
+    try {
+      val refs = Project.RefPat.findAllMatchIn(sql).map(_.group(1)).toSeq
+        .distinct.map(d => d -> bind(s"graft_ref_${Ident.normalize(d)}",
+          ctx.ref(d))).toMap
+      val srcs = Project.SrcPat.findAllMatchIn(sql)
+        .map(m => (m.group(1), m.group(2))).toSeq.distinct
+        .map { case st @ (s0, t0) => st -> bind(
+          s"graft_src_${Ident.normalize(s0)}_${Ident.normalize(t0)}",
+          ctx.source(s0, t0)) }.toMap
+      ctx.spark.sql(Project.SrcPat.replaceAllIn(
+        Project.RefPat.replaceAllIn(sql, m => refs(m.group(1))),
+        m => srcs((m.group(1), m.group(2)))))
+    } finally views.foreach(ctx.spark.catalog.dropTempView)
   }
 
   /** Declare an analysis — the reference's `analyses/` resource slot
     * (`dbt_project.yml:15` `analysis-paths`): SQL that is linted and
-    * compiled with the project (placeholders resolve, edges are recorded,
-    * docs/`ls` list it) but NEVER materialized by run/build — dbt has no
-    * command that executes an analysis. */
+    * compiled with the project (edges are recorded from its text, its
+    * plan resolves when docs or `show` ask, docs/`ls` list it) but NEVER
+    * materialized by run/build — dbt has no command that executes an
+    * analysis. */
   def analysis(name: String)(sql: String): this.type = {
     requireNewName(name)
     Project.lintSqlModel(spark, name, sql)
@@ -160,7 +174,7 @@ final class Project(val spark: SparkSession, val target: Target) {
           spark,
           (dep0, version) => {
             val dep =
-              try versionedName(dep0, version)
+              try refTarget(dep0, version).name
               catch { case _: NoSuchElementException => dep0 }
             ut.given.getOrElse(dep, ut.given.getOrElse(dep0,
               throw new NoSuchElementException(
@@ -287,54 +301,105 @@ final class Project(val spark: SparkSession, val target: Target) {
   def physicalName(s: Snapshot): String =
     s"${schemaFor(s.config)}.${Ident.normalize(s.config.alias.getOrElse(s.name))}"
 
-  // ---- compile: memoized resolution + edge recording -------------------
+  // ---- compile: edges from template text, plans on demand ---------------
 
-  /** Versioned-ref name resolution (the reference's ref() override
-    * accepts `version=` — `macros/overrides/ref.sql:11-18`; dbt's
-    * versioned-model rule): `ref(name, v)` reads the model declared as
-    * `name_vN`; an unversioned `ref(name)` where `name` itself is not
-    * declared but a `name_vN` family is resolves to the LATEST version. */
-  private def versionedName(name: String, version: Option[Int]): String =
+  /** The one ref-name rule: the node `ref(name)` or `ref(name, v)` reads.
+    * `ref(name, v)` reads the model declared as `name_vN` (the reference's
+    * ref() override accepts `version=` — `macros/overrides/ref.sql:11-18`).
+    * An unversioned `ref(name)` reads the model `name`, else the LATEST
+    * declared `name_vN` (dbt's versioned-model rule), else the snapshot
+    * `name` (snapshots share the ref namespace; a model of the same name
+    * wins, versioned refs are models-only). Any other name is unknown.
+    * [[ctxFor]], the template-edge pass [[textEdges]], the compiled
+    * relation and the unit-test mock all ask this one function. */
+  private def refTarget(name: String, version: Option[Int]): Node =
     version match {
-      case Some(v) =>
-        val vn = s"${name}_v$v"
-        if (models.contains(vn)) vn
-        else throw new NoSuchElementException(
-          s"unknown version $v of model '$name' (no model named '$vn')")
-      case None if models.contains(name) => name
+      case Some(v) => models.getOrElse(s"${name}_v$v",
+        throw new NoSuchElementException(
+          s"unknown version $v of model '$name' (no model named '${name}_v$v')"))
       case None =>
         val pat = (java.util.regex.Pattern.quote(name) + "_v(\\d+)").r
-        models.keys.collect { case k @ pat(n) => (n.toInt, k) } match {
-          case vs if vs.nonEmpty => vs.maxBy(_._1)._2
-          case _ => name // unknown either way; resolve() raises with the original name
-        }
+        models.get(name)
+          .orElse(models.keys.collect { case k @ pat(n) => (n.toInt, k) }
+            .maxByOption(_._1).map(v => models(v._2)))
+          .orElse(snapshots.get(name))
+          .getOrElse(throw new NoSuchElementException(s"unknown model '$name'"))
     }
 
   private def declaredModel(name: String): Model = models.getOrElse(name,
     throw new NoSuchElementException(s"unknown model '$name'"))
 
-  private val resolved = mutable.Map[String, DataFrame]()
-  private val resolving = mutable.LinkedHashSet[String]() // cycle detection
+  private def declaredSource(s0: String, t0: String): SourceDef =
+    sources.getOrElse((s0, t0),
+      throw new NoSuchElementException(s"unknown source '$s0.$t0'"))
+
   private val edges = mutable.Map[String, mutable.Set[String]]()
-  private val snapFresh = mutable.Map[String, DataFrame]()
+
+  // synchronized: exec-time resolution records edges from the run thread
+  // pool, and compile-time resolution can run there too
+  private def recordEdge(from: String, to: String): Unit = edges.synchronized {
+    edges.getOrElseUpdate(from, mutable.Set()) += to
+  }
+
+  /** The edges of SQL text (a SQL-text model or an analysis), read from
+    * its placeholders through [[refTarget]] and the declared sources —
+    * what dbt's compile step learns by rendering `ref()`/`source()`,
+    * without resolving a plan. */
+  private def textEdges(nodeId: String, sql: String): Unit = {
+    Project.RefPat.findAllMatchIn(sql).foreach(m =>
+      recordEdge(nodeId, refTarget(m.group(1), None).id))
+    Project.SrcPat.findAllMatchIn(sql).foreach(m =>
+      recordEdge(nodeId, declaredSource(m.group(1), m.group(2)).id))
+  }
+
+  // compile-time plans by node id, kept for the project's life. One lock
+  // guards them and the `resolving` cycle set: resolution also happens
+  // mid-run on node threads (a relationships test, a snapshot ref before
+  // the snapshot's first build).
+  private val compileLock = new Object
+  private val compiled = mutable.Map[String, DataFrame]()
+  private val resolving = mutable.LinkedHashSet[String]() // cycle detection
+
+  /** The memoized compile-time plan of `node`, built with compile-time
+    * refs; a node that (transitively) refs itself while building fails
+    * with the chain instead of recursing. */
+  private def compileNode(node: Node, build: Ctx => DataFrame): DataFrame =
+    compileLock.synchronized {
+      compiled.getOrElse(node.id, {
+        if (!resolving.add(node.id))
+          throw new IllegalStateException(
+            s"ref cycle: ${resolving.mkString(" -> ")} -> ${node.id}")
+        val df = try build(ctxFor(node.id, resolve))
+          finally resolving.remove(node.id)
+        compiled(node.id) = df
+        df
+      })
+    }
+
+  /** Resolve a model to its (lazy) DataFrame. Ephemeral models inline;
+    * materialized models still resolve to the *unbuilt* plan here — the
+    * runner decides what to persist. */
+  def resolve(name: String): DataFrame = {
+    val m = declaredModel(name)
+    compileNode(m, m.build)
+  }
 
   /** Resolve a snapshot's FRESH query (memoized; records its ref/source
-    * edges like a model build). Routed through the same `resolving`
-    * cycle-detection set as models: before first build, a snapshot whose
-    * fresh query (transitively) refs itself would otherwise recurse
-    * resolveSnapshotFresh → snapshotDf → resolveSnapshotFresh to a
-    * StackOverflowError instead of an actionable cycle message. */
-  private def resolveSnapshotFresh(name: String): DataFrame =
-    snapFresh.getOrElse(name, {
-      val key = s"snapshot.$name"
-      if (!resolving.add(key))
-        throw new IllegalStateException(
-          s"ref cycle: ${resolving.mkString(" -> ")} -> $key")
-      val df = try snapshots(name).build(ctxFor(key, resolve))
-      finally resolving.remove(key)
-      snapFresh(name) = df
-      df
-    })
+    * edges like a model build). A snapshot whose fresh query
+    * (transitively) refs itself before its first build fails as a ref
+    * cycle instead of recursing through [[snapshotDf]]. */
+  private def resolveSnapshotFresh(name: String): DataFrame = {
+    val s = snapshots(name)
+    compileNode(s, s.build)
+  }
+
+  /** Resolve an analysis to its (never-materialized) plan — memoized;
+    * used by docs column introspection and `show`. */
+  private[engine] def resolveAnalysis(name: String): DataFrame = {
+    val a = analyses.getOrElse(name,
+      throw new NoSuchElementException(s"unknown analysis '$name'"))
+    compileNode(a, a.build)
+  }
 
   /** What a `ref` to a snapshot reads: the accumulated SCD-2 table once
     * built; before first build, the first-run-shaped plan (same schema,
@@ -345,25 +410,38 @@ final class Project(val spark: SparkSession, val target: Target) {
     else Materializer.snapshotFirstRun(resolveSnapshotFresh(s.name),
       s.checkCols, new java.sql.Timestamp(0L), s.uniqueKey, s.partitions)
 
-  // synchronized: exec-time resolution records edges from the run thread
-  // pool (compile-time resolution is single-threaded, but not exclusively)
-  private def recordEdge(from: String, to: String): Unit = edges.synchronized {
-    edges.getOrElseUpdate(from, mutable.Set()) += to
+  // ---- one memo per invocation -------------------------------------------
+
+  /** One memo entry: made by the first caller, under the entry's own
+    * lock, while later callers of the same key wait for it. */
+  private final class Once(make: () => DataFrame) {
+    lazy val value: DataFrame = make()
   }
 
-  /** Resolve a model to its (lazy) DataFrame. Ephemeral models inline;
-    * materialized models still resolve to the *unbuilt* plan here — the
-    * runner decides what to persist. */
-  def resolve(name: String): DataFrame = resolved.getOrElseUpdate(name, {
-    val m = declaredModel(name)
-    if (!resolving.add(name))
-      throw new IllegalStateException(
-        s"ref cycle: ${resolving.mkString(" -> ")} -> $name")
-    try m.build(ctxFor(m.id, resolve)) finally resolving.remove(name)
-  })
+  /** The memo of the `run`/`build`/`testOnly` in flight, keyed by node
+    * id; `None` between invocations, so a reused project, or
+    * `materializedDf` after a run, reads afresh. One invocation at a
+    * time per project. */
+  @volatile private var invocation
+      : Option[java.util.concurrent.ConcurrentHashMap[String, Once]] = None
 
+  /** `body` as one invocation: one memo serves it and is dropped after. */
+  private def invoke[A](body: => A): A = {
+    invocation = Some(new java.util.concurrent.ConcurrentHashMap[String, Once]())
+    try body finally invocation = None
+  }
+
+  /** `make` once per invocation under `key`; outside one, on every call. */
+  private def perInvocation(key: String)(make: => DataFrame): DataFrame =
+    invocation match {
+      case Some(memo) => memo.computeIfAbsent(key, _ => new Once(() => make)).value
+      case None => make
+    }
+
+  /** A source read — once per invocation, so a run lists and infers each
+    * source once (compile-time and exec-time resolution alike). */
   private def sourceDf(s: SourceDef): DataFrame =
-    s.location.reader.fold(spark.table, _.batch(spark))
+    perInvocation(s.id)(s.location.reader.fold(spark.table, _.batch(spark)))
 
   /** Streaming read of a source: [[FileRead.stream]], or
     * `readStream.table` for catalog tables. */
@@ -372,34 +450,28 @@ final class Project(val spark: SparkSession, val target: Target) {
 
   /** The one project [[Ctx]]: `refModel` is the rule that turns a model
     * ref into a DataFrame — the memoized compile-time [[resolve]], or
-    * [[execRef]] at exec time. Snapshot refs, sources, `this` and edge
-    * recording are the same for both. */
+    * [[execRef]] at exec time. The ref-name rule ([[refTarget]]), snapshot
+    * refs, sources, `this` and edge recording are the same for both. */
   private def ctxFor(nodeId: String, refModel: String => DataFrame): Ctx = {
-    def declaredSource(s0: String, t0: String): SourceDef = {
-      val sd = sources.getOrElse((s0, t0),
-        throw new NoSuchElementException(s"unknown source '$s0.$t0'"))
+    def source(s0: String, t0: String): SourceDef = {
+      val sd = declaredSource(s0, t0)
       recordEdge(nodeId, sd.id)
       sd
     }
     new Ctx(
       spark,
-      (depName0, version) => {
-        val depName = versionedName(depName0, version)
-        // snapshots share the ref namespace (dbt refs snapshots by name);
-        // a model of the same name wins, versioned refs are models-only
-        if (!models.contains(depName) && version.isEmpty &&
-            snapshots.contains(depName0)) {
-          recordEdge(nodeId, s"snapshot.$depName0")
-          snapshotDf(snapshots(depName0))
-        } else {
-          recordEdge(nodeId, s"model.$depName")
-          refModel(depName)
+      (name, version) => {
+        val dep = refTarget(name, version)
+        recordEdge(nodeId, dep.id)
+        dep match {
+          case s: Snapshot => snapshotDf(s)
+          case m => refModel(m.name)
         }
       },
-      (s0, t0) => sourceDf(declaredSource(s0, t0)),
+      (s0, t0) => sourceDf(source(s0, t0)),
       thisPhysical = models.get(nodeId.stripPrefix("model."))
         .map(physicalName),
-      resolveSourceStream = (s0, t0) => sourceStreamDf(declaredSource(s0, t0)))
+      resolveSourceStream = (s0, t0) => sourceStreamDf(source(s0, t0)))
   }
 
   /** Execution-time resolution (dbt ref semantics): a ref to a physically
@@ -407,17 +479,33 @@ final class Project(val spark: SparkSession, val target: Target) {
     * insert-overwrite) reads the MATERIALIZED relation — so downstream of
     * an incremental model sees the accumulated table, not the
     * is_incremental-filtered batch, and table upstreams are read, not
-    * recomputed. Only view/ephemeral upstreams keep plan inlining. Not
-    * memoized ACROSS calls (the physical state changes as the run
-    * progresses; topo order guarantees upstreams are built first), but
-    * memoized WITHIN one call so a diamond of views costs one build per
-    * dep, not 2^depth. */
+    * recomputed. Only view/ephemeral upstreams keep plan inlining. A
+    * physical model's plan is made afresh by each call (its
+    * `is_incremental` state changes as the run progresses; topo order
+    * guarantees upstreams are built first) and memoized within the call,
+    * so a diamond costs one build per dep, not 2^depth. A view's or an
+    * ephemeral's plan that reads only sources is made once per invocation
+    * ([[readsOnlySources]]). */
   private[engine] def resolveForRun(name: String): DataFrame =
     execResolve(declaredModel(name), mutable.Map[String, DataFrame]())
 
   private def execResolve(m: Model,
-      memo: mutable.Map[String, DataFrame]): DataFrame =
-    memo.getOrElseUpdate(m.name, m.build(ctxFor(m.id, execRef(memo))))
+      memo: mutable.Map[String, DataFrame]): DataFrame = {
+    def build = memo.getOrElseUpdate(m.name, m.build(ctxFor(m.id, execRef(memo))))
+    if (m.config.materialized.isPhysical || !readsOnlySources(m.id)) build
+    else perInvocation(m.id)(build)
+  }
+
+  /** Whether node `id` reads only sources: each of its edges leads to a
+    * source, or to a view or ephemeral that itself reads only sources.
+    * Such a plan cannot change during a run. A plan that reads a model's
+    * table or a snapshot can: that relation may be (re)written later in
+    * the run, so it is made per call. */
+  private def readsOnlySources(id: String): Boolean =
+    edges.synchronized(edges.get(id).map(_.toSet)).getOrElse(Set.empty)
+      .forall(up => sources.values.exists(_.id == up) ||
+        models.values.exists(m => m.id == up &&
+          !m.config.materialized.isPhysical && readsOnlySources(up)))
 
   /** The exec-time ref rule: read the catalog table if the upstream is
     * physical and built, otherwise build its plan. */
@@ -454,13 +542,10 @@ final class Project(val spark: SparkSession, val target: Target) {
       val dep = m2.group(1)
       java.util.regex.Matcher.quoteReplacement(compiledRelation(dep, inlining))
     })
-    Project.SrcPat.replaceAllIn(withRefs, m2 => {
-      val sd = sources.getOrElse((m2.group(1), m2.group(2)),
-        throw new NoSuchElementException(
-          s"unknown source '${m2.group(1)}.${m2.group(2)}'"))
+    Project.SrcPat.replaceAllIn(withRefs, m2 =>
       java.util.regex.Matcher.quoteReplacement(
-        sd.location.reader.fold(identity, _.relation))
-    })
+        declaredSource(m2.group(1), m2.group(2)).location.reader
+          .fold(identity, _.relation)))
   }
 
   /** What a compiled ref to `dep` reads (dbt-compile semantics): the
@@ -471,8 +556,8 @@ final class Project(val spark: SparkSession, val target: Target) {
     * whose dependencies are all physical (those become real views), else
     * the session temp-view name the materializer actually creates. */
   private def compiledRelation(dep: String, inlining: Set[String]): String =
-    models.get(versionedName(dep, None)) match {
-      case Some(dm) => dm.config.materialized match {
+    refTarget(dep, None) match {
+      case dm: Model => dm.config.materialized match {
         case Materialization.Ephemeral => dm.sqlText match {
           case Some(depSql) =>
             if (inlining.contains(dm.name)) throw new IllegalStateException(
@@ -488,38 +573,38 @@ final class Project(val spark: SparkSession, val target: Target) {
           physicalName(dm).replace(".", "__") // session temp view
         case _ => physicalName(dm)
       }
-      case None if snapshots.contains(dep) => physicalName(snapshots(dep))
-      case _ => throw new NoSuchElementException(s"unknown model '$dep'")
+      case snapshot => physicalName(snapshots(snapshot.name))
     }
 
   private[engine] def hasAnalysis(name: String): Boolean =
     analyses.contains(name)
 
-  private val analysisResolved = mutable.Map[String, DataFrame]()
-  /** Resolve an analysis to its (never-materialized) plan — memoized;
-    * records its ref/source edges like a model build. Used by compile()
-    * and docs column introspection. */
-  private[engine] def resolveAnalysis(name: String): DataFrame =
-    analysisResolved.getOrElseUpdate(name, {
-      val a = analyses.getOrElse(name,
-        throw new NoSuchElementException(s"unknown analysis '$name'"))
-      a.build(ctxFor(a.id, resolve))
-    })
-
-  /** Force-resolve everything and return the introspectable graph. */
+  /** The introspectable graph. A SQL-text model's or an analysis' edges
+    * come from its template text ([[textEdges]]), as dbt's compile step
+    * renders `ref()`/`source()` without planning anything; its plan is
+    * resolved only when something asks for it ([[resolve]], docs, the
+    * manifest, a DataFrame model's `ctx.ref`, the relationships test). A
+    * DataFrame model's or a snapshot's build function runs (memoized),
+    * because running it is the only way to learn its edges. Unknown
+    * `ref`/`source` names and ref cycles fail it. */
   def compile(): ProjectGraph = {
-    models.keys.foreach(resolve)
+    for (m <- models.values) m.sqlText match {
+      case Some(sql) => textEdges(m.id, sql)
+      case None => resolve(m.name)
+    }
     snapshots.keys.foreach(resolveSnapshotFresh) // records snapshot edges
-    analyses.keys.foreach(resolveAnalysis) // compiled, never run
+    analyses.values.foreach(a => textEdges(a.id, a.sqlText)) // never run
     val testNodes = tests.map(t => t.id -> (t: Node))
     tests.foreach(t => recordEdge(t.id, testTargetId(t.modelName)))
-    ProjectGraph(
+    val graph = ProjectGraph(
       (models.values.map(m => m.id -> (m: Node)) ++
         sources.values.map(s => s.id -> (s: Node)) ++
         seeds.values.map(s => s.id -> (s: Node)) ++
         snapshots.values.map(s => s.id -> (s: Node)) ++
         analyses.values.map(a => a.id -> (a: Node)) ++ testNodes).toMap,
-      edges.map { case (k, v) => k -> v.toSet }.toMap)
+      edges.synchronized(edges.map { case (k, v) => k -> v.toSet }.toMap))
+    graph.topoOrder // a cycle through SQL text is seen only here
+    graph
   }
 
   // ---- run: topo order, bounded parallelism, test interleaving ---------
@@ -546,7 +631,7 @@ final class Project(val spark: SparkSession, val target: Target) {
     * (dbt `--full-refresh`). */
   def run(select: String = "*", blockOnTestFailure: Boolean = false,
       previousManifest: Option[Map[String, String]] = None,
-      exclude: String = "", fullRefresh: Boolean = false): RunResults = {
+      exclude: String = "", fullRefresh: Boolean = false): RunResults = invoke {
     val graph = compile()
     val modified = previousManifest.map(modifiedSince).getOrElse(Set.empty)
     val included = Selector.select(graph, select, modified)
@@ -723,7 +808,7 @@ final class Project(val spark: SparkSession, val target: Target) {
   /** `dbt test`: evaluate data tests against EXISTING relations without
     * materializing any model — `test` must not run models as a side
     * effect (ephemeral/view targets are evaluated from their plans). */
-  def testOnly(select: String = "*"): RunResults = {
+  def testOnly(select: String = "*"): RunResults = invoke {
     val graph = compile()
     val selected = Selector.select(graph, select)
     RunResults(tests.toSeq.filter(t => selected(t.id)).map(runNode))
@@ -731,6 +816,9 @@ final class Project(val spark: SparkSession, val target: Target) {
 }
 
 object Project {
+  /** Numbers each SQL build's placeholder views ([[Project.sqlBuild]]). */
+  private val buildSeq = new java.util.concurrent.atomic.AtomicLong()
+
   private[engine] val RefPat =
     raw"\{\{\s*ref\(\s*'([^']+)'\s*\)\s*\}\}".r
   private[engine] val SrcPat =

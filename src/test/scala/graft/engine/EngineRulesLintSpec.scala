@@ -38,6 +38,20 @@ class EngineRulesLintSpec extends AnyFunSuite {
     assert(h.isEmpty, h.mkString("\n"))
   }
 
+  test("one ref-name rule: refTarget, called by ctxFor and the text-edge pass") {
+    // versioned model names (`name_vN`) are spelled only in the rule
+    val spelled = hits("""_v[$(]""".r,
+      (file, method) => file == "Project.scala" && method == "refTarget")
+    assert(spelled.isEmpty, spelled.mkString("\n"))
+    val lines = codeLines(engineDir.resolve("Project.scala"))
+    val callers = lines.indices
+      .filter(i => lines(i).contains("refTarget("))
+      .map(methodAt(lines, _)).toSet - "refTarget"
+    assert(Set("ctxFor", "textEdges").subsetOf(callers), callers)
+    assert(callers.subsetOf(
+      Set("ctxFor", "textEdges", "compiledRelation", "runUnitTest")), callers)
+  }
+
   test("one physical test: View/Ephemeral matched only where kinds dispatch") {
     // materialize writes each kind its own way, compiledRelation renders
     // an ephemeral inline and a view by name, and the evaluator's

@@ -324,15 +324,20 @@ final class Ctx(
     * materialized [[Materialization.StreamingTable]]. */
   def sourceStream(sourceName: String, table: String): DataFrame =
     resolveSourceStream(sourceName, table)
-  /** dbt `is_incremental()`: true when this model's relation already
-    * exists in the catalog (so the build can filter to new rows only). */
+  /** dbt `is_incremental()`: true when a model is built and its relation
+    * already exists in the catalog (so the build can filter to new rows
+    * only). Always false at compile time, as in dbt's parse: the edges
+    * come from the full-refresh branch, so ref every dependency on every
+    * branch — a ref made only under `isIncremental` fails the node at run
+    * time, naming the ref. */
   def isIncremental: Boolean =
     thisPhysical.exists(spark.catalog.tableExists)
   /** dbt `{{ this }}`: the model's own existing relation. Only valid when
     * [[isIncremental]] — typical use:
     * `if (ctx.isIncremental) df.filter($"ts" > ctx.thisDf.agg(max($"ts")).first.get(0)) else df` */
   def thisDf: DataFrame = spark.table(thisPhysical.getOrElse(
-    throw new IllegalStateException("`this` only exists for incremental builds")))
+    throw new IllegalStateException("`this` only exists for incremental " +
+      "builds; it is unbound at compile time, where isIncremental is false")))
 }
 
 /** The project DAG, introspectable like the reference's `graph.nodes`

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Materialization strategies (SURVEY.md §3.1 stage 5).
@@ -236,12 +236,6 @@ object Materializer {
       .saveAsTable(p.physicalName(s))
   }
 
-  /** SCD-2 snapshot without MERGE (SURVEY.md §7.4.1): full-outer compare
-    * of the current snapshot against the new query by unique key; changed
-    * rows are closed out (`valid_to = asOf`) and re-inserted open; the
-    * result lands in a staging table then swaps in via RENAME (atomic at
-    * the catalog level). `asOf` is injected for determinism.
-    */
   /** dbt surrogate-key pattern: coalesce each check column to a sentinel
     * BEFORE concat_ws (concat_ws silently skips NULL args, so a NULL
     * shift across columns — (x,NULL) vs (NULL,x) — would otherwise hash
@@ -275,7 +269,15 @@ object Materializer {
     }
   }
 
-  /** SCD-2 snapshot build. `partitions = None` (default) rewrites the
+  /** SCD-2 snapshot without MERGE (SURVEY.md §7.4.1): one full-outer join
+    * of the current open rows against the new query by unique key, each
+    * joined row expanded to its 0-2 output rows — the current row kept
+    * open (check hash unchanged) or closed out (`valid_to = asOf`; key
+    * changed or gone), and the fresh row inserted open (key new or
+    * changed). Closed history is carried over unread by the join. `asOf`
+    * is injected for determinism.
+    *
+    * `partitions = None` (default) rewrites the
     * whole table via staging + atomic RENAME swap. `partitions = Some(n)`
     * is the 100 TB path: the table is bucketed by
     * `graft_part = pmod(hash(uniqueKey), n)`, and each run rewrites ONLY
@@ -284,7 +286,10 @@ object Materializer {
     * run that touches 1% of keys rewrites ~the same fraction of buckets,
     * not the accumulated history. Unchanged buckets' files are never
     * opened for write (EngineSpec proves them byte-identical across a
-    * run). Semantics are identical to the full rewrite. */
+    * run); the bucket set is read from the joined rows' changed ones, so
+    * this path evaluates the join twice: for the buckets and for the
+    * rewrite. Semantics are identical to the full rewrite (SnapshotSpec
+    * pins both). */
   def snapshot(p: Project, table: String, fresh: DataFrame,
       uniqueKey: String, checkCols: Seq[String],
       asOf: java.sql.Timestamp, partitions: Option[Int] = None): Unit = {
@@ -303,50 +308,46 @@ object Materializer {
       return
     }
     val current = spark.table(physical)
-    val currentOpen = current.filter(col("valid_to").isNull)
     val currentClosed = current.filter(col("valid_to").isNotNull)
+    val columns = current.columns.toSeq
+    val cur = current.filter(col("valid_to").isNull).alias("c")
     val next = hashed(fresh).alias("n")
-    val cur = currentOpen.alias("c")
-    val keyEq = col(s"c.$uniqueKey") === col(s"n.$uniqueKey")
-    val joined = cur.join(next, keyEq, "full_outer")
-    val stillOpen = joined
-      .filter(col(s"c.$uniqueKey").isNotNull && col(s"n.$uniqueKey").isNotNull &&
-        col("c.graft_check") === col("n.graft_check"))
-      .select(cur.columns.map(c => col(s"c.$c")): _*)
-    val closedOut = joined
-      .filter(col(s"c.$uniqueKey").isNotNull &&
-        (col(s"n.$uniqueKey").isNull || col("c.graft_check") =!= col("n.graft_check")))
-      .select(cur.columns.map(c => col(s"c.$c")): _*)
-      .withColumn("valid_to", lit(asOf))
-    val insertedBare = joined
-      .filter(col(s"n.$uniqueKey").isNotNull &&
-        (col(s"c.$uniqueKey").isNull || col("c.graft_check") =!= col("n.graft_check")))
-      .select(next.columns.map(c => col(s"n.$c")): _*)
-      .withColumn("valid_from", lit(asOf))
-      .withColumn("valid_to", open)
+    val added = next.columns.toSet -- columns
+    require(added.isEmpty, s"snapshot $physical: the fresh query has " +
+      s"columns the table lacks: ${added.mkString(", ")}")
+    val hasCur = col(s"c.$uniqueKey").isNotNull
+    val hasNext = col(s"n.$uniqueKey").isNotNull
+    val same = hasCur && hasNext && col("c.graft_check") === col("n.graft_check")
+    // one output row of a side; `graft_moved` marks the rows this run
+    // changed (closed out or inserted), whose buckets a bucketed rewrite
+    // must write
+    def side(alias: String, set: Map[String, Column], moved: Column) =
+      struct(columns.map(k => set.getOrElse(k, col(s"$alias.$k")).as(k)) :+
+        moved.as("graft_moved"): _*)
+    val kept = side("c", Map("valid_to" -> when(same, open).otherwise(lit(asOf))),
+      !same)
+    val inserted = side("n", Map("valid_from" -> lit(asOf), "valid_to" -> open) ++
+      partitions.map(k => "graft_part" -> snapshotPart(s"n.$uniqueKey", k)),
+      lit(true))
+    val rows = cur.join(next, col(s"c.$uniqueKey") === col(s"n.$uniqueKey"), "full_outer")
+      .select(explode(filter(array(when(hasCur, kept),
+        when(hasNext && !same, inserted)), _.isNotNull)).as("r"))
+      .select("r.*")
+    val result = currentClosed.unionByName(rows.drop("graft_moved"))
     partitions match {
       case None =>
-        val result = currentClosed
-          .unionByName(stillOpen).unionByName(closedOut).unionByName(insertedBare)
         val staging = physical + "__staging"
         result.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(staging)
         swapTables(spark, staging, physical)
-      case Some(n) =>
-        // the fresh side has no bucket column yet; a key's bucket is a
-        // pure hash so new versions land with their history
-        val inserted = insertedBare
-          .withColumn("graft_part", snapshotPart(uniqueKey, n))
+      case Some(_) =>
         // buckets that gained, lost, or changed a key; everything else
-        // is untouched on disk. closedOut ∪ inserted covers all three
-        // classes (a disappeared key close-out is in closedOut; a new or
-        // changed key's open row is in inserted). Bounded collect: ≤ n.
-        val buckets = closedOut.select(col("graft_part"))
-          .unionByName(inserted.select(col("graft_part")))
+        // is untouched on disk. A key's bucket is a pure hash of the key,
+        // so its history, its closed-out row and its new version share
+        // one bucket. Bounded collect: ≤ partitions.
+        val buckets = rows.filter(col("graft_moved")).select(col("graft_part"))
           .distinct().collect().map(_.getInt(0)).toSeq
         if (buckets.isEmpty) return // no drift — zero partitions rewritten
-        val affected = currentClosed
-          .unionByName(stillOpen).unionByName(closedOut).unionByName(inserted)
-          .filter(col("graft_part").isin(buckets: _*))
+        val affected = result.filter(col("graft_part").isin(buckets: _*))
           // eager pin: the rewrite below reads FROM the table it
           // overwrites; cut that lineage before the write (the
           // incremental-merge staging swap's moral equivalent, scoped to

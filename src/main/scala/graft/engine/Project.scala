@@ -9,7 +9,8 @@ import java.util.concurrent.Executors
 /** The project registry + runner: models/sources/seeds/tests are declared
   * as Scala values. `compile()` records the `ref`/`source` edges: a
   * SQL-text model's or an analysis' from its template text, a DataFrame
-  * model's or a snapshot's by running its build function once. Plans are
+  * model's or a snapshot's by running its build function once with
+  * `is_incremental()` false (dbt's parse-time rule). Plans are
   * resolved lazily (memoized, cycle-checked) when something asks for one.
   * `run()` builds the DAG in topological order with bounded parallelism
   * (the reference's `threads: 16` contract) and interleaves data tests
@@ -369,16 +370,17 @@ final class Project(val spark: SparkSession, val target: Target) {
         if (!resolving.add(node.id))
           throw new IllegalStateException(
             s"ref cycle: ${resolving.mkString(" -> ")} -> ${node.id}")
-        val df = try build(ctxFor(node.id, resolve))
+        val df = try build(ctxFor(node.id, None))
           finally resolving.remove(node.id)
         compiled(node.id) = df
         df
       })
     }
 
-  /** Resolve a model to its (lazy) DataFrame. Ephemeral models inline;
-    * materialized models still resolve to the *unbuilt* plan here — the
-    * runner decides what to persist. */
+  /** Resolve a model to its (lazy) compile-time DataFrame: the
+    * full-refresh branch (`is_incremental()` is false). Ephemeral models
+    * inline; materialized models still resolve to the *unbuilt* plan here
+    * — the runner decides what to persist. */
   def resolve(name: String): DataFrame = {
     val m = declaredModel(name)
     compileNode(m, m.build)
@@ -448,31 +450,52 @@ final class Project(val spark: SparkSession, val target: Target) {
   private def sourceStreamDf(s: SourceDef): DataFrame =
     s.location.reader.fold(spark.readStream.table, _.stream(spark))
 
-  /** The one project [[Ctx]]: `refModel` is the rule that turns a model
-    * ref into a DataFrame — the memoized compile-time [[resolve]], or
-    * [[execRef]] at exec time. The ref-name rule ([[refTarget]]), snapshot
-    * refs, sources, `this` and edge recording are the same for both. */
-  private def ctxFor(nodeId: String, refModel: String => DataFrame): Ctx = {
+  /** The one project [[Ctx]]. At compile time (`execMemo` empty) a model
+    * ref is the memoized compile-time plan ([[resolve]]), every ref and
+    * source records its edge, and `this` is unbound: `is_incremental()`
+    * is false, as in dbt's parse, so a build compiles its full-refresh
+    * branch and runs no query on its own table. At exec time a model ref
+    * goes through [[execRef]] and `this` is the model's relation. The
+    * ref-name rule ([[refTarget]]), snapshot refs and sources are the
+    * same for both. */
+  private def ctxFor(nodeId: String,
+      execMemo: Option[mutable.Map[String, DataFrame]]): Ctx = {
+    def edge(to: String, call: => String): Unit =
+      if (execMemo.isDefined && invocation.isDefined) requireEdge(nodeId, to, call)
+      else recordEdge(nodeId, to)
     def source(s0: String, t0: String): SourceDef = {
       val sd = declaredSource(s0, t0)
-      recordEdge(nodeId, sd.id)
+      edge(sd.id, s"source('$s0', '$t0')")
       sd
     }
     new Ctx(
       spark,
       (name, version) => {
         val dep = refTarget(name, version)
-        recordEdge(nodeId, dep.id)
+        edge(dep.id, s"ref('$name'${version.fold("")(v => s", $v")})")
         dep match {
           case s: Snapshot => snapshotDf(s)
-          case m => refModel(m.name)
+          case m => execMemo.fold(resolve(m.name))(execRef(_)(m.name))
         }
       },
       (s0, t0) => sourceDf(source(s0, t0)),
-      thisPhysical = models.get(nodeId.stripPrefix("model."))
-        .map(physicalName),
+      thisPhysical = execMemo.flatMap(_ =>
+        models.get(nodeId.stripPrefix("model.")).map(physicalName)),
       resolveSourceStream = (s0, t0) => sourceStreamDf(source(s0, t0)))
   }
+
+  /** The guard for what compile cannot see: while a run is in flight, its
+    * graph is the one `compile()` recorded, so a ref or source a build
+    * reaches only at exec time (say under `ctx.isIncremental`) has no
+    * edge, and the node could run before that upstream. It fails the node
+    * instead, naming the call — dbt's "unable to infer all dependencies"
+    * error. */
+  private def requireEdge(from: String, to: String, call: String): Unit =
+    if (!edges.synchronized(edges.get(from).exists(_.contains(to))))
+      throw new IllegalStateException(
+        s"unable to infer all dependencies for $from: $call ($to) is " +
+          "reached only at run time, e.g. under ctx.isIncremental; compile " +
+          "runs the full-refresh branch, so make the call on every branch")
 
   /** Execution-time resolution (dbt ref semantics): a ref to a physically
     * materialized upstream (table / incremental / bucketed /
@@ -491,7 +514,7 @@ final class Project(val spark: SparkSession, val target: Target) {
 
   private def execResolve(m: Model,
       memo: mutable.Map[String, DataFrame]): DataFrame = {
-    def build = memo.getOrElseUpdate(m.name, m.build(ctxFor(m.id, execRef(memo))))
+    def build = memo.getOrElseUpdate(m.name, m.build(ctxFor(m.id, Some(memo))))
     if (m.config.materialized.isPhysical || !readsOnlySources(m.id)) build
     else perInvocation(m.id)(build)
   }
@@ -585,8 +608,13 @@ final class Project(val spark: SparkSession, val target: Target) {
     * resolved only when something asks for it ([[resolve]], docs, the
     * manifest, a DataFrame model's `ctx.ref`, the relationships test). A
     * DataFrame model's or a snapshot's build function runs (memoized),
-    * because running it is the only way to learn its edges. Unknown
-    * `ref`/`source` names and ref cycles fail it. */
+    * because running it is the only way to learn its edges. It runs with
+    * `this` unbound: `is_incremental()` is false at compile, as in dbt's
+    * parse, so an incremental model records the edges of its full-refresh
+    * branch and its cursor query runs only when it is built. A model must
+    * therefore make its refs on every branch; one made only under
+    * `ctx.isIncremental` fails that node at run time ([[requireEdge]]).
+    * Unknown `ref`/`source` names and ref cycles fail it. */
   def compile(): ProjectGraph = {
     for (m <- models.values) m.sqlText match {
       case Some(sql) => textEdges(m.id, sql)
@@ -729,14 +757,15 @@ final class Project(val spark: SparkSession, val target: Target) {
         case s: Snapshot =>
           // fresh query built with EXEC-time resolution (reads
           // materialized upstreams, which topo order has already built)
-          val fresh = s.build(ctxFor(s.id, execRef(mutable.Map())))
+          val fresh = s.build(ctxFor(s.id, Some(mutable.Map())))
           Materializer.snapshot(this, physicalName(s), fresh,
             s.uniqueKey, s.checkCols, s.asOf(), s.partitions)
           NodeResult(s.id, "success", ms)
         case t: DataTest =>
+          // a take-1 probe: it stops at the first violation and plans no
+          // single-partition exchange
           val viol = t.violations(materializedDf(t.modelName))
-          val n = viol.limit(1).count()
-          if (n == 0) NodeResult(t.id, "success", ms)
+          if (viol.isEmpty) NodeResult(t.id, "success", ms)
           else failuresSchema match {
             case Some(schema) =>
               // dbt store_failures: persist the violations for inspection

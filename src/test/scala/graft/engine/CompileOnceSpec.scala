@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions._
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 /** Compile once, resolve once: SQL-text nodes compile from their template
-  * text, a run reads each source once, and resolution is safe on node
-  * threads (per-build placeholder views, one compile lock). */
+  * text, a run reads each source once, resolution is safe on node threads
+  * (per-build placeholder views, one compile lock), and compile takes
+  * every model's full-refresh branch (`is_incremental()` is false, as in
+  * dbt's parse). */
 class CompileOnceSpec extends SparkSpec {
 
   private def newProject(schema: String): Project =
@@ -212,5 +214,102 @@ class CompileOnceSpec extends SparkSpec {
       val second = pool.submit(() => p.resolve("slow")) // no false "ref cycle"
       assert(first.get(60, TimeUnit.SECONDS) eq second.get(60, TimeUnit.SECONDS))
     } finally pool.shutdown()
+  }
+
+  private val incrementalById =
+    ModelConfig(Materialization.Incremental(Some(Seq("id"))))
+
+  /** The dbt cursor pattern: the full source first, then only ids past
+    * the table's largest. */
+  private def cursorModel(p: Project, name: String): Project =
+    p.model(name, incrementalById) { ctx =>
+      val ev = ctx.source("raw", "ev")
+      if (!ctx.isIncremental) ev
+      else ev.filter(col("id") > ctx.thisDf.agg(max("id")).first().getLong(0))
+    }
+
+  test("compile() runs no query on a built incremental model's table") {
+    val dir = tempDir("cursor") + "/ev"
+    spark.range(4).toDF("id").write.parquet(dir)
+    def project(): Project = {
+      val p = newProject("cursor")
+      p.source("raw", "ev", ParquetPath(dir))
+      cursorModel(p, "inc")
+      p.sqlModel("child", table)("select id from {{ ref('inc') }}")
+    }
+    assert(project().build().ok)
+    val (g, jobs) = JobLog.of(spark)(project().compile())
+    assert(g.upstream("model.inc") == Set("source.raw.ev"))
+    // the source's schema inference (Core.scala) is the only job; the
+    // cursor's `first()` is not run at compile
+    assert(jobs.nonEmpty && jobs.forall(_.contains("Core.scala")), jobs)
+    spark.range(4, 6).toDF("id").write.mode("append").parquet(dir)
+    assert(project().build().ok)
+    assert(spark.table("cursor.inc").count() == 6L)
+    assert(spark.table("cursor.child").count() == 6L)
+  }
+
+  test("a ref made only under ctx.isIncremental fails its node, naming the ref") {
+    def project(): Project = {
+      val p = newProject("hidden")
+      p.model("a", table) { ctx => import ctx.spark.implicits._; Seq(1L).toDF("id") }
+      p.model("b", incrementalById) { ctx =>
+        import ctx.spark.implicits._
+        val base = Seq(1L, 2L).toDF("id")
+        if (ctx.isIncremental) base.join(ctx.ref("a"), "id") else base
+      }
+      p.model("c", table)(_.ref("b"))
+      p.model("d", table)(_.ref("c"))
+    }
+    assert(project().run().ok)
+    val p = project()
+    assert(p.compile().upstream("model.b").isEmpty)
+    val by = p.run().byId
+    assert(by("model.a").status == "success")
+    assert(by("model.b").status == "error")
+    assert(by("model.b").message.contains("ref('a')") &&
+      by("model.b").message.contains("model.a"), by("model.b"))
+    assert(by("model.c").status == "skipped")
+    assert(by("model.d").status == "skipped")
+  }
+
+  test("relationships against an incremental parent passes on a second build") {
+    val dir = tempDir("relinc") + "/ev"
+    spark.range(3).toDF("id").write.parquet(dir)
+    def project(): Project = {
+      val p = newProject("relinc")
+      p.source("raw", "ev", ParquetPath(dir))
+      cursorModel(p, "parent")
+      p.model("child", table)(_.ref("parent").select(col("id").as("pid")))
+      p.testRelationship("child", "pid", "parent", "id")
+    }
+    val test = "test.relationships__child__pid"
+    assert(project().build().byId(test).status == "success")
+    // no new rows: the parent's compile-time plan is its full-refresh
+    // branch, not the empty batch past its cursor
+    val second = project().build()
+    assert(second.byId(test).status == "success", second.results)
+    assert(spark.table("relinc.parent").count() == 3L)
+    assert(spark.table("relinc.child").count() == 3L)
+  }
+
+  test("state:modified does not select an incremental model whose data alone changed") {
+    val dir = tempDir("stateinc") + "/ev"
+    spark.range(3).toDF("id").write.parquet(dir)
+    def project(): Project = {
+      val p = newProject("stateinc")
+      p.source("raw", "ev", ParquetPath(dir))
+      cursorModel(p, "inc")
+      p.model("child", table)(_.ref("inc").select(col("id")))
+    }
+    val first = project()
+    assert(first.build().ok)
+    val previous = first.manifest
+    spark.range(3, 5).toDF("id").write.mode("append").parquet(dir)
+    val next = project()
+    assert(next.build().ok)
+    // the manifest hashes the full-refresh plan, which holds no cursor
+    assert(next.modifiedSince(previous).isEmpty)
+    assert(project().modifiedSince(previous).isEmpty)
   }
 }

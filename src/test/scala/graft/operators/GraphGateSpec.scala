@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.ReleaseLog
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
@@ -10,10 +11,11 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
   * (driver-local, past the range of `limit`'s Int argument), each with
   * the broadcast cap at 0 (shuffle joins) and at its default; every run
   * must equal the first bit for bit. After each run the harness releases
-  * the checkpoints its result reads, and no RDD the run persisted may
-  * still be persisted. That check is exact for a forgotten Dataset cache
-  * and for the result's own checkpoints; a forgotten round checkpoint
-  * fails it only while no GC has let the ContextCleaner drop it. */
+  * the checkpoints its result reads, and every RDD the run persisted
+  * must have been released by the code: none may still be persisted, and
+  * none may have been freed by the ContextCleaner alone ([[ReleaseLog]]),
+  * which is where a forgotten round checkpoint goes once a GC has made
+  * it unreachable. */
 class GraphGateSpec extends SparkSpec {
   import spark.implicits._
 
@@ -33,15 +35,20 @@ class GraphGateSpec extends SparkSpec {
   private def bothSides(op: (Long, Long) => DataFrame): Seq[String] = {
     val runs = for (cap <- caps; bcast <- broadcastCaps) yield {
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      val out = op(cap, bcast)
-      val local = out.queryExecution.logical
-        .collectFirst { case r: LocalRelation => r }.isDefined
+      val ((local, got), cleanerOnly) = ReleaseLog.of(spark) {
+        val out = op(cap, bcast)
+        val local = out.queryExecution.logical
+          .collectFirst { case r: LocalRelation => r }.isDefined
+        val got = bits(out)
+        CacheScope.releaseCheckpoint(out)
+        (local, got)
+      }
       assert(local == (cap > 0L), s"cap $cap took the wrong side")
-      val got = bits(out)
-      CacheScope.releaseCheckpoint(out)
       val left = spark.sparkContext.getPersistentRDDs.keySet -- before
       assert(left.isEmpty,
         s"cap $cap, broadcast cap $bcast: RDDs $left still persisted")
+      assert(cleanerOnly.isEmpty, s"cap $cap, broadcast cap $bcast: RDDs " +
+        s"$cleanerOnly were never released, only freed by the ContextCleaner")
       s"cap $cap, broadcast cap $bcast" -> got
     }
     val (_, first) = runs.head

@@ -109,15 +109,46 @@ sealed trait Node {
 /** A model: a named build function + config. `build` receives a [[Ctx]]
   * whose `ref`/`source` calls both resolve to DataFrames and record DAG
   * edges — replacing dbt's Jinja render-time dependency extraction
-  * (SURVEY.md §3.1 stage 3). `sqlText` is set for SQL-text models: their
-  * edges are read from the text's placeholders at compile time, and it
-  * enables persistent CREATE VIEW materialization (SURVEY §7.4.2). */
+  * (SURVEY.md §3.1 stage 3). `sqlText` is a SQL-text model's parsed
+  * [[SqlTemplate]]: compile reads its edges, and it renders compiled SQL
+  * and persistent CREATE VIEW materialization (SURVEY §7.4.2). */
 final case class Model(
     name: String,
     config: ModelConfig,
     build: Ctx => DataFrame,
-    sqlText: Option[String] = None) extends Node {
+    sqlText: Option[SqlTemplate] = None) extends Node {
   def id: String = s"model.$name"
+}
+
+/** SQL text parsed once, when it is declared: literal fragments and the
+  * `{{ ref('m') }}` / `{{ source('s', 't') }}` placeholders between them. */
+final case class SqlTemplate(parts: Seq[SqlTemplate.Part]) {
+  import SqlTemplate._
+  /** The text with each placeholder replaced by `relation` of it. */
+  def render(relation: Placeholder => String): String =
+    parts.map { case Literal(text) => text; case p: Placeholder => relation(p) }
+      .mkString
+  def placeholders: Seq[Placeholder] = parts.collect { case p: Placeholder => p }
+  /** Every placeholder as one plain identifier: the text the lints read. */
+  def masked: String = render(_ => "graft_tmpl")
+}
+object SqlTemplate {
+  sealed trait Part
+  final case class Literal(text: String) extends Part
+  sealed trait Placeholder extends Part
+  final case class Ref(name: String) extends Placeholder
+  final case class Src(source: String, table: String) extends Placeholder
+
+  def parse(sql: String): SqlTemplate = {
+    val ref = raw"ref\(\s*'([^']+)'\s*\)"
+    val source = raw"source\(\s*'([^']+)'\s*,\s*'([^']+)'\s*\)"
+    val found = raw"\{\{\s*(?:$ref|$source)\s*\}\}".r.findAllMatchIn(sql).toSeq
+    val from = 0 +: found.map(_.end)
+    SqlTemplate(found.zip(from).flatMap { case (m, at) =>
+      Seq(Literal(sql.substring(at, m.start)),
+        if (m.group(1) != null) Ref(m.group(1)) else Src(m.group(2), m.group(3)))
+    } :+ Literal(sql.substring(from.last)))
+  }
 }
 
 /** A declared external input (the reference's `models/sources.yml`):
@@ -238,8 +269,7 @@ final case class Snapshot(
   * project and renders them in docs, but no command ever runs them). */
 final case class Analysis(
     name: String,
-    build: Ctx => DataFrame,
-    sqlText: String) extends Node {
+    sqlText: SqlTemplate) extends Node {
   def id: String = s"analysis.$name"
 }
 

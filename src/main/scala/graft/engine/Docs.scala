@@ -22,25 +22,18 @@ package graft.engine
 object Docs {
 
   private def columnsOf(project: Project, node: Node): Seq[(String, String)] = {
-    def fromCatalog(physical: String): Seq[(String, String)] =
+    def fromCatalog(physical: String) =
       if (project.spark.catalog.tableExists(physical))
-        project.spark.table(physical).schema.fields.toSeq
-          .map(f => f.name -> f.dataType.simpleString)
-      else Nil
-    try node match {
-      case m: Model =>
-        project.resolve(m.name).schema.fields.toSeq
-          .map(f => f.name -> f.dataType.simpleString)
+        Some(project.spark.table(physical).schema) else None
+    try (node match {
+      case m: Model => Some(project.resolve(m.name).schema)
       case s: Seed => fromCatalog(project.physicalName(s))
       case s: Snapshot => fromCatalog(project.physicalName(s))
       case sd: SourceDef => project.sourceSchema(sd)
-        .map(_.fields.toSeq.map(f => f.name -> f.dataType.simpleString))
-        .getOrElse(Nil)
-      case a: Analysis =>
-        project.resolveAnalysis(a.name).schema.fields.toSeq
-          .map(f => f.name -> f.dataType.simpleString)
-      case _: DataTest => Nil
-    } catch { case _: Exception => Nil } // docs never fail the project
+      case a: Analysis => Some(project.resolveAnalysis(a.name).schema)
+      case _: DataTest => None
+    }).toSeq.flatMap(_.fields.map(f => f.name -> f.dataType.simpleString))
+    catch { case _: Exception => Nil } // docs never fail the project
   }
 
   private def physicalOf(project: Project, node: Node): Option[String] =

@@ -488,10 +488,8 @@ object Macros {
     * hard-code by construction (inputs come through Ctx). */
   private[engine] def hardCodedRelations(m: Model): Seq[String] =
     m.sqlText.toSeq.flatMap { sql =>
-      val templated = Project.SrcPat.replaceAllIn(
-        Project.RefPat.replaceAllIn(sql, "__graft_tmpl__"), "__graft_tmpl__")
       raw"(?i)\b(?:from|join)\s+([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)+)".r
-        .findAllMatchIn(templated).map(_.group(1)).toSeq.distinct
+        .findAllMatchIn(sql.masked).map(_.group(1)).toSeq.distinct
     }
 
   /** Database-clone workflow (`README.md:221`): Snowflake zero-copy

@@ -7,46 +7,21 @@ import org.apache.spark.sql.functions._
   *
   * - `table`   → `CREATE DATABASE IF NOT EXISTS` + `saveAsTable`
   *               (overwrite), parquet in the warehouse dir.
-  * - `view`    → session temp view under `schema__alias` (DataFrame
-  *               models carry no SQL text, so a persistent `CREATE VIEW`
-  *               isn't expressible — documented limitation, SURVEY §7.4.2);
-  *               consumers resolve through the registry anyway.
+  * - `view`    → a persistent `CREATE VIEW` for a SQL-text model whose
+  *               refs read physical models and sources catalog tables
+  *               (`Project.persistentViewSql`); else (DataFrame models
+  *               too) a session temp view under `schema__alias`.
   * - `ephemeral` → nothing persisted; consumers inline the plan.
-  * - `incremental` → first run creates the table; later runs append new
-  *               rows, anti-joined on the unique key when configured
-  *               (no Delta/Iceberg in this environment, so MERGE INTO is
-  *               unavailable — SURVEY.md §7.4.1).
+  * - `incremental` → first run creates the table; later runs append
+  *               (`Append`), append new keys (`InsertNew`) or replace
+  *               matching keys by a staged rewrite (`Merge`) — no MERGE
+  *               INTO without Delta/Iceberg (SURVEY.md §7.4.1).
   * - seeds     → CSV with header/schema inference → table.
   */
 object Materializer {
 
   private def ensureSchema(p: Project, schema: String): Unit =
     p.spark.sql(s"CREATE DATABASE IF NOT EXISTS `$schema`")
-
-  /** For a SQL-text model, the view body with every `{{ ref }}` /
-    * `{{ source }}` replaced by a PHYSICAL table name — defined only when
-    * all dependencies are catalog tables (a persistent view cannot read
-    * session temp views). */
-  private[engine] def persistentViewSql(p: Project, m: Model): Option[String] =
-    m.sqlText.flatMap { sql =>
-      def refPhysical(name: String): Option[String] =
-        p.modelOpt(name).collect {
-          case dep if dep.config.materialized.isPhysical => p.physicalName(dep)
-        }
-      def srcPhysical(s0: String, t0: String): Option[String] =
-        p.sourceOpt(s0, t0).flatMap(_.location.reader.left.toOption)
-      val refs = Project.RefPat.findAllMatchIn(sql)
-        .map(x => refPhysical(x.group(1))).toList
-      val srcs = Project.SrcPat.findAllMatchIn(sql)
-        .map(x => srcPhysical(x.group(1), x.group(2))).toList
-      if ((refs ++ srcs).exists(_.isEmpty)) None
-      else Some {
-        val s1 = Project.RefPat.replaceAllIn(sql,
-          x => refPhysical(x.group(1)).get)
-        Project.SrcPat.replaceAllIn(s1,
-          x => srcPhysical(x.group(1), x.group(2)).get)
-      }
-    }
 
   /** dbt contract enforcement: name/type diff of the built DataFrame
     * against the declared contract; any line present → violation. */
@@ -80,7 +55,7 @@ object Materializer {
     m.config.materialized match {
       case Materialization.Ephemeral => ()
       case Materialization.View =>
-        persistentViewSql(p, m) match {
+        p.persistentViewSql(m) match {
           case Some(viewSql) =>
             // SQL-text model whose dependencies are all physical tables:
             // a real catalog view (closes SURVEY §7.4.2's limitation)
@@ -270,8 +245,9 @@ object Materializer {
   }
 
   /** SCD-2 snapshot without MERGE (SURVEY.md §7.4.1): one full-outer join
-    * of the current open rows against the new query by unique key, each
-    * joined row expanded to its 0-2 output rows — the current row kept
+    * of the current open rows against the new query by unique key
+    * (null-safe, so a NULL key is a key like any other), each joined row
+    * expanded to its 0-2 output rows — the current row kept
     * open (check hash unchanged) or closed out (`valid_to = asOf`; key
     * changed or gone), and the fresh row inserted open (key new or
     * changed). Closed history is carried over unread by the join. `asOf`
@@ -315,8 +291,9 @@ object Materializer {
     val added = next.columns.toSet -- columns
     require(added.isEmpty, s"snapshot $physical: the fresh query has " +
       s"columns the table lacks: ${added.mkString(", ")}")
-    val hasCur = col(s"c.$uniqueKey").isNotNull
-    val hasNext = col(s"n.$uniqueKey").isNotNull
+    // a side is present when its check hash is (sha2 is never NULL; a key can be)
+    val hasCur = col("c.graft_check").isNotNull
+    val hasNext = col("n.graft_check").isNotNull
     val same = hasCur && hasNext && col("c.graft_check") === col("n.graft_check")
     // one output row of a side; `graft_moved` marks the rows this run
     // changed (closed out or inserted), whose buckets a bucketed rewrite
@@ -329,7 +306,7 @@ object Materializer {
     val inserted = side("n", Map("valid_from" -> lit(asOf), "valid_to" -> open) ++
       partitions.map(k => "graft_part" -> snapshotPart(s"n.$uniqueKey", k)),
       lit(true))
-    val rows = cur.join(next, col(s"c.$uniqueKey") === col(s"n.$uniqueKey"), "full_outer")
+    val rows = cur.join(next, col(s"c.$uniqueKey") <=> col(s"n.$uniqueKey"), "full_outer")
       .select(explode(filter(array(when(hasCur, kept),
         when(hasNext && !same, inserted)), _.isNotNull)).as("r"))
       .select("r.*")

@@ -5,6 +5,7 @@ import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import java.util.concurrent.Executors
+import SqlTemplate.{Placeholder, Ref, Src}
 
 /** The project registry + runner: models/sources/seeds/tests are declared
   * as Scala values. `compile()` records the `ref`/`source` edges: a
@@ -45,47 +46,42 @@ final class Project(val spark: SparkSession, val target: Target) {
     require(!models.contains(name) && !snapshots.contains(name) &&
       !analyses.contains(name), s"duplicate node $name")
 
-  /** SQL-text model: `{{ ref('x') }}` / `{{ source('a','b') }}`
-    * placeholders are resolved to temp views before `spark.sql`, mirroring
-    * the reference's compile step without a template engine. The raw SQL
-    * is kept on the Model so view materialization can emit a persistent
-    * `CREATE VIEW` when every dependency is a physical table. */
+  /** SQL-text model: the text is parsed once, here, into a [[SqlTemplate]]
+    * of `{{ ref('x') }}` / `{{ source('a','b') }}` placeholders (the
+    * reference's compile step without a template engine). A build renders
+    * them as temp views; compile, [[compiledSql]], view materialization
+    * ([[persistentViewSql]]) and the lints render the same template. */
   def sqlModel(name: String, config: ModelConfig = ModelConfig())(
       sql: String): this.type = {
     requireNewName(name)
-    Project.lintSqlModel(spark, name, sql)
-    models(name) = Model(name, config, sqlBuild(sql), sqlText = Some(sql))
+    val text = SqlTemplate.parse(sql)
+    Project.lintSqlModel(spark, name, text)
+    models(name) = Model(name, config, sqlBuild(text), sqlText = Some(text))
     this
   }
 
-  /** Build function for SQL text: `{{ ref }}`/`{{ source }}` placeholders
-    * resolve to temp views before `spark.sql` (shared by [[sqlModel]] and
-    * [[analysis]]). The view names carry a number unique to this build,
-    * so concurrent builds that bind one dependency to different plans
-    * never read each other's binding, and the views are dropped once
-    * `spark.sql` has analyzed the text (the plan holds what they bound). */
-  private def sqlBuild(sql: String): Ctx => DataFrame = { ctx =>
+  /** Build function for SQL text: each distinct placeholder renders as a
+    * temp view bound to its `ctx.ref`/`ctx.source` before `spark.sql`
+    * (shared by [[sqlModel]] and [[analysis]]). The view names carry a
+    * number unique to this build, so concurrent builds that bind one
+    * dependency to different plans never read each other's binding, and
+    * the views are dropped once `spark.sql` has analyzed the text (the
+    * plan holds what they bound). */
+  private def sqlBuild(sql: SqlTemplate): Ctx => DataFrame = { ctx =>
     val build = Project.buildSeq.incrementAndGet()
-    val views = mutable.ArrayBuffer[String]()
-    def bind(prefix: String, df: => DataFrame): String = {
+    val views = mutable.Map[Placeholder, String]()
+    def bind(p: Placeholder): String = views.getOrElseUpdate(p, {
+      val (prefix, df) = p match {
+        case Ref(d) => (s"graft_ref_${Ident.normalize(d)}", ctx.ref(d))
+        case Src(s0, t0) => (s"graft_src_${Ident.normalize(s0)}_" +
+          Ident.normalize(t0), ctx.source(s0, t0))
+      }
       val view = s"${prefix}_$build"
       df.createOrReplaceTempView(view)
-      views += view
-      java.util.regex.Matcher.quoteReplacement(view)
-    }
-    try {
-      val refs = Project.RefPat.findAllMatchIn(sql).map(_.group(1)).toSeq
-        .distinct.map(d => d -> bind(s"graft_ref_${Ident.normalize(d)}",
-          ctx.ref(d))).toMap
-      val srcs = Project.SrcPat.findAllMatchIn(sql)
-        .map(m => (m.group(1), m.group(2))).toSeq.distinct
-        .map { case st @ (s0, t0) => st -> bind(
-          s"graft_src_${Ident.normalize(s0)}_${Ident.normalize(t0)}",
-          ctx.source(s0, t0)) }.toMap
-      ctx.spark.sql(Project.SrcPat.replaceAllIn(
-        Project.RefPat.replaceAllIn(sql, m => refs(m.group(1))),
-        m => srcs((m.group(1), m.group(2)))))
-    } finally views.foreach(ctx.spark.catalog.dropTempView)
+      view
+    })
+    try ctx.spark.sql(sql.render(bind))
+    finally views.values.foreach(ctx.spark.catalog.dropTempView)
   }
 
   /** Declare an analysis — the reference's `analyses/` resource slot
@@ -96,14 +92,12 @@ final class Project(val spark: SparkSession, val target: Target) {
     * analysis. */
   def analysis(name: String)(sql: String): this.type = {
     requireNewName(name)
-    Project.lintSqlModel(spark, name, sql)
-    analyses(name) = Analysis(name, sqlBuild(sql), sql)
+    val text = SqlTemplate.parse(sql)
+    Project.lintSqlModel(spark, name, text)
+    analyses(name) = Analysis(name, text)
     this
   }
 
-  private[engine] def modelOpt(name: String): Option[Model] = models.get(name)
-  private[engine] def sourceOpt(s0: String, t0: String): Option[SourceDef] =
-    sources.get((s0, t0))
   private[engine] def sourceDefs: Seq[SourceDef] = sources.values.toSeq
   /** Resolve a source to its schema (throws when unreadable) — the
     * `dbt debug` source check. */
@@ -312,7 +306,8 @@ final class Project(val spark: SparkSession, val target: Target) {
     * `name` (snapshots share the ref namespace; a model of the same name
     * wins, versioned refs are models-only). Any other name is unknown.
     * [[ctxFor]], the template-edge pass [[textEdges]], the compiled
-    * relation and the unit-test mock all ask this one function. */
+    * relation, the persistent-view render and the unit-test mock all ask
+    * this one function. */
   private def refTarget(name: String, version: Option[Int]): Node =
     version match {
       case Some(v) => models.getOrElse(s"${name}_v$v",
@@ -346,12 +341,11 @@ final class Project(val spark: SparkSession, val target: Target) {
     * its placeholders through [[refTarget]] and the declared sources —
     * what dbt's compile step learns by rendering `ref()`/`source()`,
     * without resolving a plan. */
-  private def textEdges(nodeId: String, sql: String): Unit = {
-    Project.RefPat.findAllMatchIn(sql).foreach(m =>
-      recordEdge(nodeId, refTarget(m.group(1), None).id))
-    Project.SrcPat.findAllMatchIn(sql).foreach(m =>
-      recordEdge(nodeId, declaredSource(m.group(1), m.group(2)).id))
-  }
+  private def textEdges(nodeId: String, sql: SqlTemplate): Unit =
+    sql.placeholders.foreach(p => recordEdge(nodeId, (p match {
+      case Ref(name) => refTarget(name, None)
+      case Src(s0, t0) => declaredSource(s0, t0)
+    }).id))
 
   // compile-time plans by node id, kept for the project's life. One lock
   // guards them and the `resolving` cycle set: resolution also happens
@@ -400,7 +394,7 @@ final class Project(val spark: SparkSession, val target: Target) {
   private[engine] def resolveAnalysis(name: String): DataFrame = {
     val a = analyses.getOrElse(name,
       throw new NoSuchElementException(s"unknown analysis '$name'"))
-    compileNode(a, a.build)
+    compileNode(a, sqlBuild(a.sqlText))
   }
 
   /** What a `ref` to a snapshot reads: the accumulated SCD-2 table once
@@ -559,16 +553,27 @@ final class Project(val spark: SparkSession, val target: Target) {
       .orElse(analyses.get(name).map(_.sqlText))
       .map(substitutePhysical(_))
 
-  private def substitutePhysical(sql: String,
-      inlining: Set[String] = Set.empty): String = {
-    val withRefs = Project.RefPat.replaceAllIn(sql, m2 => {
-      val dep = m2.group(1)
-      java.util.regex.Matcher.quoteReplacement(compiledRelation(dep, inlining))
-    })
-    Project.SrcPat.replaceAllIn(withRefs, m2 =>
-      java.util.regex.Matcher.quoteReplacement(
-        declaredSource(m2.group(1), m2.group(2)).location.reader
-          .fold(identity, _.relation)))
+  private def substitutePhysical(sql: SqlTemplate,
+      inlining: Set[String] = Set.empty): String =
+    sql.render {
+      case Ref(dep) => compiledRelation(dep, inlining)
+      case Src(s0, t0) =>
+        declaredSource(s0, t0).location.reader.fold(identity, _.relation)
+    }
+
+  /** A SQL-text model's body as a persistent view: each placeholder
+    * rendered to a catalog relation, defined only when every ref names
+    * ([[refTarget]]) a physical model and every source is a catalog table
+    * (a persistent view cannot read session temp views). */
+  private[engine] def persistentViewSql(m: Model): Option[String] = {
+    def relation(p: Placeholder): Option[String] = p match {
+      case Ref(name) => Some(refTarget(name, None)).collect {
+        case dep: Model if dep.config.materialized.isPhysical => physicalName(dep)
+      } // a snapshot too: its views stay temporary, adding no catalog writes
+      case Src(s0, t0) => declaredSource(s0, t0).location.reader.left.toOption
+    }
+    m.sqlText.filter(_.placeholders.forall(relation(_).isDefined))
+      .map(_.render(relation(_).get))
   }
 
   /** What a compiled ref to `dep` reads (dbt-compile semantics): the
@@ -591,8 +596,7 @@ final class Project(val spark: SparkSession, val target: Target) {
               "no SQL text to inline; materialize it or declare it as a " +
               "sqlModel")
         }
-        case Materialization.View
-            if Materializer.persistentViewSql(this, dm).isEmpty =>
+        case Materialization.View if persistentViewSql(dm).isEmpty =>
           physicalName(dm).replace(".", "__") // session temp view
         case _ => physicalName(dm)
       }
@@ -667,27 +671,22 @@ final class Project(val spark: SparkSession, val target: Target) {
       if (exclude.isEmpty) _ => false
       else Selector.select(graph, exclude, modified)
     val selected: String => Boolean = id => included(id) && !excluded(id)
-    if (fullRefresh) models.values.foreach { m =>
-      val refreshable = m.config.materialized match {
-        case _: Materialization.Incremental |
-             _: Materialization.InsertOverwrite |
-             _: Materialization.StreamingTable => true
-        case _ => false
-      }
-      if (refreshable && selected(m.id)) {
-        // resolve the checkpoint path BEFORE dropping the table: an
-        // undeletable (non-local) checkpoint must abort while the table
-        // still exists — dropping first and then failing would leave the
-        // retained-offsets + missing-table state where the next run
-        // rebuilds a permanently incomplete table
-        val streamingCkptDir = m.config.materialized match {
-          case Materialization.StreamingTable(ckpt) =>
-            Some(Materializer.checkpointLocalPath(spark,
-              Materializer.streamingCheckpointPath(this, m, ckpt)))
-          case _ => None
-        }
-        spark.sql(s"DROP TABLE IF EXISTS ${physicalName(m)}")
-        streamingCkptDir.foreach(Materializer.deleteRecursively)
+    if (fullRefresh) for (m <- models.values if selected(m.id)) {
+      def drop(): Unit = spark.sql(s"DROP TABLE IF EXISTS ${physicalName(m)}")
+      m.config.materialized match {
+        case _: Materialization.Incremental | _: Materialization.InsertOverwrite =>
+          drop()
+        case Materialization.StreamingTable(ckpt) =>
+          // resolve the checkpoint path BEFORE dropping the table: an
+          // undeletable (non-local) checkpoint must abort while the table
+          // still exists — dropping first and then failing would leave the
+          // retained-offsets + missing-table state where the next run
+          // rebuilds a permanently incomplete table
+          val dir = Materializer.checkpointLocalPath(spark,
+            Materializer.streamingCheckpointPath(this, m, ckpt))
+          drop()
+          Materializer.deleteRecursively(dir)
+        case _ => ()
       }
     }
     runStartHooks.foreach(spark.sql(_).collect())
@@ -705,15 +704,22 @@ final class Project(val spark: SparkSession, val target: Target) {
       tests.toSeq.groupBy(t => testTargetId(t.modelName))
         .map { case (m, ts) => m -> ts.map(_.id) }
 
+    // a node waits for its nearest selected ancestors: an unselected
+    // upstream (say a view) is walked through, not skipped
+    val nearest = mutable.Map[String, Seq[String]]()
+    def waitsFor(id: String): Seq[String] = nearest.getOrElseUpdate(id, {
+      val base = graph.upstream(id).toSeq
+      val ups = graph.nodes.get(id) match {
+        case _ if !blockOnTestFailure => base
+        case Some(_: DataTest) => base
+        case _ => base ++ base.flatMap(testsByModel.getOrElse(_, Nil))
+      }
+      ups.flatMap(up => if (selected(up)) Seq(up) else waitsFor(up)).distinct
+    })
+
     def nodeFuture(id: String): Future[NodeResult] =
       futures.getOrElseUpdate(id, {
-        val base = graph.upstream(id).toSeq
-        val ups = graph.nodes(id) match {
-          case _ if !blockOnTestFailure => base
-          case _: DataTest => base
-          case _ => (base ++ base.flatMap(testsByModel.getOrElse(_, Nil))).distinct
-        }
-        val upstreamF = Future.sequence(ups.filter(selected).map(nodeFuture))
+        val upstreamF = Future.sequence(waitsFor(id).map(nodeFuture))
         upstreamF.map { ups =>
           // an error, a fail or a skip upstream skips the whole subgraph
           if (ups.exists(r => r.status != "success"))
@@ -848,34 +854,27 @@ object Project {
   /** Numbers each SQL build's placeholder views ([[Project.sqlBuild]]). */
   private val buildSeq = new java.util.concurrent.atomic.AtomicLong()
 
-  private[engine] val RefPat =
-    raw"\{\{\s*ref\(\s*'([^']+)'\s*\)\s*\}\}".r
-  private[engine] val SrcPat =
-    raw"\{\{\s*source\(\s*'([^']+)'\s*,\s*'([^']+)'\s*\)\s*\}\}".r
-
   /** Declare-time lints for SQL-text models — the dbt-checkpoint hooks
     * the reference runs before SQL ever reaches the engine
     * (`.pre-commit-config.yaml:7-10`):
     *   - `check-script-semicolon`: a trailing `;` would break the DDL
     *     wrapping (`CREATE ... AS <sql>;`), so it fails at declare time
     *     with a lint message instead of a run-time Spark parse error;
-    *   - `dbt-parse`: syntax-check the placeholder-substituted text with
-    *     Spark's SQL parser (parse only; names resolve at build).
+    *   - `dbt-parse`: syntax-check the masked text with Spark's SQL
+    *     parser (parse only; names resolve at build).
     * The third hook, no-hard-coded-names, is the advisory
     * [[Macros.evaluateProject]] lint — it stays advisory because the
     * reference runs the evaluator `|| true`. */
   private[engine] def lintSqlModel(spark: org.apache.spark.sql.SparkSession,
-      name: String, sql: String): Unit = {
-    val noComments = sql
+      name: String, sql: SqlTemplate): Unit = {
+    val noComments = sql.masked
       .replaceAll("(?s)/\\*.*?\\*/", " ")
       .replaceAll("--[^\n]*", " ")
     if (noComments.trim.endsWith(";"))
       throw new IllegalArgumentException(
         s"sql lint [$name]: trailing semicolon (check-script-semicolon) " +
           "- remove it; model SQL gets wrapped in DDL")
-    val templated = SrcPat.replaceAllIn(
-      RefPat.replaceAllIn(sql, "graft_tmpl"), "graft_tmpl")
-    try org.apache.spark.sql.GraftSql.parse(spark, templated)
+    try org.apache.spark.sql.GraftSql.parse(spark, sql.masked)
     catch { case e: Exception =>
       throw new IllegalArgumentException(
         s"sql lint [$name]: does not parse (dbt-parse): ${e.getMessage}")

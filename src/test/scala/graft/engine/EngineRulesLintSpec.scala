@@ -7,8 +7,10 @@ import scala.util.matching.Regex
 
 /** Source lint pinning one definition per engine decision: how a source
   * location is read ([[SourceLocation]]'s reader, in Core.scala), how a
-  * project [[Ctx]] is built (`Project.ctxFor`) and what counts as a
-  * physical materialization ([[Materialization.isPhysical]]). */
+  * project [[Ctx]] is built (`Project.ctxFor`), how SQL text is parsed
+  * ([[SqlTemplate.parse]]), which node a ref names (`Project.refTarget`)
+  * and what counts as a physical materialization
+  * ([[Materialization.isPhysical]]). */
 class EngineRulesLintSpec extends AnyFunSuite {
 
   private val engineDir = Paths.get("src/main/scala/graft/engine")
@@ -38,6 +40,15 @@ class EngineRulesLintSpec extends AnyFunSuite {
     assert(h.isEmpty, h.mkString("\n"))
   }
 
+  test("one template parser: placeholder patterns only in SqlTemplate.parse") {
+    // RefPat/SrcPat by name, or any regex spelling `{{` — except the
+    // profiles' `{{ env_var(..) }}`, the one other template in the engine
+    val h = hits(
+      """\b(?:RefPat|SrcPat)\b|\\{1,2}\{\\{1,2}\{(?!\\{1,2}s\*env_var\b)""".r,
+      (file, method) => file == "Core.scala" && method == "parse")
+    assert(h.isEmpty, h.mkString("\n"))
+  }
+
   test("one ref-name rule: refTarget, called by ctxFor and the text-edge pass") {
     // versioned model names (`name_vN`) are spelled only in the rule
     val spelled = hits("""_v[$(]""".r,
@@ -47,9 +58,10 @@ class EngineRulesLintSpec extends AnyFunSuite {
     val callers = lines.indices
       .filter(i => lines(i).contains("refTarget("))
       .map(methodAt(lines, _)).toSet - "refTarget"
-    assert(Set("ctxFor", "textEdges").subsetOf(callers), callers)
-    assert(callers.subsetOf(
-      Set("ctxFor", "textEdges", "compiledRelation", "runUnitTest")), callers)
+    assert(Set("ctxFor", "textEdges", "persistentViewSql").subsetOf(callers),
+      callers)
+    assert(callers.subsetOf(Set("ctxFor", "textEdges", "persistentViewSql",
+      "compiledRelation", "runUnitTest")), callers)
   }
 
   test("one physical test: View/Ephemeral matched only where kinds dispatch") {

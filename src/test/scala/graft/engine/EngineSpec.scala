@@ -801,6 +801,30 @@ class EngineSpec extends SparkSpec {
     assert(ids("tag:raw") == Set("model.base"))
   }
 
+  test("a selected node waits for a selected ancestor through an unselected view") {
+    // `t` is slow to build; `leaf` reads it through the view `mid`, which
+    // `tag:x` does not select
+    var value = 1
+    def project(): Project = {
+      val p = newProject("nearest")
+      p.model("t", ModelConfig(Materialization.Table, tags = Set("x"))) { ctx =>
+        import ctx.spark.implicits._
+        Thread.sleep(1500)
+        Seq(value).toDF("v")
+      }
+      p.model("mid")(_.ref("t"))
+      p.model("leaf", ModelConfig(Materialization.Table, tags = Set("x")))(
+        _.ref("mid"))
+    }
+    assert(project().run().ok)
+    value = 2
+    val res = project().run("tag:x")
+    assert(res.results.map(_.id).toSet == Set("model.t", "model.leaf"), res)
+    assert(res.ok, res.results)
+    assert(spark.table("nearest.t").head().getInt(0) == 2)
+    assert(spark.table("nearest.leaf").head().getInt(0) == 2)
+  }
+
   test("versioned ref: explicit version reads name_vN, unversioned reads latest") {
     val p = newProject("vers")
     p.model("dim_v1", ModelConfig(materialized = Materialization.Table)) { ctx =>

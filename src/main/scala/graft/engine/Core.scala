@@ -274,11 +274,14 @@ final case class Analysis(
 }
 
 /** A data test attached to a model: builds a violations DataFrame;
-  * nonzero rows = failure (`models/example/schema.yml` semantics). */
+  * nonzero rows = failure (`models/example/schema.yml` semantics).
+  * `parents` names the other models it reads (a `relationships` test's
+  * parent). */
 final case class DataTest(
     name: String,
     modelName: String,
-    violations: DataFrame => DataFrame) extends Node {
+    violations: DataFrame => DataFrame,
+    parents: Seq[String] = Nil) extends Node {
   def id: String = s"test.$name"
 }
 

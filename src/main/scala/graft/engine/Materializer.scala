@@ -97,17 +97,16 @@ object Materializer {
           s"${m.id} is materialized StreamingTable but its build returned " +
             "a batch DataFrame — read inputs with ctx.sourceStream")
         val ckpt = streamingCheckpointPath(p, m, checkpoint)
-        // start() captures session confs, and run() builds nodes
-        // concurrently — take the SessionConf lock (no kvs) across the
-        // start so another node's temporary conf swap (e.g. dynamic
-        // partitionOverwriteMode) cannot be observed; await OUTSIDE the
-        // lock so ingest doesn't serialize unrelated builds
-        graft.streaming.EventStreams.runToEnd(SessionConf.withConf(p.spark)(
-          df.writeStream
-            .format("parquet")
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .toTable(physical)))
+        // startStream holds the SessionConf lock across the start only
+        // (start() captures session confs, and run() builds nodes
+        // concurrently); await OUTSIDE it so ingest doesn't serialize
+        // unrelated builds
+        import graft.streaming.EventStreams.{runToEnd, startStream}
+        runToEnd(startStream(p.spark, df.writeStream
+          .format("parquet")
+          .option("checkpointLocation", ckpt)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+          table = Some(physical)))
       case Materialization.Incremental(uniqueKey, strategy) =>
         if (!p.spark.catalog.tableExists(physical)) {
           df.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(physical)

@@ -260,7 +260,8 @@ final class Project(val spark: SparkSession, val target: Target) {
   def testRelationship(model: String, column: String,
       toModel: String, toColumn: String): this.type =
     test(DataTest(s"relationships__${model}__$column", model, df =>
-      GenericTests.relationships(df, column, resolve(toModel), toColumn)))
+      GenericTests.relationships(df, column, resolve(toModel), toColumn),
+      parents = Seq(toModel)))
   def testUniqueCombination(model: String, columns: Seq[String]): this.type =
     test(DataTest(s"unique_combination__${model}__${columns.mkString("_")}",
       model, GenericTests.uniqueCombination(_, columns)))
@@ -627,7 +628,10 @@ final class Project(val spark: SparkSession, val target: Target) {
     snapshots.keys.foreach(resolveSnapshotFresh) // records snapshot edges
     analyses.values.foreach(a => textEdges(a.id, a.sqlText)) // never run
     val testNodes = tests.map(t => t.id -> (t: Node))
-    tests.foreach(t => recordEdge(t.id, testTargetId(t.modelName)))
+    tests.foreach { t =>
+      t.parents.foreach(declaredModel)
+      recordEdge(t.id, testTargetId(t.modelName))
+    }
     val graph = ProjectGraph(
       (models.values.map(m => m.id -> (m: Node)) ++
         sources.values.map(s => s.id -> (s: Node)) ++
@@ -834,11 +838,11 @@ final class Project(val spark: SparkSession, val target: Target) {
       throw new NoSuchElementException(s"unknown model/snapshot '$name'")
   }
 
-  /** Graph id a data test (or selector name) attached to `name` points
-    * at: the model if one exists, else the snapshot. */
+  /** Graph id a data test attached to `name` points at: the model if one
+    * exists, else the snapshot; any other name is unknown. */
   private def testTargetId(name: String): String =
-    if (!models.contains(name) && snapshots.contains(name)) s"snapshot.$name"
-    else s"model.$name"
+    models.get(name).orElse(snapshots.get(name)).map(_.id).getOrElse(
+      throw new NoSuchElementException(s"unknown model '$name'"))
 
   /** `dbt test`: evaluate data tests against EXISTING relations without
     * materializing any model — `test` must not run models as a side

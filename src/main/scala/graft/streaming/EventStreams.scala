@@ -34,7 +34,10 @@ import graft.operators.CacheScope
   *     partition;
   *   - the appends run in the cloned microbatch session, so after the
   *     run the CALLER's session refreshes the table — a post-run read
-  *     sees every appended row.
+  *     sees every appended row;
+  *   - local I/O without shell spawns: the query starts through
+  *     [[startStream]], so its logs, appends and state stores go through
+  *     the fork-free `file:` filesystem ([[graft.io.ForkFreeLocalFs]]).
   */
 object EventStreams {
 
@@ -61,24 +64,46 @@ object EventStreams {
     * join/dedup state exceeds executor heap (RocksDB keeps state off-heap
     * on local disk with incremental checkpointing; the default
     * HDFS-backed provider holds every version in memory). Applied at
-    * query START via [[withStatePartitions]], so one session can mix
-    * providers across queries. */
+    * query START via [[startStream]], so one session can mix providers
+    * across queries. */
   val StateStoreConf = "graft.streaming.stateStore"
 
-  /** Stateful-query cost is dominated by per-partition state-store
-    * instances (each checkpointed per micro-batch), so the state
-    * partition count should track STATE volume, not CPU count. Both the
-    * count and the provider class are captured at query START — set them
-    * for the `start()` call only and restore immediately after. */
-  private def withStatePartitions[T](spark: SparkSession, n: Int)(
-      start: => T): T = {
-    val provider =
-      if (spark.conf.getOption(StateStoreConf).exists(_.equalsIgnoreCase("rocksdb")))
+  /** The `file:` binding [[startStream]] gives every query: the fork-free
+    * local filesystem. Specs rebind it around a block (`withValue`) to
+    * compare with the stock one; the engine never does. */
+  private[graft] val localFsBinding =
+    new scala.util.DynamicVariable[Seq[(String, String)]](graft.io.ForkFreeLocalFs.confs)
+
+  /** The one streaming start: a query captures its session's confs at
+    * `start()`, so every query the engine starts goes through here. Under
+    * the [[graft.engine.SessionConf]] lock (a concurrent node build's conf
+    * swap is not captured) it binds, until the query has made its sources,
+    * and then restores the caller's session:
+    *   - `file:` to [[localFsBinding]], for the offset, commit and source
+    *     logs, the sink's files and the state stores;
+    *   - for a stateful query, `statePartitions` shuffle partitions (state
+    *     cost follows per-partition state-store instances, each
+    *     checkpointed per microbatch, so the count tracks STATE volume,
+    *     not CPU count) and the [[StateStoreConf]] provider.
+    * `table` names a table sink (`toTable`); otherwise `start()`. */
+  private[graft] def startStream(spark: SparkSession,
+      writer: org.apache.spark.sql.streaming.DataStreamWriter[_],
+      statePartitions: Option[Int] = None,
+      table: Option[String] = None): StreamingQuery = {
+    val rocksdb =
+      spark.conf.getOption(StateStoreConf).exists(_.equalsIgnoreCase("rocksdb"))
+    val state = statePartitions.toSeq.flatMap(n =>
+      ("spark.sql.shuffle.partitions" -> n.toString) +: (if (rocksdb)
         Seq("spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      else Nil
-    graft.engine.SessionConf.withConf(spark,
-      (Seq("spark.sql.shuffle.partitions" -> n.toString) ++ provider): _*)(start)
+      else Nil))
+    graft.engine.SessionConf.withConf(spark, (localFsBinding.value ++ state): _*) {
+      val q = table.fold(writer.start())(writer.toTable)
+      // a file source takes the CALLER's session conf when the query's
+      // thread makes it, after start() returns: keep the binding till then
+      org.apache.spark.sql.GraftSql.awaitSources(q)
+      q
+    }
   }
 
   /** Tumbling 1-hour windowed aggregation with a watermark, run to
@@ -93,9 +118,9 @@ object EventStreams {
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("hour"),
         col("event_type"), col("n"), col("sum_value"))
     val name = "graft_stream_hourly"
-    runToEnd(withStatePartitions(spark, 8)(
+    runToEnd(startStream(spark,
       agg.writeStream.outputMode("complete").format("memory")
-        .queryName(name).trigger(Trigger.AvailableNow()).start()))
+        .queryName(name).trigger(Trigger.AvailableNow()), Some(8)))
     spark.table(name).orderBy(col("hour"), col("event_type"))
   }
 
@@ -113,9 +138,9 @@ object EventStreams {
       .dropDuplicatesWithinWatermark("event_id")
       .select(col("event_id"), col("event_type"))
     val name = "graft_stream_dedup"
-    runToEnd(withStatePartitions(spark, 8)(
+    runToEnd(startStream(spark,
       dedup.writeStream.outputMode("append").format("memory")
-        .queryName(name).trigger(Trigger.AvailableNow()).start()))
+        .queryName(name).trigger(Trigger.AvailableNow()), Some(8)))
     spark.table(name).groupBy(col("event_type"))
       .agg(count(lit(1)).as("n")).orderBy(col("event_type"))
   }
@@ -139,9 +164,9 @@ object EventStreams {
       "p_user = c_user AND c_ts >= p_ts - interval 1 hour AND c_ts <= p_ts"))
       .select(col("p_id"), col("c_id"))
     val name = "graft_stream_join"
-    val q = withStatePartitions(spark, 8)(
+    val q = startStream(spark,
       joined.writeStream.outputMode("append").format("memory")
-        .queryName(name).start())
+        .queryName(name), Some(8))
     try q.processAllAvailable() finally q.stop()
     spark.table(name).groupBy(col("p_id").as("event_id"))
       .agg(count(lit(1)).as("n_clicks")).orderBy(col("event_id"))
@@ -217,8 +242,8 @@ object EventStreams {
           }
       }
     val name = "graft_stream_sessions"
-    val q = sessions.toDF().writeStream.outputMode("append").format("memory")
-      .queryName(name).start()
+    val q = startStream(spark, sessions.toDF().writeStream
+      .outputMode("append").format("memory").queryName(name))
     try q.processAllAvailable() finally q.stop()
     spark.table(name)
   }
@@ -323,11 +348,10 @@ object EventStreams {
           .transform(compactForAppend)
           .write.mode("append").format("parquet").saveAsTable(ledgerTable)
       }
-    runToEnd(stream.writeStream
+    runToEnd(startStream(spark, stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start())
+      .foreachBatch(fb)))
     // the appends above went through the cloned microbatch session; the
     // CALLER's session still caches the old ledger file listing — without
     // this refresh a post-run read sees the pre-run row count

@@ -32,4 +32,14 @@ object GraftSql {
       b: org.apache.spark.sql.types.DataType):
       Option[org.apache.spark.sql.types.DataType] =
     org.apache.spark.sql.catalyst.analysis.TypeCoercion.findWiderTypeForTwo(a, b)
+
+  /** Block until `q` has made its sources (or died, rethrowing why). A
+    * source reads its session's Hadoop conf when it is made, on the
+    * query's thread after `start()` returns; `awaitInitialization` is
+    * private[sql]. */
+  def awaitSources(q: streaming.StreamingQuery): Unit = q match {
+    case w: execution.streaming.runtime.StreamingQueryWrapper =>
+      w.streamingQuery.awaitInitialization(Long.MaxValue)
+    case _ => ()
+  }
 }

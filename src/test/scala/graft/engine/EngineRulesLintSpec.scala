@@ -8,25 +8,29 @@ import scala.util.matching.Regex
 /** Source lint pinning one definition per engine decision: how a source
   * location is read ([[SourceLocation]]'s reader, in Core.scala), how a
   * project [[Ctx]] is built (`Project.ctxFor`), how SQL text is parsed
-  * ([[SqlTemplate.parse]]), which node a ref names (`Project.refTarget`)
-  * and what counts as a physical materialization
-  * ([[Materialization.isPhysical]]). */
+  * ([[SqlTemplate.parse]]), which node a ref names (`Project.refTarget`),
+  * what counts as a physical materialization
+  * ([[Materialization.isPhysical]]) and where a streaming query starts
+  * (`EventStreams.startStream`). */
 class EngineRulesLintSpec extends AnyFunSuite {
 
   private val engineDir = Paths.get("src/main/scala/graft/engine")
 
   /** `file:line: code` of every code line matching `pattern` whose
     * (file, top-level method) is not `allowed`. */
-  private def hits(pattern: Regex,
-      allowed: (String, String) => Boolean): Seq[String] =
+  private def hits(pattern: Regex, allowed: (String, String) => Boolean,
+      dir: java.nio.file.Path = engineDir): Seq[String] =
     for {
-      p <- scalaFiles(engineDir)
+      p <- scalaFiles(dir)
       file = p.getFileName.toString
       lines = codeLines(p)
-      i <- lines.indices
-      if pattern.findFirstIn(lines(i)).isDefined &&
-        !allowed(file, methodAt(lines, i))
+      i <- linesHitting(pattern, allowed, file, lines)
     } yield s"$file:${i + 1}: ${lines(i).trim}"
+
+  private def linesHitting(pattern: Regex, allowed: (String, String) => Boolean,
+      file: String, lines: IndexedSeq[String]): Seq[Int] =
+    lines.indices.filter(i => pattern.findFirstIn(lines(i)).isDefined &&
+      !allowed(file, methodAt(lines, i)))
 
   test("one location-to-format definition: path locations only in Core.scala") {
     val h = hits("""\b(?:Parquet|Csv|Json|Orc|Binary)Path\(""".r,
@@ -75,5 +79,37 @@ class EngineRulesLintSpec extends AnyFunSuite {
       (file, method) => file == "Core.scala" || dispatch(file -> method)) ++
       hits("""\bdef isPhysical\b""".r, (file, _) => file == "Core.scala")
     assert(h.isEmpty, h.mkString("\n"))
+  }
+
+  // a streaming query captures its session's confs at start(), so one
+  // helper starts them all and binds what they capture
+  private val streamStart = """\.start\(\)|\.toTable\(""".r
+  private val inStartStream: (String, String) => Boolean =
+    (file, method) => file == "EventStreams.scala" && method == "startStream"
+
+  test("one streaming start: .start()/.toTable( only in EventStreams.startStream") {
+    val h = hits(streamStart, inStartStream, Paths.get("src/main/scala/graft"))
+    assert(h.isEmpty, h.mkString("\n"))
+  }
+
+  test("the streaming-start rule flags each start site it replaced") {
+    // the six sites as they read before the rule: a copy of any of them
+    // in its old method must fail it
+    val sites = Seq(
+      ("EventStreams.scala", "hourlyCounts",
+        "agg.writeStream.format(\"memory\").queryName(name).start()))"),
+      ("EventStreams.scala", "dedupCounts",
+        "dedup.writeStream.format(\"memory\").queryName(name).start()))"),
+      ("EventStreams.scala", "clickAttribution",
+        "val q = joined.writeStream.format(\"memory\").queryName(name).start())"),
+      ("EventStreams.scala", "sessionizeStreaming",
+        "val q = sessions.toDF().writeStream.queryName(name).start()"),
+      ("EventStreams.scala", "runLedger", "runToEnd(stream.writeStream.start())"),
+      ("Materializer.scala", "materialize", "df.writeStream.toTable(physical)))"))
+    for ((file, method, code) <- sites) {
+      val lines = IndexedSeq("object X {", s"  def $method(): Unit = {",
+        s"    $code", "  }", "}")
+      assert(linesHitting(streamStart, inStartStream, file, lines) == Seq(2), code)
+    }
   }
 }

@@ -85,6 +85,24 @@ class EngineSpec extends SparkSpec {
     assert(e.getMessage.contains("cycle"))
   }
 
+  test("a data test on an undeclared model or parent fails compile, run and test") {
+    def project(schema: String)(declareTest: Project => Unit): Project = {
+      val p = newProject(schema)
+      p.model("a", ModelConfig(materialized = Materialization.Table)) { ctx =>
+        import ctx.spark.implicits._
+        Seq(1L).toDF("id")
+      }
+      declareTest(p)
+      p
+    }
+    val target = project("unktest")(_.testNotNull("nope", "id"))
+    val parent = project("unkparent")(_.testRelationship("a", "id", "nope", "id"))
+    for (p <- Seq(target, parent);
+         call <- Seq[Project => Any](_.compile(), _.run(), _.testOnly()))
+      assert(intercept[NoSuchElementException](call(p))
+        .getMessage.contains("unknown model 'nope'"))
+  }
+
   test("snapshot fresh-query cycle raises an actionable error, not overflow") {
     val p = newProject("snapcyc")
     p.snapshot("selfref", uniqueKey = "id", checkCols = Seq("v")) { ctx =>
